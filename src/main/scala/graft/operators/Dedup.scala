@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, all designed as
@@ -85,17 +86,6 @@ object Dedup {
       .groupBy(col("id").as(idCol)).agg(minhashAggs(k).head,
         minhashAggs(k).tail: _*)
 
-  /** MinHash-LSH candidate pairs: `b` bands of `r` rows; a pair is a
-    * candidate if any band key matches. Returns (id_a, id_b) with a < b,
-    * distinct.
-    *
-    * The `b` band keys are packed into ONE array and exploded, so there
-    * is a single self-join on (band, key) — one shuffle pair — instead
-    * of `b` separate joins each re-reading (and re-aggregating) the
-    * minhash input. A pair matching in several bands still emits once.
-    * Within a band bucket of m docs the C(m,2) pair fan-out is inherent
-    * to LSH output; the join distributes it across tasks, so one hot
-    * bucket (a giant dup cluster) cannot pin a single executor. */
   /** (id, band, bk) band-key table from a minhash frame — the LSH
     * "index" relation: self-joined for batch dedup, persisted/bucketed
     * by (band, bk) as the probe target for incremental ingest. */
@@ -108,6 +98,17 @@ object Dedup {
     mh.select(col(idCol).as("id"), posexplode(bandKeys).as(Seq("band", "bk")))
   }
 
+  /** MinHash-LSH candidate pairs: `b` bands of `r` rows; a pair is a
+    * candidate if any band key matches. Returns (id_a, id_b) with a < b,
+    * distinct.
+    *
+    * The `b` band keys are packed into ONE array and exploded, so there
+    * is a single self-join on (band, key) — one shuffle pair — instead
+    * of `b` separate joins each re-reading (and re-aggregating) the
+    * minhash input. A pair matching in several bands still emits once.
+    * Within a band bucket of m docs the C(m,2) pair fan-out is inherent
+    * to LSH output; the join distributes it across tasks, so one hot
+    * bucket (a giant dup cluster) cannot pin a single executor. */
   def lshCandidates(mh: DataFrame, idCol: String, b: Int, r: Int): DataFrame = {
     // persist: (id, band, key) is the smallest representation of the
     // corpus (b rows/doc, no text) and both self-join sides read it —
@@ -123,10 +124,10 @@ object Dedup {
 
   /** [[verifyJaccard]] over a pre-built (id, s) shingle table.
     *
-    * Intermediates are persisted for the duration of the computation and
-    * stay registered with the session's cache manager afterwards (the
-    * standard Spark library pattern — the caller owns cache lifecycle;
-    * `spark.catalog.clearCache()` releases them). */
+    * Intermediates are persisted and left registered with the session's
+    * cache manager: the caller owns their lifecycle (the query memo,
+    * `graft.queries.memoCkpt`, uncaches what its build registered once
+    * the result is checkpointed). */
   private def verifyOverlapSh(sh: DataFrame,
                               candidates0: DataFrame): DataFrame = {
     // persisted: consumed by the touched-doc semi-join below AND as the
@@ -381,14 +382,18 @@ object Dedup {
     // checkpoint (this wedged the r7 bench on s_knn_components).
     // createDataFrame over the materialized rows is a plain source
     // relation with default stats — O(1) planning per round forever.
-    def ckpt(df: DataFrame): DataFrame = {
+    // A checkpoint pins its blocks until its RDD is unpersisted, so ckpt
+    // also returns that RDD and each checkpoint is released as soon as
+    // nothing downstream reads it.
+    def ckpt(df: DataFrame) = {
       val cp = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-      cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+      (cp.sparkSession.createDataFrame(cp.rdd, cp.schema),
+        cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
     }
     // materialize the pair-generation subtree ONCE: `edges` references
     // `pairs` twice (both orientations), and each round's join would
     // otherwise re-run the full candidate-pair pipeline per branch
-    val base = ckpt(pairs.select(col("id_a"), col("id_b")))
+    val (base, baseRdd) = ckpt(pairs.select(col("id_a"), col("id_b")))
     // counting the checkpointed relation is a metadata-cheap job (no
     // recompute), and it decides the strategy like AQE decides a join
     val nEdges = base.count()
@@ -403,11 +408,12 @@ object Dedup {
       case _ => false
     }
     if (nEdges <= driverFallbackEdges && integralIds)
-      return driverComponents(base)
+      return try driverComponents(base) // collects base
+        finally baseRdd.unpersist(blocking = true)
     val edges = base.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(base.select(col("id_b").as("src"), col("id_a").as("dst")))
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
+    var (labels, labelsRdd) = ckpt(edges.select(col("src").as("id"))
+      .distinct().withColumn("comp", col("id")))
     var changed = 1L
     var round = 0
     while (changed > 0) {
@@ -430,7 +436,7 @@ object Dedup {
       // through an observed metric — a separate count() would be a
       // second driver round-trip over the same rows every round
       val obs = new org.apache.spark.sql.Observation(s"labelProp_$round")
-      val updated = ckpt(stepped.join(hop, Seq("mid"))
+      val (updated, updatedRdd) = ckpt(stepped.join(hop, Seq("mid"))
         .select(col("id"),
           least(col("mid"), col("hop")).as("comp"),
           (least(col("mid"), col("hop")) < col("old")).as("chg"))
@@ -439,9 +445,12 @@ object Dedup {
         case null => 0L
         case n: java.lang.Number => n.longValue()
       }
+      labelsRdd.unpersist(blocking = true) // superseded by `updated`
       labels = updated.select(col("id"), col("comp"))
+      labelsRdd = updatedRdd
       round += 1
     }
+    baseRdd.unpersist(blocking = true)
     labels
   }
 

@@ -28,37 +28,28 @@ object SimilarityQueries {
   private val pcaModels =
     new java.util.concurrent.ConcurrentHashMap[String, graft.operators.Pca.Model]()
 
-  /** All ANN fits are deterministic pure functions of their inputs
-    * (order-independent hash-prefix sample, farthest-point seeding,
-    * fixed iterations), so they go through the shared
-    * [[graft.queries.memoFit]] — each query stays self-contained (first
-    * caller pays the fit). */
-  private def memo[T <: AnyRef](key: String)(fit: => T): T =
-    memoFit(key)(fit)
+  /** THE coarse IVF quantizer (k = 8, 3 iterations) over the fixture's
+    * embeddings — one memo key shared by every IVF consumer. */
+  private def ivfModel(s: org.apache.spark.sql.SparkSession,
+                       dir: String): Ivf.Model =
+    memoFit(s"ivf:$dir:k8i3")(Ivf.fit(
+      t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, iters = 3))
 
   /** THE corpus k-NN edge relation — built once, persisted, and shared
     * by its three gated consumers (`s_knn_join`, `s_mutual_knn`,
     * `s_knn_components`): the corpus×corpus cell join is the most
     * expensive relation in the ANN family, and each consumer
-    * re-deriving it tripled that cost in one bench pass. Keyed by the
-    * session's applicationId as well as the fixture dir because a
-    * cached DataFrame (unlike the pure model fits) is bound to the
-    * SparkSession that built it. */
+    * re-deriving it tripled that cost in one bench pass. */
   private def sharedKnnRanked(s: org.apache.spark.sql.SparkSession,
-                              dir: String): org.apache.spark.sql.DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-      emb, "vec_id", "embedding", k = 8, iters = 3))
+                              dir: String): org.apache.spark.sql.DataFrame =
     // memoCkpt, not persist: consumers get a one-leaf plan instead of
     // the full cell-join pipeline nested under an InMemoryRelation —
     // every action stringifies its plan for the SQL listener and AQE
     // walks it per stage (see graft.queries.memoCkpt)
-    graft.queries.memoCkpt(
-        s"knnjoin:${s.sparkContext.applicationId}:$dir:k8i3:k3p2") {
-      graft.operators.Ivf.knnJoin(emb, "vec_id", "embedding",
-        model, k = 3, nProbe = 2)
+    memoCkpt(s, s"knnjoin:$dir:k8i3:k3p2") {
+      Ivf.knnJoin(t(s, dir, "embeddings"), "vec_id", "embedding",
+        ivfModel(s, dir), k = 3, nProbe = 2)
     }
-  }
 
   val defs: Map[String, QueryFn] = Map(
     // Exact ANN baseline: 10 probe vectors × full corpus, broadcast join.
@@ -98,8 +89,7 @@ object SimilarityQueries {
     // bucketSqlExpr freezes the LSH hyperplanes.
     "s_ann_ivf" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_ann_ivf", model)
       graft.operators.Ivf.topK(
         emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding",
@@ -117,8 +107,7 @@ object SimilarityQueries {
     // its own row.
     "s_ann_ivf_probe" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_ann_ivf_probe", model)
       graft.operators.Ivf.topK(
         emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding",
@@ -134,8 +123,7 @@ object SimilarityQueries {
     // co-partitioned equi join.
     "s_knn_join" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_knn_join", model)
       sharedKnnRanked(s, dir)
         .select("query_id", "neighbor_id", "sim", "rnk")
@@ -147,8 +135,7 @@ object SimilarityQueries {
     // mutuality self-join runs over |C|·k edge rows, never vectors.
     "s_mutual_knn" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_mutual_knn", model)
       graft.operators.Ivf.mutualKnnOf(sharedKnnRanked(s, dir))
         .orderBy("id_a", "id_b")
@@ -160,8 +147,7 @@ object SimilarityQueries {
     // caller aggregates). Same frozen-centroid oracle scheme as the ANN.
     "s_cluster_assign" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_cluster_assign", model)
       emb.select(col("vec_id"),
         graft.operators.Ivf.assign(col("embedding"), model).as("cell"))
@@ -175,9 +161,7 @@ object SimilarityQueries {
     // label-propagation components; oracle = recursive closure over
     // the frozen-centroid ranked list's mutual edges.
     "s_knn_components" -> { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_knn_components", model)
       graft.operators.Dedup.dupClusters(
         graft.operators.Ivf.mutualKnnOf(sharedKnnRanked(s, dir)))
@@ -192,8 +176,7 @@ object SimilarityQueries {
     // assignment.
     "s_cluster_purity" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_cluster_purity", model)
       emb.select(
           graft.operators.Ivf.assign(col("embedding"), model).as("cell"),
@@ -215,8 +198,7 @@ object SimilarityQueries {
     // top-k, so no per-cluster hot reducer sees full documents.
     "s_cluster_balanced" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_cluster_balanced", model)
       val assigned = emb.select(col("vec_id"),
         graft.operators.Ivf.assign(col("embedding"), model).as("cell"))
@@ -231,7 +213,7 @@ object SimilarityQueries {
     // Same frozen-codebook oracle scheme as the IVF queries.
     "s_ann_pq" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"pq:$dir:m8k16i2")(graft.operators.Pq.fit(
+      val model = memoFit(s"pq:$dir:m8k16i2")(graft.operators.Pq.fit(
         emb, "vec_id", "embedding", m = 8, ksub = 16, iters = 2))
       pqModels.put("s_ann_pq", model)
       graft.operators.Pq.adcTopK(
@@ -248,9 +230,8 @@ object SimilarityQueries {
     // frozen models feed one combined oracle.
     "s_ann_ivfpq" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val coarse = memo(s"ivf:$dir:k8i3")(Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
-      val pq = memo(s"pqres:$dir:m8k16i2:k8i3")(
+      val coarse = ivfModel(s, dir)
+      val pq = memoFit(s"pqres:$dir:m8k16i2:k8i3")(
         graft.operators.Pq.fitResidual(emb, "vec_id", "embedding",
           coarse, m = 8, ksub = 16, iters = 2))
       ivfModels.put("s_ann_ivfpq", coarse)
@@ -275,9 +256,8 @@ object SimilarityQueries {
     // exact-cosine join.
     "s_ann_ivfpq_rerank" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val coarse = memo(s"ivf:$dir:k8i3")(Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
-      val pq = memo(s"pqres:$dir:m8k16i2:k8i3")(
+      val coarse = ivfModel(s, dir)
+      val pq = memoFit(s"pqres:$dir:m8k16i2:k8i3")(
         graft.operators.Pq.fitResidual(emb, "vec_id", "embedding",
           coarse, m = 8, ksub = 16, iters = 2))
       ivfModels.put("s_ann_ivfpq_rerank", coarse)
@@ -298,7 +278,7 @@ object SimilarityQueries {
     // cosine contract as the rest of the family.
     "s_ann_sq8" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"sq:$dir:d64")(graft.operators.Sq.fit(
+      val model = memoFit(s"sq:$dir:d64")(graft.operators.Sq.fit(
         emb, "vec_id", "embedding", dim = 64))
       sqModels.put("s_ann_sq8", model)
       graft.operators.Sq.adcTopK(
@@ -316,7 +296,7 @@ object SimilarityQueries {
     // codegen'd literal-array dot per axis. Frozen-eigenvector oracle.
     "s_pca_project" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"pca:$dir:p8")(graft.operators.Pca.fit(
+      val model = memoFit(s"pca:$dir:p8")(graft.operators.Pca.fit(
         emb, "vec_id", "embedding", p = 8))
       pcaModels.put("s_pca_project", model)
       emb.select(col("vec_id") +:
@@ -331,7 +311,7 @@ object SimilarityQueries {
     // s_pca_project. Recall tracked next to the other ANN methods.
     "s_ann_pca_rerank" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"pca:$dir:p8")(graft.operators.Pca.fit(
+      val model = memoFit(s"pca:$dir:p8")(graft.operators.Pca.fit(
         emb, "vec_id", "embedding", p = 8))
       pcaModels.put("s_ann_pca_rerank", model)
       graft.operators.Pca.rerankTopK(
@@ -348,8 +328,7 @@ object SimilarityQueries {
     // before the ranking window.
     "s_hard_negatives" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_hard_negatives", model)
       Ivf.hardNegatives(
         emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding",
@@ -383,8 +362,7 @@ object SimilarityQueries {
     // the memoized k=8 coarse quantizer; frozen-centroid SQL twin.
     "s_semdedup" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
-        emb, "vec_id", "embedding", k = 8, iters = 3))
+      val model = ivfModel(s, dir)
       ivfModels.put("s_semdedup", model)
       Similarity.semDedup(emb, "vec_id", "embedding", model,
         threshold = 0.3).orderBy("vec_id")

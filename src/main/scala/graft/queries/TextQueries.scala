@@ -80,26 +80,20 @@ object TextQueries {
     s.table(sink)
   }
 
-  /** BM25 ranked list (query_id, neighbor_id, bm25, rnk ≤ k) over
-    * word-bigram terms, queries = doc_id % 101. Shared by the BM25
-    * gate and the hybrid-RRF fusion so the scoring formula and its
-    * oracle twin can't drift between them. */
   /** THE near-dup pair relation at the canonical hyperparameters
     * (n=3, k=6, b=3, r=2, threshold 0.5) — a deterministic pure
     * function of the fixture, shared by its SIX gated consumers
     * (d_minhash_lsh, d_dup_clusters, d_cluster_sizes,
     * d_dedup_keep_best, d_lsh_recall's LSH side, t_leakage_safe_split):
     * the sharedKnnRanked convention — in production the dup graph is
-    * an ingest-time artifact, not per-query work. Keyed by
-    * applicationId because a cached DataFrame is session-bound; the
-    * bench's family sweep unpersists it between families. Unlike the
+    * an ingest-time artifact, not per-query work. Unlike the
     * reverted bm25-postings memo, the downstream work over this cache
     * is pair-sized (components, counts, broadcast joins), so the
     * post-AQE partition count of the cache cannot serialize anything
     * corpus-sized. */
   private def sharedMinhashPairs(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
-    memoCkpt(s"mhpairs:${s.sparkContext.applicationId}:$dir:n3k6b3r2t05") {
+    memoCkpt(s, s"mhpairs:$dir:n3k6b3r2t05") {
       Dedup.minhashNearDupsSh(sharedShingleTable(s, dir),
         k = 6, b = 3, r = 2, threshold = 0.5)
     }
@@ -114,7 +108,7 @@ object TextQueries {
     * [[sharedMinhashPairs]]. */
   private def sharedShingleTable(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
-    memoCkpt(s"shingles:${s.sparkContext.applicationId}:$dir:n3") {
+    memoCkpt(s, s"shingles:$dir:n3") {
       Dedup.shingleTableOf(t(s, dir, "documents"), "doc_id", "text", n = 3)
     }
 
@@ -125,7 +119,7 @@ object TextQueries {
     * re-apply their own survivor bound + verification. */
   private def sharedPairStats(s: org.apache.spark.sql.SparkSession,
                               dir: String): org.apache.spark.sql.DataFrame =
-    memoCkpt(s"pstats:${s.sparkContext.applicationId}:$dir:n3df20") {
+    memoCkpt(s, s"pstats:$dir:n3df20") {
       // repartition before the checkpoint: the candidate set is ~1M rows
       // at sf0.1 but AQE coalesces its final exchange to 1-2 partitions
       // (tiny bytes), and a 1-partition leaf would serialize every
@@ -139,7 +133,7 @@ object TextQueries {
     * shared by d_ngram_jaccard and d_lsh_recall's exact side. */
   private def sharedJaccardPairs(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
-    memoCkpt(s"njpairs:${s.sparkContext.applicationId}:$dir:n3df20t05") {
+    memoCkpt(s, s"njpairs:$dir:n3df20t05") {
       Dedup.ngramJaccardPairsSh(sharedShingleTable(s, dir),
         sharedPairStats(s, dir), threshold = 0.5)
     }
@@ -156,7 +150,7 @@ object TextQueries {
     * work downstream. */
   private def sharedBm25Ranked(s: org.apache.spark.sql.SparkSession,
                                dir: String): org.apache.spark.sql.DataFrame =
-    memoCkpt(s"bm25rank:${s.sparkContext.applicationId}:$dir:k20") {
+    memoCkpt(s, s"bm25rank:$dir:k20") {
       bm25Ranked(s, dir, k = 20)
     }
 
@@ -168,15 +162,20 @@ object TextQueries {
     * the full |Q|×corpus brute-force scan. */
   private def sharedDenseTopK(s: org.apache.spark.sql.SparkSession,
                               dir: String): org.apache.spark.sql.DataFrame =
-    memoCkpt(s"densetopk:${s.sparkContext.applicationId}:$dir:q101k20") {
+    memoCkpt(s, s"densetopk:$dir:q101k20") {
       val emb = t(s, dir, "embeddings")
       graft.operators.Similarity.bruteForceTopK(
         emb.filter(col("vec_id") % 101 === 0), emb,
         "vec_id", "embedding", k = 20)
     }
 
-  private def bm25Ranked(s: org.apache.spark.sql.SparkSession,
-                         dir: String, k: Int)
+  /** BM25 ranked list (query_id, neighbor_id, bm25, rnk ≤ k) over
+    * word-bigram terms, queries = doc_id % 101. Shared (through
+    * [[sharedBm25Ranked]]) by the BM25 gate and the hybrid-RRF fusion
+    * so the scoring formula and its oracle twin can't drift between
+    * them. */
+  private[graft] def bm25Ranked(s: org.apache.spark.sql.SparkSession,
+                                dir: String, k: Int)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = graft.operators.Partitioning.spread(
@@ -1196,14 +1195,11 @@ object TextQueries {
       val lg = round(QualityClassifier.logit(
         m, QualityClassifier.features(col("text"), enStop).map(_._2)), 6)
       // feeds the percentile action AND the filtered aggregate — persist,
-      // or the feature+logit scoring pass runs twice. Registered through
-      // the fit memo (the sharedMinhashPairs convention) so clearFitMemo
-      // unpersists it between bench families: a bare per-invocation
-      // persist() re-created the cache on every call and never released
-      // it — an unbounded InMemoryRelation leak across bench runs
-      // (r13 VERDICT item 8 / ADVICE).
-      val scored = memoCkpt(
-          s"clfscored:${s.sparkContext.applicationId}:$dir") {
+      // or the feature+logit scoring pass runs twice. Memoized (the
+      // sharedMinhashPairs convention) so clearFitMemo releases it: a
+      // bare per-invocation persist() would re-create the cache on every
+      // call and never release it.
+      val scored = memoCkpt(s, s"clfscored:$dir") {
         docs.select(col("doc_id"), col("source"), lg.as("score"))
       }
       val cut = scored.agg(percentile(col("score"), lit(0.4)))

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -88,19 +91,16 @@ package object queries {
     // update" whenever the inner key happens to land in the outer key's
     // bin. get/putIfAbsent keeps reentrancy; the worst case is two
     // threads racing to build the same DETERMINISTIC fit, where the
-    // loser's copy is discarded (and unpersisted, so no cache leak).
+    // loser's copy is released and discarded.
     val v = fit
     val prev = fitMemo.putIfAbsent(key, v)
     if (prev == null) v
-    else {
-      v match {
-        case df: org.apache.spark.sql.Dataset[_] =>
-          df.unpersist(blocking = false); ()
-        case _ => ()
-      }
-      prev.asInstanceOf[T]
-    }
+    else { release(v); prev.asInstanceOf[T] }
   }
+
+  /** A memoized relation and the checkpoint RDD holding its rows. */
+  private final case class Pinned(df: DataFrame,
+                                  rdd: org.apache.spark.rdd.RDD[_])
 
   /** Memoize a deterministic relation with a TRUNCATED plan: eager
     * `localCheckpoint` materializes the rows once (internal-row blocks,
@@ -113,29 +113,53 @@ package object queries {
     * around 40 ms of task work on each warm dedup query. Plan-shape
     * audits of the builder pipelines live at the OPERATOR level
     * (PlanAuditSpec builds them directly); statistics propagate into
-    * the leaf, so consumer join strategies are unchanged. Block
-    * lifecycle: clearFitMemo drops the reference and the bench sweep's
-    * System.gc() lets the ContextCleaner free the blocks — the same
-    * deferred release the componentLabels checkpoint loop relies on. */
-  private[queries] def memoCkpt(key: String)(
-      fit: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    memoFit(key) { fit.localCheckpoint(true) }
+    * the leaf, so consumer join strategies are unchanged.
+    *
+    * Keyed by the session's applicationId as well as `key`: the
+    * checkpoint, unlike a pure model fit, is bound to the SparkContext
+    * that built it. The memo owns the entry's whole lifecycle: once the
+    * checkpoint holds the rows, the Dataset caches the build itself
+    * registered (the InMemoryRelations its plan reads that were not
+    * cached before it began) are uncached, blocking; nested memo
+    * checkpoints are separate entries and stay. [[clearFitMemo]]
+    * unpersists the checkpoint. */
+  private[queries] def memoCkpt(s: SparkSession, key: String)(
+      build: => DataFrame): DataFrame =
+    memoFit(s"${s.sparkContext.applicationId}:$key") {
+      // SparkPlan ids are allocated in creation order, and a cache's
+      // physical plan is created when it is registered
+      val before = s.range(0).queryExecution.sparkPlan.id
+      val built = build
+      val cp = built.localCheckpoint(true)
+      cachesRead(built.queryExecution.executedPlan)
+        .filter(_.cacheBuilder.cachedPlan.id > before)
+        .foreach(r => s.sharedState.cacheManager.uncacheQuery(
+          s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          r.cacheBuilder.logicalPlan, cascade = false, blocking = true))
+      Pinned(cp, cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
+    }.df
 
-  /** Drop every memoized fit and unpersist any cached DataFrames among
-    * them. The bench harness calls this between query families so one
-    * family's cached models/relations can't skew another family's
-    * timings (and so back-to-back bench runs start from the same cold
-    * state); correctness is unaffected — every fit is a deterministic
-    * pure function, so a re-fit reproduces the same model. */
-  def clearFitMemo(): Unit = {
-    fitMemo.values.forEach {
-      case df: org.apache.spark.sql.Dataset[_] =>
-        df.unpersist(blocking = false); ()
-      case _ => ()
-    }
-    fitMemo.clear()
+  /** Every cached relation `p` reads, directly or through another cache. */
+  private def cachesRead(p: SparkPlan): Seq[InMemoryRelation] = p match {
+    case a: AdaptiveSparkPlanExec => cachesRead(a.inputPlan)
+    case m: InMemoryTableScanExec =>
+      m.relation +: cachesRead(m.relation.cacheBuilder.cachedPlan)
+    case _ => (p.children ++ p.subqueries).flatMap(cachesRead)
   }
+
+  private def release(v: AnyRef): Unit = v match {
+    case p: Pinned => p.rdd.unpersist(blocking = true); ()
+    case _ => ()
+  }
+
+  /** Drop every memoized fit and unpersist the checkpoint of every
+    * memoized relation. The bench harness calls this between query
+    * families so one family's cached models/relations can't skew another
+    * family's timings (and so back-to-back bench runs start from the
+    * same cold state); correctness is unaffected — every fit is a
+    * deterministic pure function, so a re-fit reproduces the same model. */
+  def clearFitMemo(): Unit =
+    fitMemo.keySet.forEach(k => release(fitMemo.remove(k)))
 
   /** DuckDB twin of [[graft.operators.Dedup.dupClusters]]: the recursive
     * closure + component collapse over a pair relation `rel(id_a, id_b)`.

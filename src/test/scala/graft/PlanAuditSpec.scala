@@ -664,7 +664,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("bm25: inverted-index probes are broadcast hash joins") {
-    val ns = nodes(SparkEntry.queries("t_bm25_topk")(spark, dir))
+    // Operator-level, like the minhash pin: the gated t_bm25_topk reads
+    // the memo's one-leaf checkpoint, so the ranking builder the memo
+    // runs once per session is audited directly.
+    val ns = nodes(graft.queries.TextQueries.bm25Ranked(spark, dir, k = 20))
     assert(!ns.exists(_.nodeName.contains("CartesianProduct")),
       "bm25 degraded to a cartesian")
     // the one-row stats crossJoin is the ONLY nested-loop-shaped join;
