@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import Bytes._
 
 /** Archive-layer intake: the gzip member walk and WARC/1.0 record
   * grammar a web-crawl training pipeline reads before it ever sees a
@@ -48,7 +49,7 @@ object ArchiveCodec {
         pos += 10 // MTIME(4), XFL, OS skipped
         if ((flg & 0x04) != 0) { // FEXTRA
           if (pos + 2 > b.length) return None
-          val xlen = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8)
+          val xlen = le16(b, pos)
           pos += 2 + xlen
           if (pos > b.length) return None
         }
@@ -66,7 +67,7 @@ object ArchiveCodec {
         }
         if ((flg & 0x02) != 0) { // FHCRC: low 16 bits of header CRC
           if (pos + 2 > b.length) return None
-          val stored = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8)
+          val stored = le16(b, pos)
           val crc = new java.util.zip.CRC32()
           crc.update(b, start, pos - start)
           if ((crc.getValue & 0xffff) != stored) return None
@@ -87,14 +88,8 @@ object ArchiveCodec {
         if (pos + 8 > b.length) return None
         val data = out.toByteArray
         val crc = new java.util.zip.CRC32(); crc.update(data)
-        var stored = 0L
-        var i = 0
-        while (i < 4) { stored |= (b(pos + i) & 0xffL) << (8 * i); i += 1 }
-        if (stored != crc.getValue) return None
-        var isize = 0L
-        i = 0
-        while (i < 4) { isize |= (b(pos + 4 + i) & 0xffL) << (8 * i); i += 1 }
-        if (isize != (data.length.toLong & 0xffffffffL)) return None
+        if (le32(b, pos) != crc.getValue) return None
+        if (le32(b, pos + 4) != (data.length.toLong & 0xffffffffL)) return None
         pos += 8
         members += GzipMember(name, data, pos - start)
       }
@@ -325,9 +320,6 @@ object ArchiveCodec {
     * uncompressed size. Any signature/count/bounds/CRC violation →
     * None. */
   def unzipEntries(b: Array[Byte]): Option[Seq[ZipEntry]] = {
-    def u16(p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-    def u32(p: Int): Long = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
     if (b.length < 22) return None
     // EOCD: PK\x05\x06, somewhere in the last 64 KB + 22 bytes
     var eocd = -1
@@ -335,14 +327,14 @@ object ArchiveCodec {
     val floor = math.max(0, b.length - 22 - 0xffff)
     while (eocd < 0 && i >= floor) {
       if (b(i) == 'P' && b(i + 1) == 'K' && b(i + 2) == 5 && b(i + 3) == 6 &&
-        i + 22 + u16(i + 20) == b.length) eocd = i
+        i + 22 + le16(b, i + 20) == b.length) eocd = i
       i -= 1
     }
     if (eocd < 0) return None
-    val count = u16(eocd + 10)
-    if (count != u16(eocd + 8)) return None // this-disk vs total
-    val cdSize = u32(eocd + 12)
-    val cdOff = u32(eocd + 16)
+    val count = le16(b, eocd + 10)
+    if (count != le16(b, eocd + 8)) return None // this-disk vs total
+    val cdSize = le32(b, eocd + 12)
+    val cdOff = le32(b, eocd + 16)
     if (cdOff + cdSize != eocd.toLong) return None
     val entries = Seq.newBuilder[ZipEntry]
     var p = cdOff.toInt
@@ -352,22 +344,22 @@ object ArchiveCodec {
         if (p + 46 > eocd) return None
         if (!(b(p) == 'P' && b(p + 1) == 'K' && b(p + 2) == 1 &&
           b(p + 3) == 2)) return None
-        val method = u16(p + 10)
-        val crc = u32(p + 16)
-        val compSize = u32(p + 20).toInt
-        val uncompSize = u32(p + 24).toInt
-        val nameLen = u16(p + 28)
-        val extraLen = u16(p + 30)
-        val commentLen = u16(p + 32)
-        val localOff = u32(p + 42).toInt
+        val method = le16(b, p + 10)
+        val crc = le32(b, p + 16)
+        val compSize = le32(b, p + 20).toInt
+        val uncompSize = le32(b, p + 24).toInt
+        val nameLen = le16(b, p + 28)
+        val extraLen = le16(b, p + 30)
+        val commentLen = le16(b, p + 32)
+        val localOff = le32(b, p + 42).toInt
         val name = new String(b, p + 46, nameLen, UTF_8)
         p += 46 + nameLen + extraLen + commentLen
         // local header cross-check
         if (localOff + 30 > b.length) return None
         if (!(b(localOff) == 'P' && b(localOff + 1) == 'K' &&
           b(localOff + 2) == 3 && b(localOff + 3) == 4)) return None
-        val lNameLen = u16(localOff + 26)
-        val lExtraLen = u16(localOff + 28)
+        val lNameLen = le16(b, localOff + 26)
+        val lExtraLen = le16(b, localOff + 28)
         val lName = new String(b, localOff + 30, lNameLen, UTF_8)
         if (lName != name) return None
         val dataOff = localOff + 30 + lNameLen + lExtraLen

@@ -1,14 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import Bytes._
+import scala.reflect.runtime.universe.TypeTag
 
-/** REAL media container parsing — the part of the multimodal path that
-  * does not need native codec libraries and therefore is not stubbed:
-  * BMP (BITMAPINFOHEADER) and RIFF/WAVE PCM headers are fixed-layout
-  * little-endian structs, parsed here in pure JVM code. The exotic
-  * codecs (JPEG entropy decode, H.264…) remain behind the
-  * [[Multimodal.MediaDecoder]] seam; this narrows the stub to them.
+/** REAL media parsing and decoding in pure JVM code — the part of the
+  * multimodal path that needs no native codec library. Container walks
+  * (BMP, PNG, GIF, JPEG markers, RIFF/WAVE, ISO-BMFF, MPEG audio, ADTS,
+  * Ogg, Matroska, WebP, TIFF/EXIF, ID3, Annex-B H.264 parameter sets)
+  * and full decodes (PNG inflate + defilter, GIF LZW, baseline and
+  * progressive JPEG entropy decode + IDCT, VP8L, FLAC, µ-law and
+  * IMA-ADPCM WAV, TIFF strips, H.264 I_PCM slices) run here. Only the
+  * remaining entropy-coded payloads (MP3/AAC granules, Vorbis/Opus
+  * frames, CAVLC/CABAC H.264 slices) stay behind the
+  * [[Multimodal.MediaDecoder]] seam.
   *
   * Format references (public): BMP file header + BITMAPINFOHEADER as
   * documented in the Windows SDK (14 + 40 bytes, 4-byte-aligned rows,
@@ -16,9 +22,10 @@ import org.apache.spark.sql.functions._
   * WAVE spec (chunked: `fmt ` then `data`, possibly with other chunks
   * like `LIST` between them).
   *
-  * Same scale contract as [[Multimodal]]: payloads are decoded
-  * per-partition and never cross a shuffle; only the small typed
-  * metadata rows continue downstream.
+  * Same scale contract as [[Multimodal]]: payloads are built by
+  * [[fixture]] and decoded by [[decodeEach]] per partition, so they never
+  * cross a shuffle; only the small typed metadata rows continue
+  * downstream.
   */
 object MediaCodec {
 
@@ -29,28 +36,40 @@ object MediaCodec {
                           valid: Boolean, width: Int, height: Int,
                           channels: Int, sampleRate: Int, nSamples: Long)
 
+  // --------------------------------------------------- Spark plumbing
+
+  /** The gated fixtures' payload source: one (doc_id, payload) row per
+    * document, `build(doc_id, n_chars)` run map-side. Only the two seed
+    * longs ride the [[Partitioning.spread]] exchange that lets a
+    * single-split fixture scan build on every core. */
+  def fixture(spark: SparkSession, docs: DataFrame)(
+      build: (Long, Long) => Array[Byte]): Dataset[(Long, Array[Byte])] = {
+    import spark.implicits._
+    Partitioning.spread(docs.select(col("doc_id").cast("long"),
+        col("n_chars").cast("long")))
+      .as[(Long, Long)]
+      .map { case (id, nChars) => (id, build(id, nChars)) }
+  }
+
+  /** Per-partition decode over (id, payload) rows: `parse` yields zero
+    * or more typed rows per payload, so payloads never shuffle and only
+    * the small stat rows continue downstream. */
+  def decodeEach[T <: Product : TypeTag](media: Dataset[(Long, Array[Byte])])(
+      parse: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    import media.sparkSession.implicits._
+    media.mapPartitions(_.flatMap { case (id, p) => parse(id, p) })
+  }
+
   // ---------------------------------------------------------- parsing
-
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def tag(b: Array[Byte], off: Int): String =
-    if (off + 4 <= b.length)
-      new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    else ""
 
   /** BMP: "BM" + BITMAPINFOHEADER. Returns (width, |height|) — a
     * negative biHeight encodes top-down row order, not a negative
     * size. Truncated headers parse invalid. */
   def parseBmp(b: Array[Byte]): Option[(Int, Int)] =
     if (b.length >= 54 && b(0) == 'B' && b(1) == 'M' &&
-        le32(b, 14) >= 40) { // header size: BITMAPINFOHEADER or larger
-      val w = le32(b, 18)
-      val h = le32(b, 22)
+        le32(b, 14).toInt >= 40) { // header size: BITMAPINFOHEADER or larger
+      val w = le32(b, 18).toInt
+      val h = le32(b, 22).toInt
       if (w > 0 && h != 0 && h != Int.MinValue) Some((w, math.abs(h)))
       else None
     } else None
@@ -63,14 +82,11 @@ object MediaCodec {
     val sig = Array[Int](0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     if (b.length < 33 || !sig.indices.forall(i => (b(i) & 0xff) == sig(i)))
       return None
-    def be32(off: Int): Long =
-      ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-        ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-    if (be32(8) != 13L || tag(b, 12) != "IHDR") return None
+    if (be32(b, 8) != 13L || tag(b, 12) != "IHDR") return None
     val crc = new java.util.zip.CRC32()
     crc.update(b, 12, 4 + 13) // chunk type + data
-    if (crc.getValue != be32(29)) return None
-    val w = be32(16); val h = be32(20)
+    if (crc.getValue != be32(b, 29)) return None
+    val w = be32(b, 16); val h = be32(b, 20)
     if (w > 0 && h > 0 && w <= Int.MaxValue && h <= Int.MaxValue)
       Some((w.toInt, h.toInt))
     else None
@@ -82,23 +98,22 @@ object MediaCodec {
     * runs) are skipped per the spec; EOI or SOS before any SOF means
     * no parseable frame. */
   def parseJpeg(b: Array[Byte]): Option[(Int, Int)] = {
-    def u8(i: Int) = b(i) & 0xff
-    if (b.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
+    if (b.length < 4 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return None
     var off = 2
     while (off + 4 <= b.length) {
-      if (u8(off) != 0xff) return None // desynchronized
+      if (u8(b, off) != 0xff) return None // desynchronized
       var mOff = off + 1
-      while (mOff < b.length && u8(mOff) == 0xff) mOff += 1 // fill bytes
+      while (mOff < b.length && u8(b, mOff) == 0xff) mOff += 1 // fill bytes
       if (mOff + 3 > b.length) return None
-      val marker = u8(mOff)
+      val marker = u8(b, mOff)
       if (marker == 0xd9 || marker == 0xda) return None // EOI / SOS
-      val len = (u8(mOff + 1) << 8) | u8(mOff + 2)
+      val len = be16(b, mOff + 1)
       if (len < 2) return None
       if (marker >= 0xc0 && marker <= 0xcf &&
           marker != 0xc4 && marker != 0xc8 && marker != 0xcc) {
         if (mOff + 8 > b.length) return None
-        val h = (u8(mOff + 4) << 8) | u8(mOff + 5)
-        val w = (u8(mOff + 6) << 8) | u8(mOff + 7)
+        val h = be16(b, mOff + 4)
+        val w = be16(b, mOff + 6)
         return if (w > 0 && h > 0) Some((w, h)) else None
       }
       off = mOff + 1 + len
@@ -133,9 +148,9 @@ object MediaCodec {
     while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0)) {
       val i = off.toInt // safe: off < b.length <= Int.MaxValue
       val id = tag(b, i)
-      val sz = le32(b, i + 4).toLong & 0xffffffffL
+      val sz = le32(b, i + 4)
       if (id == "fmt " && off + 8 + 16 <= b.length)
-        fmt = Some((le16(b, i + 10), le32(b, i + 12), le16(b, i + 22)))
+        fmt = Some((le16(b, i + 10), le32(b, i + 12).toInt, le16(b, i + 22)))
       else if (id == "data")
         dataLen = math.min(sz, b.length - off - 8)
       off += 8L + sz + (sz & 1L) // odd chunks pad one byte
@@ -204,14 +219,14 @@ object MediaCodec {
   private def bmpLayout(b: Array[Byte])
       : Option[(Int, Int, Boolean, Int, Long, Int, Array[Byte])] = try {
     if (!(b.length >= 54 && b(0) == 'B' && b(1) == 'M' &&
-        le32(b, 14) >= 40)) return None
-    val off = le32(b, 10) // pixel-array offset from the file header
-    val w = le32(b, 18)
-    val hRaw = le32(b, 22)
+        le32(b, 14).toInt >= 40)) return None
+    val off = le32(b, 10).toInt // pixel-array offset from the file header
+    val w = le32(b, 18).toInt
+    val hRaw = le32(b, 22).toInt
     val topDown = hRaw < 0
     val h = math.abs(hRaw)
     val bpp = le16(b, 28)
-    val comp = le32(b, 30) // BI_RGB = 0 only
+    val comp = le32(b, 30).toInt // BI_RGB = 0 only
     if (w <= 0 || h <= 0 || hRaw == Int.MinValue ||
         (bpp != 24 && bpp != 8) || comp != 0)
       return None
@@ -222,23 +237,15 @@ object MediaCodec {
     val palette =
       if (bpp == 24) null
       else {
-        val clrUsed = le32(b, 46)
+        val clrUsed = le32(b, 46).toInt
         val colors = if (clrUsed == 0) 256 else clrUsed
-        val tableOff = 14 + le32(b, 14) // after the info header
+        val tableOff = 14 + le32(b, 14).toInt // after the info header
         if (colors < 0 || colors > 256 ||
             tableOff.toLong + 4L * colors > b.length) return None
         java.util.Arrays.copyOfRange(b, tableOff, tableOff + 4 * colors)
       }
     Some((w, h, topDown, off, stride, bpp, palette))
   } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Per-partition batch pixel decode — payloads never shuffle; only
-    * the eight-column stat rows continue downstream. */
-  def extractBmpPixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[BmpPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeBmpPixels(id, p) })
-  }
 
   /** Real encode of an 8-bpp PALETTE BMP: the 54-byte headers with a
     * 256-entry BGRA color table (entry i → (i, 2i mod 255, 3i mod 253)
@@ -280,19 +287,6 @@ object MediaCodec {
     arr
   }
 
-  /** Fixture adapter for the palette-BMP gate. */
-  def bmpPaletteFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildBmpPalettePattern(width = 1 + (nChars % 44).toInt,
-          height = 1 + (nChars % 22).toInt,
-          topDown = id % 2 == 0, seed = id))
-      }
-  }
-
   /** Per-clip sample statistics from a REAL PCM decode — integer-exact
     * sums divided once, like [[BmpPixels]]: `meanSample` catches a
     * decoder misreading the little-endian int16 layout or the sign,
@@ -319,9 +313,9 @@ object MediaCodec {
     while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0)) {
       val i = off.toInt
       val id4 = tag(b, i)
-      val sz = le32(b, i + 4).toLong & 0xffffffffL
+      val sz = le32(b, i + 4)
       if (id4 == "fmt " && off + 8 + 16 <= b.length)
-        fmt = Some((le16(b, i + 8), le16(b, i + 10), le32(b, i + 12),
+        fmt = Some((le16(b, i + 8), le16(b, i + 10), le32(b, i + 12).toInt,
           le16(b, i + 22)))
       else if (id4 == "data") {
         dataOff = off + 8
@@ -342,7 +336,7 @@ object MediaCodec {
           while (c < ch) {
             val p = base + 2 * c
             // little-endian signed 16-bit
-            val v = ((b(p) & 0xff) | (b(p + 1) << 8)).toShort.toInt
+            val v = le16(b, p).toShort.toInt
             sum += v
             val a = math.abs(v)
             sumAbs += a
@@ -360,13 +354,6 @@ object MediaCodec {
           if (nFrames > 0) first.toDouble / ch else 0.0))
       case _ => None
     }
-  }
-
-  /** Per-partition batch sample decode — payloads never shuffle. */
-  def extractWavSamples(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WavSamples] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeWavSamples(id, p) })
   }
 
   // ----------------------------------------------------- µ-law audio
@@ -410,9 +397,9 @@ object MediaCodec {
     while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0)) {
       val i = off.toInt
       val id4 = tag(b, i)
-      val sz = le32(b, i + 4).toLong & 0xffffffffL
+      val sz = le32(b, i + 4)
       if (id4 == "fmt " && off + 8 + 16 <= b.length)
-        fmt = Some((le16(b, i + 8), le16(b, i + 10), le32(b, i + 12),
+        fmt = Some((le16(b, i + 8), le16(b, i + 10), le32(b, i + 12).toInt,
           le16(b, i + 22)))
       else if (id4 == "data") {
         dataOff = off + 8
@@ -479,25 +466,6 @@ object MediaCodec {
       f += 1
     }
     b.array()
-  }
-
-  /** Fixture adapter for the µ-law gate. */
-  def wavUlawFromDocuments(spark: SparkSession,
-                           docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildWavUlawPattern(channels = 1 + (id % 2).toInt,
-          sampleRate = 8000, nSamples = 1 + nChars % 400, seed = id))
-      }
-  }
-
-  /** Per-partition batch µ-law decode — payloads never shuffle. */
-  def extractWavUlaw(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WavSamples] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeWavUlaw(id, p) })
   }
 
   // ------------------------------------------------ IMA-ADPCM audio
@@ -658,13 +626,13 @@ object MediaCodec {
         factFrames < 0)) {
       val i = off.toInt
       val id4 = tag(b, i)
-      val sz = le32(b, i + 4).toLong & 0xffffffffL
+      val sz = le32(b, i + 4)
       if (id4 == "fmt " && off + 8 + 20 <= b.length &&
           le16(b, i + 8) == 0x11)
-        fmt = Some((le16(b, i + 10), le32(b, i + 12), le16(b, i + 20),
+        fmt = Some((le16(b, i + 10), le32(b, i + 12).toInt, le16(b, i + 20),
           le16(b, i + 22), le16(b, i + 26)))
       else if (id4 == "fact" && off + 12 <= b.length)
-        factFrames = le32(b, i + 8).toLong & 0xffffffffL
+        factFrames = le32(b, i + 8)
       else if (id4 == "data") {
         dataOff = off + 8
         dataLen = math.min(sz, b.length - off - 8)
@@ -694,7 +662,7 @@ object MediaCodec {
           var c = 0
           while (c < ch) {
             val ho = blockOff + 4 * c
-            pred(c) = ((b(ho) & 0xff) | (b(ho + 1) << 8)).toShort.toInt
+            pred(c) = le16(b, ho).toShort.toInt
             index(c) = math.max(0, math.min(88, b(ho + 2) & 0xff))
             account(pred(c), g.toLong * fpb, c)
             c += 1
@@ -730,26 +698,6 @@ object MediaCodec {
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Fixture adapter for the ADPCM gate. */
-  def wavAdpcmFromDocuments(spark: SparkSession,
-                            docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildWavAdpcmPattern(channels = 1 + (id % 2).toInt,
-          sampleRate = 8000, nFrames = 64 + (nChars % 512).toInt,
-          seed = id))
-      }
-  }
-
-  /** Per-partition batch ADPCM decode — payloads never shuffle. */
-  def extractWavAdpcm(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WavSamples] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeWavAdpcm(id, p) })
-  }
-
   // ------------------------------------ MP4 / ISO-BMFF container walk
 
   /** Parsed MP4/ISO-BMFF container metadata — the fields a real video
@@ -762,16 +710,6 @@ object MediaCodec {
                            durationMs: Long, width: Int, height: Int,
                            videoCodec: String, audioCodec: String,
                            channels: Int, sampleRate: Int, mdatBytes: Long)
-
-  private def be32u(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], off: Int): Long =
-    (be32u(b, off) << 32) | be32u(b, off + 4)
-
-  private def be16u(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
 
   /** Walk an ISO-BMFF box sequence: `ftyp` major brand, `mvhd`
     * timescale/duration (v0 and v1), per-`trak` handler + `tkhd`
@@ -807,7 +745,7 @@ object MediaCodec {
       var off = from
       while (off + 8 <= to) {
         val i = off.toInt
-        val size32 = be32u(b, i)
+        val size32 = be32(b, i)
         val fourcc = tag(b, i + 4)
         val (boxSize, hdr) =
           if (size32 == 1L && off + 16 <= to) (be64(b, i + 8), 16)
@@ -834,36 +772,36 @@ object MediaCodec {
           case "mvhd" if bodyLen >= 4 =>
             val v = b(body.toInt) & 0xff
             if (v == 1 && bodyLen >= 32) {
-              timescale = be32u(b, body.toInt + 20)
+              timescale = be32(b, body.toInt + 20)
               duration = be64(b, body.toInt + 24)
             } else if (v == 0 && bodyLen >= 20) {
-              timescale = be32u(b, body.toInt + 12)
-              duration = be32u(b, body.toInt + 16)
+              timescale = be32(b, body.toInt + 12)
+              duration = be32(b, body.toInt + 16)
             }
           case "tkhd" if bodyLen >= 84 =>
             val v = b(body.toInt) & 0xff
             // width/height are the LAST 8 body bytes in v0 and v1
             val wOff = (body + bodyLen - 8).toInt
             if (v <= 1) {
-              trakW = (be32u(b, wOff) >>> 16).toInt
-              trakH = (be32u(b, wOff + 4) >>> 16).toInt
+              trakW = (be32(b, wOff) >>> 16).toInt
+              trakH = (be32(b, wOff + 4) >>> 16).toInt
             }
           case "hdlr" if bodyLen >= 12 =>
             trakHandler = tag(b, body.toInt + 8)
           case "stsd" if bodyLen >= 16 =>
             // fullbox(4) + entry_count(4), then the first sample entry
             val e = body.toInt + 8
-            val entLen = be32u(b, e)
+            val entLen = be32(b, e)
             if (entLen >= 16 && e + entLen <= off + boxSize) {
               trakCodec = tag(b, e + 4)
               if (trakHandler == "vide" && entLen >= 36) {
                 // sample-entry coded dims at +32/+34 (after 6 reserved
                 // + 2 dref + 16 predefined/reserved bytes)
-                trakW = be16u(b, e + 32)
-                trakH = be16u(b, e + 34)
+                trakW = be16(b, e + 32)
+                trakH = be16(b, e + 34)
               } else if (trakHandler == "soun" && entLen >= 36) {
-                trakCh = be16u(b, e + 24)
-                trakSr = (be32u(b, e + 32) >>> 16).toInt
+                trakCh = be16(b, e + 24)
+                trakSr = (be32(b, e + 32) >>> 16).toInt
               }
             }
           case "mdat" => mdatBytes += bodyLen
@@ -1252,7 +1190,7 @@ object MediaCodec {
       var off = from
       while (off + 8 <= to) {
         val i = off.toInt
-        val size32 = be32u(b, i)
+        val size32 = be32(b, i)
         val fourcc = tag(b, i + 4)
         val (boxSize, hdr) =
           if (size32 == 1L && off + 16 <= to) (be64(b, i + 8), 16)
@@ -1268,7 +1206,7 @@ object MediaCodec {
         // (OutOfMemoryError escapes the NonFatal catch and would kill
         // the task instead of yielding None)
         def entries(headerBytes: Int, entryBytes: Int): Int = {
-          val ne = be32u(b, e + 4)
+          val ne = be32(b, e + 4)
           if (ne < 0 || headerBytes + entryBytes * ne > bodyLen) -1
           else ne.toInt
         }
@@ -1282,13 +1220,13 @@ object MediaCodec {
             sttsDeltas = new Array[Long](ne)
             var j = 0
             while (j < ne) {
-              sttsCounts(j) = be32u(b, e + 8 + 8 * j)
-              sttsDeltas(j) = be32u(b, e + 12 + 8 * j)
+              sttsCounts(j) = be32(b, e + 8 + 8 * j)
+              sttsDeltas(j) = be32(b, e + 12 + 8 * j)
               j += 1
             }
           case "stsz" =>
-            constSize = be32u(b, e + 4).toInt
-            val n0 = be32u(b, e + 8)
+            constSize = be32(b, e + 4).toInt
+            val n0 = be32(b, e + 8)
             if (n0 < 0 || n0 > Int.MaxValue) return false
             if (constSize == 0 && 12 + 4 * n0 > bodyLen) return false
             sampleCount = n0.toInt
@@ -1296,7 +1234,7 @@ object MediaCodec {
               sizes = new Array[Int](sampleCount)
               var j = 0
               while (j < sampleCount) {
-                sizes(j) = be32u(b, e + 12 + 4 * j).toInt; j += 1
+                sizes(j) = be32(b, e + 12 + 4 * j).toInt; j += 1
               }
             }
           case "stss" =>
@@ -1304,7 +1242,7 @@ object MediaCodec {
             if (ne < 0) return false
             syncs = new Array[Int](ne)
             var j = 0
-            while (j < ne) { syncs(j) = be32u(b, e + 8 + 4 * j).toInt
+            while (j < ne) { syncs(j) = be32(b, e + 8 + 4 * j).toInt
               j += 1 }
           case "stsc" =>
             val ne = entries(8, 12)
@@ -1313,8 +1251,8 @@ object MediaCodec {
             stscSpc = new Array[Int](ne)
             var j = 0
             while (j < ne) {
-              stscFirst(j) = be32u(b, e + 8 + 12 * j).toInt
-              stscSpc(j) = be32u(b, e + 12 + 12 * j).toInt
+              stscFirst(j) = be32(b, e + 8 + 12 * j).toInt
+              stscSpc(j) = be32(b, e + 12 + 12 * j).toInt
               j += 1
             }
           case "stco" =>
@@ -1322,7 +1260,7 @@ object MediaCodec {
             if (ne < 0) return false
             chunkOffs = new Array[Long](ne)
             var j = 0
-            while (j < ne) { chunkOffs(j) = be32u(b, e + 8 + 4 * j)
+            while (j < ne) { chunkOffs(j) = be32(b, e + 8 + 4 * j)
               j += 1 }
           case "mdat" => mdatStart = body; mdatLen = boxSize - hdr
           case _ => ()
@@ -1382,41 +1320,6 @@ object MediaCodec {
       (0 until sampleCount).map(sizeOf).max, syncs.length, nChunks,
       durationUnits, absOff - mdatStart))
   } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Fixture adapter for the sample-table gate. */
-  def mp4SamplesFromDocuments(spark: SparkSession,
-                              docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildMp4SamplesPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch sample-table walk — payloads never shuffle. */
-  def extractMp4Samples(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Mp4Samples] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseMp4Samples(id, p) })
-  }
-
-  /** Fixture adapter for the CONTAINER-metadata gate: every document
-    * becomes a structurally-varied two-track MP4 whose every metadata
-    * field derives from (doc_id, n_chars) arithmetic, so the oracle
-    * re-derives what the box walk must recover from real bytes. */
-  def mp4FromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildMp4Pattern(id, nChars)) }
-  }
-
-  /** Per-partition batch box walk — payloads never shuffle. */
-  def extractMp4Meta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Mp4Meta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseMp4Meta(id, p) })
-  }
 
   // ------------------------------------------- MP3 frame-header walk
 
@@ -1643,26 +1546,24 @@ object MediaCodec {
     val side = if (mode == 3) 17 else 32
     var o = 4 + side
     if (o + 8 > b.length) return None
-    val tag = new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    val isVbr = tag match {
+    val isVbr = tag(b, o) match {
       case "Xing" => true
       case "Info" => false
       case _ => return None
     }
     o += 4
-    def be32(): Long = {
-      val v = ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+    def next32(): Long = {
+      val v = be32(b, o)
       o += 4
       v
     }
-    val flags = be32()
+    val flags = next32()
     // the cross-check needs frame and byte totals; a header without
     // them carries nothing to verify the walk against
     if ((flags & 0x3) != 0x3) return None
     if (o + 8 > b.length) return None
-    val xFrames = be32()
-    val xBytes = be32()
+    val xFrames = next32()
+    val xBytes = next32()
     var tocSum = 0L
     if ((flags & 0x4) != 0) {
       if (o + 100 > b.length) return None
@@ -1672,7 +1573,7 @@ object MediaCodec {
     }
     val quality =
       if ((flags & 0x8) != 0) { if (o + 4 > b.length) return None
-        be32().toInt }
+        next32().toInt }
       else 0
     // the VBR walk: every frame after the Xing frame, variable sizes
     var pos = len0
@@ -1692,45 +1593,9 @@ object MediaCodec {
       xFrames * 1152000L / sr))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Fixture adapter for the VBR gate. */
-  def mp3VbrFromDocuments(spark: SparkSession,
-                          docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildMp3VbrPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch VBR walk — payloads never shuffle. */
-  def extractMp3Vbr(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Mp3VbrMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseMp3Vbr(id, p) })
-  }
-
-  /** Fixture adapter for the MP3-metadata gate: every document becomes
-    * a CBR MPEG1 L3 stream whose header fields derive from (doc_id,
-    * n_chars) arithmetic, so the oracle re-derives what the frame walk
-    * must recover — frame count, byte total (padding included),
-    * CBR duration — from real frame headers. */
-  def mp3FromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildMp3Pattern(id, nChars)) }
-  }
-
-  /** Per-partition batch frame walk — payloads never shuffle. */
-  def extractMp3Meta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Mp3Meta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseMp3Meta(id, p) })
-  }
-
   /** The real header decoder behind the [[Multimodal.MediaDecoder]]-
-    * shaped seam: BMP and WAV parse for real; anything else (or a
-    * corrupt payload) yields an invalid row. */
+    * shaped seam: BMP, PNG, GIF, JPEG and WAV headers parse for real;
+    * anything else (or a corrupt payload) yields an invalid row. */
   def decode(id: Long, payload: Array[Byte]): AvMeta = {
     val n = payload.length
     // belt-and-braces on the datum contract: even a parser bug on some
@@ -1745,13 +1610,6 @@ object MediaCodec {
     catch { case scala.util.control.NonFatal(_) =>
       AvMeta(id, "unknown", n, valid = false, 0, 0, 0, 0, 0L)
     }
-  }
-
-  /** Per-partition batch decode over (id, payload) rows — the same
-    * payload-never-shuffles plumbing as [[Multimodal.extractFeatures]]. */
-  def extract(media: Dataset[(Long, Array[Byte])]): Dataset[AvMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { case (id, p) => decode(id, p) })
   }
 
   // ------------------------------------------------------ synthesizers
@@ -1801,24 +1659,6 @@ object MediaCodec {
       y += 1
     }
     arr
-  }
-
-  /** Fixture adapter for the PIXEL gate: every document becomes a
-    * patterned 24-bpp BMP (dimensions from n_chars, alternating
-    * bottom-up/top-down by id parity, pattern seeded by id), so the
-    * real pixel decoder runs over both row orders under the oracle,
-    * which recomputes the channel means from the same (w, h, seed)
-    * arithmetic. */
-  def bmpFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildBmpPattern(width = 1 + (nChars % 48).toInt,
-          height = 1 + (nChars % 32).toInt,
-          topDown = id % 2 == 0, seed = id))
-      }
   }
 
   /** 8×8 average-hash of a decoded image — the canonical perceptual
@@ -2130,19 +1970,6 @@ object MediaCodec {
   final case class ImagePhash(id: Long, width: Int, height: Int,
                               phash: String)
 
-  /** Per-partition batch pHash through the unified entry point —
-    * payloads never shuffle; only the 64-char key rides into the
-    * dedup aggregation, and BMP/PNG/GIF/JPEG payloads all hash
-    * through the same [[decodeGray]] → [[phashGray]] path. */
-  def extractPhash(media: Dataset[(Long, Array[Byte])])
-      : Dataset[ImagePhash] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      decodeGray(p).map(g => ImagePhash(id, g.width, g.height,
-        phashGray(g)))
-    })
-  }
-
   /** Real BMP encode of an arbitrary RGB pixel function: the
     * [[buildBmp]] header + BGR rows with real 4-byte padding and
     * real bottom-up/top-down placement. */
@@ -2186,29 +2013,6 @@ object MediaCodec {
     (math.min(254, (31L * x + 47L * y + 61L * b0) % 255 + ramp).toInt,
       math.min(252, (59L * x + 83L * y + 29L * b0) % 253 + ramp).toInt,
       math.min(250, (73L * x + 151L * y + 97L * b0) % 251 + ramp).toInt)
-  }
-
-  /** Fixture adapter for the pHash near-dup gate: the class picture
-    * rides a REAL container that alternates BY DOC — even ids encode
-    * BMP (both row orders), odd ids encode PNG (IDAT split every
-    * third id) — so the gate only stays green if the unified
-    * [[decodeGray]] entry point hashes both formats to identical
-    * bits (a format-dependent hash would split every class into two
-    * groups and move every canonical id). */
-  def phashFromDocuments(spark: SparkSession,
-                         docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map { id =>
-        val s = id % 37
-        val payload =
-          if (id % 2 == 0)
-            encodeBmpRgb(48, 32, topDown = (id / 2) % 2 == 0,
-              phashTwinRgb(s))
-          else encodePngRgb(48, 32, phashTwinRgb(s),
-            splitIdat = id % 3 == 0)
-        (id, payload)
-      }
   }
 
   /** A TEXTURED BMP fixture for the hash gate: large multipliers make
@@ -2273,51 +2077,12 @@ object MediaCodec {
     arr
   }
 
-  /** Fixture adapter for the image NEAR-dup gate. */
-  def imageNearDupFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map(id => (id, buildBmpTwinTexture(id % 37)))
-  }
-
-  /** Fixture adapter for the image-dedup gate: the picture depends on
-    * the doc's DEDUP GROUP (seed = doc_id mod 37), not the doc — so
-    * ~37 distinct pictures recur across the corpus and grouping by
-    * aHash recovers exactly the seed classes. Dimensions ≥ 8 so every
-    * grid cell is populated, derived from the seed so group members
-    * are pixel-identical. */
-  def ahashFromDocuments(spark: SparkSession,
-                         docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map { id =>
-        val s = id % 37
-        (id, buildBmpTexture(width = 8 + (s % 5).toInt * 4,
-          height = 8 + (s % 3).toInt * 4,
-          topDown = id % 2 == 0, seed = s))
-      }
-  }
-
-  /** Per-partition batch hash — payloads never shuffle; only the
-    * 64-char key rides into the dedup aggregation. */
-  def extractAhash(media: Dataset[(Long, Array[Byte])])
-      : Dataset[ImageHash] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => ahashBmp(id, p) })
-  }
-
   /** Windowed loudness profile of a PCM16 clip — the audio-curation
     * stats (silence share, energy) a speech-data pipeline filters on.
     * All fields are exact integer arithmetic. */
   final case class WavEnergy(id: Long, nWindows: Long, energyTotal: Long,
                              nSilent: Long, peakWindowEnergy: Long)
 
-  /** Decode 16-bit PCM and profile loudness in fixed windows of
-    * `window` frames (last window may be partial): per window the sum
-    * of squared samples across channels (energy) and the max |sample|;
-    * a window is SILENT when its max |sample| < `threshold`. Returns
-    * exact longs so the SQL oracle reproduces every field. */
   /** Offset of the `data` chunk payload, or −1 — the walk
     * [[decodeWavSamples]] already validated (its nSamples is clamped
     * to the bytes actually present after this offset). */
@@ -2327,13 +2092,18 @@ object MediaCodec {
     var off = 12L
     while (off + 8 <= b.length) {
       val i = off.toInt
-      val sz = le32(b, i + 4).toLong & 0xffffffffL
+      val sz = le32(b, i + 4)
       if (tag(b, i) == "data") return off + 8
       off += 8L + sz + (sz & 1L)
     }
     -1L
   }
 
+  /** Decode 16-bit PCM and profile loudness in fixed windows of
+    * `window` frames (last window may be partial): per window the sum
+    * of squared samples across channels (energy) and the max |sample|;
+    * a window is SILENT when its max |sample| < `threshold`. Returns
+    * exact longs so the SQL oracle reproduces every field. */
   def wavEnergy(id: Long, b: Array[Byte], window: Int = 100,
                 threshold: Int = 64): Option[WavEnergy] = try {
     if (window <= 0) return None // a 0-frame window would never advance
@@ -2351,7 +2121,7 @@ object MediaCodec {
         var c = 0
         while (c < ch) {
           val p = (dataOff + f * ch * 2 + 2 * c).toInt
-          val v = ((b(p) & 0xff) | (b(p + 1) << 8)).toShort.toInt
+          val v = le16(b, p).toShort.toInt
           we += v.toLong * v
           val a = math.abs(v)
           if (a > wMax) wMax = a
@@ -2396,27 +2166,6 @@ object MediaCodec {
     arr
   }
 
-  /** Fixture adapter for the energy gate: mono/stereo by id parity,
-    * clip length from n_chars (several windows incl. a partial one),
-    * muted stretches seeded by id. */
-  def wavEnergyFromDocuments(spark: SparkSession,
-                             docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildWavEnergyPattern(channels = 1 + (id % 2).toInt,
-          sampleRate = 16000, nSamples = 150 + nChars % 873, seed = id))
-      }
-  }
-
-  /** Per-partition batch energy profile — payloads never shuffle. */
-  def extractWavEnergy(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WavEnergy] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => wavEnergy(id, p) })
-  }
-
   /** Zero-crossing profile of a PCM16 clip — with energy, the classic
     * cheap speech/music/noise discriminator (high ZCR ≈ fricatives/
     * noise, low ≈ voiced speech/tones). Exact integers throughout. */
@@ -2440,7 +2189,7 @@ object MediaCodec {
       var c = 0
       while (c < ch) {
         val p = (dataOff + f * ch * 2 + 2 * c).toInt
-        val v = ((b(p) & 0xff) | (b(p + 1) << 8)).toShort.toInt
+        val v = le16(b, p).toShort.toInt
         if (f > 0 && prev(c).toLong * v < 0) crossings += 1
         prev(c) = v
         c += 1
@@ -2450,13 +2199,6 @@ object MediaCodec {
     Some(WavZcr(id, ch, frames, crossings))
   } catch {
     case scala.util.control.NonFatal(_) => None
-  }
-
-  /** Per-partition batch crossing profile — payloads never shuffle. */
-  def extractWavZcr(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WavZcr] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => wavZcr(id, p) })
   }
 
   /** A minimal valid PNG: signature + IHDR (with a REAL CRC32) + IEND.
@@ -2560,24 +2302,6 @@ object MediaCodec {
       f += 1
     }
     arr
-  }
-
-  /** Fixture adapter for the SAMPLE gate: every document becomes a
-    * patterned PCM16 WAV (length/rate from n_chars, stereo for odd ids,
-    * every third with a LIST chunk before `data`, signal seeded by id),
-    * so the real sample decoder runs under the oracle, which recomputes
-    * the loudness statistics from the same arithmetic. */
-  def wavFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildWavPattern(channels = 1 + (id % 2).toInt,
-          sampleRate = 8000 + (nChars % 8000).toInt,
-          nSamples = 1 + nChars % 512,
-          withListChunk = id % 3 == 0, seed = id))
-      }
   }
 
   // ----------------------------------------------------- JPEG pixels
@@ -3058,8 +2782,6 @@ object MediaCodec {
       : Option[(Int, Int, Array[JpegPlane])] = try {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
       return None
-    def u8(i: Int) = b(i) & 0xff
-    def u16(i: Int) = (u8(i) << 8) | u8(i + 1)
     var off = 2
     var w = 0; var h = 0
     var nf = 0
@@ -3074,50 +2796,50 @@ object MediaCodec {
     val dcSel = new Array[Int](3)
     val acSel = new Array[Int](3)
     while (sosAt < 0) {
-      if (off + 4 > b.length || u8(off) != 0xff) return None
+      if (off + 4 > b.length || u8(b, off) != 0xff) return None
       // skip 0xFF fill bytes before the marker (legal padding, T.81
       // B.1.1.2, mirroring parseJpeg) — without this a padded segment
       // reads marker 0xFF and a bogus length, silently dropping the row
-      while (off + 4 < b.length && u8(off + 1) == 0xff) off += 1
-      val marker = u8(off + 1)
+      while (off + 4 < b.length && u8(b, off + 1) == 0xff) off += 1
+      val marker = u8(b, off + 1)
       if (marker == 0xd9) return None // EOI before SOS
-      val len = u16(off + 2)
+      val len = be16(b, off + 2)
       if (len < 2 || off + 2 + len > b.length) return None
       val seg = off + 4
       marker match {
         case 0xdb => // DQT: possibly several tables per segment
           var p = seg
           while (p < off + 2 + len) {
-            val pq = u8(p) >> 4; val tq = u8(p) & 15
+            val pq = u8(b, p) >> 4; val tq = u8(b, p) & 15
             if (pq != 0 || tq > 3) return None // 16-bit tables: seam
             if (p + 1 + 64 > off + 2 + len) return None
-            quant(tq) = Array.tabulate(64)(i => u8(p + 1 + i))
+            quant(tq) = Array.tabulate(64)(i => u8(b, p + 1 + i))
             p += 65
           }
         case 0xc4 => // DHT: possibly several tables per segment
           var p = seg
           while (p < off + 2 + len) {
-            val cls = u8(p) >> 4; val tid = u8(p) & 15
+            val cls = u8(b, p) >> 4; val tid = u8(b, p) & 15
             if (cls > 1 || tid > 3) return None
-            val bits = Array.tabulate(16)(i => u8(p + 1 + i))
+            val bits = Array.tabulate(16)(i => u8(b, p + 1 + i))
             val n = bits.sum
             if (p + 17 + n > off + 2 + len) return None
             val codes = canonicalCodes(bits, n)
             huffCodes(cls * 4 + tid) = codes.zipWithIndex.map {
-              case ((code, cl), ix) => (cl, code) -> u8(p + 17 + ix)
+              case ((code, cl), ix) => (cl, code) -> u8(b, p + 17 + ix)
             }.toMap
             p += 17 + n
           }
         case 0xc0 => // SOF0 baseline
-          if (u8(seg) != 8) return None
-          h = u16(seg + 1); w = u16(seg + 3)
-          nf = u8(seg + 5)
+          if (u8(b, seg) != 8) return None
+          h = be16(b, seg + 1); w = be16(b, seg + 3)
+          nf = u8(b, seg + 5)
           if (nf != 1 && nf != 3) return None // grayscale or color
           var c = 0
           while (c < nf) {
-            sofIds(c) = u8(seg + 6 + 3 * c)
-            samp(c) = u8(seg + 7 + 3 * c)
-            qIds(c) = u8(seg + 8 + 3 * c)
+            sofIds(c) = u8(b, seg + 6 + 3 * c)
+            samp(c) = u8(b, seg + 7 + 3 * c)
+            qIds(c) = u8(b, seg + 8 + 3 * c)
             if (qIds(c) > 3) return None
             c += 1
           }
@@ -3131,13 +2853,13 @@ object MediaCodec {
           return None // progressive / extended / arithmetic: the seam
         case 0xdd => // DRI: restart interval in MCUs
           if (len != 4) return None
-          restartInterval = u16(seg)
+          restartInterval = be16(b, seg)
         case 0xda =>
-          if (nf == 0 || u8(seg) != nf) return None
+          if (nf == 0 || u8(b, seg) != nf) return None
           var sc = 0
           while (sc < nf) {
-            val cid = u8(seg + 1 + 2 * sc)
-            val tsel = u8(seg + 2 + 2 * sc)
+            val cid = u8(b, seg + 1 + 2 * sc)
+            val tsel = u8(b, seg + 2 + 2 * sc)
             val ci = sofIds.indexOf(cid)
             if (ci < 0 || ci >= nf) return None
             dcSel(ci) = tsel >> 4
@@ -3277,8 +2999,6 @@ object MediaCodec {
       : Option[JpegPixels] = try {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
       return None
-    def u8(i: Int) = b(i) & 0xff
-    def u16(i: Int) = (u8(i) << 8) | u8(i + 1)
     var off = 2
     var w = 0; var h = 0; var qId = -1
     val quant = new Array[Array[Int]](4)
@@ -3288,11 +3008,11 @@ object MediaCodec {
     var dcPred = 0
     var sawSof = false
     while (off + 2 <= b.length) {
-      if (u8(off) != 0xff) return None
+      if (u8(b, off) != 0xff) return None
       // skip 0xFF fill bytes before the marker (T.81 B.1.1.2), like
       // parseJpeg — padded segments must decode, not silently drop
-      while (off + 2 < b.length && u8(off + 1) == 0xff) off += 1
-      val marker = u8(off + 1)
+      while (off + 2 < b.length && u8(b, off + 1) == 0xff) off += 1
+      val marker = u8(b, off + 1)
       if (marker == 0xd9) { // EOI: reconstruct
         if (!sawSof || coefs == null || qId < 0 || quant(qId) == null)
           return None
@@ -3331,38 +3051,38 @@ object MediaCodec {
         return Some(JpegPixels(id, w, h, sumG.toDouble / n, top.toDouble / w))
       }
       if (off + 4 > b.length) return None
-      val len = u16(off + 2)
+      val len = be16(b, off + 2)
       if (len < 2 || off + 2 + len > b.length) return None
       val seg = off + 4
       marker match {
         case 0xdb =>
           var p = seg
           while (p < off + 2 + len) {
-            val pq = u8(p) >> 4; val tq = u8(p) & 15
+            val pq = u8(b, p) >> 4; val tq = u8(b, p) & 15
             if (pq != 0 || tq > 3) return None
             if (p + 1 + 64 > off + 2 + len) return None
-            quant(tq) = Array.tabulate(64)(i => u8(p + 1 + i))
+            quant(tq) = Array.tabulate(64)(i => u8(b, p + 1 + i))
             p += 65
           }
         case 0xc4 =>
           var p = seg
           while (p < off + 2 + len) {
-            val cls = u8(p) >> 4; val tid = u8(p) & 15
+            val cls = u8(b, p) >> 4; val tid = u8(b, p) & 15
             if (cls > 1 || tid > 3) return None
-            val bits = Array.tabulate(16)(i => u8(p + 1 + i))
+            val bits = Array.tabulate(16)(i => u8(b, p + 1 + i))
             val n = bits.sum
             if (p + 17 + n > off + 2 + len) return None
             huffCodes(cls * 4 + tid) =
               canonicalCodes(bits, n).zipWithIndex.map {
-                case ((code, cl), ix) => (cl, code) -> u8(p + 17 + ix)
+                case ((code, cl), ix) => (cl, code) -> u8(b, p + 17 + ix)
               }.toMap
             p += 17 + n
           }
         case 0xc2 => // SOF2 progressive
-          if (u8(seg) != 8 || u8(seg + 5) != 1) return None // gray only
-          if (u8(seg + 7) != 0x11) return None
-          h = u16(seg + 1); w = u16(seg + 3)
-          qId = u8(seg + 8)
+          if (u8(b, seg) != 8 || u8(b, seg + 5) != 1) return None // gray only
+          if (u8(b, seg + 7) != 0x11) return None
+          h = be16(b, seg + 1); w = be16(b, seg + 3)
+          qId = u8(b, seg + 8)
           if (w <= 0 || h <= 0) return None
           bw8 = (w + 7) / 8; bh8 = (h + 7) / 8
           coefs = Array.fill(bw8 * bh8)(new Array[Int](64))
@@ -3372,10 +3092,10 @@ object MediaCodec {
           return None // only SOF2 on this path
         case 0xdd => return None
         case 0xda => // one scan: entropy data follows until next marker
-          if (!sawSof || u8(seg) != 1) return None
-          val tsel = u8(seg + 2)
-          val ss = u8(seg + 3); val se = u8(seg + 4)
-          val ah = u8(seg + 5) >> 4; val al = u8(seg + 5) & 15
+          if (!sawSof || u8(b, seg) != 1) return None
+          val tsel = u8(b, seg + 2)
+          val ss = u8(b, seg + 3); val se = u8(b, seg + 4)
+          val ah = u8(b, seg + 5) >> 4; val al = u8(b, seg + 5) & 15
           if (ss > se || se > 63) return None
           val br = new JpegBitReader(b, off + 2 + len)
           def huffDecode(t: Map[(Int, Int), Int]): Int = {
@@ -3537,7 +3257,7 @@ object MediaCodec {
           var p = off + 2 + len
           var found = -1
           while (found < 0 && p + 1 < b.length) {
-            if (u8(p) == 0xff && u8(p + 1) != 0x00) found = p
+            if (u8(b, p) == 0xff && u8(b, p + 1) != 0x00) found = p
             else p += 1
           }
           if (found < 0) return None
@@ -3860,18 +3580,6 @@ object MediaCodec {
     })
   }
 
-  /** Fixture adapter for the refinement gate. */
-  def jpegRefineFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildJpegRefinePattern(width = 1 + (nChars % 29).toInt,
-          height = 1 + (nChars % 17).toInt, seed = id))
-      }
-  }
-
   /** [[buildJpegProgressive]] with the block-constant gray picture —
     * DC-only, exact through the IDCT, same arithmetic as the baseline
     * fixture so the oracle shape is shared. */
@@ -3884,43 +3592,6 @@ object MediaCodec {
       coef(0) = (v.toInt - 128) * 8
       coef
     })
-  }
-
-  /** Fixture adapter for the progressive gate. */
-  def jpegProgressiveFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildJpegProgressivePattern(width = 1 + (nChars % 33).toInt,
-          height = 1 + (nChars % 21).toInt, seed = id))
-      }
-  }
-
-  /** Per-partition batch progressive decode — payloads never shuffle. */
-  def extractJpegProgressive(media: Dataset[(Long, Array[Byte])])
-      : Dataset[JpegPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      decodeJpegProgressive(id, p) })
-  }
-
-  /** Fixture adapter for the JPEG gate: every document becomes a
-    * block-constant grayscale baseline JPEG (dimensions from n_chars,
-    * pattern seeded by id) — the full Huffman+IDCT pipeline runs under
-    * the oracle, which recomputes the means from block arithmetic. */
-  def jpegFromDocuments(spark: SparkSession,
-                        docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildJpegPattern(width = 1 + (nChars % 44).toInt,
-          height = 1 + (nChars % 26).toInt, seed = id,
-          // every 3rd doc carries real RSTn markers (DRI 1-4 MCUs)
-          restartInterval = if (id % 3 == 1) 1 + (id % 4).toInt else 0))
-      }
   }
 
   /** [[buildJpeg420Blocks]] with a deterministic picture the oracle can
@@ -3948,52 +3619,6 @@ object MediaCodec {
       coef(0) = (v - 128) * 8
       coef
     })
-  }
-
-  /** Fixture adapter for the 4:2:0 gate: every document becomes a
-    * block-constant subsampled color JPEG — the wild-web layout: four
-    * interleaved Y blocks + one Cb + one Cr per MCU, chroma replicated
-    * 2× at decode — under the same RGB statistics contract. */
-  def jpeg420FromDocuments(spark: SparkSession,
-                           docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildJpeg420Pattern(width = 1 + (nChars % 52).toInt,
-          height = 1 + (nChars % 34).toInt, seed = id,
-          restartInterval = if (id % 3 == 1) 1 + (id % 4).toInt else 0))
-      }
-  }
-
-  /** Fixture adapter for the color-JPEG gate: every document becomes a
-    * block-constant 4:4:4 color baseline JPEG — three interleaved
-    * component streams with independent DC predictors, then the
-    * fixed-point color conversion, all under the oracle. */
-  def jpegColorFromDocuments(spark: SparkSession,
-                             docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildJpegColorPattern(width = 1 + (nChars % 28).toInt,
-          height = 1 + (nChars % 18).toInt, seed = id,
-          restartInterval = if (id % 3 == 1) 1 + (id % 4).toInt else 0))
-      }
-  }
-
-  /** Per-partition batch color-JPEG decode — payloads never shuffle. */
-  def extractJpegRgb(media: Dataset[(Long, Array[Byte])])
-      : Dataset[JpegRgb] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeJpegRgb(id, p) })
-  }
-
-  /** Per-partition batch JPEG decode — payloads never shuffle. */
-  def extractJpegPixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[JpegPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeJpegPixels(id, p) })
   }
 
   // ------------------------------------------------------ GIF pixels
@@ -4311,32 +3936,6 @@ object MediaCodec {
     out.toByteArray
   }
 
-  /** Fixture adapter for the GIF gate: every document becomes a
-    * patterned GIF (dimensions from n_chars, every third id with a
-    * Graphic Control Extension before the frame, pattern seeded by id),
-    * so the real LZW decompression and palette mapping run under the
-    * oracle, which recomputes the channel means from the same
-    * (w, h, seed) arithmetic. */
-  def gifFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildGifPattern(width = 1 + (nChars % 56).toInt,
-          height = 1 + (nChars % 28).toInt,
-          seed = id, withExtension = id % 3 == 0,
-          interlaced = id % 5 == 4))
-      }
-  }
-
-  /** Per-partition batch GIF decode — payloads never shuffle. */
-  def extractGifPixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[GifPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodeGifPixels(id, p) })
-  }
-
   // ------------------------------------------------ GIF animations
 
   /** Per-frame canvas statistics of a GIF89a ANIMATION: `frames(f)` is
@@ -4563,38 +4162,18 @@ object MediaCodec {
   final case class GifFrameStat(id: Long, width: Int, height: Int,
                                 nFrames: Int, frameIdx: Int, graySum: Long)
 
-  /** Fixture adapter for the animation gate: a 40×24 logical screen
-    * (15 sub-rect slots) with 2..14 frames from n_chars — every
-    * sub-rect slot distinct, so frame composition is last-writer-free
-    * and the oracle sums deltas in closed form. */
-  def gifAnimFromDocuments(spark: SparkSession,
-                           docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildGifAnimPattern(width = 40, height = 24,
-          nFrames = 2 + (nChars % 13).toInt, seed = id))
-      }
-  }
-
-  /** Per-partition frame-sample over REAL animation decode: every
-    * `stride`-th frame's exact canvas total — payloads decode map-side,
-    * only (id, frame stats) rows ever shuffle; the planner-only
+  /** Frame sampling over REAL animation decode: every `stride`-th
+    * frame's exact canvas total — the planner-only
     * [[Multimodal.sampleFramePlan]] shape with the decode made real. */
-  def extractGifFrameStats(media: Dataset[(Long, Array[Byte])],
-                           stride: Int): Dataset[GifFrameStat] = {
+  def gifFrameStats(stride: Int): (Long, Array[Byte]) => Seq[GifFrameStat] = {
     require(stride > 0, s"stride must be positive, got $stride")
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      gifAnimStats(p).toSeq.flatMap { st =>
-        st.frames.indices.collect {
-          case f if f % stride == 0 =>
-            GifFrameStat(id, st.width, st.height, st.frames.size, f,
-              st.frames(f))
-        }
+    (id, p) => gifAnimStats(p).toSeq.flatMap { st =>
+      st.frames.indices.collect {
+        case f if f % stride == 0 =>
+          GifFrameStat(id, st.width, st.height, st.frames.size, f,
+            st.frames(f))
       }
-    })
+    }
   }
 
   /** One sampled frame's perceptual hash — the video-fingerprint row. */
@@ -4602,23 +4181,22 @@ object MediaCodec {
                                   phash: String)
 
   /** Per-video sampled-frame pHash sequence over REAL animation decode:
-    * every `stride`-th composited canvas hashes through [[phashGray]]
-    * map-side — the LAION-video curation shape (per-frame perceptual
-    * fingerprints; re-encodes and small edits land a few bits from the
-    * original frame-for-frame). Payloads never shuffle; only
-    * (id, frameIdx, 64-bit hash) rows do. */
-  def extractGifFrameHashes(media: Dataset[(Long, Array[Byte])],
-                            stride: Int): Dataset[VideoFrameHash] = {
+    * every `stride`-th composited canvas hashes through [[phashGray]] —
+    * the LAION-video curation shape (per-frame perceptual fingerprints;
+    * re-encodes and small edits land a few bits from the original
+    * frame-for-frame). */
+  def gifFrameHashes(stride: Int)
+      : (Long, Array[Byte]) => Seq[VideoFrameHash] = {
     require(stride > 0, s"stride must be positive, got $stride")
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
+    (id, p) => {
       val hashes = Seq.newBuilder[(Int, String)]
       gifAnimFold(p, 4096) { (f, _, canvas) =>
         if (f % stride == 0) {
           // phashGray reads the matrix without retaining it; the canvas
-          // mutates across frames, so hash NOW, store only the bits
-          hashes += f -> phashGray(GrayImage(le16Width(p), canvasH(p),
-            canvas))
+          // mutates across frames, so hash NOW, store only the bits.
+          // The logical-screen dims come straight from the header, valid
+          // by the time the fold invokes its callback.
+          hashes += f -> phashGray(GrayImage(le16(p, 6), le16(p, 8), canvas))
         }
       } match {
         case Some((_, _, n)) =>
@@ -4627,42 +4205,7 @@ object MediaCodec {
           }
         case None => Seq.empty
       }
-    })
-  }
-
-  // logical-screen dims straight from the header (valid by the time
-  // the fold invokes its callback)
-  private def le16Width(b: Array[Byte]): Int = le16(b, 6)
-  private def canvasH(b: Array[Byte]): Int = le16(b, 8)
-
-  /** The video-near-dup fixture: 29 classes (s = doc id mod 29) of
-    * 64×32 animations with 6..10 frames — frame 0 a class texture
-    * ((31x + 47y + 61·b) mod 256), frames f ≥ 1 the slot-(f−1) sub-rect
-    * ((3x + 5y + 11f + 61·b) mod 256). Classes 23..28 are PERCEPTUAL
-    * TWINS of classes 0..5: the same animation except frame 2's rect
-    * has its top-left 2×2 pixels re-indexed (+97) — a four-pixel edit
-    * that persists on the canvas from frame 2 on, putting every
-    * sampled frame within a few pHash bits of the base (measured: mean
-    * per-frame distance ≤ 3) while unrelated classes sit ≥ 9 mean bits
-    * apart. */
-  def gifVideoFromDocuments(spark: SparkSession,
-                            docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map { id =>
-        val s = id % 29
-        val b0 = if (s >= 23) s - 23 else s
-        val twin = s >= 23
-        val nf = 6 + (b0 % 5).toInt
-        val payload = encodeGifAnim(64, 32, nf, (f, x, y) =>
-          (if (f == 0) (31L * x + 47L * y + 61L * b0) % 256
-           else {
-             val add =
-               if (twin && f == 2 && x % 8 < 2 && y % 8 < 2) 97L else 0L
-             (3L * x + 5L * y + 11L * f + 61L * b0 + add) % 256
-           }).toInt)
-        (id, payload)
-      }
+    }
   }
 
   // ------------------------------------------------------ PNG pixels
@@ -4720,9 +4263,6 @@ object MediaCodec {
     val sig = Array[Int](0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     if (b.length < 45 || !sig.indices.forall(i => (b(i) & 0xff) == sig(i)))
       return None
-    def be32(off: Int): Long =
-      ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-        ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
     // chunk walk: IHDR first (parsePng already CRC-checks it), then
     // concatenate IDAT payloads, stop at IEND; every chunk CRC verified
     val wh = parsePng(b).getOrElse(return None)
@@ -4741,12 +4281,12 @@ object MediaCodec {
     var done = false
     while (!done) {
       if (off + 12 > b.length) return None // no room for len+type+crc
-      val len = be32(off)
+      val len = be32(b, off)
       if (len > Int.MaxValue - 12 || off + 12 + len > b.length) return None
       val typ = tag(b, off + 4)
       val crc = new java.util.zip.CRC32()
       crc.update(b, off + 4, 4 + len.toInt)
-      if (crc.getValue != be32(off + 8 + len.toInt)) return None
+      if (crc.getValue != be32(b, off + 8 + len.toInt)) return None
       if (typ == "IDAT") idat.write(b, off + 8, len.toInt)
       else if (typ == "PLTE") {
         if (len % 3 != 0 || len > 768 || len == 0) return None
@@ -5068,18 +4608,6 @@ object MediaCodec {
         ((x + 3L * y + 2L * seed) % 253).toInt,
         ((4L * x + y + 3L * seed) % 251).toInt), splitIdat)
 
-  def pngAdam7FromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildPngAdam7Pattern(width = 1 + (nChars % 38).toInt,
-          height = 1 + (nChars % 19).toInt,
-          seed = id, splitIdat = id % 3 == 0))
-      }
-  }
-
   /** Real encode of an 8-bit PALETTE PNG (color type 3): a PLTE of
     * `colors` entries (entry i → (i, 2i mod 255, 3i mod 253) — the GIF
     * fixture palette, so oracles share one arithmetic), pixel index
@@ -5172,78 +4700,6 @@ object MediaCodec {
     } else chunk("IDAT", z, 0, z.length)
     chunk("IEND", Array.emptyByteArray, 0, 0)
     out.toByteArray
-  }
-
-  /** Fixture adapter for the palette-PNG gate. */
-  def pngPaletteFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildPngPalettePattern(width = 1 + (nChars % 50).toInt,
-          height = 1 + (nChars % 26).toInt,
-          seed = id, splitIdat = id % 3 == 0))
-      }
-  }
-
-  /** Fixture adapter for the PNG gate: every document becomes a
-    * patterned truecolor PNG (dimensions from n_chars, every third id
-    * split across two IDAT chunks, pattern seeded by id), so the real
-    * inflate + defilter path runs over all five filter types under the
-    * oracle, which recomputes the channel means from the same
-    * (w, h, seed) arithmetic. */
-  def pngFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        (id, buildPngPattern(width = 1 + (nChars % 40).toInt,
-          height = 1 + (nChars % 24).toInt,
-          seed = id, splitIdat = id % 3 == 0))
-      }
-  }
-
-  /** Per-partition batch PNG decode — payloads never shuffle. */
-  def extractPngPixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[PngPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => decodePngPixels(id, p) })
-  }
-
-  /** Fixture adapter: deterministically synthesize VALID payloads from
-    * `documents` stats, so the REAL parsers run under the oracle gate —
-    * the oracle recomputes every expected field from `n_chars` with the
-    * same arithmetic and the gate verifies the encode→parse round trip.
-    * Even ids cycle image formats — BMP (alternating top-down), PNG
-    * (real IHDR CRC), GIF, JPEG — odd ids get WAVs (every 4th with a
-    * LIST chunk before `data`). Synthesis is fixture-side work (like
-    * Bench's event synthesis), not the operator under test. */
-  def mediaFromDocuments(spark: SparkSession,
-                         docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) =>
-        val payload =
-          if (id % 2 == 0) (id / 2) % 4 match {
-            case 0 => buildBmp(width = 1 + (nChars % 64).toInt,
-              height = 1 + (nChars % 48).toInt,
-              topDown = (id / 2) % 2 == 0)
-            case 1 => buildPng(width = 1 + (nChars % 128).toInt,
-              height = 1 + ((nChars * 3) % 128).toInt)
-            case 2 => buildGif(width = 1 + (nChars % 300).toInt,
-              height = 1 + ((nChars * 7) % 200).toInt)
-            case _ => buildJpeg(width = 1 + (nChars % 1000).toInt,
-              height = 1 + ((nChars * 11) % 1000).toInt)
-          }
-          else
-            buildWav(channels = if (id % 4 == 3) 2 else 1,
-              sampleRate = 8000 + (nChars % 8000).toInt,
-              nSamples = nChars * 4, withListChunk = id % 4 == 1)
-        (id, payload)
-      }
   }
 
   // ------------------------------------------------------------------
@@ -5693,24 +5149,6 @@ object MediaCodec {
     out.toByteArray
   }
 
-  /** Fixture adapter for the FLAC wasted-bits gate. */
-  def flacWastedFromDocuments(spark: SparkSession,
-                              docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildFlacWastedPattern(id, nChars)) }
-  }
-
-  /** Fixture adapter for the FLAC stereo-decorrelation gate. */
-  def flacStereoFromDocuments(spark: SparkSession,
-                              docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildFlacStereoPattern(id, nChars)) }
-  }
-
   /** UTF-8-style coded frame/sample number (the FLAC header field —
     * same prefix grammar as UTF-8 but allowed up to 7 bytes). Returns
     * -1 on malformed coding. */
@@ -5886,8 +5324,7 @@ object MediaCodec {
       val h0 = b(pos) & 0xff
       last = (h0 & 0x80) != 0
       val btype = h0 & 0x7f
-      val len = ((b(pos + 1) & 0xff) << 16) | ((b(pos + 2) & 0xff) << 8) |
-        (b(pos + 3) & 0xff)
+      val len = be24(b, pos + 1)
       if (pos + 4 + len > b.length) return None
       if (btype == 0) {
         if (len != 34) return None
@@ -6123,21 +5560,15 @@ object MediaCodec {
         val flags = b(pos + 5) & 0xff
         if (n == 0 && (flags & 0x02) == 0) return None // BOS first
         if (n > 0 && (flags & 0x02) != 0) return None
-        var granule = 0L
-        var k = 7
-        while (k >= 0) { granule = (granule << 8) | (b(pos + 6 + k) & 0xffL)
-          k -= 1 }
-        var ser = 0L
-        k = 3
-        while (k >= 0) { ser = (ser << 8) | (b(pos + 14 + k) & 0xffL)
-          k -= 1 }
+        val granule = le64(b, pos + 6)
+        val ser = le32(b, pos + 14)
         if (serial < 0) serial = ser
         else if (ser != serial) return None // single-stream contract
         val nSegs = b(pos + 26) & 0xff
         if (pos + 27 + nSegs > b.length) return None
         val lacing = new Array[Int](nSegs)
         var bodyLen = 0
-        k = 0
+        var k = 0
         while (k < nSegs) {
           val l = b(pos + 27 + k) & 0xff
           lacing(k) = l
@@ -6148,8 +5579,7 @@ object MediaCodec {
         if (pos + pageLen > b.length) return None
         // CRC: page bytes with the CRC field zeroed
         val copy = java.util.Arrays.copyOfRange(b, pos, pos + pageLen)
-        val stored = (copy(22) & 0xff) | ((copy(23) & 0xff) << 8) |
-          ((copy(24) & 0xff) << 16) | ((copy(25) & 0xff) << 24)
+        val stored = le32(copy, 22).toInt
         copy(22) = 0; copy(23) = 0; copy(24) = 0; copy(25) = 0
         if (oggCrc(copy, 0, copy.length) != stored) return None
         pages += OggPageRef(flags, granule, ser, lacing,
@@ -6250,12 +5680,6 @@ object MediaCodec {
                                 nPages: Int, nPackets: Int,
                                 payloadBytes: Long)
 
-  /** A deterministic Ogg AUDIO stream: the first page carries exactly
-    * one packet — a real OpusHead (RFC 7845 §5.1, even ids) or Vorbis
-    * identification header (Vorbis I §4.2.2, odd ids) — followed by
-    * 2–4 body pages of opaque packets (entropy-coded audio stays
-    * behind the decoder seam). All header fields derive from id
-    * arithmetic the oracle re-derives in SQL. */
   /** A real OpusHead identification header (RFC 7845 §5.1): magic,
     * version 1, channels, pre-skip LE16, input sample rate LE32,
     * output gain LE16 = 0, mapping family 0 — fields from id
@@ -6296,6 +5720,12 @@ object MediaCodec {
     b.array()
   }
 
+  /** A deterministic Ogg AUDIO stream: the first page carries exactly
+    * one packet — a real OpusHead (RFC 7845 §5.1, even ids) or Vorbis
+    * identification header (Vorbis I §4.2.2, odd ids) — followed by
+    * 2–4 body pages of opaque packets (entropy-coded audio stays
+    * behind the decoder seam). All header fields derive from id
+    * arithmetic the oracle re-derives in SQL. */
   def buildOggAudioPattern(id: Long, nChars: Long): Array[Byte] = {
     val serial = (id % 100000).toInt
     val header: Array[Byte] =
@@ -6341,9 +5771,6 @@ object MediaCodec {
         payload += pg.payloadLen
       }
       val nPages = pages.size
-      def le16(o: Int): Int = (h(o) & 0xff) | ((h(o + 1) & 0xff) << 8)
-      def le32(o: Int): Long = (h(o) & 0xffL) | ((h(o + 1) & 0xffL) << 8) |
-        ((h(o + 2) & 0xffL) << 16) | ((h(o + 3) & 0xffL) << 24)
       val isOpus = h.length >= 19 &&
         new String(h, 0, 8, java.nio.charset.StandardCharsets.US_ASCII) ==
           "OpusHead"
@@ -6354,12 +5781,12 @@ object MediaCodec {
         if (h(8) != 1) return None // version
         val ch = h(9) & 0xff
         if (ch < 1) return None
-        Some(OggAudioMeta(id, "opus", ch, le32(12), le16(10), nPages,
+        Some(OggAudioMeta(id, "opus", ch, le32(h, 12), le16(h, 10), nPages,
           nPackets, payload))
       } else if (isVorbis) {
-        if (le32(7) != 0L) return None // vorbis_version
+        if (le32(h, 7) != 0L) return None // vorbis_version
         val ch = h(11) & 0xff
-        val rate = le32(12)
+        val rate = le32(h, 12)
         if (ch < 1 || rate <= 0) return None
         val bs0 = h(28) & 0x0f
         val bs1 = (h(28) >> 4) & 0x0f
@@ -6369,23 +5796,6 @@ object MediaCodec {
           payload))
       } else None
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Fixture adapter for the Ogg audio-identification gate. */
-  def oggAudioFromDocuments(spark: SparkSession,
-                            docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildOggAudioPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch identification walk — payloads never shuffle. */
-  def extractOggAudioMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[OggAudioMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      parseOggAudioMeta(id, p) })
-  }
 
   /** Comment-header metadata recovered from an Ogg audio stream's
     * second packet — the tag block (vendor, user comments) an intake
@@ -6478,20 +5888,19 @@ object MediaCodec {
         ("vorbis", 7)
       } else return None
     var o = headerLen
-    def le32(): Long =
+    def next32(): Long =
       if (o + 4 > tags.length) -1L
       else {
-        val v = (tags(o) & 0xffL) | ((tags(o + 1) & 0xffL) << 8) |
-          ((tags(o + 2) & 0xffL) << 16) | ((tags(o + 3) & 0xffL) << 24)
+        val v = le32(tags, o)
         o += 4
         v
       }
-    val vlen = le32()
+    val vlen = next32()
     if (vlen < 0 || o + vlen > tags.length) return None
     val vendor =
       new String(tags, o, vlen.toInt, java.nio.charset.StandardCharsets.UTF_8)
     o += vlen.toInt
-    val n = le32()
+    val n = next32()
     // bound the loop by what the packet can hold (each comment costs
     // ≥ 4 length bytes) — an untrusted count must not spin or allocate
     if (n < 0 || n > (tags.length - o) / 4) return None
@@ -6499,7 +5908,7 @@ object MediaCodec {
     var commentBytes = 0L
     var i = 0L
     while (i < n) {
-      val cl = le32()
+      val cl = next32()
       if (cl < 0 || o + cl > tags.length) return None
       val c = new String(tags, o, cl.toInt,
         java.nio.charset.StandardCharsets.UTF_8)
@@ -6515,23 +5924,6 @@ object MediaCodec {
     if (isVorbis && (o >= tags.length || (tags(o) & 1) != 1)) return None
     Some(OggTagsMeta(id, codec, vendor, n.toInt, commentBytes, lang))
   } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Fixture adapter for the comment-header gate. */
-  def oggTagsFromDocuments(spark: SparkSession,
-                           docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildOggTagsPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch comment-header walk — payloads never
-    * shuffle. */
-  def extractOggTags(media: Dataset[(Long, Array[Byte])])
-      : Dataset[OggTagsMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseOggTags(id, p) })
-  }
 
   /** EXIF fields recovered from a JPEG's APP1 segment — what an image
     * intake pipeline rotates and filters on before any pixel decode:
@@ -6644,7 +6036,7 @@ object MediaCodec {
       if ((b(pos) & 0xff) != 0xff) return None
       val marker = b(pos + 1) & 0xff
       if (marker == 0xd9 || marker == 0xda) return None // EOI/SOS: no Exif
-      val len = ((b(pos + 2) & 0xff) << 8) | (b(pos + 3) & 0xff)
+      val len = be16(b, pos + 2)
       if (len < 2 || pos + 2 + len > b.length) return None
       if (marker == 0xe1 && len >= 8 &&
           b(pos + 4) == 'E' && b(pos + 5) == 'x' && b(pos + 6) == 'i' &&
@@ -6659,14 +6051,10 @@ object MediaCodec {
       else return None
     def u16(o: Int): Int =
       if (o < 0 || o + 2 > tiff.length) -1
-      else if (le) (tiff(o) & 0xff) | ((tiff(o + 1) & 0xff) << 8)
-      else ((tiff(o) & 0xff) << 8) | (tiff(o + 1) & 0xff)
+      else if (le) le16(tiff, o) else be16(tiff, o)
     def u32(o: Int): Long =
       if (o < 0 || o + 4 > tiff.length) -1L
-      else if (le) (tiff(o) & 0xffL) | ((tiff(o + 1) & 0xffL) << 8) |
-        ((tiff(o + 2) & 0xffL) << 16) | ((tiff(o + 3) & 0xffL) << 24)
-      else ((tiff(o) & 0xffL) << 24) | ((tiff(o + 1) & 0xffL) << 16) |
-        ((tiff(o + 2) & 0xffL) << 8) | (tiff(o + 3) & 0xffL)
+      else if (le) le32(tiff, o) else be32(tiff, o)
     if (u16(2) != 42) return None
     var orientation = 0
     var width = -1L
@@ -6718,68 +6106,6 @@ object MediaCodec {
     Some(ExifMeta(id, if (le) "II" else "MM", orientation, width, height,
       make, iso))
   } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Fixture adapter for the EXIF gate. */
-  def exifFromDocuments(spark: SparkSession,
-                        docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildJpegExifPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch EXIF walk — payloads never shuffle. */
-  def extractExifMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[ExifMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseExifMeta(id, p) })
-  }
-
-  /** Fixture adapter for the Ogg gate. */
-  def oggFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildOggPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch page walk — payloads never shuffle. */
-  def extractOggMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[OggMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseOggMeta(id, p) })
-  }
-
-  /** Fixture adapter for the FLAC gate: every document becomes a real
-    * multi-frame FLAC stream whose every decoded sample derives from
-    * (doc_id, n_chars) arithmetic — the oracle re-derives the exact
-    * integer sums the full decode must reproduce. */
-  def flacFromDocuments(spark: SparkSession,
-                        docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildFlacPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch FLAC decode — payloads never shuffle. */
-  def extractFlacMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[FlacMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseFlacMeta(id, p) })
-  }
-
-  /** Fixture adapter for the FLAC LPC gate — every document becomes a
-    * real FLAC stream whose frames rotate quantized-LPC subframes in
-    * ([[buildFlacLpcPattern]]). */
-  def flacLpcFromDocuments(spark: SparkSession,
-                           docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildFlacLpcPattern(id, nChars)) }
-  }
 
   // ------------------------------------------------- H.264 / AVC SPS
 
@@ -7054,21 +6380,6 @@ object MediaCodec {
     out.toByteArray
   }
 
-  def avcFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildAvcPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractAvcMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[AvcMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseAvcMeta(id, p) })
-  }
-
   // ------------------------------------------- H.264 I_PCM slice decode
 
   /** Decoded IDR-slice content for the `mm_avc_islice` gate. */
@@ -7295,22 +6606,6 @@ object MediaCodec {
     out.toByteArray
   }
 
-  def avcIsliceFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildAvcIslicePattern(id, n)) }
-  }
-
-  /** Per-partition batch decode — payloads never shuffle. */
-  def extractAvcIslice(media: Dataset[(Long, Array[Byte])])
-      : Dataset[AvcIslice] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      parseAvcIslice(id, p) })
-  }
-
   // --------------------------------------------------- AAC ADTS walk
 
   /** ADTS frame-walk summary for the `mm_aac_adts` gate. */
@@ -7391,21 +6686,6 @@ object MediaCodec {
     out.toByteArray
   }
 
-  def adtsFromDocuments(spark: SparkSession,
-                        docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildAdtsPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractAdtsMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[AdtsMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseAdtsMeta(id, p) })
-  }
-
   // -------------------------------------------------------- WebP/RIFF
 
   /** RIFF/WebP container summary for the `mm_webp_meta` gate. */
@@ -7421,19 +6701,16 @@ object MediaCodec {
     * must find dimensions in VP8X, not the embedded VP8 frame. */
   def parseWebpMeta(id: Long, b: Array[Byte]): Option[WebpMeta] = {
     if (b.length < 12) return None
-    def tag(p: Int): String = new String(b, p, 4, "US-ASCII")
-    def u32(p: Int): Long = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-    if (tag(0) != "RIFF") return None
-    val riffSize = u32(4)
+    if (tag(b, 0) != "RIFF") return None
+    val riffSize = le32(b, 4)
     if (riffSize + 8 != b.length) return None
-    if (tag(8) != "WEBP") return None
+    if (tag(b, 8) != "WEBP") return None
     var pos = 12
     var format: String = null
     var width = -1; var height = -1; var hasAlpha = false
     while (pos + 8 <= b.length) {
-      val fourcc = tag(pos)
-      val size = u32(pos + 4).toInt
+      val fourcc = tag(b, pos)
+      val size = le32(b, pos + 4).toInt
       val body = pos + 8
       if (body + size > b.length) return None
       fourcc match {
@@ -7445,13 +6722,13 @@ object MediaCodec {
             if ((b(body + 3) & 0xff) != 0x9d ||
               (b(body + 4) & 0xff) != 0x01 ||
               (b(body + 5) & 0xff) != 0x2a) return None
-            width = (((b(body + 7) & 0x3f) << 8) | (b(body + 6) & 0xff))
-            height = (((b(body + 9) & 0x3f) << 8) | (b(body + 8) & 0xff))
+            width = le16(b, body + 6) & 0x3fff
+            height = le16(b, body + 8) & 0x3fff
             format = "lossy"
           }
         case "VP8L" =>
           if (size < 5 || (b(body) & 0xff) != 0x2f) return None
-          val bits = u32(body + 1)
+          val bits = le32(b, body + 1)
           width = ((bits & 0x3fff) + 1).toInt
           height = (((bits >> 14) & 0x3fff) + 1).toInt
           hasAlpha = ((bits >> 28) & 1) == 1
@@ -7459,10 +6736,8 @@ object MediaCodec {
         case "VP8X" =>
           if (size < 10) return None
           hasAlpha = (b(body) & 0x10) != 0
-          width = (((b(body + 4) & 0xffL) | ((b(body + 5) & 0xffL) << 8) |
-            ((b(body + 6) & 0xffL) << 16)) + 1).toInt
-          height = (((b(body + 7) & 0xffL) | ((b(body + 8) & 0xffL) << 8) |
-            ((b(body + 9) & 0xffL) << 16)) + 1).toInt
+          width = le24(b, body + 4) + 1
+          height = le24(b, body + 7) + 1
           format = "extended"
         case "ALPH" => () // alpha payload: entropy-coded, seam
         case _ => return None
@@ -7549,20 +6824,6 @@ object MediaCodec {
     out.write("WEBP".getBytes("US-ASCII"), 0, 4)
     out.write(payload, 0, payload.length)
     out.toByteArray
-  }
-
-  def webpFromDocuments(spark: SparkSession,
-                        docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map(id => (id, buildWebpPattern(id)))
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractWebpMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WebpMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseWebpMeta(id, p) })
   }
 
   // ------------------------------------------- VP8L lossless pixels
@@ -8142,9 +7403,8 @@ object MediaCodec {
     var pos = 12
     var body: Array[Byte] = null
     while (body == null && pos + 8 <= b.length) {
-      val fourcc = new String(b, pos, 4, "US-ASCII")
-      val size = ((b(pos + 4) & 0xffL) | ((b(pos + 5) & 0xffL) << 8) |
-        ((b(pos + 6) & 0xffL) << 16) | ((b(pos + 7) & 0xffL) << 24)).toInt
+      val fourcc = tag(b, pos)
+      val size = le32(b, pos + 4).toInt
       if (fourcc == "VP8L")
         body = java.util.Arrays.copyOfRange(b, pos + 8, pos + 8 + size)
       pos += 8 + size + (size & 1)
@@ -8255,14 +7515,6 @@ object MediaCodec {
     out.write(stream, 0, stream.length)
     if ((chunkLen & 1) == 1) out.write(0)
     out.toByteArray
-  }
-
-  def webplFromDocuments(spark: SparkSession,
-                         docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebplPixelFile(id, n)) }
   }
 
   /** Wrap a raw VP8L entropy stream into RIFF/WEBP/VP8L framing. */
@@ -8425,22 +7677,6 @@ object MediaCodec {
     webplContainer(bw.result())
   }
 
-  def webplPaletteFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebplPaletteFile(id, n)) }
-  }
-
-  def webplPredictFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebplPredictFile(id, n)) }
-  }
-
   /** Deterministic VP8L CROSS-COLOR fixture: the truth pattern
     * ci = (x + 3y + id) mod 256 → (255, (11ci) mod 255, ci,
     * (7ci) mod 249) is stored as residuals under per-4×4-block
@@ -8552,30 +7788,6 @@ object MediaCodec {
     webplContainer(bw.result())
   }
 
-  def webplCrossFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebplCrossFile(id, n)) }
-  }
-
-  def webplMetaFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebplMetaFile(id, n)) }
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractWebplPixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WebplPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      parseWebplPixels(id, p) })
-  }
-
   // --------------------------------------------------- Matroska/EBML
 
   /** Matroska container summary for the `mm_mkv_meta` gate. */
@@ -8616,9 +7828,7 @@ object MediaCodec {
       val first = b(pos) & 0xff
       val width = Integer.numberOfLeadingZeros(first) - 24 + 1
       if (width < 1 || width > 4 || pos + width > b.length) return -1
-      var v = 0L
-      var i = 0
-      while (i < width) { v = (v << 8) | (b(pos + i) & 0xffL); i += 1 }
+      val v = beUint(b, pos, pos + width)
       pos += width
       v
     }
@@ -8635,15 +7845,10 @@ object MediaCodec {
       if (v == (1L << (7 * width)) - 1) return -1
       v
     }
-    def uintAt(from: Int, until: Int): Long = {
-      var v = 0L; var i = from
-      while (i < until) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-      v
-    }
     def floatAt(from: Int, until: Int): Double = (until - from) match {
-      case 4 => java.lang.Float.intBitsToFloat(uintAt(from, until).toInt)
+      case 4 => java.lang.Float.intBitsToFloat(beUint(b, from, until).toInt)
         .toDouble
-      case 8 => java.lang.Double.longBitsToDouble(uintAt(from, until))
+      case 8 => java.lang.Double.longBitsToDouble(beUint(b, from, until))
       case _ => Double.NaN
     }
     var docType: String = null
@@ -8686,7 +7891,7 @@ object MediaCodec {
                (Mkv.Segment, Mkv.Cluster) =>
             if (!walk(bodyEnd, eid)) return false
           case (Mkv.Info, Mkv.TimestampScale) =>
-            tsScale = uintAt(body, bodyEnd); pos = bodyEnd
+            tsScale = beUint(b, body, bodyEnd); pos = bodyEnd
           case (Mkv.Info, Mkv.Duration) =>
             duration = floatAt(body, bodyEnd); pos = bodyEnd
           case (Mkv.Tracks, Mkv.TrackEntry) =>
@@ -8698,7 +7903,7 @@ object MediaCodec {
               else aCodec = pendingCodec
             }
           case (Mkv.TrackEntry, Mkv.TrackType) =>
-            trackType = uintAt(body, bodyEnd); pos = bodyEnd
+            trackType = beUint(b, body, bodyEnd); pos = bodyEnd
           case (Mkv.TrackEntry, Mkv.CodecID) =>
             pendingCodec = new String(b, body, size.toInt, "US-ASCII")
             pos = bodyEnd
@@ -8707,13 +7912,13 @@ object MediaCodec {
           case (Mkv.TrackEntry, Mkv.Audio) =>
             if (!walk(bodyEnd, Mkv.Audio)) return false
           case (Mkv.Video, Mkv.PixelWidth) =>
-            width = uintAt(body, bodyEnd).toInt; pos = bodyEnd
+            width = beUint(b, body, bodyEnd).toInt; pos = bodyEnd
           case (Mkv.Video, Mkv.PixelHeight) =>
-            height = uintAt(body, bodyEnd).toInt; pos = bodyEnd
+            height = beUint(b, body, bodyEnd).toInt; pos = bodyEnd
           case (Mkv.Audio, Mkv.SamplingFrequency) =>
             sampleRate = floatAt(body, bodyEnd); pos = bodyEnd
           case (Mkv.Audio, Mkv.Channels) =>
-            channels = uintAt(body, bodyEnd).toInt; pos = bodyEnd
+            channels = beUint(b, body, bodyEnd).toInt; pos = bodyEnd
           case (Mkv.Cluster, Mkv.SimpleBlock) =>
             // block header: track vint + 2-byte ts + flags, then frame
             if (size < 4) return false
@@ -8825,21 +8030,6 @@ object MediaCodec {
       el(Mkv.Timestamp, uintBody(0)) ++ blocks)
     val segment = el(Mkv.Segment, info ++ tracks ++ cluster)
     ebml ++ segment
-  }
-
-  def mkvFromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildMkvPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractMkvMeta(media: Dataset[(Long, Array[Byte])])
-      : Dataset[MkvMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseMkvMeta(id, p) })
   }
 
   // ------------------------------------------------ Opus packet TOCs
@@ -9085,21 +8275,6 @@ object MediaCodec {
     bytes.toByteArray
   }
 
-  def opusTocFromDocuments(spark: SparkSession,
-                           docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, nChars) => (id, buildOpusTocPattern(id, nChars)) }
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractOpusToc(media: Dataset[(Long, Array[Byte])])
-      : Dataset[OpusTocMeta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseOpusToc(id, p) })
-  }
-
   // ------------------------------------------------------- ID3v2 tags
 
   /** Parsed ID3v2 tag summary for the `mm_id3_tags` gate. */
@@ -9144,13 +8319,12 @@ object MediaCodec {
     while (!done && pos + 10 <= end) {
       if (b(pos) == 0) done = true // padding reached
       else {
-        val frameId = new String(b, pos, 4, "US-ASCII")
+        val frameId = tag(b, pos)
         if (!frameId.forall(c => (c >= 'A' && c <= 'Z') ||
           (c >= '0' && c <= '9'))) return None
         val size =
           if (version == 4) syncsafe(pos + 4)
-          else ((b(pos + 4) & 0xff) << 24) | ((b(pos + 5) & 0xff) << 16) |
-            ((b(pos + 6) & 0xff) << 8) | (b(pos + 7) & 0xff)
+          else be32(b, pos + 4).toInt
         if (size < 0 || pos + 10 + size > end) return None
         // frame flags (2 bytes) must be clear in this profile
         if (b(pos + 8) != 0 || b(pos + 9) != 0) return None
@@ -9251,20 +8425,6 @@ object MediaCodec {
     out.write(frames, 0, frames.length)
     out.write(padding, 0, padding.length)
     out.toByteArray
-  }
-
-  def id3FromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map(id => (id, buildId3Pattern(id)))
-  }
-
-  /** Per-partition batch walk — payloads never shuffle. */
-  def extractId3(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Id3Meta] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseId3(id, p) })
   }
 
   // ------------------------------------------------------ TIFF pixels
@@ -9459,18 +8619,12 @@ object MediaCodec {
     val little = b(0) == 'I' && b(1) == 'I'
     val big = b(0) == 'M' && b(1) == 'M'
     if (!little && !big) return None
-    def u16(p: Int): Int = {
-      if (p + 2 > b.length) return -1
-      if (little) (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-      else ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
-    }
-    def u32(p: Int): Long = {
-      if (p + 4 > b.length) return -1
-      if (little) (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-      else ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-        ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-    }
+    def u16(p: Int): Int =
+      if (p + 2 > b.length) -1
+      else if (little) le16(b, p) else be16(b, p)
+    def u32(p: Int): Long =
+      if (p + 4 > b.length) -1
+      else if (little) le32(b, p) else be32(b, p)
     if (u16(2) != 42) return None
     val ifd = u32(4).toInt
     if (ifd < 8 || ifd + 2 > b.length) return None
@@ -9656,13 +8810,6 @@ object MediaCodec {
     out.toByteArray
   }
 
-  def tiffFromDocuments(spark: SparkSession,
-                        docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map(id => (id, buildTiffPattern(id)))
-  }
-
   /** Deterministic COMPRESSED grayscale TIFF rotating the THREE wild
     * compressions by id mod 3 — LZW (5), PackBits (32773), Adobe
     * deflate (8) — LZW/deflate alternating Predictor 2 horizontal
@@ -9761,17 +8908,4 @@ object MediaCodec {
     out.toByteArray
   }
 
-  def tiffCompressedFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"))).as[Long]
-      .map(id => (id, buildTiffCompressedPattern(id)))
-  }
-
-  /** Per-partition batch decode — payloads never shuffle. */
-  def extractTiffPixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[TiffPixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) => parseTiffPixels(id, p) })
-  }
 }

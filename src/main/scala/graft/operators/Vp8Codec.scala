@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import Bytes._
 
 /** VP8 keyframe (intra-frame) bitstream mechanics per RFC 6386 — the
   * lossy layer behind WebP-lossy and most wild `.webm` video tracks.
@@ -318,14 +317,12 @@ object Vp8Codec {
       Array[Int], Array[Int], Array[Int])] = try {
     if (b.length < 10) return None
     // frame tag (3 bytes LE): keyframe bit 0, version, show, part size
-    val tag = (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16)
+    val tag = le24(b, 0)
     if ((tag & 1) != 0) return None // not a keyframe
     val part1Len = tag >> 5
     if ((b(3) & 0xff) != 0x9d || (b(4) & 0xff) != 0x01 ||
         (b(5) & 0xff) != 0x2a) return None // start code
-    val wRaw = (b(6) & 0xff) | ((b(7) & 0xff) << 8)
-    val hRaw = (b(8) & 0xff) | ((b(9) & 0xff) << 8)
-    val w = wRaw & 0x3fff; val h = hRaw & 0x3fff
+    val w = le16(b, 6) & 0x3fff; val h = le16(b, 8) & 0x3fff
     if (w == 0 || h == 0 || (w & 15) != 0 || (h & 15) != 0) return None
     val mbW = w / 16; val mbH = h / 16
     if (10 + part1Len > b.length) return None
@@ -671,28 +668,12 @@ object Vp8Codec {
 
   // ------------------------------------------------------ gate plumbing
 
-  def vp8FromDocuments(spark: SparkSession,
-                       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildVp8Frame(id, n)) }
-  }
-
   def parseVp8Pixels(id: Long, b: Array[Byte]): Option[Vp8Pixels] =
     decodeFrame(b).map { case (w, h, qi, y, u, v) =>
       def mean(p: Array[Int]): Double =
         p.foldLeft(0L)(_ + _).toDouble / p.length
       Vp8Pixels(id, w, h, qi, mean(y), mean(u), mean(v))
     }
-
-  /** Per-partition batch decode — payloads never shuffle. */
-  def extractVp8Pixels(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Vp8Pixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      parseVp8Pixels(id, p) })
-  }
 
   // ------------------------------------------- lossy WebP container
 
@@ -720,15 +701,11 @@ object Vp8Codec {
     * here — lossy WebP carries dims only inside the VP8 frame. */
   def parseWebpLossy(id: Long, b: Array[Byte]): Option[Vp8Pixels] = {
     if (b.length < 20) return None
-    def tag(p: Int) = new String(b, p, 4, "US-ASCII")
-    def u32(p: Int): Long =
-      (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-    if (tag(0) != "RIFF" || tag(8) != "WEBP") return None
-    if (u32(4) != b.length - 8) return None
+    if (tag(b, 0) != "RIFF" || tag(b, 8) != "WEBP") return None
+    if (le32(b, 4) != b.length - 8) return None
     var pos = 12
     while (pos + 8 <= b.length) {
-      val t = tag(pos); val len = u32(pos + 4)
+      val t = tag(b, pos); val len = le32(b, pos + 4)
       if (len > Int.MaxValue - 8 || pos + 8 + len > b.length) return None
       if (t == "VP8 ")
         return parseVp8Pixels(id,
@@ -842,13 +819,9 @@ object Vp8Codec {
           case 0x1F43B675L => // Cluster
             if (!walk(bodyAt, end, false, true)) return false
           case 0xD7L if inTrackEntry => // uint body (not a vint)
-            var v = 0L; var i = bodyAt
-            while (i < end) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-            curTrackNum = v
+            curTrackNum = beUint(b, bodyAt, end)
           case 0x83L if inTrackEntry =>
-            var v = 0L; var i = bodyAt
-            while (i < end) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-            curType = v
+            curType = beUint(b, bodyAt, end)
           case 0x86L if inTrackEntry =>
             curCodec = new String(b, bodyAt, sz.toInt, "US-ASCII")
           case 0xA3L if inCluster => // SimpleBlock
@@ -879,33 +852,4 @@ object Vp8Codec {
       sum(_._4), sum(_._5), sum(_._6)))
   }
 
-  def webmFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebmVideo(id, n)) }
-  }
-
-  def extractWebmFrames(media: Dataset[(Long, Array[Byte])])
-      : Dataset[WebmFrames] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      parseWebmFrames(id, p) })
-  }
-
-  def webpLossyFromDocuments(spark: SparkSession,
-      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Partitioning.spread(docs.select(col("doc_id").cast("long"), col("n_chars").cast("long")))
-      .as[(Long, Long)]
-      .map { case (id, n) => (id, buildWebpLossy(id, n)) }
-  }
-
-  def extractWebpLossy(media: Dataset[(Long, Array[Byte])])
-      : Dataset[Vp8Pixels] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { case (id, p) =>
-      parseWebpLossy(id, p) })
-  }
 }

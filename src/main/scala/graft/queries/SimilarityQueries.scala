@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Multimodal, Similarity}
+import graft.operators.{MediaCodec, Multimodal, Similarity, Vp8Codec}
 
 /** Embedding similarity search + multimodal plumbing under the oracle
   * gate. Cosines are computed in double with deterministic fold order on
@@ -50,6 +50,18 @@ object SimilarityQueries {
       Ivf.knnJoin(t(s, dir, "embeddings"), "vec_id", "embedding",
         ivfModel(s, dir), k = 3, nProbe = 2)
     }
+
+  /** The clips `mm_wav_energy` and `mm_wav_zcr` share: mono/stereo by
+    * id parity, length from n_chars (several 100-frame windows incl. a
+    * partial one), muted stretches seeded by id. */
+  private def wavEnergyClip(id: Long, nChars: Long): Array[Byte] =
+    MediaCodec.buildWavEnergyPattern(channels = 1 + (id % 2).toInt,
+      sampleRate = 16000, nSamples = 150 + nChars % 873, seed = id)
+
+  /** The baseline-JPEG fixtures' DRI: every 3rd doc carries real RSTn
+    * markers, 1-4 MCUs apart. */
+  private def restartEvery3rd(id: Long): Int =
+    if (id % 3 == 1) 1 + (id % 4).toInt else 0
 
   val defs: Map[String, QueryFn] = Map(
     // Exact ANN baseline: 10 probe vectors × full corpus, broadcast join.
@@ -416,9 +428,26 @@ object SimilarityQueries {
     // arithmetic — an encode→parse round trip verified cross-engine.
     // This narrows the codec stub to the entropy-coded formats.
     "mm_codec_roundtrip" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.mediaFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extract(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        // even ids cycle the image formats — BMP (alternating top-down),
+        // PNG (real IHDR CRC), GIF, JPEG; odd ids get WAVs, every 4th
+        // with a LIST chunk before `data`
+        if (id % 2 == 0) (id / 2) % 4 match {
+          case 0 => MediaCodec.buildBmp(width = 1 + (n % 64).toInt,
+            height = 1 + (n % 48).toInt, topDown = (id / 2) % 2 == 0)
+          case 1 => MediaCodec.buildPng(width = 1 + (n % 128).toInt,
+            height = 1 + ((n * 3) % 128).toInt)
+          case 2 => MediaCodec.buildGif(width = 1 + (n % 300).toInt,
+            height = 1 + ((n * 7) % 200).toInt)
+          case _ => MediaCodec.buildJpeg(width = 1 + (n % 1000).toInt,
+            height = 1 + ((n * 11) % 1000).toInt)
+        }
+        else MediaCodec.buildWav(channels = if (id % 4 == 3) 2 else 1,
+          sampleRate = 8000 + (n % 8000).toInt, nSamples = n * 4,
+          withListChunk = id % 4 == 1)
+      }
+      MediaCodec.decodeEach(media)(
+        (id, p) => Some(MediaCodec.decode(id, p))).toDF()
         .orderBy("id")
     },
 
@@ -433,9 +462,11 @@ object SimilarityQueries {
     // the pixel-level stand-in covers only entropy-coded formats
     // (JPEG/H.264); BMP decodes for real end to end.
     "mm_bmp_pixels" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.bmpFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractBmpPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildBmpPattern(width = 1 + (n % 48).toInt,
+          height = 1 + (n % 32).toInt, topDown = id % 2 == 0, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeBmpPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -453,9 +484,11 @@ object SimilarityQueries {
     // block arithmetic. Successive-approximation refinement scans stay
     // behind the decoder seam (None), pinned in spec.
     "mm_jpeg_prog" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.jpegProgressiveFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractJpegProgressive(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildJpegProgressivePattern(width = 1 + (n % 33).toInt,
+          height = 1 + (n % 21).toInt, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeJpegProgressive).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanGray"), 6).as("mean_gray"),
           round(col("topRowMean"), 6).as("top_row_mean"))
@@ -470,9 +503,11 @@ object SimilarityQueries {
     // sits on 8m+4, where half-even rounding diverges on alternating
     // blocks; the oracle re-derives v+1 from block coordinates.
     "mm_jpeg_refine" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.jpegRefineFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractJpegProgressive(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildJpegRefinePattern(width = 1 + (n % 29).toInt,
+          height = 1 + (n % 17).toInt, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeJpegProgressive).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanGray"), 6).as("mean_gray"),
           round(col("topRowMean"), 6).as("top_row_mean"))
@@ -487,9 +522,14 @@ object SimilarityQueries {
     // image-dedup shape: payloads hash map-side per partition, only
     // the 64-char key and the count aggregation shuffle.
     "mm_ahash_dupes" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.ahashFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractAhash(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, _) =>
+        // dimensions ≥ 8 so every grid cell is populated, derived from
+        // the class so its members are pixel-identical
+        val c = id % 37
+        MediaCodec.buildBmpTexture(width = 8 + (c % 5).toInt * 4,
+          height = 8 + (c % 3).toInt * 4, topDown = id % 2 == 0, seed = c)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.ahashBmp).toDF()
         .groupBy("width", "height", "ahash")
         .agg(count(lit(1)).as("n_docs"), min(col("id")).as("canonical_id"))
         .orderBy("width", "height", "ahash")
@@ -504,9 +544,9 @@ object SimilarityQueries {
     // unrelated classes sit ≥ 7 bits apart (spec-pinned), so the
     // output IS exactly those pairs at maxDist = 5.
     "mm_image_neardups" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.imageNearDupFromDocuments(
-        s, t(s, dir, "documents"))
-      val classes = graft.operators.MediaCodec.extractAhash(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        (id, _) => MediaCodec.buildBmpTwinTexture(id % 37))
+      val classes = MediaCodec.decodeEach(media)(MediaCodec.ahashBmp).toDF()
         .groupBy("ahash")
         .agg(min(col("id")).as("cid"))
         .withColumn("h",
@@ -531,9 +571,18 @@ object SimilarityQueries {
     // gradient lives in the v=0 DCT column that phashGray excludes),
     // and the banded Hamming join surfaces exactly those pairs.
     "mm_phash_dupes" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.phashFromDocuments(
-        s, t(s, dir, "documents"))
-      val classes = graft.operators.MediaCodec.extractPhash(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, _) =>
+        val c = id % 37
+        if (id % 2 == 0)
+          MediaCodec.encodeBmpRgb(48, 32, topDown = (id / 2) % 2 == 0,
+            MediaCodec.phashTwinRgb(c))
+        else MediaCodec.encodePngRgb(48, 32, MediaCodec.phashTwinRgb(c),
+          splitIdat = id % 3 == 0)
+      }
+      val classes = MediaCodec.decodeEach(media) { (id, p) =>
+        MediaCodec.decodeGray(p).map(g => MediaCodec.ImagePhash(id,
+          g.width, g.height, MediaCodec.phashGray(g)))
+      }.toDF()
         .groupBy("phash")
         .agg(min(col("id")).as("cid"))
         .withColumn("h",
@@ -553,9 +602,9 @@ object SimilarityQueries {
     // fixture mutes every 5th window (|v| ≤ 48 vs threshold 64) so the
     // detector has real silence to find.
     "mm_wav_energy" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.wavEnergyFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWavEnergy(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(wavEnergyClip)
+      MediaCodec.decodeEach(media)(
+        (id, p) => MediaCodec.wavEnergy(id, p)).toDF()
         .select(col("id").as("doc_id"), col("nWindows").as("n_windows"),
           col("energyTotal").as("energy_total"),
           col("nSilent").as("n_silent"),
@@ -568,9 +617,8 @@ object SimilarityQueries {
     // discriminator; strict sign flips (prev·cur < 0) per channel,
     // exact integers, one map-side decode.
     "mm_wav_zcr" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.wavEnergyFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWavZcr(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(wavEnergyClip)
+      MediaCodec.decodeEach(media)(MediaCodec.wavZcr).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("nFrames").as("n_frames"), col("crossings"))
         .orderBy("doc_id")
@@ -585,9 +633,12 @@ object SimilarityQueries {
     // pixel from integer arithmetic; a wrong MCU sub-block order or a
     // chroma coordinate shift off by one diverges the hash.
     "mm_jpeg_420" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.jpeg420FromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractJpegRgb(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildJpeg420Pattern(width = 1 + (n % 52).toInt,
+          height = 1 + (n % 34).toInt, seed = id,
+          restartInterval = restartEvery3rd(id))
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeJpegRgb).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -604,9 +655,12 @@ object SimilarityQueries {
     // (JVM >>) divisions agree — the oracle mirrors the conversion
     // bit-for-bit in SQL integer arithmetic.
     "mm_jpeg_rgb" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.jpegColorFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractJpegRgb(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildJpegColorPattern(width = 1 + (n % 28).toInt,
+          height = 1 + (n % 18).toInt, seed = id,
+          restartInterval = restartEvery3rd(id))
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeJpegRgb).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -625,9 +679,12 @@ object SimilarityQueries {
     // block arithmetic alone. The AC/run-length half of the decoder is
     // spec-exercised with arbitrary-coefficient round trips.
     "mm_jpeg_pixels" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.jpegFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractJpegPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildJpegPattern(width = 1 + (n % 44).toInt,
+          height = 1 + (n % 26).toInt, seed = id,
+          restartInterval = restartEvery3rd(id))
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeJpegPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanGray"), 6).as("mean_gray"),
           round(col("topRowMean"), 6).as("top_row_mean"))
@@ -644,9 +701,12 @@ object SimilarityQueries {
     // through the palette formulas — a mis-assigned LZW code width or
     // a palette off-by-one diverges the hash.
     "mm_gif_pixels" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.gifFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractGifPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildGifPattern(width = 1 + (n % 56).toInt,
+          height = 1 + (n % 28).toInt, seed = id,
+          withExtension = id % 3 == 0, interlaced = id % 5 == 4)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeGifPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -665,9 +725,9 @@ object SimilarityQueries {
     // id) mod 256 pattern, so a bit-order, canonical-assignment,
     // cache-hash, or transform-inverse bug diverges the hash.
     "mm_webpl_pixels" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.webplFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWebplPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildWebplPixelFile)
+      MediaCodec.decodeEach(media)(MediaCodec.parseWebplPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -682,9 +742,9 @@ object SimilarityQueries {
     // and the out-of-range-index rule — the palette-WebP shape most
     // icon/UI crawl media actually has.
     "mm_webpl_palette" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.webplPaletteFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWebplPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildWebplPaletteFile)
+      MediaCodec.decodeEach(media)(MediaCodec.parseWebplPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -699,9 +759,9 @@ object SimilarityQueries {
     // lossless WebPs use. The oracle sees only the reconstructed
     // pattern: any predictor bug diverges the means.
     "mm_webpl_predict" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.webplPredictFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWebplPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildWebplPredictFile)
+      MediaCodec.decodeEach(media)(MediaCodec.parseWebplPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -716,9 +776,9 @@ object SimilarityQueries {
     // lossless WebPs carry. With this the decoder covers ALL FOUR
     // spec transforms.
     "mm_webpl_cross" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.webplCrossFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWebplPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildWebplCrossFile)
+      MediaCodec.decodeEach(media)(MediaCodec.parseWebplPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -732,9 +792,9 @@ object SimilarityQueries {
     // multi-entropy-group layout cwebp emits for any non-trivial
     // photo. One wrong group pick desynchronizes the stream.
     "mm_webpl_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.webplMetaFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWebplPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildWebplMetaFile)
+      MediaCodec.decodeEach(media)(MediaCodec.parseWebplPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -748,9 +808,11 @@ object SimilarityQueries {
     // palette formula, so a table-offset or BGRA-order bug diverges
     // while the GIF/PNG paths stay green.
     "mm_bmp_palette" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.bmpPaletteFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractBmpPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildBmpPalettePattern(width = 1 + (n % 44).toInt,
+          height = 1 + (n % 22).toInt, topDown = id % 2 == 0, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeBmpPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -771,10 +833,24 @@ object SimilarityQueries {
     // criterion). Twins sit ≤ 3 mean bits from their base; unrelated
     // classes ≥ 9 — the output IS the six planted twin pairs.
     "mm_video_neardups" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.gifVideoFromDocuments(
-        s, t(s, dir, "documents"))
-      val fh = graft.operators.MediaCodec
-        .extractGifFrameHashes(media, stride = 2).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, _) =>
+        // 29 classes of 64×32 animations with 6..10 frames: frame 0 a
+        // class texture, frames f ≥ 1 the slot-(f−1) sub-rect; a twin
+        // class re-indexes its base's frame-2 top-left 2×2 pixels (+97),
+        // an edit that persists on the canvas from frame 2 on
+        val c = id % 29
+        val base = if (c >= 23) c - 23 else c
+        val twin = c >= 23
+        MediaCodec.encodeGifAnim(64, 32, 6 + (base % 5).toInt, (f, x, y) =>
+          (if (f == 0) (31L * x + 47L * y + 61L * base) % 256
+           else {
+             val add =
+               if (twin && f == 2 && x % 8 < 2 && y % 8 < 2) 97L else 0L
+             (3L * x + 5L * y + 11L * f + 61L * base + add) % 256
+           }).toInt)
+      }
+      val fh = MediaCodec.decodeEach(media)(
+        MediaCodec.gifFrameHashes(stride = 2)).toDF()
       // ONE aggregate over the decode output carries BOTH downstream
       // shapes: the per-doc sorted (frameIdx, phash) list yields the
       // sequence key (collapse) AND, via min_by, the representative
@@ -811,9 +887,11 @@ object SimilarityQueries {
     // truecolor's 3-byte distance reconstructs garbage), palette
     // expansion to channel means. Oracle from index/palette arithmetic.
     "mm_png_palette" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.pngPaletteFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractPngPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildPngPalettePattern(width = 1 + (n % 50).toInt,
+          height = 1 + (n % 26).toInt, seed = id, splitIdat = id % 3 == 0)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodePngPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -833,9 +911,11 @@ object SimilarityQueries {
     // sub-rect delta sums — a composition bug (wrong rect placement,
     // stale canvas, palette misread, frame miscount) diverges the hash.
     "mm_gif_frames" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.gifAnimFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractGifFrameStats(media, stride = 3)
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildGifAnimPattern(width = 40, height = 24,
+          nFrames = 2 + (n % 13).toInt, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.gifFrameStats(stride = 3))
         .toDF()
         .select(col("id").as("doc_id"), col("nFrames").as("n_frames"),
           col("frameIdx").as("frame_idx"), col("graySum").as("gray_sum"))
@@ -853,9 +933,11 @@ object SimilarityQueries {
     // mis-joined IDAT boundary) diverges the hash. With this the pixel
     // stand-in covers only the entropy-coded formats (JPEG/H.264).
     "mm_png_pixels" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.pngFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractPngPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildPngPattern(width = 1 + (n % 40).toInt,
+          height = 1 + (n % 24).toInt, seed = id, splitIdat = id % 3 == 0)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodePngPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -875,9 +957,9 @@ object SimilarityQueries {
     // diverges the means. (Default prob/quant TABLE VALUES are
     // documented stand-ins — see Vp8Codec's doc.)
     "mm_vp8_pixels" -> { (s, dir) =>
-      val media = graft.operators.Vp8Codec.vp8FromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.Vp8Codec.extractVp8Pixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        Vp8Codec.buildVp8Frame)
+      MediaCodec.decodeEach(media)(Vp8Codec.parseVp8Pixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           col("qindex"),
           round(col("meanY"), 6).as("mean_y"),
@@ -893,9 +975,9 @@ object SimilarityQueries {
     // streams, no stand-in tables; emulation-prevention is
     // load-bearing (PCM bytes hit 00 00 0x runs).
     "mm_avc_islice" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.avcIsliceFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractAvcIslice(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildAvcIslicePattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseAvcIslice).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           col("nMbs").as("n_mbs"), col("qpY").as("qp_y"),
           col("sumY").as("sum_y"), col("sumCb").as("sum_cb"),
@@ -909,9 +991,9 @@ object SimilarityQueries {
     // decode end-to-end, the wild .webm shape. Exact integer pixel
     // sums across frames, no float averaging on either side.
     "mm_webm_frames" -> { (s, dir) =>
-      val media = graft.operators.Vp8Codec.webmFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.Vp8Codec.extractWebmFrames(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        Vp8Codec.buildWebmVideo)
+      MediaCodec.decodeEach(media)(Vp8Codec.parseWebmFrames).toDF()
         .select(col("id").as("doc_id"), col("nFrames").as("n_frames"),
           col("width"), col("height"),
           col("sumY").as("sum_y"), col("sumU").as("sum_u"),
@@ -924,9 +1006,9 @@ object SimilarityQueries {
     // layout), decoded through the same RFC 6386 path as
     // mm_vp8_pixels — with shifted seeds so the two oracles differ.
     "mm_webp_lossy" -> { (s, dir) =>
-      val media = graft.operators.Vp8Codec.webpLossyFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.Vp8Codec.extractWebpLossy(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        Vp8Codec.buildWebpLossy)
+      MediaCodec.decodeEach(media)(Vp8Codec.parseWebpLossy).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           col("qindex"),
           round(col("meanY"), 6).as("mean_y"),
@@ -940,9 +1022,11 @@ object SimilarityQueries {
     // (images narrower/shorter than 5) in-corpus — the progressive
     // layout early-web crawl media still carries.
     "mm_png_adam7" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.pngAdam7FromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractPngPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildPngAdam7Pattern(width = 1 + (n % 38).toInt,
+          height = 1 + (n % 19).toInt, seed = id, splitIdat = id % 3 == 0)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodePngPixels).toDF()
         .select(col("id").as("doc_id"), col("width"), col("height"),
           round(col("meanR"), 6).as("mean_r"),
           round(col("meanG"), 6).as("mean_g"),
@@ -960,9 +1044,11 @@ object SimilarityQueries {
     // expansion in SQL integer arithmetic — stateless per sample, so
     // the full compressed→linear path is hash-gated.
     "mm_wav_ulaw" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.wavUlawFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWavUlaw(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildWavUlawPattern(channels = 1 + (id % 2).toInt,
+          sampleRate = 8000, nSamples = 1 + n % 400, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeWavUlaw).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nSamples").as("n_samples"),
@@ -987,9 +1073,11 @@ object SimilarityQueries {
     // drift in prediction, clamping, index adaptation, nibble
     // packing, or block-boundary state reset diverges the hash.
     "mm_wav_adpcm" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.wavAdpcmFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWavAdpcm(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildWavAdpcmPattern(channels = 1 + (id % 2).toInt,
+          sampleRate = 8000, nFrames = 64 + (n % 512).toInt, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeWavAdpcm).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nSamples").as("n_samples"),
@@ -1012,9 +1100,9 @@ object SimilarityQueries {
     // bug on ANY structural variant diverges the hash. Frame pixels
     // (H.264 entropy decode) stay behind the decoder seam.
     "mm_mp4_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.mp4FromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractMp4Meta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildMp4Pattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseMp4Meta).toDF()
         .select(col("id").as("doc_id"), col("brand"),
           col("nTracks").as("n_tracks"),
           col("durationMs").as("duration_ms"),
@@ -1037,9 +1125,9 @@ object SimilarityQueries {
     // 144·bitrate/rate + padding and the padding-count arithmetic in
     // SQL. Huffman-coded granules stay behind the decoder seam.
     "mm_mp3_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.mp3FromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractMp3Meta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildMp3Pattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseMp3Meta).toDF()
         .select(col("id").as("doc_id"), col("hasId3").as("has_id3"),
           col("bitrateKbps").as("bitrate_kbps"),
           col("sampleRate").as("sample_rate"), col("channels"),
@@ -1062,9 +1150,9 @@ object SimilarityQueries {
     // the hash. LPC subframes decode under their own gate,
     // mm_flac_lpc.
     "mm_flac_pcm" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.flacFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractFlacMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildFlacPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseFlacMeta).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nFrames").as("n_frames"),
@@ -1084,9 +1172,9 @@ object SimilarityQueries {
     // and the parser CROSS-CHECKS the walked totals against the Xing
     // fields; the 100-byte seek TOC is pinned via its sum.
     "mm_mp3_vbr" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.mp3VbrFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractMp3Vbr(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildMp3VbrPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseMp3Vbr).toDF()
         .select(col("id").as("doc_id"), col("isVbr").as("is_vbr"),
           col("nFrames").as("n_frames"),
           col("audioBytes").as("audio_bytes"),
@@ -1108,9 +1196,9 @@ object SimilarityQueries {
     // odd negative sample. General (non-SQL-friendly) coefficients
     // are spec-driven against a direct recurrence.
     "mm_flac_lpc" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.flacLpcFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractFlacMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildFlacLpcPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseFlacMeta).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nFrames").as("n_frames"),
@@ -1131,9 +1219,9 @@ object SimilarityQueries {
     // back-shift desynchronizes the bitstream or lands on wrong
     // magnitudes — either way the hash diverges.
     "mm_flac_wasted" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.flacWastedFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractFlacMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildFlacWastedPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseFlacMeta).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nFrames").as("n_frames"),
@@ -1155,9 +1243,9 @@ object SimilarityQueries {
     // mid-side's shared-parity bit restore; (L−R) hits both
     // parities, so a dropped parity bit diverges the hash.
     "mm_flac_stereo" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.flacStereoFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractFlacMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildFlacStereoPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseFlacMeta).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nFrames").as("n_frames"),
@@ -1179,9 +1267,9 @@ object SimilarityQueries {
     // counts, payload bytes, and the final granule from the fixture
     // arithmetic; codec packets stay behind the decoder seam.
     "mm_ogg_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.oggFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractOggMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildOggPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseOggMeta).toDF()
         .select(col("id").as("doc_id"), col("serial"),
           col("nPages").as("n_pages"),
           col("nPackets").as("n_packets"),
@@ -1200,9 +1288,9 @@ object SimilarityQueries {
     // offsets exactly where the layout puts them, sample bytes = mdat
     // length), so the fixture cannot be satisfied by echoing fields.
     "mm_mp4_samples" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.mp4SamplesFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractMp4Samples(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildMp4SamplesPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseMp4Samples).toDF()
         .select(col("id").as("doc_id"),
           col("nSamples").as("n_samples"),
           col("totalSampleBytes").as("total_sample_bytes"),
@@ -1225,9 +1313,9 @@ object SimilarityQueries {
     // every field from id arithmetic plus the page/packet counts from
     // the lacing grammar.
     "mm_opus_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.oggAudioFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractOggAudioMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildOggAudioPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseOggAudioMeta).toDF()
         .select(col("id").as("doc_id"), col("codec"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("preSkip").as("pre_skip"),
@@ -1246,9 +1334,9 @@ object SimilarityQueries {
     // SHORT orientation, the Make string through a bounded data-area
     // offset, and ISO through the chained 0x8769 sub-IFD.
     "mm_exif_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.exifFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractExifMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildJpegExifPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseExifMeta).toDF()
         .select(col("id").as("doc_id"),
           col("byteOrder").as("byte_order"),
           col("orientation"), col("width"), col("height"),
@@ -1265,9 +1353,9 @@ object SimilarityQueries {
     // arithmetic), so a byte-offset slip in the packet walk shows up
     // as a wrong character, not just a wrong count.
     "mm_vorbis_tags" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.oggTagsFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractOggTags(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildOggTagsPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseOggTags).toDF()
         .select(col("id").as("doc_id"), col("codec"), col("vendor"),
           col("nComments").as("n_comments"),
           col("commentBytes").as("comment_bytes"),
@@ -1286,9 +1374,9 @@ object SimilarityQueries {
     // decoder seam. The oracle re-derives profile/level/dims/QP and the
     // per-slice byte sum from the fixture grid.
     "mm_avc_sps" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.avcFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractAvcMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildAvcPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseAvcMeta).toDF()
         .select(col("id").as("doc_id"), col("profile"), col("level"),
           col("pocType").as("poc_type"),
           col("refFrames").as("ref_frames"),
@@ -1305,9 +1393,9 @@ object SimilarityQueries {
     // consistency pinned across frames, duration from 1024 samples per
     // frame. Raw AAC payloads stay behind the decoder seam.
     "mm_aac_adts" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.adtsFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractAdtsMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildAdtsPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseAdtsMeta).toDF()
         .select(col("id").as("doc_id"), col("profile"),
           col("sampleRate").as("sample_rate"), col("channels"),
           col("nFrames").as("n_frames"), col("aacBytes").as("aac_bytes"),
@@ -1322,9 +1410,9 @@ object SimilarityQueries {
     // where the embedded VP8 frame deliberately carries DIFFERENT
     // dims — reading the wrong header diverges the hash).
     "mm_webp_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.webpFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWebpMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        (id, _) => MediaCodec.buildWebpPattern(id))
+      MediaCodec.decodeEach(media)(MediaCodec.parseWebpMeta).toDF()
         .select(col("id").as("doc_id"), col("format"),
           col("width"), col("height"), col("riffBytes").as("riff_bytes"),
           col("hasAlpha").as("has_alpha"))
@@ -1341,9 +1429,9 @@ object SimilarityQueries {
     // ms lossy). Frame payloads stay behind the decoder seam; their
     // SIZES are the walk.
     "mm_opus_toc" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.opusTocFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractOpusToc(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildOpusTocPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseOpusToc).toDF()
         .select(col("id").as("doc_id"), col("nPackets").as("n_packets"),
           col("nFrames").as("n_frames"),
           col("durationUs").as("duration_us"),
@@ -1361,9 +1449,9 @@ object SimilarityQueries {
     // samples reassembled across 2-30 strips into loudness-style
     // stats the oracle re-derives per (x, y).
     "mm_tiff_pixels" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.tiffFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractTiffPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        (id, _) => MediaCodec.buildTiffPattern(id))
+      MediaCodec.decodeEach(media)(MediaCodec.parseTiffPixels).toDF()
         .select(col("id").as("doc_id"), col("byteOrder").as("byte_order"),
           col("width"), col("height"), col("nStrips").as("n_strips"),
           col("sumPix").as("sum_pix"), col("peak"),
@@ -1378,9 +1466,9 @@ object SimilarityQueries {
     // StripByteCounts; same decoded-content stats, so the oracle is
     // only reachable through correct decompression.
     "mm_tiff_lzw" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.tiffCompressedFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractTiffPixels(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        (id, _) => MediaCodec.buildTiffCompressedPattern(id))
+      MediaCodec.decodeEach(media)(MediaCodec.parseTiffPixels).toDF()
         .select(col("id").as("doc_id"), col("byteOrder").as("byte_order"),
           col("width"), col("height"), col("nStrips").as("n_strips"),
           col("sumPix").as("sum_pix"), col("peak"),
@@ -1397,9 +1485,9 @@ object SimilarityQueries {
     // declared end. The oracle re-derives the strings AND the byte
     // arithmetic of the whole layout.
     "mm_id3_tags" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.id3FromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractId3(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        (id, _) => MediaCodec.buildId3Pattern(id))
+      MediaCodec.decodeEach(media)(MediaCodec.parseId3).toDF()
         .select(col("id").as("doc_id"), col("version"),
           col("tagBytes").as("tag_bytes"), col("nFrames").as("n_frames"),
           col("title"), col("artist"), col("album"), col("track"),
@@ -1415,9 +1503,9 @@ object SimilarityQueries {
     // vint-width bug shifts every later offset and diverges the hash.
     // Block frame payloads are entropy-coded and stay behind the seam.
     "mm_mkv_meta" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.mkvFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractMkvMeta(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents"))(
+        MediaCodec.buildMkvPattern)
+      MediaCodec.decodeEach(media)(MediaCodec.parseMkvMeta).toDF()
         .select(col("id").as("doc_id"), col("docType").as("doc_type"),
           col("tsScale").as("ts_scale"),
           col("durationMs").as("duration_ms"),
@@ -1438,9 +1526,12 @@ object SimilarityQueries {
     // (nSamples, channels, seed) arithmetic alone. Integer-exact sums,
     // one division.
     "mm_wav_samples" -> { (s, dir) =>
-      val media = graft.operators.MediaCodec.wavFromDocuments(
-        s, t(s, dir, "documents"))
-      graft.operators.MediaCodec.extractWavSamples(media).toDF()
+      val media = MediaCodec.fixture(s, t(s, dir, "documents")) { (id, n) =>
+        MediaCodec.buildWavPattern(channels = 1 + (id % 2).toInt,
+          sampleRate = 8000 + (n % 8000).toInt, nSamples = 1 + n % 512,
+          withListChunk = id % 3 == 0, seed = id)
+      }
+      MediaCodec.decodeEach(media)(MediaCodec.decodeWavSamples).toDF()
         .select(col("id").as("doc_id"), col("channels"),
           col("sampleRate").as("sample_rate"),
           col("nSamples").as("n_samples"),

@@ -868,7 +868,13 @@ class PlanAuditSpec extends SparkSpec {
     // driver-contract output sort and the seed spread below the decode
     for (q <- Seq("mm_bmp_pixels", "mm_png_pixels", "mm_gif_pixels",
         "mm_jpeg_pixels", "mm_jpeg_rgb", "mm_jpeg_420", "mm_jpeg_prog",
-        "mm_jpeg_refine", "mm_wav_samples", "mm_wav_ulaw")) {
+        "mm_jpeg_refine", "mm_wav_samples", "mm_wav_ulaw",
+        "mm_codec_roundtrip", "mm_bmp_palette", "mm_png_palette",
+        "mm_gif_frames", "mm_tiff_pixels", "mm_exif_meta", "mm_webp_meta",
+        "mm_wav_adpcm", "mm_flac_pcm", "mm_flac_lpc", "mm_flac_stereo",
+        "mm_flac_wasted", "mm_mp3_meta", "mm_mp3_vbr", "mm_id3_tags",
+        "mm_aac_adts", "mm_ogg_meta", "mm_opus_meta", "mm_vorbis_tags",
+        "mm_mp4_meta", "mm_mp4_samples", "mm_avc_sps")) {
       val ns = nodes(SparkEntry.queries(q)(spark, dir))
       val shuffles = ns.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e

@@ -791,7 +791,8 @@ class MediaCodecSpec extends SparkSpec {
       1L -> buildBmp(10, 4, topDown = false),
       2L -> buildWav(2, 16000, 50, withListChunk = true),
       3L -> "garbage".getBytes("UTF-8"))
-    val out = extract(rows.toDS().repartition(2)).collect()
+    val out = decodeEach(rows.toDS().repartition(2))(
+      (id, p) => Some(decode(id, p))).collect()
       .map(m => m.id -> m).toMap
     assert(out(1L) === AvMeta(1L, "image", out(1L).byteLen, true,
       10, 4, 0, 0, 0L))
