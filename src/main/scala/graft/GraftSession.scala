@@ -109,6 +109,28 @@ object GraftSession {
       // local-mode tune (results and plans are unaffected; only the
       // diagnostic string length changes).
       .config("spark.sql.maxPlanStringLength", "32768")
+      // Generated-code reuse: steady-state work compiles nothing.
+      // Spark caches each Janino-compiled class by (context classloader,
+      // source text) in an LRU of 100 entries by default. One analyst
+      // session of the bench's 7 gated queries compiles ~205 classes and
+      // one initial sync ~153, so the default LRU evicted everything and
+      // each session recompiled its ~205 (about 3 s of CPU). 1000 holds
+      // either working set several times over, for ~3 MB of heap.
+      // Static: read once, when the JVM compiles its first class.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // With artifact isolation on, every cloned session — each streaming
+      // query's, so each Replicator.start or /restart_replication — gets
+      // a fresh executor classloader, and a second stream over the same
+      // spool recompiled all 52 of the first one's executor-side classes.
+      // graft adds no session artifacts (no addArtifact/addJar), so there
+      // is nothing to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // The whole-stage class name carries its codegen stage id, and AQE
+      // numbers stages in the order they finish, which varies from run to
+      // run: t_bm25_topk's stages 6/7 and 8/9 swap, and 7 of 17 repeated
+      // sessions recompiled 4-8 byte-identical classes under their other
+      // names. Without the id the source text is the same on every run.
+      .config("spark.sql.codegen.useIdInClassName", "false")
     scratchDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 

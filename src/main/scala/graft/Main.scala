@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -119,12 +120,7 @@ object Main {
       if (config.httpHost.nonEmpty)
         try Some(new MonitorServer(monitor, config.httpHost, config.httpPort,
           restart = Some(() => restartHook()),
-          // stuck-snapshot gauge: staged loads reserved but never
-          // published — nonzero after the resume window means an
-          // operator must resume or abandon (GraftTable doc)
-          gauges = () => Map("pending_staged_loads" ->
-            registry.tableKeys.count { case (d, t) =>
-              pipeline.table(d, t).pendingStagedLoad().nonEmpty }.toLong)))
+          gauges = gauges(registry, pipeline)))
         catch { case e: Throwable =>
           query.stop()
           spark.streams.removeListener(monitor)
@@ -133,6 +129,20 @@ object Main {
       else None
     Running(pipeline, holder, monitor, server, () => awaitRestartSettled())
   }
+
+  /** The extra `/metrics` gauges of a running deployment. */
+  def gauges(registry: SchemaRegistry,
+             pipeline: CdcPipeline): () => Map[String, Long] = () => Map(
+    // stuck-snapshot gauge: staged loads reserved but never published —
+    // nonzero after the resume window means an operator must resume or
+    // abandon (GraftTable doc)
+    "pending_staged_loads" -> registry.tableKeys.count { case (d, t) =>
+      pipeline.table(d, t).pendingStagedLoad().nonEmpty }.toLong,
+    // classes Janino compiled since JVM start (Spark's CodegenMetrics);
+    // flat while a running replicator reuses its generated code, rising
+    // on every micro-batch when something inlines a per-batch value
+    "codegen_compiles_total" ->
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
 
   def main(args: Array[String]): Unit = {
     require(args.length == 4,

@@ -90,6 +90,19 @@ object GraftFunctions {
         }
         CappedCollectSet(child, n)
       }),
+    one("graft_stamp",
+      "BIGINT constant that generated code reads from its references " +
+        "array: plans differing only in this value share compiled code",
+      classOf[Stamp])(
+      v => {
+        require(v.foldable, "graft_stamp: value must be a literal")
+        v.eval() match {
+          case i: java.lang.Long => Stamp(i)
+          case i: java.lang.Integer => Stamp(i.longValue())
+          case other => throw new IllegalArgumentException(
+            s"graft_stamp: value must be an integer, got $other")
+        }
+      }),
     variadic("graft_pq_codes",
       "PQ code array: per-subspace argmin over a literal codebook " +
         "(vec, cents, norms, m, dsub, ksub)",

@@ -405,10 +405,13 @@ final class GraftTable(
         }
     }
 
+  // `_version` goes through graft_stamp (functions/Stamp), not
+  // lit(version): every micro-batch stamps a new version, and an inlined
+  // literal would make each one compile its write stage again
   private def writeBatchTo(df: DataFrame, version: Long, deleted: Boolean,
                            epoch: Int): Unit =
     writeStamped(align(df)
-      .withColumn("_version", lit(version))
+      .withColumn("_version", call_function("graft_stamp", lit(version)))
       .withColumn("_deleted", lit(deleted)), epoch)
 
   /** Write an already-stamped frame (payload + `_version` + `_deleted`,

@@ -281,4 +281,21 @@ class ConfigSpec extends AnyFunSuite {
       GraftConfig.fromYaml("binlog_replicator: {data_dirr: x}\n", Map.empty)
     }
   }
+
+  test("only GraftSession builds a SparkSession in src/main") {
+    // the codegen cache bound and artifact isolation are static session
+    // settings: a tool or main building its own session would silently
+    // run without them
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"run from the repository root: no $root")
+    val builds = "SparkSession\\s*\\.\\s*[bB]uilder".r
+    val builders = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => builds.findFirstIn(java.nio.file.Files.readString(p))
+        .nonEmpty)
+      .map(_.getFileName.toString).toSeq
+    assert(builders === Seq("GraftSession.scala"))
+  }
 }

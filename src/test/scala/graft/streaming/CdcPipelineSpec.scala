@@ -787,6 +787,26 @@ class CdcPipelineSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("/metrics serves Main's gauges, codegen_compiles_total among them") {
+    val (pipeline, registry) = mkPipeline()
+    val server = new MonitorServer(new LagMonitor, "127.0.0.1", 0,
+      gauges = graft.Main.gauges(registry, pipeline))
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    try {
+      val before = compiles
+      val conn = java.net.URI
+        .create(s"http://127.0.0.1:${server.port}/metrics")
+        .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
+      assert(body.contains(""""pending_staged_loads":0"""))
+      // Spark's own compile counter, read when the request is served
+      val served = """"codegen_compiles_total":(\d+)""".r
+        .findFirstMatchIn(body).map(_.group(1).toLong)
+      assert(served.exists(n => n >= before && n <= compiles), body)
+    } finally server.stop()
+  }
+
   test("restart hook failure returns HTTP 500, not a dropped connection") {
     val server = new MonitorServer(new LagMonitor, "127.0.0.1", 0,
       restart = Some(() => throw new IllegalStateException("boom")))
