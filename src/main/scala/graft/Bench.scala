@@ -624,7 +624,6 @@ object Bench {
         eventsField +
         s""","headline_source":"$headlineSource",""" +
         s""""families":$famShortJson,""" +
-        s""""queries_file":"${esc(benchAbs)}",""" +
         s""""bench_file":"${esc(benchAbs)}"}"""
     println(headline)
     spark.stop()

@@ -88,25 +88,6 @@ final case class ZValue(left: Expression, right: Expression)
 
 object ZValue {
 
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{lit, shiftleft}
-
-  /** [[interleave16]] as a Column over BUILT-IN ops (shiftleft / & / |)
-    * — bit-identical to the `graft_zvalue` expression (asserted in
-    * ZValueSpec) but usable on sessions without the function registry
-    * (e.g. inside [[graft.operators.GraftTable]]'s layout rewrite).
-    * Still whole-stage-codegen: every step is a codegen'd built-in. */
-  def zColumn(a: Column, b: Column): Column = {
-    def spread(c: Column): Column = {
-      val v0 = c.cast("long").bitwiseAND(lit(0xFFFFL))
-      val v1 = v0.bitwiseOR(shiftleft(v0, 8)).bitwiseAND(lit(0x00FF00FFL))
-      val v2 = v1.bitwiseOR(shiftleft(v1, 4)).bitwiseAND(lit(0x0F0F0F0FL))
-      val v3 = v2.bitwiseOR(shiftleft(v2, 2)).bitwiseAND(lit(0x33333333L))
-      v3.bitwiseOR(shiftleft(v3, 1)).bitwiseAND(lit(0x55555555L))
-    }
-    spread(a).bitwiseOR(shiftleft(spread(b), 1))
-  }
-
   /** Spread the low 16 bits of `v0` to the even bit positions. */
   def spread16(v0: Long): Long = {
     var v = v0 & 0xFFFFL

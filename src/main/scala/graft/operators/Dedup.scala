@@ -39,26 +39,20 @@ object Dedup {
       .filter(col("n_dups") > 1)
 
   /** The exploded (id, shingle) table — the shared intermediate of every
-    * shingle-based pipeline. Persisted MEMORY_AND_DISK by the pipeline
-    * entry points: candidate generation, minhashing and Jaccard
-    * verification all consume it, and recomputing the shingle expression
-    * (an interpreted higher-order transform) per consumer was the
-    * dominant cost of the dedup bench queries. */
-  private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int): DataFrame =
+    * shingle-based pipeline (minhash-LSH, rare-shingle Jaccard,
+    * containment, sweeps, incremental ingest). Callers build it ONCE per
+    * (corpus, n), persist it and own that persistence: candidate
+    * generation, minhashing and Jaccard verification all consume it, and
+    * recomputing the shingle expression (an interpreted higher-order
+    * transform) per consumer was the dominant cost of the dedup bench
+    * queries. In production the shingle index is an ingest-time
+    * artifact, not per-query work. Shingling is per-document, so any
+    * per-doc restriction of the corpus is exactly a filter of this
+    * table. */
+  def shingleTable(docs: DataFrame, idCol: String, textCol: String,
+                   n: Int): DataFrame =
     spread(docs).select(col(idCol).as("id"),
       explode(shingles(col(textCol), n)).as("s"))
-
-  /** [[shingleTable]] for callers that build the exploded (id, s) table
-    * ONCE per (corpus, n) and share it across the whole shingle family
-    * (minhash-LSH, rare-shingle Jaccard, containment, sweeps,
-    * incremental ingest) — the production shape, where the shingle
-    * index is an ingest-time artifact, not per-query work. Shingling is
-    * per-document, so any per-doc restriction of the corpus is exactly
-    * a filter of this table. */
-  def shingleTableOf(docs: DataFrame, idCol: String, textCol: String,
-                     n: Int): DataFrame =
-    shingleTable(docs, idCol, textCol, n)
 
   /** The k minhash lanes are carved out of ⌈k/4⌉ md5 digests — four
     * 32-bit (8-hex-char) lanes per digest — instead of one full digest
@@ -74,17 +68,6 @@ object Dedup {
   private def minhashAggs(k: Int): Seq[Column] =
     (0 until k).map(i =>
       min(substring(col(s"m${i / 4}"), 1 + 8 * (i % 4), 8)).as(s"h$i"))
-
-  /** k deterministic minhashes per doc over word-`n`-gram shingles.
-    * minhash_i = min over shingles of an 8-hex-char md5 lane — md5 as
-    * the hash family, min over hex strings (total order,
-    * engine-agnostic). */
-  def minhashes(docs: DataFrame, idCol: String, textCol: String,
-                n: Int, k: Int): DataFrame =
-    shingleTable(docs, idCol, textCol, n)
-      .select(col("id") +: digestCols(k): _*)
-      .groupBy(col("id").as(idCol)).agg(minhashAggs(k).head,
-        minhashAggs(k).tail: _*)
 
   /** (id, band, bk) band-key table from a minhash frame — the LSH
     * "index" relation: self-joined for batch dedup, persisted/bucketed
@@ -122,14 +105,15 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** [[verifyJaccard]] over a pre-built (id, s) shingle table.
+  /** Exact shingle overlap (inter, na, nb) of candidate pairs over a
+    * [[shingleTable]].
     *
     * Intermediates are persisted and left registered with the session's
     * cache manager: the caller owns their lifecycle (the query memo,
     * `graft.queries.memoCkpt`, uncaches what its build registered once
     * the result is checkpointed). */
-  private def verifyOverlapSh(sh: DataFrame,
-                              candidates0: DataFrame): DataFrame = {
+  private def verifyOverlap(sh: DataFrame,
+                            candidates0: DataFrame): DataFrame = {
     // persisted: consumed by the touched-doc semi-join below AND as the
     // streamed join side — without it the whole candidate-generation
     // subtree (the expensive groupBy-shingle pass) runs twice
@@ -192,40 +176,22 @@ object Dedup {
         col("na"), col("nb"))
   }
 
-  private def verifyJaccardSh(sh: DataFrame,
-                              candidates: DataFrame): DataFrame =
-    verifyOverlapSh(sh, candidates)
+  private def verifyJaccard(sh: DataFrame,
+                            candidates: DataFrame): DataFrame =
+    verifyOverlap(sh, candidates)
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
 
-  /** Exact Jaccard over word-n-gram shingles for given candidate pairs. */
-  def verifyJaccard(docs: DataFrame, candidates: DataFrame, idCol: String,
-                    textCol: String, n: Int): DataFrame =
-    verifyJaccardSh(shingleTable(docs, idCol, textCol, n), candidates)
-
-  /** Full MinHash-LSH near-dup pipeline: candidates → verified pairs ≥
-    * `threshold`. The exploded shingle table is computed once and
-    * persisted (spilling to disk at scale) — minhashing and verification
-    * both fold over it. */
-  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, k: Int = 6, b: Int = 3, r: Int = 2,
-                      threshold: Double = 0.5): DataFrame =
-    minhashNearDupsSh(
-      shingleTable(docs, idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      k = k, b = b, r = r, threshold = threshold)
-
-  /** [[minhashNearDups]] over a pre-built (and caller-cached) shingle
-    * table — the shape query wiring uses to share ONE shingle pass
-    * across the whole dedup family instead of re-exploding the corpus
-    * per pipeline. */
-  def minhashNearDupsSh(sh: DataFrame, k: Int, b: Int, r: Int,
-                        threshold: Double): DataFrame = {
+  /** Full MinHash-LSH near-dup pipeline over a [[shingleTable]]:
+    * candidates → verified pairs ≥ `threshold`. Minhashing and
+    * verification both fold over `sh`, so the caller persists it. */
+  def minhashNearDups(sh: DataFrame, k: Int, b: Int, r: Int,
+                      threshold: Double): DataFrame = {
     val mh = sh.select(col("id") +: digestCols(k): _*)
       .groupBy("id").agg(minhashAggs(k).head, minhashAggs(k).tail: _*)
     val cand = lshCandidates(mh, "id", b, r)
-    verifyJaccardSh(sh, cand)
+    verifyJaccard(sh, cand)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -244,28 +210,16 @@ object Dedup {
     * side — minhashed fresh — broadcasts into the index probe, so the
     * index is scanned in place: no corpus shuffle, no self-join. The
     * within-batch pairs reuse the batch-sized self-join.
+    *
+    * Both sides are [[shingleTable]]s (plain per-doc filters of one
+    * cached corpus table in query wiring). `batchIds` must be the FULL
+    * batch id set (including docs whose text yields no shingles): the
+    * upsert anti-join below must drop a re-ingested doc's stale index
+    * shingles even when its new text is empty/null.
     */
-  def incrementalNearDups(existing: DataFrame, batch: DataFrame,
-                          idCol: String, textCol: String,
-                          n: Int = 3, k: Int = 6, b: Int = 3, r: Int = 2,
-                          threshold: Double = 0.5): DataFrame =
-    incrementalNearDupsSh(
-      shingleTable(existing, idCol, textCol, n),
-      shingleTable(batch, idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      batch.select(col(idCol).as("id")),
-      k = k, b = b, r = r, threshold = threshold)
-
-  /** [[incrementalNearDups]] over pre-built shingle tables — the shape
-    * query wiring uses when the corpus shingle table is already cached
-    * (both sides are then plain filters of it; shingling is per-doc).
-    * `batchIds` must be the FULL batch id set (including docs whose
-    * text yields no shingles): the upsert anti-join below must drop a
-    * re-ingested doc's stale index shingles even when its new text is
-    * empty/null. */
-  def incrementalNearDupsSh(shEx0: DataFrame, shNew: DataFrame,
-                            batchIds: DataFrame, k: Int, b: Int, r: Int,
-                            threshold: Double): DataFrame = {
+  def incrementalNearDups(shEx0: DataFrame, shNew: DataFrame,
+                          batchIds: DataFrame, k: Int, b: Int, r: Int,
+                          threshold: Double): DataFrame = {
     // UPSERT semantics for an id on both sides (a re-ingested doc): its
     // index entry is stale by definition, so its shingles come from the
     // BATCH text only — without the anti-join the union'd shingle table
@@ -292,7 +246,7 @@ object Dedup {
       .select("id_a", "id_b")
     // ONE distinct over the union — per-side distincts would add two
     // extra exchanges only for this one to re-deduplicate the same rows
-    verifyJaccardSh(shEx.union(shNew), cross.union(within).distinct())
+    verifyJaccard(shEx.union(shNew), cross.union(within).distinct())
       .filter(col("jaccard") >= threshold)
   }
 
@@ -899,22 +853,14 @@ object Dedup {
     * keep groups of 2..maxDf docs, and emit the ≤ C(maxDf,2) pairs
     * array-side — the df cap that already guards the pair space also
     * bounds the per-group array, so no self-join (and no second and third
-    * scan of the corpus shingles) is needed. */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, maxDf: Int = 20,
-                        threshold: Double = 0.5): DataFrame = {
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = shingleTable(docs, idCol, textCol, n).persist(disk)
-    ngramJaccardPairsSh(sh, pairStats(sh, maxDf), threshold)
-  }
-
-  /** [[ngramJaccardPairs]] over a pre-built shingle table and its
-    * pre-built candidate [[pairStats]] — the df-capped candidate
-    * machinery is threshold-INDEPENDENT, so query wiring computes it
-    * once and every Jaccard/containment consumer only re-applies its
-    * own survivor bound + verification. */
-  def ngramJaccardPairsSh(sh: DataFrame, stats: DataFrame,
-                          threshold: Double): DataFrame = {
+    * scan of the corpus shingles) is needed.
+    *
+    * Runs over a [[shingleTable]] and its [[pairStats]]: the df-capped
+    * candidate machinery is threshold-INDEPENDENT, so query wiring
+    * computes it once and every Jaccard/containment consumer only
+    * re-applies its own survivor bound + verification. */
+  def ngramJaccardPairs(sh: DataFrame, stats: DataFrame,
+                        threshold: Double): DataFrame = {
     // ε slack keeps the bound a strict superset under double rounding;
     // the exact merge-walk Jaccard below is the real threshold check.
     // J ≥ t ⟺ inter ≥ t/(1+t)·(|A|+|B|), and inter ≤ cc + min(hot).
@@ -922,7 +868,7 @@ object Dedup {
     val survivors = boundedPairs(stats) { (cc, na, nb, hotA, hotB) =>
       cc + least(hotA, hotB) >= need * (na + nb) - lit(1e-9)
     }
-    verifyJaccardSh(sh, survivors)
+    verifyJaccard(sh, survivors)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -999,23 +945,13 @@ object Dedup {
     *   inter ≤ cc + min(hot_a, hot_b),  C ≥ t ⟺ inter ≥ t·min(|A|,|B|).
     * Verification reuses the shared merge-walk overlap pass, so only
     * bound-surviving pairs ever touch a shingle array. */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, maxDf: Int = 20,
-                       threshold: Double = 0.9): DataFrame = {
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = shingleTable(docs, idCol, textCol, n).persist(disk)
-    containmentPairsSh(sh, pairStats(sh, maxDf), threshold)
-  }
-
-  /** [[containmentPairs]] over a pre-built shingle table + shared
-    * [[pairStats]] (see [[ngramJaccardPairsSh]]). */
-  def containmentPairsSh(sh: DataFrame, stats: DataFrame,
-                         threshold: Double): DataFrame = {
+  def containmentPairs(sh: DataFrame, stats: DataFrame,
+                       threshold: Double): DataFrame = {
     val survivors = boundedPairs(stats) { (cc, na, nb, hotA, hotB) =>
       cc + least(hotA, hotB) >=
         lit(threshold) * least(na, nb) - lit(1e-9)
     }
-    verifyOverlapSh(sh, survivors)
+    verifyOverlap(sh, survivors)
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") /
           least(col("na"), col("nb")).cast("double"), 6)

@@ -11,11 +11,17 @@ import org.apache.spark.sql.functions._
   * per primary key, deletes physically removed"
   * (reference: clickhouse_api.py:17-27, 275, 303-366; db_replicator.py:202-211).
   *
-  * Here the base storage is an append-only DataFrame carrying a `_version`
-  * column (and optionally `_deleted` tombstones); FINAL is a derived view.
+  * Here the base storage is an append-only log carrying a version column
+  * and tombstone rows; FINAL is a derived view over it. Deletes are
+  * dropped at read and physically removed by compaction.
+  * [[graft.operators.GraftTable]] orders versions by
+  * `struct(_version, _deleted)` and flags tombstones with `_deleted`.
+  * `latestByKey` alone is also the per-micro-batch last-write-wins
+  * collapse (reference A1, db_replicator_realtime.py:123-177): the
+  * realtime flush keeps one pending image per PK before the write.
   *
   * Scale notes:
-  *  - `max_by(struct(*), version)` plans as a hash aggregate with
+  *  - `max_by(struct(payload), version)` plans as a hash aggregate with
   *    partial (map-side) combine, so the shuffle carries one row per key
   *    per input partition — strictly better than the window-function
   *    formulation (full shuffle + sort of every version).
@@ -50,13 +56,4 @@ object FinalView {
   def finalView(log: DataFrame, keys: Seq[String], version: Column,
                 isDelete: Column): DataFrame =
     latestByKey(log, keys, version).filter(!coalesce(isDelete, lit(false)))
-
-  /** Per-micro-batch last-write-wins collapse (reference A1: the realtime
-    * buffer keeps one pending image per PK, later events overwrite —
-    * db_replicator_realtime.py:123-177). Identical machinery to
-    * `latestByKey`; named separately because it runs *inside* foreachBatch
-    * before the sink write, shrinking update-heavy batches.
-    */
-  def lwwCollapse(batch: DataFrame, keys: Seq[String], seq: Column): DataFrame =
-    latestByKey(batch, keys, seq)
 }

@@ -23,13 +23,18 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   * `ReplacingMergeTree(_version)` target (clickhouse_api.py:17-27,
   * 233-301): ClickHouse collapses versions at merge/FINAL time; here the
   * base files are immutable appends and the collapse is
-  * `max_by(row, _version)` at read, with `compact()` playing the role of
-  * the background merge / periodic OPTIMIZE (db_optimizer.py:57-113).
+  * `max_by(row, struct(_version, _deleted))` at read (a tombstone beats
+  * an image stamped at its own version), with `compact()` playing the
+  * role of the background merge / periodic OPTIMIZE
+  * (db_optimizer.py:57-113). Each of those decisions is stated once:
+  * `collapse` (FINAL), `logOf` (the per-generation log reader),
+  * `writeStamped` (the bucket layout).
   *
   * == Layout ==
   * {{{
   * root/meta/gen-N.json      // column (id,name,type) list per generation
   * root/meta/epoch           // pointer: which data epoch is current
+  * root/meta/staging         // reservation of an unpublished staged load
   * root/data[-eE]/gen=N/[_bucket=K/]part-*.parquet
   * }}}
   *
@@ -55,9 +60,10 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   *
   * **PK bucketing**: with a single integral primary key, files are
   * partitioned by `_bucket = floor(pk / 4294967)` — the reference's
-  * `PARTITION BY intDiv(id, 4294967)` (clickhouse_api.py:249-251) — so
-  * point lookups and PK-range scans prune partitions instead of scanning
-  * 100 TB. `lookup()` plants the partition filter.
+  * `PARTITION BY intDiv(id, 4294967)` (clickhouse_api.py:249-251) — and
+  * sorted by the pk inside each file. `lookup()` reads only its key's
+  * `_bucket=` directory, and parquet min/max stats on the pk skip row
+  * groups inside it.
   *
   * Scale design:
   *  - writes are blind appends — no read-modify-write, so ingest
@@ -78,7 +84,6 @@ final class GraftTable(
     val columns: Seq[GraftColumn]) {
 
   private val metaDir = s"$root/meta"
-  val metaCols: Seq[String] = Seq("_version", "_deleted")
 
   /** Per-table-root monitor serializing epoch allocation, pointer
     * swaps, and live writes between `compact()`, staged loads, and the
@@ -137,21 +142,34 @@ final class GraftTable(
     * and a crash inside the swap's delete+rename window, where the new
     * epoch is already fully written — both resolve correctly. */
   private def currentEpoch: Int =
-    if (fs.exists(epochPtrPath)) {
-      val in = fs.open(epochPtrPath)
-      (try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()).trim.toInt
-    } else listEpochs().maxOption.getOrElse(0)
+    readSmall(epochPtrPath).map(_.toInt)
+      .getOrElse(listEpochs().maxOption.getOrElse(0))
 
-  private def writeEpochPtr(e: Int): Unit = {
-    val tmp = new Path(s"$metaDir/.epoch.tmp")
+  private def writeEpochPtr(e: Int): Unit = writeSmall(epochPtrPath, e.toString)
+
+  /** Contents of a small meta file, trimmed; None when it is absent. */
+  private def readSmall(p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      Some((try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+        StandardCharsets.UTF_8)
+      finally in.close()).trim)
+    }
+
+  /** Replace a small meta file by tmp-write + rename: a crash mid-write
+    * leaves the previous file (or, inside the delete+rename window, none)
+    * — never a torn one whose parse would throw on every later read (a
+    * torn `meta/staging` would brick both compaction and snapshot resume
+    * until manual cleanup). */
+  private def writeSmall(p: Path, text: String): Unit = {
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(e.toString.getBytes(StandardCharsets.UTF_8))
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    fs.delete(epochPtrPath, false)
-    if (!fs.rename(tmp, epochPtrPath))
-      throw new java.io.IOException(s"cannot publish epoch $e")
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"cannot publish $p")
   }
 
   // ------------------------------------------------------- staged loads
@@ -175,16 +193,10 @@ final class GraftTable(
     * nothing). A one-line legacy file parses with an infinite baseline:
     * publish then lifts nothing, the pre-baseline behavior. */
   private def stagingMeta(): Option[(Int, Long)] =
-    if (!fs.exists(stagingMetaPath)) None
-    else {
-      val in = fs.open(stagingMetaPath)
-      val txt = (try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()).trim
+    readSmall(stagingMetaPath).map { txt =>
       val lines = txt.split("\n").map(_.trim)
-      Some((lines(0).toInt,
-        if (lines.length > 1) lines(1).toLong else Long.MaxValue))
+      (lines(0).toInt,
+        if (lines.length > 1) lines(1).toLong else Long.MaxValue)
     }
 
   /** The unpublished staging epoch of an interrupted load, if any. */
@@ -209,17 +221,7 @@ final class GraftTable(
     // load and are superseded by it; anything stamped above arrives
     // during the load and must survive the swap
     val baseline = maxVersion
-    // tmp-write + rename, same crash contract as writeEpochPtr: a crash
-    // mid-write would otherwise leave an empty meta/staging whose
-    // parse throws on EVERY later pendingStagedLoad — bricking both
-    // compaction and snapshot resume until manual cleanup
-    val tmp = new Path(s"$metaDir/.staging.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$target\n$baseline".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(stagingMetaPath, false)
-    if (!fs.rename(tmp, stagingMetaPath))
-      throw new java.io.IOException(s"cannot reserve staging epoch $target")
+    writeSmall(stagingMetaPath, s"$target\n$baseline")
     target
   }
 
@@ -414,32 +416,35 @@ final class GraftTable(
       .withColumn("_version", call_function("graft_stamp", lit(version)))
       .withColumn("_deleted", lit(deleted)), epoch)
 
-  /** Write an already-stamped frame (payload + `_version` + `_deleted`,
-    * possibly heterogeneous per row — the staged-publish delta) with the
-    * standard bucket+salt co-location. */
-  private def writeStamped(stamped: DataFrame, epoch: Int): Unit = {
+  /** The one bucket layout, for live batches, the staged-publish delta
+    * (heterogeneous `_version`/`_deleted` per row) and the compacted
+    * epoch alike: stamped rows (payload + `_version` + `_deleted`) go to
+    * the current generation of `epoch`, co-located by (bucket, salt) and
+    * pk-sorted when the table is bucketed.
+    *
+    * Without the co-location every write task opens a file per bucket it
+    * sees — tasks × buckets small files per batch (for compaction: the
+    * FINAL aggregate's pk-hash partitioning, so the compacted epoch would
+    * carry more files than the appends it replaced), which the FINAL scan
+    * then pays for file-by-file. The salt keeps a hot bucket from
+    * collapsing into one writer task; files per write ≈ buckets × salt,
+    * independent of input parallelism. The shuffle moves already-
+    * collapsed rows once — bounded by |keys|, not |events|.
+    * sortWithinPartitions(pk): parquet row-group min/max stats on the PK
+    * become tight disjoint ranges instead of whole-bucket spans, so a
+    * point lookup's pushed pk predicate skips row groups INSIDE the
+    * bucket file too — a per-partition sort, no extra shuffle. */
+  private def writeStamped(stamped: DataFrame, epoch: Int,
+                           mode: SaveMode = SaveMode.Append): Unit = {
     val w = bucketKey match {
       case Some(k) =>
-        // co-locate rows by (bucket, salt) before the partitioned write:
-        // without it every write task opens a file per bucket it sees —
-        // tasks × buckets small files per batch, which the FINAL scan
-        // then pays for file-by-file. The salt keeps a hot bucket from
-        // collapsing into one writer task; files per batch ≈ buckets ×
-        // salt, independent of input parallelism. The shuffle moves the
-        // already-collapsed batch once — bounded by |keys|, not |events|.
-        // sortWithinPartitions(pk): parquet row-group min/max stats on
-        // the PK become tight disjoint ranges instead of whole-bucket
-        // spans, so a point lookup's pushed pk predicate skips row
-        // groups INSIDE the bucket file too — a per-partition sort of
-        // the already-collapsed batch, no extra shuffle.
         stamped.withColumn("_bucket", bucketExpr(col(k.name)))
           .repartition(col("_bucket"), pmod(hash(col(k.name)), lit(4)))
           .sortWithinPartitions(col(k.name))
           .write.partitionBy("_bucket")
       case None => stamped.write
     }
-    w.mode(SaveMode.Append)
-      .parquet(genDataPath(epoch, currentGen))
+    w.mode(mode).parquet(genDataPath(epoch, currentGen))
   }
 
   /** Upsert a batch of row images at `version` (reference insert +
@@ -465,10 +470,20 @@ final class GraftTable(
 
   /** The raw versioned log (all appends + tombstones), every generation
     * re-aliased to the current column names/types via the stable ids. */
-  def log: DataFrame = {
+  def log: DataFrame = logOf(None)
+
+  /** The current epoch's log, generation by generation. With a `bucket`,
+    * a bucketed generation contributes only that `_bucket=` directory —
+    * provably the only one holding the key, so a missing one is skipped.
+    * A generation written before the PK became integral (e.g. MODIFY
+    * varchar → int) has no `_bucket=` dirs at all and is read whole (the
+    * caller's key predicate still applies). */
+  private def logOf(bucket: Option[Int]): DataFrame = {
     val e = currentEpoch
     val parts = gens.flatMap { g =>
-      val p = genDataPath(e, g.n)
+      val dir = genDataPath(e, g.n)
+      val p = bucket.filter(_ => isBucketed(e, g.n))
+        .fold(dir)(b => s"$dir/_bucket=$b")
       if (!fs.exists(new Path(p))) None
       else {
         val genStruct = StructType((g.cols.map(_.toStructField) ++ metaFields).toIndexedSeq)
@@ -479,21 +494,45 @@ final class GraftTable(
             case Some(o) => col(o.name).cast(c.dataType).as(c.name)
             case None => lit(null).cast(c.dataType).as(c.name)
           }
-        } ++ metaCols.map(col)
+        } ++ metaFields.map(f => col(f.name))
         Some(raw.select(sel.toIndexedSeq: _*))
       }
     }
-    if (parts.isEmpty) emptyLog
-    else parts.reduce(_ unionByName _)
+    if (parts.isEmpty) emptyLog else parts.reduce(_ unionByName _)
   }
 
-  /** FINAL view: latest version per key, tombstones dropped — what
-    * `SELECT ... FINAL` returns in the reference (db_replicator.py:202-211). */
-  def read: DataFrame =
-    FinalView.finalView(log, keys,
-      version = struct(col("_version"), col("_deleted")),
-      isDelete = col("_deleted"))
+  /** Whether a generation's data dir has `_bucket=` subdirs, memoized:
+    * that is immutable once files exist, and probing it per lookup would
+    * put a listing RPC on the point-read hot path. Only positive answers
+    * are cached: a probe racing the generation's first write (dir holds
+    * just _temporary/) must not pin "not bucketed" — that would disable
+    * pruning for the handle's life. */
+  private val bucketedGens =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Int)]()
+  private def isBucketed(e: Int, n: Int): Boolean =
+    bucketedGens.contains((e, n)) || {
+      val genDir = new Path(genDataPath(e, n))
+      val b = fs.exists(genDir) && fs.listStatus(genDir)
+        .exists(_.getPath.getName.startsWith("_bucket="))
+      if (b) bucketedGens.add((e, n))
+      b
+    }
+
+  /** FINAL semantics, stated once: per key the row with the greatest
+    * (`_version`, `_deleted`) wins, so a tombstone beats an image stamped
+    * at its own version. `SELECT … FINAL` (`isFinal`, what the reference
+    * returns, db_replicator.py:202-211) then drops keys whose winner is a
+    * tombstone and returns the payload; compaction takes the winners
+    * with their meta columns and applies its own tombstone rule. */
+  private def collapse(log: DataFrame, isFinal: Boolean = true): DataFrame = {
+    val order = struct(col("_version"), col("_deleted"))
+    if (!isFinal) FinalView.latestByKey(log, keys, order)
+    else FinalView.finalView(log, keys, order, isDelete = col("_deleted"))
       .select(payloadSchema.fieldNames.map(col).toIndexedSeq: _*)
+  }
+
+  /** FINAL view: latest version per key, tombstones dropped. */
+  def read: DataFrame = collapse(log)
 
   /** Time-travel FINAL view: the table as it stood when `maxVersion`
     * was the newest committed version. ClickHouse offers nothing like
@@ -503,81 +542,16 @@ final class GraftTable(
     * discarding them (on a compacted table, history older than the last
     * OPTIMIZE is gone — same contract as ReplacingMergeTree merges). */
   def readAsOf(maxVersion: Long): DataFrame =
-    FinalView.finalView(log.filter(col("_version") <= maxVersion), keys,
-      version = struct(col("_version"), col("_deleted")),
-      isDelete = col("_deleted"))
-      .select(payloadSchema.fieldNames.map(col).toIndexedSeq: _*)
+    collapse(log.filter(col("_version") <= maxVersion))
 
-  /** Point lookup through the FINAL view with partition pruning: the
-    * `_bucket` predicate is planted *under* the dedup aggregate, so only
-    * the key's bucket directory is scanned (at 100 TB: one partition, not
-    * the table). */
+  /** Point lookup through the FINAL view with partition pruning: only
+    * the key's `_bucket=` directory is scanned, under the dedup aggregate
+    * (at 100 TB: one partition, not the table). */
   def lookup(keyValue: Any): DataFrame = {
-    val pk = keys.head
-    val pruned = bucketKey match {
-      case Some(k) =>
-        // recompute the file-side bucket from the literal
-        val b = math.floorDiv(keyValue.toString.toLong, BucketWidth).toInt
-        logPruned(b).filter(col(pk) === lit(keyValue))
-      case None => log.filter(col(pk) === lit(keyValue))
-    }
-    FinalView.finalView(pruned, keys,
-      version = struct(col("_version"), col("_deleted")),
-      isDelete = col("_deleted"))
-      .select(payloadSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
-
-  /** Like [[log]] but reading only one `_bucket` partition per gen.
-    * A generation written before the PK became integral (e.g. MODIFY
-    * varchar → int) has no `_bucket=` dirs at all — those fall back to
-    * scanning the whole generation (the caller's key predicate still
-    * applies); only a *bucketed* generation missing this particular
-    * bucket dir is provably empty for the key and skipped. */
-  /** Bucketed-ness per generation, memoized: whether a gen's data dir
-    * has `_bucket=` subdirs is immutable once files exist, and probing
-    * it per lookup would put a listing RPC on the point-read hot path.
-    * Only positive answers are cached (an absent dir may appear later). */
-  private val bucketedGen =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), java.lang.Boolean]
-  private def isBucketed(e: Int, n: Int): Boolean = {
-    val cached = bucketedGen.get((e, n))
-    if (cached != null) cached.booleanValue()
-    else {
-      val genDir = new Path(genDataPath(e, n))
-      if (!fs.exists(genDir)) false
-      else {
-        val b = fs.listStatus(genDir)
-          .exists(_.getPath.getName.startsWith("_bucket="))
-        // cache ONLY positive answers: a probe racing the generation's
-        // first write (dir holds just _temporary/) must not pin "not
-        // bucketed" — that would disable pruning for the handle's life
-        if (b) bucketedGen.put((e, n), b)
-        b
-      }
-    }
-  }
-
-  private def logPruned(bucket: Int): DataFrame = {
-    val e = currentEpoch
-    val parts = gens.flatMap { g =>
-      val bucketed = isBucketed(e, g.n)
-      val p = if (bucketed) s"${genDataPath(e, g.n)}/_bucket=$bucket"
-              else genDataPath(e, g.n)
-      if (!fs.exists(new Path(p))) None
-      else {
-        val genStruct = StructType((g.cols.map(_.toStructField) ++ metaFields).toIndexedSeq)
-        val raw = spark.read.schema(genStruct).parquet(p)
-        val byId = g.cols.map(c => c.id -> c).toMap
-        val sel = columns.map { c =>
-          byId.get(c.id) match {
-            case Some(o) => col(o.name).cast(c.dataType).as(c.name)
-            case None => lit(null).cast(c.dataType).as(c.name)
-          }
-        } ++ metaCols.map(col)
-        Some(raw.select(sel.toIndexedSeq: _*))
-      }
-    }
-    if (parts.isEmpty) emptyLog else parts.reduce(_ unionByName _)
+    // recompute the file-side bucket from the literal
+    val bucket = bucketKey.map(_ =>
+      math.floorDiv(keyValue.toString.toLong, BucketWidth).toInt)
+    collapse(logOf(bucket).filter(col(keys.head) === lit(keyValue)))
   }
 
   /** One metadata-only recursive walk over the current epoch's parquet
@@ -665,40 +639,11 @@ final class GraftTable(
     compactionSignature
   }
 
-  /** OPTIMIZE … ZORDER: [[compact]], but the compacted epoch is laid
-    * out by the Morton key of two numeric columns (the public
-    * lakehouse multi-dimensional clustering recipe;
-    * [[graft.functions.ZValue]] documents the bit math). The pk-sorted
-    * layout prunes row groups on the pk only; after a z-order rewrite
-    * every file's [min,max] box is narrow in BOTH named columns, so
-    * min/max skipping works for predicates on either (pinned by a
-    * GraftTableSpec files-touched assertion). Analytic (non-bucketed)
-    * tables only — bucketed CDC tables keep their pk-sorted bucket
-    * layout, which the realtime delete path prunes by.
-    *
-    * Scale shape: one extra tiny min/max aggregate over the PERSISTED
-    * collapsed image (4 longs to the driver — table stats, not data),
-    * a codegen'd map-only z projection, and the range exchange any
-    * layout rewrite pays; `files` bounds output file count. */
-  def compactZOrder(colA: String, colB: String, files: Int = 32): Long =
-    epochLock.synchronized {
-      require(bucketKey.isEmpty,
-        "compactZOrder: z-order layout is for non-bucketed (analytic) " +
-          "tables; single-int-pk tables keep the bucketed pk-sorted " +
-          "layout the CDC path prunes by")
-      require(columns.exists(_.name == colA) && columns.exists(_.name == colB),
-        s"compactZOrder: unknown columns ($colA, $colB)")
-      compactLocked(zorder = Some((colA, colB, files)))
-      compactionSignature
-    }
-
-  private def compactLocked(
-      zorder: Option[(String, String, Int)] = None): Unit = {
+  private def compactLocked(): Unit = {
     if (!exists) return
     val e = currentEpoch
     val cur = currentGen
-    val keep0 = FinalView.latestByKey(log, keys,
-      struct(col("_version"), col("_deleted")))
+    val keep0 = collapse(log, isFinal = false)
     // Tombstones normally die here (applied, then dropped). But with a
     // staged load pending, publish will lift post-baseline rows —
     // tombstones included — into the staging epoch: dropping one now
@@ -718,59 +663,7 @@ final class GraftTable(
     // old data AS the staging epoch, and the load's shards would then
     // append into a live epoch — a permanently corrupted table.
     val target = (listEpochs() ++ pendingStagedLoad() :+ e).max + 1
-    val w = zorder match {
-      case Some((ca, cb, files)) =>
-        // min-max normalize both dims to 16 bits from a 4-long driver
-        // aggregate (table stats, not data), then range-partition and
-        // sort by the interleaved key: each output file covers one z
-        // range — a narrow [min,max] box in BOTH dims
-        val img = keep.persist()
-        val mm = img.agg(
-          min(col(ca).cast(LongType)), max(col(ca).cast(LongType)),
-          min(col(cb).cast(LongType)), max(col(cb).cast(LongType)))
-          .collect()(0)
-        if (mm.isNullAt(0) || mm.isNullAt(2)) img.write // empty/all-null
-        else {
-          val (mnA, mxA) = (mm.getLong(0), mm.getLong(1))
-          val (mnB, mxB) = (mm.getLong(2), mm.getLong(3))
-          // normalize via DOUBLE: integer (c-mn)*65535 overflows Long
-          // once the column's range exceeds ~1.4e14 (and mx-mn itself
-          // can overflow across the sign boundary, e.g. hash-derived
-          // ids), yielding garbage z keys — the layout silently loses
-          // its pruning power. Layout quality doesn't need bit-exact
-          // integer division; clamp to [0, 65535] after the fp math.
-          def norm(c: Column, mn: Long, mx: Long): Column = {
-            val range = mx.toDouble - mn.toDouble
-            if (range <= 0d) lit(0L)
-            else least(lit(65535L), greatest(lit(0L),
-              ((coalesce(c.cast(LongType), lit(mn)).cast("double")
-                - mn.toDouble) * 65535d / range).cast(LongType)))
-          }
-          val z = graft.functions.ZValue.zColumn(
-            norm(col(ca), mnA, mxA), norm(col(cb), mnB, mxB))
-          img.withColumn("_zorder", z)
-            .repartitionByRange(files, col("_zorder"))
-            .sortWithinPartitions("_zorder")
-            .drop("_zorder")
-            .write
-        }
-      case None => bucketKey match {
-      case Some(k) =>
-        // same (bucket, salt) co-location + pk sort as writeBatch: the
-        // FINAL aggregate leaves pk-hash partitioning, and writing THAT
-        // through partitionBy would open tasks × buckets files — the
-        // compacted epoch would carry more files than the appends it
-        // replaced. One extra shuffle of the collapsed image bounds it
-        // at buckets × salt, with tight per-row-group pk stats.
-        keep.withColumn("_bucket", bucketExpr(col(k.name)))
-          .repartition(col("_bucket"), pmod(hash(col(k.name)), lit(4)))
-          .sortWithinPartitions(col(k.name))
-          .write.partitionBy("_bucket")
-      case None => keep.write
-      }
-    }
-    w.mode(SaveMode.Overwrite).parquet(genDataPath(target, cur))
-    if (zorder.isDefined) keep.unpersist()
+    writeStamped(keep, target, SaveMode.Overwrite)
     writeEpochPtr(target)
     // previous epoch survives one cycle for in-flight readers; anything
     // older — including partial epochs from crashed attempts — goes now.
@@ -834,15 +727,12 @@ object GraftTable {
     // they have (and matches what the registry WOULD assign at CREATE,
     // so a later registry-handled handle still reads these files)
     val ids = schema.fields.map(_.id)
-    val cols =
-      if (ids.forall(_ >= 0) && ids.distinct.length == ids.length)
-        schema.fields.map(f => GraftColumn(f.id, f.name,
-          graft.types.MySqlType.toSpark(f.tpe), f.nullable))
-      else schema.fields.zipWithIndex.map { case (f, i) =>
-        GraftColumn(i, f.name, graft.types.MySqlType.toSpark(f.tpe),
-          f.nullable)
-      }
-    new GraftTable(spark, root, schema.primaryKeys, cols)
+    val stable = ids.forall(_ >= 0) && ids.distinct.length == ids.length
+    new GraftTable(spark, root, schema.primaryKeys,
+      schema.fields.zipWithIndex.map { case (f, i) =>
+        GraftColumn(if (stable) f.id else i, f.name,
+          graft.types.MySqlType.toSpark(f.tpe), f.nullable)
+      })
   }
 
   /** Positional ids — for tables that never rename columns (snapshots,
@@ -853,8 +743,4 @@ object GraftTable {
       payloadSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
         GraftColumn(i, f.name, f.dataType, f.nullable)
       })
-
-  def apply(spark: SparkSession, root: String, keys: Seq[String],
-            columns: Seq[GraftColumn]): GraftTable =
-    new GraftTable(spark, root, keys, columns)
 }

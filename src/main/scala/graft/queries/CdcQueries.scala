@@ -156,7 +156,7 @@ object CdcQueries {
 
     // A1: per-(key, attribute) last-write-wins collapse.
     "cdc_lww_collapse" -> { (s, dir) =>
-      FinalView.lwwCollapse(
+      FinalView.latestByKey(
         t(s, dir, "events")
           .select(col("user_id"), col("event_type"), col("value"),
             col("ts_ns"), col("event_id")),

@@ -94,7 +94,7 @@ object TextQueries {
   private def sharedMinhashPairs(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
     memoCkpt(s, s"mhpairs:$dir:n3k6b3r2t05") {
-      Dedup.minhashNearDupsSh(sharedShingleTable(s, dir),
+      Dedup.minhashNearDups(sharedShingleTable(s, dir),
         k = 6, b = 3, r = 2, threshold = 0.5)
     }
 
@@ -109,7 +109,7 @@ object TextQueries {
   private def sharedShingleTable(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
     memoCkpt(s, s"shingles:$dir:n3") {
-      Dedup.shingleTableOf(t(s, dir, "documents"), "doc_id", "text", n = 3)
+      Dedup.shingleTable(t(s, dir, "documents"), "doc_id", "text", n = 3)
     }
 
   /** The df-capped candidate pair stats (id_a, id_b, cc, na, nb, hot_a,
@@ -134,7 +134,7 @@ object TextQueries {
   private def sharedJaccardPairs(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
     memoCkpt(s, s"njpairs:$dir:n3df20t05") {
-      Dedup.ngramJaccardPairsSh(sharedShingleTable(s, dir),
+      Dedup.ngramJaccardPairs(sharedShingleTable(s, dir),
         sharedPairStats(s, dir), threshold = 0.5)
     }
 
@@ -941,7 +941,7 @@ object TextQueries {
     // capped-candidate machinery as d_ngram_jaccard, survivor bound
     // rewritten for containment, shared merge-walk verification.
     "d_containment" -> { (s, dir) =>
-      Dedup.containmentPairsSh(sharedShingleTable(s, dir),
+      Dedup.containmentPairs(sharedShingleTable(s, dir),
         sharedPairStats(s, dir), threshold = 0.8)
         .orderBy("id_a", "id_b")
     },
@@ -1013,7 +1013,7 @@ object TextQueries {
       // shingling is per-doc, so both sides are plain filters of the
       // family's shared cached shingle table — no re-shingling
       val sh = sharedShingleTable(s, dir)
-      Dedup.incrementalNearDupsSh(
+      Dedup.incrementalNearDups(
         sh.filter(col("id") % 10 =!= 0),
         sh.filter(col("id") % 10 === 0),
         t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
@@ -1348,7 +1348,7 @@ object TextQueries {
     // d_ngram_jaccard's with the floor dropped to 0.3; banding runs on
     // the 6-decimal score through an exact-integer chain.
     "t_dedup_sweep" -> { (s, dir) =>
-      Dedup.ngramJaccardPairsSh(sharedShingleTable(s, dir),
+      Dedup.ngramJaccardPairs(sharedShingleTable(s, dir),
         sharedPairStats(s, dir), threshold = 0.3)
         .select(floor(round(col("jaccard") * 1e6) / 1e5).cast("int")
           .as("band"))

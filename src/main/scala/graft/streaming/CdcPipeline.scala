@@ -6,10 +6,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.GraftConfig
-import graft.ddl.{DdlOp, DdlParser, SchemaRegistry, TableSchema}
-import graft.operators.{FinalView, GraftColumn, GraftTable, RecordConversion}
+import graft.ddl.{DdlOp, DdlParser, SchemaRegistry}
+import graft.operators.{FinalView, GraftTable, RecordConversion}
 import graft.sources.EventSpool
-import graft.types.MySqlType
 
 
 /** The realtime replication loop, Spark-first.
@@ -62,19 +61,13 @@ final class CdcPipeline(
   private val tables =
     new java.util.concurrent.ConcurrentHashMap[(String, String), GraftTable]
 
-  private def graftColumns(schema: TableSchema): Seq[GraftColumn] =
-    schema.fields.map(f =>
-      GraftColumn(f.id, f.name, MySqlType.toSpark(f.tpe), f.nullable))
-
   /** Warehouse location — target names (F4 remap) live only here. */
   private[streaming] def tablePath(db: String, tbl: String): String =
     s"$warehouseDir/${config.targetDatabase(db)}/${config.targetTable(db, tbl)}"
 
   def table(db: String, tbl: String): GraftTable =
     tables.computeIfAbsent((db, tbl), { case (d, t) =>
-      val schema = registry(d, t)
-      GraftTable(spark, tablePath(d, t), schema.primaryKeys,
-        graftColumns(schema))
+      GraftTable.fromSchema(spark, tablePath(d, t), registry(d, t))
     })
 
   /** Default-db convenience (tests / single-db deployments). */

@@ -41,6 +41,13 @@ class PlanAuditSpec extends SparkSpec {
     flatten(df.queryExecution.executedPlan)
   }
 
+  /** The documents' 3-gram shingle table, persisted the way the dedup
+    * operators' callers hold it; the test releases it. */
+  private def shingles(): DataFrame =
+    graft.operators.Dedup.shingleTable(
+      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", n = 3)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   private def scansOf(ns: Seq[SparkPlan], table: String) =
     ns.collect {
       case s: FileSourceScanExec
@@ -89,9 +96,10 @@ class PlanAuditSpec extends SparkSpec {
     // operator-level: the gated d_ngram_jaccard reads a memoized,
     // plan-truncated relation (r14), so the pipeline shape is audited
     // on the operator the memo builder runs
-    val ns = nodes(graft.operators.Dedup.ngramJaccardPairs(
-      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-      n = 3, maxDf = 20, threshold = 0.5))
+    val sh = shingles()
+    val ns = try nodes(graft.operators.Dedup.ngramJaccardPairs(sh,
+      graft.operators.Dedup.pairStats(sh, maxDf = 20), threshold = 0.5))
+    finally sh.unpersist()
     // a regression to plain collect_set + post-filter would reintroduce
     // the unbounded hot-shingle aggregation buffer
     val capped = ns.collect { case o: ObjectHashAggregateExec => o }
@@ -366,9 +374,10 @@ class PlanAuditSpec extends SparkSpec {
     // executes once per session — is audited directly.
     graft.queries.clearFitMemo()
     spark.sharedState.cacheManager.clearCache()
-    val ns = nodes(graft.operators.Dedup.minhashNearDups(
-      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-      n = 3, k = 6, b = 3, r = 2, threshold = 0.5))
+    val sh = shingles()
+    val ns = try nodes(graft.operators.Dedup.minhashNearDups(sh,
+      k = 6, b = 3, r = 2, threshold = 0.5))
+    finally sh.unpersist()
     // the b band keys are packed into one array and exploded — b separate
     // joins would re-read (and re-aggregate) the minhash input b times
     def keysOf(p: SparkPlan): Option[Seq[String]] = p match {

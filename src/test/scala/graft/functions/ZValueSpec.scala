@@ -59,17 +59,6 @@ class ZValueSpec extends SparkSpec {
     }
   }
 
-  test("zColumn (built-in ops) is bit-identical to graft_zvalue") {
-    val rnd = new scala.util.Random(20260819L)
-    val df = List.fill(300)(
-      (rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong)).toDF("x", "y")
-    val rows = df.select(
-        call_function("graft_zvalue", col("x"), col("y")).as("ze"),
-        ZValue.zColumn(col("x"), col("y")).as("zc"))
-      .collect()
-    rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
-  }
-
   test("null inputs yield null; non-integral inputs are rejected") {
     val df = Seq((Some(3L), None: Option[Long])).toDF("x", "y")
     val r = df.select(

@@ -94,7 +94,7 @@ class CompactorSpec extends SparkSpec {
       GraftColumn(0, "id", LongType, nullable = true),
       GraftColumn(1, "v", StringType, nullable = true))
     val dir = tmpDir("graft-cmp-gen")
-    val t = GraftTable(spark, dir, Seq("id"), cols)
+    val t = new GraftTable(spark, dir, Seq("id"), cols)
     t.append(Seq((1L, "a")).toDF("id", "v"), 1)
     var now = 1000L
     var cur = t
@@ -105,7 +105,7 @@ class CompactorSpec extends SparkSpec {
     assert(c.tick() === None) // idle
     // RENAME COLUMN: a new generation with ZERO new data files — the
     // gen-collapse rewrite must still run at the next interval
-    cur = GraftTable(spark, dir, Seq("id"),
+    cur = new GraftTable(spark, dir, Seq("id"),
       Seq(cols.head, GraftColumn(1, "w", StringType, nullable = true)))
     now += 1000
     assert(c.tick() === Some(("db", "t")))

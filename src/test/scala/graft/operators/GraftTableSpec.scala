@@ -95,7 +95,7 @@ class GraftTableSpec extends SparkSpec {
       StructField("id", StringType), StructField("v", StringType))))
     t1.append(Seq(("1", "old"), ("7", "other")).toDF("id", "v"), version = 1)
     // MODIFY id varchar → bigint: same column ids, new type → new generation
-    val t2 = GraftTable(spark, root, Seq("id"), Seq(
+    val t2 = new GraftTable(spark, root, Seq("id"), Seq(
       GraftColumn(0, "id", LongType), GraftColumn(1, "v", StringType)))
     t2.append(Seq((2L, "new")).toDF("id", "v"), version = 2)
     // pre-retype rows must come back through the pruned lookup path
@@ -110,7 +110,7 @@ class GraftTableSpec extends SparkSpec {
     val t1 = GraftTable(spark, root, Seq("id"), StructType(Seq(
       StructField("id", StringType), StructField("v", StringType))))
     t1.append(Seq(("1", "old"), ("9000000", "far")).toDF("id", "v"), 1)
-    val t2 = GraftTable(spark, root, Seq("id"), Seq(
+    val t2 = new GraftTable(spark, root, Seq("id"), Seq(
       GraftColumn(0, "id", LongType), GraftColumn(1, "v", StringType)))
     t2.append(Seq((2L, "new")).toDF("id", "v"), 2)
     t2.compact()
@@ -161,47 +161,6 @@ class GraftTableSpec extends SparkSpec {
     val files2 = t.lookup(9000000L).inputFiles
     assert(files2.nonEmpty && files2.forall(_.contains("_bucket=2/")),
       s"post-compact lookup leaked outside _bucket=2: ${files2.mkString(",")}")
-  }
-
-  test("compactZOrder: per-file boxes narrow in BOTH dims; view kept") {
-    val schema2 = StructType(Seq(
-      StructField("a", LongType), StructField("b", LongType),
-      StructField("payload", StringType)))
-    // composite key → non-bucketed, the analytic-table shape
-    val t = GraftTable(spark, tmpDir("graft-zorder"), Seq("a", "b"), schema2)
-    val rows = for (a <- 0L until 64L; b <- 0L until 64L)
-      yield (a, b, s"p$a-$b")
-    t.append(rows.toDF("a", "b", "payload"), version = 1)
-    t.compactZOrder("a", "b", files = 16)
-    // the FINAL view is untouched by the layout rewrite
-    assert(t.read.count() === 64L * 64L)
-    assert(t.read.filter(col("a") === 5 && col("b") === 9)
-      .collect().map(_.getString(2)).toSeq === Seq("p5-9"))
-    // per-file [min,max] boxes: a point predicate on EITHER dimension's
-    // midpoint must touch a strict minority of files — the property a
-    // single-column sort cannot give for the second column
-    // per-file stats need a RAW scan: input_file_name() does not
-    // survive the FINAL view's aggregate
-    val boxes = spark.read.parquet(t.read.inputFiles: _*)
-      .select(input_file_name().as("f"), col("a"), col("b"))
-      .groupBy("f")
-      .agg(min("a").as("na"), max("a").as("xa"),
-        min("b").as("nb"), max("b").as("xb"))
-      .collect()
-    assert(boxes.length >= 8, s"expected ~16 files, got ${boxes.length}")
-    val hitA = boxes.count(r => r.getLong(1) <= 31 && 31 <= r.getLong(2))
-    val hitB = boxes.count(r => r.getLong(3) <= 31 && 31 <= r.getLong(4))
-    assert(hitA <= boxes.length / 2,
-      s"a-midpoint touches $hitA/${boxes.length} files — no a-locality")
-    assert(hitB <= boxes.length / 2,
-      s"b-midpoint touches $hitB/${boxes.length} files — no b-locality")
-    // bucketed (single-int-pk) tables refuse: their layout is the CDC
-    // delete path's pruning contract
-    val bucketed = mkTable()
-    bucketed.append(Seq((1L, "x")).toDF("id", "v"), version = 1)
-    intercept[IllegalArgumentException] {
-      bucketed.compactZOrder("id", "id")
-    }
   }
 
   test("truncate clears data, table stays usable") {

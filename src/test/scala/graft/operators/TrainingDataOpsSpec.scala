@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Unit coverage for the training-data operators on constructed inputs
@@ -8,6 +9,26 @@ import org.apache.spark.sql.functions._
   */
 class TrainingDataOpsSpec extends SparkSpec {
   import spark.implicits._
+
+  // minhash-LSH at d_minhash_lsh's parameters over per-corpus shingle
+  // tables, which the caller persists and releases
+  private def withShingles(corpora: DataFrame*)(
+      f: Seq[DataFrame] => DataFrame): Array[Row] = {
+    val shs = corpora.map(Dedup.shingleTable(_, "doc_id", "text", n = 3)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try f(shs).collect()
+    finally shs.foreach(_.unpersist())
+  }
+
+  private def nearDups(docs: DataFrame): Array[Row] =
+    withShingles(docs)(shs =>
+      Dedup.minhashNearDups(shs.head, k = 6, b = 3, r = 2, threshold = 0.5))
+
+  private def incremental(existing: DataFrame, batch: DataFrame): Array[Row] =
+    withShingles(existing, batch)(shs =>
+      Dedup.incrementalNearDups(shs(0), shs(1),
+        batch.select(col("doc_id").as("id")),
+        k = 6, b = 3, r = 2, threshold = 0.5))
 
   test("exact dedup finds identical texts only") {
     val docs = Seq(
@@ -26,8 +47,7 @@ class TrainingDataOpsSpec extends SparkSpec {
     val other = (100 to 140).map(i => s"v$i").mkString(" ")
     val docs = Seq((1L, base), (2L, nearDup), (3L, other))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-      threshold = 0.5).collect()
+    val pairs = nearDups(docs)
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     assert(pairs(0).getAs[Double]("jaccard") > 0.8)
   }
@@ -166,11 +186,10 @@ class TrainingDataOpsSpec extends SparkSpec {
       (30L, base + " z z2"),                               // batch dup of 10 too
       (40L, (200 to 240).map(i => s"u$i").mkString(" "))   // batch, unrelated
     ).toDF("doc_id", "text")
-    val inc = Dedup.incrementalNearDups(
-      docs.filter(col("doc_id") < 10), docs.filter(col("doc_id") >= 10),
-      "doc_id", "text").collect()
+    val inc = incremental(
+      docs.filter(col("doc_id") < 10), docs.filter(col("doc_id") >= 10))
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val full = Dedup.minhashNearDups(docs, "doc_id", "text").collect()
+    val full = nearDups(docs)
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filter(p => p._1 >= 10 || p._2 >= 10).toSet
     assert(inc === full, s"incremental ≠ restricted recompute")
@@ -178,46 +197,6 @@ class TrainingDataOpsSpec extends SparkSpec {
     assert(inc.exists(p => p._1 < 10 && p._2 >= 10), "no cross pair found")
     assert(inc.exists(p => p._1 >= 10 && p._2 >= 10), "no within-batch pair")
     assert(!inc.exists(p => p._1 < 10 && p._2 < 10), "index-only pair leaked")
-  }
-
-  test("shared shingle/pairStats variants reproduce the standalone pipelines") {
-    // the r14 sharing refactor: one cached shingle table + one
-    // threshold-independent pairStats relation feed every shingle
-    // pipeline — each *Sh variant must be bit-equal to the standalone
-    // entry point it replaces, at thresholds on BOTH sides of the memo's
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val docs = Seq(
-      (1L, base),
-      (2L, (1 to 38).map(i => s"w$i").mkString(" ") + " x y"),
-      (3L, (1 to 20).map(i => s"w$i").mkString(" ")), // contained in 1
-      (4L, (100 to 140).map(i => s"v$i").mkString(" ")),
-      (5L, base + " z")).toDF("doc_id", "text")
-    val sh = Dedup.shingleTableOf(docs, "doc_id", "text", 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = Dedup.pairStats(sh, maxDf = 20)
-    def set(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    for (t <- Seq(0.3, 0.5))
-      assert(set(Dedup.ngramJaccardPairsSh(sh, stats, t)) ===
-        set(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          n = 3, maxDf = 20, threshold = t)), s"jaccard@$t diverged")
-    for (t <- Seq(0.8, 0.9))
-      assert(set(Dedup.containmentPairsSh(sh, stats, t)) ===
-        set(Dedup.containmentPairs(docs, "doc_id", "text",
-          n = 3, maxDf = 20, threshold = t)), s"containment@$t diverged")
-    assert(set(Dedup.minhashNearDupsSh(sh, k = 6, b = 3, r = 2,
-        threshold = 0.5)) ===
-      set(Dedup.minhashNearDups(docs, "doc_id", "text")),
-      "minhash diverged")
-    // incremental over filters of the shared table == over raw corpora
-    val exDocs = docs.filter(col("doc_id") <= 3)
-    val batch = docs.filter(col("doc_id") > 3)
-    assert(set(Dedup.incrementalNearDupsSh(
-        sh.filter(col("id") <= 3), sh.filter(col("id") > 3),
-        batch.select(col("doc_id").as("id")),
-        k = 6, b = 3, r = 2, threshold = 0.5)) ===
-      set(Dedup.incrementalNearDups(exDocs, batch, "doc_id", "text")),
-      "incremental diverged")
   }
 
   test("incrementalNearDups: a re-ingested id verifies against its NEW text") {
@@ -228,8 +207,8 @@ class TrainingDataOpsSpec extends SparkSpec {
     // generation must not dilute the verify: (1, 5) must clear 0.5.
     val existing = Seq((1L, base), (5L, other)).toDF("doc_id", "text")
     val batch = Seq((5L, base + " z")).toDF("doc_id", "text")
-    val pairs = Dedup.incrementalNearDups(existing, batch, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val pairs = incremental(existing, batch)
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet === Set((1L, 5L)),
       s"expected exactly the upserted near-dup pair, got ${pairs.toSeq}")
     assert(pairs.head._3 > 0.8,

@@ -182,17 +182,38 @@ class SnapshotSpec extends SparkSpec {
     // publish lifts them (they're stamped above the begin baseline) so
     // the swap loses nothing — the stream checkpoint is already past
     t.append(Seq((3L, "live")).toDF("id", "v"), 15L)
+    // a second bucket (floor(9000000 / 4294967) = 2) in the same delta
+    t.append(Seq((9000000L, "far")).toDF("id", "v"), 15L)
     t.delete(Seq(Tuple1(2L)).toDF("id"), 16L)
     assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      === Set((1L, "old"), (9L, "old"), (3L, "live")))
+      === Set((1L, "old"), (9L, "old"), (3L, "live"), (9000000L, "far")))
     t.publishStagedLoad(staging)
-    def state = t.read.collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
+    def state = rows(t.read)
+    // the lifted delta went through the bucket layout and reads back
+    // through the pruned, time-travel and full FINAL readers alike
+    def checkReaders(asOf15: Set[(Long, String)]): Unit = {
+      assert(rows(t.lookup(3L)) === Set((3L, "live")))
+      val buckets = t.lookup(3L).inputFiles.toSeq
+        .map(f => """_bucket=\d+""".r.findFirstIn(f))
+      assert(buckets.distinct === Seq(Some("_bucket=0")),
+        s"lookup(3) read outside _bucket=0: $buckets")
+      assert(rows(t.readAsOf(15L)) === asOf15)
+      assert(rows(t.readAsOf(16L)) === state)
+    }
     // 1 → snapshot image wins; 2 → mid-load delete wins over the
-    // snapshot; 3 → mid-load insert survives; 9 → replaced away
-    assert(state === Set((1L, "snap"), (3L, "live")))
+    // snapshot; 3 and 9000000 → mid-load inserts survive; 9 → replaced
+    // away
+    assert(state === Set((1L, "snap"), (3L, "live"), (9000000L, "far")))
+    // as of 15 the v16 delete has not happened: key 2 is the snapshot
+    // image
+    checkReaders(state + ((2L, "snap")))
     t.compact() // and compaction of the published epoch keeps them
-    assert(state === Set((1L, "snap"), (3L, "live")))
+    assert(state === Set((1L, "snap"), (3L, "live"), (9000000L, "far")))
+    // compaction dropped the tombstone with the image it shadowed:
+    // history older than the last OPTIMIZE is gone
+    checkReaders(state)
   }
 
   test("publish replay after the pointer swap skips the lift (no dup rows)") {
