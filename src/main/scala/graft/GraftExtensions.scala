@@ -4,9 +4,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /** Session-extension entry point (`spark.sql.extensions` /
   * `Builder.withExtensions`) registering the engine's custom Catalyst
-  * expressions — currently the WKB geometry decoders (X6).
+  * expressions — the WKB geometry decoders (X6), the vector and text
+  * kernels, `graft_stamp` — and the one physical rule,
+  * [[graft.functions.StampPushedKeys]], which keeps a point lookup's key
+  * out of generated code.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.GraftFunctions.register(ext)
+    ext.injectQueryPostPlannerStrategyRule(_ => graft.functions.StampPushedKeys)
+  }
 }

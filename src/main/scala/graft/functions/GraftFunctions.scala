@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.LongType
 
 /** Engine-native SQL functions, registered through the public
   * `SparkSessionExtensions.injectFunction` hook (wired by
@@ -97,8 +98,8 @@ object GraftFunctions {
       v => {
         require(v.foldable, "graft_stamp: value must be a literal")
         v.eval() match {
-          case i: java.lang.Long => Stamp(i)
-          case i: java.lang.Integer => Stamp(i.longValue())
+          case i: java.lang.Long => Stamp(i, LongType)
+          case i: java.lang.Integer => Stamp(i.longValue(), LongType)
           case other => throw new IllegalArgumentException(
             s"graft_stamp: value must be an integer, got $other")
         }

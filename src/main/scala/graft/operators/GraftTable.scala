@@ -72,8 +72,10 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   *  - deletes are tombstone rows, not rewrites (the reference issues
   *    `DELETE FROM` mutations, clickhouse_api.py:368-400 — equally
   *    deferred merges under the hood);
-  *  - the FINAL aggregate shuffles on the PK — the same partitioning a
-  *    downstream PK join reuses;
+  *  - the FINAL aggregate of a scan shuffles on the PK — the same
+  *    partitioning a downstream PK join reuses; a point lookup on a
+  *    bucketed table collapses its one bucket directory in place, with
+  *    no shuffle (see `lookup`);
   *  - `compact()` bounds read amplification and collapses generations,
   *    exactly like OPTIMIZE FINAL merging parts.
   */
@@ -245,7 +247,8 @@ final class GraftTable(
   /** [[append]] into an unpublished staging epoch — invisible to every
     * reader until [[publishStagedLoad]]. */
   def appendStaged(df: DataFrame, version: Long, epoch: Int): Unit =
-    writeBatch(df, version, deleted = false, epoch = Some(epoch))
+    writeStamped(stampedChanges(df.withColumn("_deleted", lit(false)),
+      version), epoch)
 
   /** Atomically publish a staged load. Two steps under the epoch lock:
     *
@@ -377,44 +380,7 @@ final class GraftTable(
 
   def exists: Boolean = fs.exists(new Path(epochDataDir(currentEpoch)))
 
-  private def align(df: DataFrame): DataFrame = {
-    val present = df.columns.toSet
-    df.select(columns.toIndexedSeq.map { c =>
-      (if (present.contains(c.name)) col(c.name)
-       else lit(null)).cast(c.dataType).as(c.name)
-    }: _*)
-  }
-
   private def currentGen: Int = gens.last.n
-
-  private def writeBatch(df: DataFrame, version: Long, deleted: Boolean,
-                         epoch: Option[Int] = None): Unit =
-    epoch match {
-      case Some(e) => writeBatchTo(df, version, deleted, e)
-      case None =>
-        // LIVE write: epoch resolution and the parquet commit are atomic
-        // under the table's epoch lock, so a concurrent
-        // publishStagedLoad either sees this batch's committed files
-        // when it lifts the post-begin delta into the staging epoch, or
-        // this write blocks and then lands in the published epoch —
-        // never the lost-in-a-doomed-epoch middle. Holding a monitor
-        // across a Spark action serializes only same-table writers,
-        // which are already serial in the pipeline (flush futures are
-        // one-per-table); staged shard appends go to a different
-        // directory and take no lock.
-        epochLock.synchronized {
-          writeBatchTo(df, version, deleted, currentEpoch)
-        }
-    }
-
-  // `_version` goes through graft_stamp (functions/Stamp), not
-  // lit(version): every micro-batch stamps a new version, and an inlined
-  // literal would make each one compile its write stage again
-  private def writeBatchTo(df: DataFrame, version: Long, deleted: Boolean,
-                           epoch: Int): Unit =
-    writeStamped(align(df)
-      .withColumn("_version", call_function("graft_stamp", lit(version)))
-      .withColumn("_deleted", lit(deleted)), epoch)
 
   /** The one bucket layout, for live batches, the staged-publish delta
     * (heterogeneous `_version`/`_deleted` per row) and the compacted
@@ -447,16 +413,52 @@ final class GraftTable(
     w.mode(mode).parquet(genDataPath(epoch, currentGen))
   }
 
-  /** Upsert a batch of row images at `version` (reference insert +
-    * `_version` stamping, clickhouse_api.py:303-366). Caller is expected
-    * to have LWW-collapsed the batch to one image per key. */
-  def append(df: DataFrame, version: Long): Unit =
-    writeBatch(df, version, deleted = false)
+  /** Write one collapsed batch at `version` in one bucketed parquet
+    * write. Each row of `rows` carries a boolean `_deleted`: false for a
+    * row image (reference insert + `_version` stamping,
+    * clickhouse_api.py:303-366), true for a delete-by-key tombstone,
+    * whose payload is stored NULL (reference erase,
+    * clickhouse_api.py:368-400). The caller has LWW-collapsed the batch
+    * to one row per key; payload columns it lacks are stored NULL.
+    *
+    * LIVE write: epoch resolution and the parquet commit are atomic under
+    * the table's epoch lock, so a concurrent publishStagedLoad either
+    * sees this batch's committed files when it lifts the post-begin delta
+    * into the staging epoch, or this write blocks and then lands in the
+    * published epoch — never the lost-in-a-doomed-epoch middle. Holding a
+    * monitor across a Spark action serializes only same-table writers,
+    * which are already serial in the pipeline (flush futures are
+    * one-per-table); staged shard appends go to a different directory and
+    * take no lock. */
+  def writeChanges(rows: DataFrame, version: Long): Unit =
+    epochLock.synchronized {
+      writeStamped(stampedChanges(rows, version), currentEpoch)
+    }
 
-  /** Delete by key at `version`: tombstone rows with NULL payload
-    * (reference erase, clickhouse_api.py:368-400). */
+  /** Upsert a batch of row images at `version`. */
+  def append(df: DataFrame, version: Long): Unit =
+    writeChanges(df.withColumn("_deleted", lit(false)), version)
+
+  /** Delete by key at `version`. */
   def delete(keyDf: DataFrame, version: Long): Unit =
-    writeBatch(keyDf.select(keys.map(col): _*), version, deleted = true)
+    writeChanges(keyDf.select(keys.map(col): _*)
+      .withColumn("_deleted", lit(true)), version)
+
+  // `_version` goes through graft_stamp (functions/Stamp), not
+  // lit(version): every micro-batch stamps a new version, and an inlined
+  // literal would make each one compile its write stage again
+  private def stampedChanges(rows: DataFrame, version: Long): DataFrame = {
+    val present = rows.columns.toSet
+    val tombstone = col("_deleted")
+    rows.select(columns.toIndexedSeq.map { c =>
+      val v =
+        if (!present.contains(c.name)) lit(null)
+        else if (keys.contains(c.name)) col(c.name)
+        else when(!tombstone, col(c.name))
+      v.cast(c.dataType).as(c.name)
+    } ++ Seq(call_function("graft_stamp", lit(version)).as("_version"),
+      tombstone): _*)
+  }
 
   private def metaFields: Seq[StructField] = Seq(
     StructField("_version", LongType, nullable = false),
@@ -470,20 +472,21 @@ final class GraftTable(
 
   /** The raw versioned log (all appends + tombstones), every generation
     * re-aliased to the current column names/types via the stable ids. */
-  def log: DataFrame = logOf(None)
+  def log: DataFrame = logOf(None)._1
 
   /** The current epoch's log, generation by generation. With a `bucket`,
     * a bucketed generation contributes only that `_bucket=` directory —
     * provably the only one holding the key, so a missing one is skipped.
     * A generation written before the PK became integral (e.g. MODIFY
     * varchar → int) has no `_bucket=` dirs at all and is read whole (the
-    * caller's key predicate still applies). */
-  private def logOf(bucket: Option[Int]): DataFrame = {
+    * caller's key predicate still applies). The flag says whether every
+    * generation read was narrowed to the one bucket directory. */
+  private def logOf(bucket: Option[Int]): (DataFrame, Boolean) = {
     val e = currentEpoch
     val parts = gens.flatMap { g =>
       val dir = genDataPath(e, g.n)
-      val p = bucket.filter(_ => isBucketed(e, g.n))
-        .fold(dir)(b => s"$dir/_bucket=$b")
+      val narrowed = bucket.filter(_ => isBucketed(e, g.n))
+      val p = narrowed.fold(dir)(b => s"$dir/_bucket=$b")
       if (!fs.exists(new Path(p))) None
       else {
         val genStruct = StructType((g.cols.map(_.toStructField) ++ metaFields).toIndexedSeq)
@@ -495,10 +498,11 @@ final class GraftTable(
             case None => lit(null).cast(c.dataType).as(c.name)
           }
         } ++ metaFields.map(f => col(f.name))
-        Some(raw.select(sel.toIndexedSeq: _*))
+        Some((raw.select(sel.toIndexedSeq: _*), narrowed.isDefined))
       }
     }
-    if (parts.isEmpty) emptyLog else parts.reduce(_ unionByName _)
+    (if (parts.isEmpty) emptyLog else parts.map(_._1).reduce(_ unionByName _),
+      bucket.isDefined && parts.forall(_._2))
   }
 
   /** Whether a generation's data dir has `_bucket=` subdirs, memoized:
@@ -546,12 +550,25 @@ final class GraftTable(
 
   /** Point lookup through the FINAL view with partition pruning: only
     * the key's `_bucket=` directory is scanned, under the dedup aggregate
-    * (at 100 TB: one partition, not the table). */
+    * (at 100 TB: one partition, not the table), and the key is pushed to
+    * parquet row-group stats inside it.
+    *
+    * When every generation read is narrowed to that one directory, all
+    * of the key's rows sit in it, so the collapse runs key-locally: a
+    * narrow `coalesce(1)` gives the aggregate a single partition, which
+    * satisfies its clustering on the PK without an Exchange, and the
+    * lookup is one Spark job. A string or composite PK, or a generation
+    * written before the PK became integral (read whole), keeps the
+    * parallel plan: there `coalesce(1)` would put a table scan in one
+    * task. The key reaches generated code as a reference, not inlined
+    * (functions/StampPushedKeys), so a new key compiles nothing. */
   def lookup(keyValue: Any): DataFrame = {
     // recompute the file-side bucket from the literal
     val bucket = bucketKey.map(_ =>
       math.floorDiv(keyValue.toString.toLong, BucketWidth).toInt)
-    collapse(logOf(bucket).filter(col(keys.head) === lit(keyValue)))
+    val (bucketLog, keyLocal) = logOf(bucket)
+    val rows = bucketLog.filter(col(keys.head) === lit(keyValue))
+    collapse(if (keyLocal) rows.coalesce(1) else rows)
   }
 
   /** One metadata-only recursive walk over the current epoch's parquet

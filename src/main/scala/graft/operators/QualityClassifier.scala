@@ -103,7 +103,6 @@ object QualityClassifier {
         // clamp the logit so exp never overflows once steps get large
         val z = least(greatest(z0, lit(-30.0)), lit(30.0))
         val p = lit(1.0) / (lit(1.0) + exp(-z))
-        val s = p * (lit(1.0) - p)
         // Per-row gradient/Hessian contributions are rounded to a fixed
         // decimal granularity and summed as DECIMAL: decimal addition is
         // exact integer arithmetic, so the totals — and therefore the
@@ -131,17 +130,27 @@ object QualityClassifier {
         // anyway.
         val bound = 1e16 // decimal(28,12)'s integer-digit capacity
         val gradTerms = (0 until d).map(j =>
-          (col("y") - p) * col(s"x$j"))
+          (col("y") - col("p")) * col(s"x$j"))
         val hessTerms = for { j <- 0 until d; k <- j until d } yield
-          s * col(s"x$j") * col(s"x$k")
-        val terms = gradTerms ++ hessTerms
+          col("s") * col(s"x$j") * col(s"x$k")
+        // p, s and each term are projected once per row, then referenced:
+        // inlined, the logit would be repeated in every term and every
+        // term three times below, and the plan (and each task binary)
+        // grows with d² copies of it. The per-row double operations are
+        // the same either way, so the fit is too.
+        val termRows = fdf
+          .select(col("*"), p.as("p"))
+          .select(col("*"), (col("p") * (lit(1.0) - col("p"))).as("s"))
+          .select((gradTerms ++ hessTerms).zipWithIndex.map { case (c, i) =>
+            c.as(s"t_$i") }: _*)
+        val terms = termRows.columns.toSeq.map(col)
         val dec = (c: Column) =>
           sum(when(abs(c) < bound, c.cast("decimal(28,12)")))
         val aggs = terms.zipWithIndex.map { case (c, i) =>
           dec(c).as(s"a_$i")
         } :+ sum(when(greatest(terms.map(abs): _*) >= bound, 1L)
           .otherwise(0L)).as("n_overflow")
-        val row = fdf.agg(aggs.head, aggs.tail: _*).head()
+        val row = termRows.agg(aggs.head, aggs.tail: _*).head()
         if (row.getLong(aggs.size - 1) > 0L)
           throw new IllegalStateException(
             s"IRLS contributions overflowed decimal(28,12) on " +

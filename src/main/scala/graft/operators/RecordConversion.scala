@@ -122,10 +122,12 @@ object RecordConversion {
     * absent from `df` (e.g. after ADD COLUMN, reading old files) are
     * filled with NULL / the type default. Extra columns (after DROP) are
     * projected away — the reference re-aligns positionally
-    * (converter.py:560-573); we align by name.
+    * (converter.py:560-573); we align by name. Columns named in `keep`
+    * are carried through unconverted, after the schema's.
     */
   def convert(df: DataFrame, schema: TableSchema,
-              mysqlTimezone: String = "UTC"): DataFrame = {
+              mysqlTimezone: String = "UTC",
+              keep: Seq[String] = Nil): DataFrame = {
     val wireTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
     val cols = schema.fields.map { f =>
       val target = MySqlType.toSpark(f.tpe)
@@ -141,7 +143,7 @@ object RecordConversion {
       withDefault.cast(target).as(f.name,
         MySqlType.metadata(f.tpe, f.sourceType))
     }
-    df.select(cols: _*)
+    df.select(cols ++ keep.map(col): _*)
   }
 
   /** X3 — charset decode: text bytes off the wire decode with the

@@ -7,7 +7,9 @@ import graft.sources.EventSpool.{eventJson, writeFile, OpAdd, OpRemove}
 import graft.streaming.CdcPipeline
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Steady-state graft compiles nothing: work that repeats — an analyst
   * session, a restarted stream, the next micro-batch — reuses the classes
@@ -85,6 +87,25 @@ class CodegenReuseSpec extends SparkSpec {
     val (second, n) = counted(stream())
     assert(n === 0L, "the second stream recompiled generated classes")
     assert(second === first)
+  }
+
+  test("point lookups over new keys compile nothing after the first") {
+    import spark.implicits._
+    val t = graft.operators.GraftTable(spark, tmpDir("graft-lookup-cg"),
+      Seq("id"), StructType(Seq(StructField("id", LongType),
+        StructField("v", StringType))))
+    t.append((0L until 40L).map(k => (k, s"a$k")).toDF("id", "v"), 1)
+    t.append((0L until 40L by 3).map(k => (k, s"b$k")).toDF("id", "v"), 2)
+    t.delete((0L until 40L by 5).map(Tuple1(_)).toDF("id"), 3)
+    // live, updated, deleted (15, 35) and absent (77) keys
+    val keys = Seq(7L, 12L, 15L, 21L, 35L, 77L)
+    val first = t.lookup(keys.head).collect().toSeq
+    val (rest, n) = counted(keys.tail.map(k => t.lookup(k).collect().toSeq))
+    assert(n === 0L, "a lookup over a new key recompiled generated classes")
+    keys.zip(first +: rest).foreach { case (k, got) =>
+      assert(got === t.read.filter(col("id") === k).collect().toSeq,
+        s"lookup($k) differs from the FINAL view")
+    }
   }
 
   test("same-shaped micro-batches reuse the write stage; versions unchanged") {

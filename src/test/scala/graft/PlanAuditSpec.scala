@@ -663,13 +663,24 @@ class PlanAuditSpec extends SparkSpec {
       Seq("id"), StructType(Seq(StructField("id", LongType),
         StructField("v", StringType))))
     t.append(Seq((1L, "a"), (9000000L, "far")).toDF("id", "v"), 1)
-    val ns = nodes(t.lookup(9000000L))
+    val (df, jobs) = jobsOf {
+      val df = t.lookup(9000000L)
+      assert(df.collect().map(_.getString(1)).toSeq === Seq("far"))
+      df
+    }
+    val ns = flatten(df.queryExecution.executedPlan)
     val scan = ns.collect { case s: FileSourceScanExec => s }.head
     assert(scan.relation.location.rootPaths.forall(
       _.toString.contains("_bucket=2")),
       "lookup scan lists more than the key's bucket")
     assert(scan.metadata("PushedFilters").contains("EqualTo(id"),
       "pk predicate not pushed below the FINAL aggregate")
+    // every row of the key is in the one bucket dir: the collapse runs
+    // on one partition, with no shuffle, in one job
+    assert(!ns.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
+      "bucketed lookup plans an exchange: " + ns.map(_.nodeName).mkString(","))
+    assert(jobs === 1, s"bucketed lookup ran $jobs jobs")
   }
 
   test("bm25: inverted-index probes are broadcast hash joins") {

@@ -163,6 +163,48 @@ class GraftTableSpec extends SparkSpec {
       s"post-compact lookup leaked outside _bucket=2: ${files2.mkString(",")}")
   }
 
+  private object plans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Run `df`, then list the shuffles of its final adaptive plan. */
+  private def exchanges(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    plans.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+  }
+
+  test("key-local lookup equals FINAL per key over versions, tombstones and files") {
+    val t = mkTable()
+    // every write lands in _bucket=0, salted over several files
+    t.append((0L until 30L).map(k => (k, s"a$k")).toDF("id", "v"), version = 1)
+    t.append((0L until 30L by 2).map(k => (k, s"b$k")).toDF("id", "v"), version = 2)
+    t.delete((0L until 30L by 3).map(Tuple1(_)).toDF("id"), version = 3)
+    t.append((0L until 30L by 6).map(k => (k, s"c$k")).toDF("id", "v"), version = 4)
+    // same-version tie: the tombstone wins
+    t.delete(Seq(Tuple1(12L)).toDF("id"), version = 4)
+    val files = new java.io.File(t.root, "data/gen=0/_bucket=0").list()
+      .count(_.endsWith(".parquet"))
+    assert(files > 4, s"expected several files in the bucket, got $files")
+    assert(exchanges(t.lookup(6L)).isEmpty, "bucketed lookup plans an exchange")
+    (0L until 32L).foreach { k =>
+      assert(t.lookup(k).collect().toSet ===
+        t.read.filter(col("id") === k).collect().toSet, s"lookup($k)")
+    }
+    assertSame(t.lookup(12L), Seq())
+    assertSame(t.lookup(6L), Seq((6L, "c6")))
+  }
+
+  test("string-PK lookup keeps its parallel exchange plan") {
+    val t = GraftTable(spark, tmpDir("graft-strpk"), Seq("id"), StructType(Seq(
+      StructField("id", StringType), StructField("v", StringType))))
+    t.append(Seq(("k1", "a"), ("k2", "b")).toDF("id", "v"), version = 1)
+    t.append(Seq(("k1", "a2")).toDF("id", "v"), version = 2)
+    assert(t.lookup("k1").collect().map(_.getString(1)).toSeq === Seq("a2"))
+    assert(exchanges(t.lookup("k1")).nonEmpty,
+      "a non-bucketed lookup lost its exchange plan")
+  }
+
   test("truncate clears data, table stays usable") {
     val t = mkTable()
     t.append(Seq((1L, "a")).toDF("id", "v"), version = 1)
