@@ -80,14 +80,7 @@ final case class GraftConfig(
       * micro-batches (binlog_replicator.py:288-298), the newest files
       * always preserved as the restart replay window. 0 disables the
       * sweep entirely (keep everything — replay-from-zero deployments). */
-    spoolRetentionPeriod: Int = 43200,
-    /** Spool encoding (`binlog_replicator.format`, a graft extension —
-      * the reference's spool is a fixed custom binary): `json` lines
-      * (debuggable, the fixture format) or `parquet` (columnar +
-      * compressed, ~4× smaller — the at-scale choice). The stream reads
-      * whatever the producer writes; this key keeps the two in step
-      * from one place. */
-    spoolFormat: String = "json") {
+    spoolRetentionPeriod: Int = 43200) {
 
   // the reference validates both keys at load time (config.py:120-130);
   // retention additionally admits 0 = "never sweep"
@@ -95,8 +88,6 @@ final case class GraftConfig(
     "binlog_replicator records_per_file should be positive")
   require(spoolRetentionPeriod >= 0,
     "binlog_replicator binlog_retention_period should be non-negative")
-  require(spoolFormat == "json" || spoolFormat == "parquet",
-    s"binlog_replicator format should be json or parquet, got '$spoolFormat'")
 
   def postCommandsFor(db: String): Seq[String] =
     postInitialCommands.filter(p =>
@@ -199,8 +190,7 @@ object GraftConfig {
   val parsedSubKeys: Set[String] = Set(
     "mysql.host", "mysql.port", "mysql.user", "mysql.password",
     "binlog_replicator.data_dir", "binlog_replicator.records_per_file",
-    "binlog_replicator.binlog_retention_period",
-    "binlog_replicator.format") // graft extension: spool encoding
+    "binlog_replicator.binlog_retention_period")
 
   val ignoredSubKeys: Map[String, String] = Map(
     "mysql.charset" ->
@@ -328,9 +318,6 @@ object GraftConfig {
       spoolRetentionPeriod = Option(root.get("binlog_replicator"))
         .flatMap(b => Option(b.get("binlog_retention_period")))
         .map(_.asInt()).getOrElse(43200),
-      spoolFormat = Option(root.get("binlog_replicator"))
-        .flatMap(b => Option(b.get("format")))
-        .map(_.asText()).getOrElse("json"),
       initialReplicationThreads =
         Option(root.get("initial_replication_threads"))
           .map(_.asInt()).getOrElse(0),

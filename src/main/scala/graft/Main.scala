@@ -101,11 +101,7 @@ object Main {
       restartLock.synchronized { restarting = true }
       try {
         holder.get.stop()
-        // same spool format as the original start — defaulting to JSON
-        // here would make a routine ops restart read a parquet spool as
-        // JSON and silently stop applying events
-        holder.set(pipeline.start(spoolDir, checkpointDir,
-          spoolFormat = config.spoolFormat))
+        holder.set(pipeline.start(spoolDir, checkpointDir))
       } finally restartLock.synchronized {
         restarting = false
         restartLock.notifyAll()

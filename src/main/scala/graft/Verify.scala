@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Both cover the
+  * selected queries only (all of them unless SPARK_GRAFT_ONLY names a
+  * subset), so a selected query that fails is missing from the outputs
+  * but not from the oracles — the compare counts it as failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -13,9 +16,16 @@ object Verify {
     // Unset (the driver's invocation) → full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    def selected(name: String): Boolean = only.forall(_.contains(name))
+    def delete(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(delete))
+      f.delete()
+    }
+    SparkEntry.queries.filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
+      // a query that fails leaves no output, never an earlier run's
+      // output for the compare to pass
+      delete(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -34,7 +44,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -30,6 +30,15 @@ object ArchiveCodec {
   final case class GzipMember(name: Option[String], data: Array[Byte],
                               compressedLen: Int)
 
+  /** Raw DEFLATE at BEST_SPEED — the gzip member and ZIP entry body. */
+  private def rawDeflate(data: Array[Byte]): Array[Byte] =
+    deflate(data, java.util.zip.Deflater.BEST_SPEED, nowrap = true)
+
+  /** The low `n` bytes of `v`, little-endian. */
+  private def putLe(out: java.io.ByteArrayOutputStream, v: Long,
+                    n: Int): Unit =
+    (0 until n).foreach(i => out.write(((v >>> (8 * i)) & 0xff).toInt))
+
   /** RFC 1952 multi-member walk: per member the 10-byte header,
     * FEXTRA/FNAME/FCOMMENT/FHCRC in spec order, a raw-DEFLATE body,
     * and the CRC-32 + ISIZE trailer both verified against the
@@ -115,8 +124,7 @@ object ArchiveCodec {
     if (withComment) flg |= 0x10
     if (withHcrc) flg |= 0x02
     out.write(0x1f); out.write(0x8b); out.write(8); out.write(flg)
-    val mtime = 1700000000L + seed
-    (0 until 4).foreach(i => out.write(((mtime >>> (8 * i)) & 0xff).toInt))
+    putLe(out, 1700000000L + seed, 4) // MTIME
     out.write(0); out.write(255) // XFL, OS=unknown
     if (withExtra) {
       val extra = s"GR${seed % 100}".getBytes(US_ASCII)
@@ -133,25 +141,14 @@ object ArchiveCodec {
     if (withHcrc) {
       val crc = new java.util.zip.CRC32()
       crc.update(out.toByteArray)
-      out.write((crc.getValue & 0xff).toInt)
-      out.write(((crc.getValue >>> 8) & 0xff).toInt)
+      putLe(out, crc.getValue, 2)
     }
     // BEST_SPEED: the gate pins the round-trip, not the ratio, and the
     // fixture's deflate is the dominant cost at sf10
-    val def_ = new java.util.zip.Deflater(
-      java.util.zip.Deflater.BEST_SPEED, true)
-    def_.setInput(data); def_.finish()
-    val buf = new Array[Byte](8192)
-    while (!def_.finished()) {
-      val n = def_.deflate(buf)
-      out.write(buf, 0, n)
-    }
-    def_.end()
+    out.write(rawDeflate(data))
     val crc = new java.util.zip.CRC32(); crc.update(data)
-    (0 until 4).foreach(i =>
-      out.write(((crc.getValue >>> (8 * i)) & 0xff).toInt))
-    (0 until 4).foreach(i =>
-      out.write(((data.length.toLong >>> (8 * i)) & 0xff).toInt))
+    putLe(out, crc.getValue, 4)
+    putLe(out, data.length.toLong, 4)
     out.toByteArray
   }
 
@@ -407,31 +404,17 @@ object ArchiveCodec {
       Spec("doc.txt", 8, text.getBytes(UTF_8)),
       Spec("pad.bin", 0, pad))
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def w32(v: Long): Unit = (0 until 4).foreach(i =>
-      out.write(((v >>> (8 * i)) & 0xff).toInt))
+    def w16(v: Int): Unit = putLe(out, v, 2)
+    def w32(v: Long): Unit = putLe(out, v, 4)
     val dosTime = ((id % 24) << 11 | (id % 60) << 5 | (id % 30)).toInt
     val dosDate = (((20 + id % 20) << 9) | ((1 + id % 12) << 5) |
       (1 + id % 28)).toInt
     val central = new java.io.ByteArrayOutputStream()
-    def c16(v: Int): Unit = { central.write(v & 0xff)
-      central.write((v >>> 8) & 0xff) }
-    def c32(v: Long): Unit = (0 until 4).foreach(i =>
-      central.write(((v >>> (8 * i)) & 0xff).toInt))
+    def c16(v: Int): Unit = putLe(central, v, 2)
+    def c32(v: Long): Unit = putLe(central, v, 4)
     specs.foreach { sp =>
       val crc = new java.util.zip.CRC32(); crc.update(sp.data)
-      val comp: Array[Byte] =
-        if (sp.method == 0) sp.data
-        else {
-          val d = new java.util.zip.Deflater(
-            java.util.zip.Deflater.BEST_SPEED, true)
-          d.setInput(sp.data); d.finish()
-          val o = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) o.write(buf, 0, d.deflate(buf))
-          d.end()
-          o.toByteArray
-        }
+      val comp = if (sp.method == 0) sp.data else rawDeflate(sp.data)
       val localOff = out.size()
       val nb = sp.name.getBytes(UTF_8)
       out.write('P'); out.write('K'); out.write(3); out.write(4)

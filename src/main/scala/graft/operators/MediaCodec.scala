@@ -130,36 +130,51 @@ object MediaCodec {
     if (w > 0 && h > 0) Some((w, h)) else None
   }
 
-  /** RIFF/WAVE PCM: walk the chunk list for `fmt ` and `data` —
-    * chunks like `LIST`/`fact` legally sit between them and are
-    * skipped by size, not assumed absent (odd-sized chunks pad to an
-    * even boundary per the RIFF spec). Returns
-    * (channels, sampleRate, bitsPerSample, nSamples). */
-  def parseWav(b: Array[Byte]): Option[(Int, Int, Int, Long)] = {
+  /** The RIFF/WAVE chunks every WAV decoder reads, from one
+    * [[Bytes.riffWalk]] (chunks like `LIST` legally sit between them
+    * and skip by size; odd chunks pad to even): the first `fmt ` whose
+    * 16-byte core is present — plus its extension's samplesPerBlock
+    * when 20 bytes are, else −1 — the first `fact` frame count (−1
+    * when absent), and the first `data` chunk's offset and length,
+    * clamped to the bytes actually present. */
+  private final case class WavHeader(format: Int, channels: Int, rate: Int,
+      blockAlign: Int, bits: Int, samplesPerBlock: Int, factFrames: Long,
+      dataOff: Int, dataLen: Long)
+
+  private def wavHeader(b: Array[Byte]): Option[WavHeader] = {
     if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE")
       return None
-    // Long offsets + a strictly-positive advance: a crafted chunk size
-    // near 2^32 truncated to Int would otherwise stall the walk (size
-    // -8 → advance 0: infinite loop) or wrap `off` negative (index
-    // crash) — corrupt payloads must stay data, never a hung task
-    var off = 12L
-    var fmt: Option[(Int, Int, Int)] = None
-    var dataLen = -1L
-    while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0)) {
-      val i = off.toInt // safe: off < b.length <= Int.MaxValue
-      val id = tag(b, i)
-      val sz = le32(b, i + 4)
-      if (id == "fmt " && off + 8 + 16 <= b.length)
-        fmt = Some((le16(b, i + 10), le32(b, i + 12).toInt, le16(b, i + 22)))
-      else if (id == "data")
-        dataLen = math.min(sz, b.length - off - 8)
-      off += 8L + sz + (sz & 1L) // odd chunks pad one byte
+    var fmt = -1; var fact = -1L; var dataOff = -1; var dataLen = -1L
+    riffWalk(b, 12) { (id, body, size) =>
+      if (id == "fmt " && fmt < 0 && body + 16 <= b.length) fmt = body
+      else if (id == "fact" && fact < 0 && body + 4 <= b.length)
+        fact = le32(b, body)
+      else if (id == "data" && dataOff < 0) {
+        dataOff = body; dataLen = math.min(size, b.length - body)
+      }
+      true
     }
-    for {
-      (ch, rate, bits) <- fmt
-      if dataLen >= 0 && ch > 0 && bits > 0 && rate > 0
-    } yield (ch, rate, bits, dataLen / (ch.toLong * (bits / 8).max(1)))
+    if (fmt < 0 || dataOff < 0) None
+    else Some(WavHeader(le16(b, fmt), le16(b, fmt + 2),
+      le32(b, fmt + 4).toInt, le16(b, fmt + 12), le16(b, fmt + 14),
+      if (fmt + 20 <= b.length) le16(b, fmt + 18) else -1, fact, dataOff,
+      dataLen))
   }
+
+  /** The `fmt ` core of a RIFF/WAVE file; `ext` shorts follow it. */
+  private def wavFmt(format: Int, ch: Int, rate: Int, byteRate: Int,
+                     align: Int, bits: Int, ext: Int*): Array[Byte] =
+    bytes(16 + 2 * ext.size, java.nio.ByteOrder.LITTLE_ENDIAN) { f =>
+      f.putShort(format.toShort).putShort(ch.toShort).putInt(rate)
+        .putInt(byteRate).putShort(align.toShort).putShort(bits.toShort)
+      ext.foreach(e => f.putShort(e.toShort))
+    }
+
+  /** RIFF/WAVE: (channels, sampleRate, bitsPerSample, nSamples). */
+  def parseWav(b: Array[Byte]): Option[(Int, Int, Int, Long)] =
+    wavHeader(b).filter(h => h.channels > 0 && h.bits > 0 && h.rate > 0)
+      .map(h => (h.channels, h.rate, h.bits,
+        h.dataLen / (h.channels.toLong * (h.bits / 8).max(1))))
 
   /** Per-image pixel statistics from a REAL decode — means are exact
     * integer channel sums divided once, so the SQL twin reproduces them
@@ -303,57 +318,52 @@ object MediaCodec {
     * channel-interleaved, after the chunk walk [[parseWav]] documents).
     * Returns None for anything that is not well-formed 16-bit PCM —
     * compressed/float/8-bit variants stay behind the decoder seam. */
-  def decodeWavSamples(id: Long, b: Array[Byte]): Option[WavSamples] = {
-    if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE")
-      return None
-    var off = 12L
-    var fmt: Option[(Int, Int, Int, Int)] = None // audioFormat, ch, rate, bits
-    var dataOff = -1L
-    var dataLen = -1L
-    while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0)) {
-      val i = off.toInt
-      val id4 = tag(b, i)
-      val sz = le32(b, i + 4)
-      if (id4 == "fmt " && off + 8 + 16 <= b.length)
-        fmt = Some((le16(b, i + 8), le16(b, i + 10), le32(b, i + 12).toInt,
-          le16(b, i + 22)))
-      else if (id4 == "data") {
-        dataOff = off + 8
-        dataLen = math.min(sz, b.length - off - 8)
+  def decodeWavSamples(id: Long, b: Array[Byte]): Option[WavSamples] =
+    pcm16(b).map(h => frameStats(id, h, 2)(p => le16(b, p).toShort.toInt))
+
+  /** A well-formed 16-bit PCM header. */
+  private def pcm16(b: Array[Byte]): Option[WavHeader] =
+    wavHeader(b).filter(h => h.format == 1 && h.bits == 16 &&
+      h.channels > 0 && h.rate > 0)
+
+  /** The loudness statistics of [[WavSamples]], accumulated exactly. */
+  private final class Loudness {
+    private var sum = 0L; private var sumAbs = 0L
+    private var peak = 0; private var first = 0L
+    def add(v: Int, frame: Long): Unit = {
+      sum += v
+      val a = math.abs(v)
+      sumAbs += a
+      if (a > peak) peak = a
+      if (frame == 0L) first += v
+    }
+    def row(id: Long, ch: Int, rate: Int, nFrames: Long): WavSamples = {
+      val n = nFrames * ch
+      WavSamples(id, ch, rate, nFrames,
+        if (n > 0) sum.toDouble / n else 0.0,
+        if (n > 0) sumAbs.toDouble / n else 0.0,
+        peak,
+        if (nFrames > 0) first.toDouble / ch else 0.0)
+    }
+  }
+
+  /** Stats over every whole frame of `width`-byte interleaved samples,
+    * `sample(offset)` decoding one. */
+  private def frameStats(id: Long, h: WavHeader, width: Int)(
+      sample: Int => Int): WavSamples = {
+    val ch = h.channels
+    val nFrames = h.dataLen / (ch * width)
+    val acc = new Loudness
+    var f = 0L
+    while (f < nFrames) {
+      var c = 0
+      while (c < ch) {
+        acc.add(sample((h.dataOff + (f * ch + c) * width).toInt), f)
+        c += 1
       }
-      off += 8L + sz + (sz & 1L)
+      f += 1
     }
-    fmt match {
-      case Some((1, ch, rate, 16))
-          if ch > 0 && rate > 0 && dataOff >= 0 && dataLen >= 0 =>
-        val frameBytes = ch * 2
-        val nFrames = dataLen / frameBytes
-        var sum = 0L; var sumAbs = 0L; var peak = 0; var first = 0L
-        var f = 0L
-        while (f < nFrames) {
-          val base = (dataOff + f * frameBytes).toInt
-          var c = 0
-          while (c < ch) {
-            val p = base + 2 * c
-            // little-endian signed 16-bit
-            val v = le16(b, p).toShort.toInt
-            sum += v
-            val a = math.abs(v)
-            sumAbs += a
-            if (a > peak) peak = a
-            if (f == 0L) first += v
-            c += 1
-          }
-          f += 1
-        }
-        val n = nFrames * ch
-        Some(WavSamples(id, ch, rate, nFrames,
-          if (n > 0) sum.toDouble / n else 0.0,
-          if (n > 0) sumAbs.toDouble / n else 0.0,
-          peak,
-          if (nFrames > 0) first.toDouble / ch else 0.0))
-      case _ => None
-    }
+    acc.row(id, ch, h.rate, nFrames)
   }
 
   // ----------------------------------------------------- µ-law audio
@@ -387,85 +397,29 @@ object MediaCodec {
     * G.711 standard: chunk walk, then per-byte expansion to linear
     * int16 and the same loudness statistics as [[decodeWavSamples]].
     * Non-µ-law streams return None. */
-  def decodeWavUlaw(id: Long, b: Array[Byte]): Option[WavSamples] = {
-    if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE")
-      return None
-    var off = 12L
-    var fmt: Option[(Int, Int, Int, Int)] = None
-    var dataOff = -1L
-    var dataLen = -1L
-    while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0)) {
-      val i = off.toInt
-      val id4 = tag(b, i)
-      val sz = le32(b, i + 4)
-      if (id4 == "fmt " && off + 8 + 16 <= b.length)
-        fmt = Some((le16(b, i + 8), le16(b, i + 10), le32(b, i + 12).toInt,
-          le16(b, i + 22)))
-      else if (id4 == "data") {
-        dataOff = off + 8
-        dataLen = math.min(sz, b.length - off - 8)
-      }
-      off += 8L + sz + (sz & 1L)
-    }
-    fmt match {
-      case Some((7, ch, rate, 8))
-          if ch > 0 && rate > 0 && dataOff >= 0 && dataLen >= 0 =>
-        val nFrames = dataLen / ch
-        var sum = 0L; var sumAbs = 0L; var peak = 0; var first = 0L
-        var f = 0L
-        while (f < nFrames) {
-          var c = 0
-          while (c < ch) {
-            val v = ulawDecodeSample(b((dataOff + f * ch + c).toInt) & 0xff)
-            sum += v
-            val a = math.abs(v)
-            sumAbs += a
-            if (a > peak) peak = a
-            if (f == 0L) first += v
-            c += 1
-          }
-          f += 1
-        }
-        val n = nFrames * ch
-        Some(WavSamples(id, ch, rate, nFrames,
-          if (n > 0) sum.toDouble / n else 0.0,
-          if (n > 0) sumAbs.toDouble / n else 0.0,
-          peak,
-          if (nFrames > 0) first.toDouble / ch else 0.0))
-      case _ => None
-    }
-  }
+  def decodeWavUlaw(id: Long, b: Array[Byte]): Option[WavSamples] =
+    wavHeader(b).filter(h => h.format == 7 && h.bits == 8 &&
+      h.channels > 0 && h.rate > 0)
+      .map(h => frameStats(id, h, 1)(p => ulawDecodeSample(b(p) & 0xff)))
 
   /** A µ-law WAV with a deterministic companded byte pattern
     * b(f, c) = (5f + 11c + seed) mod 256 — every statistic follows
-    * from the G.711 expansion of that arithmetic. */
+    * from the G.711 expansion of that arithmetic. Its odd-length data
+    * chunks carry no pad byte (the fixture's frozen layout). */
   def buildWavUlawPattern(channels: Int, sampleRate: Int, nSamples: Long,
                           seed: Long): Array[Byte] = {
     require(channels > 0 && sampleRate > 0 && nSamples >= 0)
-    val dataLen = (nSamples * channels).toInt
-    val total = 44 + dataLen
-    val b = java.nio.ByteBuffer.allocate(total)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def ascii(s: String): Unit =
-      b.put(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    ascii("RIFF"); b.putInt(total - 8); ascii("WAVE")
-    ascii("fmt "); b.putInt(16)
-    b.putShort(7) // WAVE_FORMAT_MULAW
-    b.putShort(channels.toShort).putInt(sampleRate)
-    b.putInt(sampleRate * channels) // byte rate (1 byte/sample)
-    b.putShort(channels.toShort) // block align
-    b.putShort(8) // bits per sample
-    ascii("data"); b.putInt(dataLen)
-    var f = 0L
-    while (f < nSamples) {
-      var c = 0
-      while (c < channels) {
-        b.put(((5 * f + 11 * c + seed) % 256).toByte)
-        c += 1
-      }
-      f += 1
+    val data = new Array[Byte]((nSamples * channels).toInt)
+    var i = 0
+    while (i < data.length) { // sample i = frame i / ch, channel i % ch
+      data(i) = ((5L * (i / channels) + 11 * (i % channels) + seed) % 256)
+        .toByte
+      i += 1
     }
-    b.array()
+    riff("WAVE", Seq(
+      "fmt " -> wavFmt(7, channels, sampleRate, sampleRate * channels,
+        channels, 8), // WAVE_FORMAT_MULAW, 1 byte per sample
+      "data" -> data), pad = false)
   }
 
   // ------------------------------------------------ IMA-ADPCM audio
@@ -544,22 +498,8 @@ object MediaCodec {
     val dataLen = nBlocks * blockAlign
     def target(f: Int, c: Int): Int =
       ((7L * f + 13L * c + seed) % 2003L - 1001L).toInt
-    val total = 12 + (8 + 20) + (8 + 4) + 8 + dataLen
-    val b = java.nio.ByteBuffer.allocate(total)
+    val b = java.nio.ByteBuffer.allocate(dataLen)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def ascii(s: String): Unit =
-      b.put(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    ascii("RIFF"); b.putInt(total - 8); ascii("WAVE")
-    ascii("fmt "); b.putInt(20)
-    b.putShort(0x11) // WAVE_FORMAT_IMA_ADPCM
-    b.putShort(ch.toShort).putInt(sampleRate)
-    b.putInt(sampleRate * blockAlign / fpb) // nominal byte rate
-    b.putShort(blockAlign.toShort)
-    b.putShort(4) // bits per (compressed) sample
-    b.putShort(2) // cbSize
-    b.putShort(fpb.toShort) // samplesPerBlock
-    ascii("fact"); b.putInt(4); b.putInt(nFrames)
-    ascii("data"); b.putInt(dataLen)
     var g = 0
     while (g < nBlocks) {
       val f0 = g * fpb
@@ -603,7 +543,13 @@ object MediaCodec {
       }
       g += 1
     }
-    b.array()
+    riff("WAVE", Seq(
+      // WAVE_FORMAT_IMA_ADPCM at its nominal byte rate, 4 bits per
+      // compressed sample; extension: cbSize 2, samplesPerBlock
+      "fmt " -> wavFmt(0x11, ch, sampleRate, sampleRate * blockAlign / fpb,
+        blockAlign, 4, 2, fpb),
+      "fact" -> bytes(4, java.nio.ByteOrder.LITTLE_ENDIAN)(_.putInt(nFrames)),
+      "data" -> b.array()))
   }
 
   /** Full sample decode of a WAVE_FORMAT_IMA_ADPCM RIFF/WAVE — the
@@ -615,47 +561,16 @@ object MediaCodec {
     * loudness statistics as [[decodeWavSamples]]. Returns None for
     * anything that is not well-formed IMA ADPCM. */
   def decodeWavAdpcm(id: Long, b: Array[Byte]): Option[WavSamples] = try {
-    if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE")
-      return None
-    var off = 12L
-    var fmt: Option[(Int, Int, Int, Int, Int)] = None // ch, rate, align, bits, fpb
-    var factFrames = -1L
-    var dataOff = -1L
-    var dataLen = -1L
-    while (off + 8 <= b.length && (fmt.isEmpty || dataLen < 0 ||
-        factFrames < 0)) {
-      val i = off.toInt
-      val id4 = tag(b, i)
-      val sz = le32(b, i + 4)
-      if (id4 == "fmt " && off + 8 + 20 <= b.length &&
-          le16(b, i + 8) == 0x11)
-        fmt = Some((le16(b, i + 10), le32(b, i + 12).toInt, le16(b, i + 20),
-          le16(b, i + 22), le16(b, i + 26)))
-      else if (id4 == "fact" && off + 12 <= b.length)
-        factFrames = le32(b, i + 8)
-      else if (id4 == "data") {
-        dataOff = off + 8
-        dataLen = math.min(sz, b.length - off - 8)
-      }
-      off += 8L + sz + (sz & 1L)
-    }
-    fmt match {
-      case Some((ch, rate, align, 4, fpb))
+    wavHeader(b) match {
+      case Some(WavHeader(0x11, ch, rate, align, 4, fpb, factFrames,
+          dataOff, dataLen))
           if ch > 0 && ch <= 2 && rate > 0 && align > 4 * ch &&
-            fpb == imaFramesPerBlock(align, ch) && factFrames >= 0 &&
-            dataOff >= 0 && dataLen >= 0 =>
+            fpb == imaFramesPerBlock(align, ch) && factFrames >= 0 =>
         val nBlocks = (dataLen / align).toInt
         val nFrames = math.min(factFrames, nBlocks.toLong * fpb)
-        var sum = 0L; var sumAbs = 0L; var peak = 0; var first = 0L
+        val acc = new Loudness
         val pred = new Array[Int](ch)
         val index = new Array[Int](ch)
-        def account(v: Int, f: Long, c: Int): Unit = {
-          sum += v
-          val a = math.abs(v)
-          sumAbs += a
-          if (a > peak) peak = a
-          if (f == 0L) first += v
-        }
         var g = 0
         while (g < nBlocks && g.toLong * fpb < nFrames) {
           val blockOff = (dataOff + g.toLong * align).toInt
@@ -664,7 +579,7 @@ object MediaCodec {
             val ho = blockOff + 4 * c
             pred(c) = le16(b, ho).toShort.toInt
             index(c) = math.max(0, math.min(88, b(ho + 2) & 0xff))
-            account(pred(c), g.toLong * fpb, c)
+            acc.add(pred(c), g.toLong * fpb)
             c += 1
           }
           val frames = math.min(fpb.toLong, nFrames - g.toLong * fpb) - 1
@@ -681,19 +596,14 @@ object MediaCodec {
               val nib = ((b(byteOff) & 0xff) >> (4 * (within % 2))) & 0xf
               val (p1, i1) = imaStep(pred(c), index(c), nib)
               pred(c) = p1; index(c) = i1
-              account(p1, g.toLong * fpb + 1 + f, c)
+              acc.add(p1, g.toLong * fpb + 1 + f)
               c += 1
             }
             f += 1
           }
           g += 1
         }
-        val n = nFrames * ch
-        Some(WavSamples(id, ch, rate, nFrames,
-          if (n > 0) sum.toDouble / n else 0.0,
-          if (n > 0) sumAbs.toDouble / n else 0.0,
-          peak,
-          if (nFrames > 0) first.toDouble / ch else 0.0))
+        Some(acc.row(id, ch, rate, nFrames))
       case _ => None
     }
   } catch { case scala.util.control.NonFatal(_) => None }
@@ -711,14 +621,14 @@ object MediaCodec {
                            videoCodec: String, audioCodec: String,
                            channels: Int, sampleRate: Int, mdatBytes: Long)
 
-  /** Walk an ISO-BMFF box sequence: `ftyp` major brand, `mvhd`
-    * timescale/duration (v0 and v1), per-`trak` handler + `tkhd`
-    * 16.16 dimensions + `stsd` sample-entry fourcc/fields, `mdat`
+  /** Walk an ISO-BMFF box sequence ([[Bytes.boxWalk]]): `ftyp` major
+    * brand, `mvhd` timescale/duration (v0 and v1), per-`trak` handler +
+    * `tkhd` 16.16 dimensions + `stsd` sample-entry fourcc/fields, `mdat`
     * payload bytes (32-bit, 64-bit `largesize`, and size-0 to-EOF
-    * forms). Unknown boxes (`free`, `skip`, `uuid`, vendor boxes)
-    * skip by size; container boxes (`moov`/`trak`/`mdia`/`minf`/
-    * `stbl`) recurse. A malformed size that fails to advance aborts
-    * the walk — corrupt payloads parse to None, never a hung task. */
+    * forms). Unknown boxes (`free`, `skip`, `uuid`, vendor boxes) skip
+    * by size; container boxes (`moov`/`trak`/`mdia`/`minf`/`stbl`)
+    * recurse. A malformed size aborts the walk — corrupt payloads parse
+    * to None, never a hung task. */
   def parseMp4Meta(id: Long, b: Array[Byte]): Option[Mp4Meta] = try {
     if (b.length < 16 || tag(b, 4) != "ftyp") return None
     var brand = ""
@@ -740,28 +650,16 @@ object MediaCodec {
     var trakCh = 0
     var trakSr = 0
 
-    def walk(from: Long, to: Long, depth: Int): Boolean = {
-      if (depth > 8) return false // no legal file nests this deep
-      var off = from
-      while (off + 8 <= to) {
-        val i = off.toInt
-        val size32 = be32(b, i)
-        val fourcc = tag(b, i + 4)
-        val (boxSize, hdr) =
-          if (size32 == 1L && off + 16 <= to) (be64(b, i + 8), 16)
-          else if (size32 == 0L) (to - off, 8) // last box: to EOF
-          else (size32, 8)
-        if (boxSize < hdr || off + boxSize > to) return false
-        val body = off + hdr
-        val bodyLen = boxSize - hdr
+    def walk(from: Long, to: Long, depth: Int): Boolean =
+      depth <= 8 && boxWalk(b, from, to) { (fourcc, body, end) =>
+        val i = body.toInt
+        val bodyLen = end - body
         fourcc match {
-          case "ftyp" if bodyLen >= 4 => brand = tag(b, body.toInt)
-          case "moov" | "mdia" | "minf" | "stbl" =>
-            if (!walk(body, off + boxSize, depth + 1)) return false
+          case "moov" | "mdia" | "minf" | "stbl" => walk(body, end, depth + 1)
           case "trak" =>
             trakHandler = ""; trakW = 0; trakH = 0; trakCodec = ""
             trakCh = 0; trakSr = 0
-            if (!walk(body, off + boxSize, depth + 1)) return false
+            val ok = walk(body, end, depth + 1)
             nTracks += 1
             if (trakHandler == "vide") {
               width = trakW; height = trakH; videoCodec = trakCodec
@@ -769,54 +667,144 @@ object MediaCodec {
               audioCodec = trakCodec; channels = trakCh
               sampleRate = trakSr
             }
-          case "mvhd" if bodyLen >= 4 =>
-            val v = b(body.toInt) & 0xff
-            if (v == 1 && bodyLen >= 32) {
-              timescale = be32(b, body.toInt + 20)
-              duration = be64(b, body.toInt + 24)
-            } else if (v == 0 && bodyLen >= 20) {
-              timescale = be32(b, body.toInt + 12)
-              duration = be32(b, body.toInt + 16)
+            ok
+          case _ =>
+            fourcc match {
+              case "ftyp" if bodyLen >= 4 => brand = tag(b, i)
+              case "mvhd" if bodyLen >= 4 =>
+                val v = b(i) & 0xff
+                if (v == 1 && bodyLen >= 32) {
+                  timescale = be32(b, i + 20)
+                  duration = be64(b, i + 24)
+                } else if (v == 0 && bodyLen >= 20) {
+                  timescale = be32(b, i + 12)
+                  duration = be32(b, i + 16)
+                }
+              case "tkhd" if bodyLen >= 84 =>
+                // width/height are the LAST 8 body bytes in v0 and v1
+                val wOff = (end - 8).toInt
+                if ((b(i) & 0xff) <= 1) {
+                  trakW = (be32(b, wOff) >>> 16).toInt
+                  trakH = (be32(b, wOff + 4) >>> 16).toInt
+                }
+              case "hdlr" if bodyLen >= 12 => trakHandler = tag(b, i + 8)
+              case "stsd" if bodyLen >= 16 =>
+                // fullbox(4) + entry_count(4), then the first sample entry
+                val e = i + 8
+                val entLen = be32(b, e)
+                if (entLen >= 16 && e + entLen <= end) {
+                  trakCodec = tag(b, e + 4)
+                  if (trakHandler == "vide" && entLen >= 36) {
+                    // sample-entry coded dims at +32/+34 (after 6 reserved
+                    // + 2 dref + 16 predefined/reserved bytes)
+                    trakW = be16(b, e + 32)
+                    trakH = be16(b, e + 34)
+                  } else if (trakHandler == "soun" && entLen >= 36) {
+                    trakCh = be16(b, e + 24)
+                    trakSr = (be32(b, e + 32) >>> 16).toInt
+                  }
+                }
+              case "mdat" => mdatBytes += bodyLen
+              case _ => () // free/skip/uuid/vmhd/smhd/dinf/stts/…: skip
             }
-          case "tkhd" if bodyLen >= 84 =>
-            val v = b(body.toInt) & 0xff
-            // width/height are the LAST 8 body bytes in v0 and v1
-            val wOff = (body + bodyLen - 8).toInt
-            if (v <= 1) {
-              trakW = (be32(b, wOff) >>> 16).toInt
-              trakH = (be32(b, wOff + 4) >>> 16).toInt
-            }
-          case "hdlr" if bodyLen >= 12 =>
-            trakHandler = tag(b, body.toInt + 8)
-          case "stsd" if bodyLen >= 16 =>
-            // fullbox(4) + entry_count(4), then the first sample entry
-            val e = body.toInt + 8
-            val entLen = be32(b, e)
-            if (entLen >= 16 && e + entLen <= off + boxSize) {
-              trakCodec = tag(b, e + 4)
-              if (trakHandler == "vide" && entLen >= 36) {
-                // sample-entry coded dims at +32/+34 (after 6 reserved
-                // + 2 dref + 16 predefined/reserved bytes)
-                trakW = be16(b, e + 32)
-                trakH = be16(b, e + 34)
-              } else if (trakHandler == "soun" && entLen >= 36) {
-                trakCh = be16(b, e + 24)
-                trakSr = (be32(b, e + 32) >>> 16).toInt
-              }
-            }
-          case "mdat" => mdatBytes += bodyLen
-          case _ => () // free/skip/uuid/vmhd/smhd/dinf/stts/…: skip
+            true
         }
-        off += boxSize
       }
-      true
-    }
     if (!walk(0L, b.length.toLong, 0) || brand.isEmpty || timescale <= 0)
       None
     else Some(Mp4Meta(id, brand, nTracks,
       duration * 1000L / timescale, width, height, videoCodec,
       audioCodec, channels, sampleRate, mdatBytes))
   } catch { case scala.util.control.NonFatal(_) => None }
+
+  // The box builders both MP4 fixtures share (ISO/IEC 14496-12 layouts).
+
+  private val UnityMatrix = bytes(36) { m =>
+    m.putInt(0x10000).putInt(0).putInt(0)
+    m.putInt(0).putInt(0x10000).putInt(0)
+    m.putInt(0).putInt(0).putInt(0x40000000)
+  }
+
+  private def ftyp(brand: String): Array[Byte] =
+    box("ftyp", ascii(brand), bytes(4)(_.putInt(0x200)), ascii("isom"),
+      ascii("mp41"))
+
+  private def mvhd(timescale: Int, duration: Long, nextTrack: Int,
+                   v1: Boolean = false): Array[Byte] =
+    box("mvhd", bytes(if (v1) 112 else 100) { m =>
+      if (v1) m.putInt(0x01000000).putLong(0L).putLong(0L) // 64-bit times
+      else m.putInt(0).putInt(0).putInt(0) // version, creation, modified
+      m.putInt(timescale)
+      if (v1) m.putLong(duration) else m.putInt(duration.toInt)
+      m.putInt(0x10000).putShort(0x100.toShort).putShort(0) // rate, volume
+      m.putLong(0L) // reserved
+      m.put(UnityMatrix)
+      m.put(new Array[Byte](24)) // predefined
+      m.putInt(nextTrack)
+    })
+
+  private def tkhd(trackId: Int, duration: Int, volume: Int, w: Int,
+                   h: Int): Array[Byte] =
+    box("tkhd", bytes(84) { t =>
+      t.putInt(7) // version 0, flags: enabled | in-movie | in-preview
+      t.putInt(0).putInt(0)
+      t.putInt(trackId).putInt(0)
+      t.putInt(duration) // track duration, movie timescale
+      t.putLong(0L)
+      t.putShort(0).putShort(0) // layer, alternate group
+      t.putShort(volume.toShort).putShort(0)
+      t.put(UnityMatrix)
+      t.putInt(w << 16).putInt(h << 16) // 16.16 fixed
+    })
+
+  private def mdhd(ts: Long, dur: Long): Array[Byte] =
+    box("mdhd", bytes(24) { m =>
+      m.putInt(0)
+      m.putInt(0).putInt(0)
+      m.putInt(ts.toInt).putInt(dur.toInt)
+      m.putShort(0x55c4.toShort).putShort(0) // 'und', predefined
+    })
+
+  private def hdlr(kind: String, name: String): Array[Byte] =
+    box("hdlr", bytes(24 + name.length + 1) { h =>
+      h.putInt(0)
+      h.putInt(0) // predefined
+      h.put(ascii(kind))
+      h.put(new Array[Byte](12))
+      h.put(ascii(name))
+      h.put(0.toByte)
+    })
+
+  private val Dinf = box("dinf", box("dref",
+    bytes(8)(d => d.putInt(0).putInt(1)),
+    bytes(12)(_.putInt(12).put(ascii("url ")).putInt(1)))) // self-contained
+
+  /** The one sample description of an stbl. */
+  private def stsd(entry: Array[Byte]): Array[Byte] =
+    box("stsd", bytes(8)(s => s.putInt(0).putInt(1)), entry)
+
+  /** A video `trak` (track 1): tkhd, mdhd, `vide` handler, vmhd, dinf,
+    * and an stbl of the visual sample entry followed by `tables`. */
+  private def videoTrak(codec: String, w: Int, h: Int, movieDur: Int,
+                        mediaTs: Long, mediaDur: Long,
+                        tables: Array[Byte]*): Array[Byte] = {
+    val entry = bytes(86) { e =>
+      e.putInt(86)
+      e.put(ascii(codec))
+      e.put(new Array[Byte](6)).putShort(1) // reserved, dref index
+      e.put(new Array[Byte](16)) // predefined/reserved
+      e.putShort(w.toShort).putShort(h.toShort)
+      e.putInt(0x480000).putInt(0x480000) // 72 dpi
+      e.putInt(0)
+      e.putShort(1) // frame count
+      e.put(new Array[Byte](32)) // compressor name
+      e.putShort(24).putShort(0xffff.toShort) // depth, predefined -1
+    }
+    box("trak", tkhd(1, movieDur, 0, w, h),
+      box("mdia", mdhd(mediaTs, mediaDur), hdlr("vide", "VideoHandler"),
+        box("minf", box("vmhd", bytes(12)(_.putInt(1))), Dinf,
+          box("stbl", stsd(entry) +: tables: _*))))
+  }
 
   /** A deterministic MP4 container from (id, nChars): ftyp + moov
     * (mvhd v1 for every 6th id, else v0; one `avc1`/`hev1` video trak
@@ -834,149 +822,46 @@ object MediaCodec {
     val sr = (id % 3) match {
       case 0 => 44100; case 1 => 48000; case _ => 32000 }
     val ch = 1 + (id % 2).toInt
-    val brand = if (id % 2 == 0) "isom" else "mp42"
     val mdatLen = 50 + (nChars % 200).toInt
-
-    def box(fourcc: String, parts: Array[Byte]*): Array[Byte] = {
-      val len = 8 + parts.map(_.length).sum
-      val out = java.nio.ByteBuffer.allocate(len)
-      out.putInt(len)
-      out.put(fourcc.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      parts.foreach(out.put)
-      out.array()
-    }
-    def bytes(n: Int)(f: java.nio.ByteBuffer => Unit): Array[Byte] = {
-      val buf = java.nio.ByteBuffer.allocate(n); f(buf); buf.array()
-    }
-    val unityMatrix = bytes(36) { m =>
-      m.putInt(0x10000).putInt(0).putInt(0)
-      m.putInt(0).putInt(0x10000).putInt(0)
-      m.putInt(0).putInt(0).putInt(0x40000000)
-    }
-    val ftyp = box("ftyp", bytes(16) { f =>
-      f.put(brand.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      f.putInt(0x200)
-      f.put("isom".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      f.put("mp41".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    })
-    val mvhd =
-      if (id % 6 == 0) // version 1: 64-bit times
-        box("mvhd", bytes(112) { m =>
-          m.putInt(0x01000000) // version 1, flags 0
-          m.putLong(0L).putLong(0L) // creation, modification
-          m.putInt(1000) // movie timescale: ms
-          m.putLong(durMs)
-          m.putInt(0x10000).putShort(0x100.toShort).putShort(0)
-          m.putLong(0L) // reserved
-          m.put(unityMatrix)
-          m.put(new Array[Byte](24)) // predefined
-          m.putInt(3) // next track id
-        })
-      else
-        box("mvhd", bytes(100) { m =>
-          m.putInt(0) // version 0, flags 0
-          m.putInt(0).putInt(0)
-          m.putInt(1000)
-          m.putInt(durMs.toInt)
-          m.putInt(0x10000).putShort(0x100.toShort).putShort(0)
-          m.putLong(0L)
-          m.put(unityMatrix)
-          m.put(new Array[Byte](24))
-          m.putInt(3)
-        })
-    def tkhd(trackId: Int, volume: Int, w: Int, h: Int): Array[Byte] =
-      box("tkhd", bytes(84) { t =>
-        t.putInt(7) // version 0, flags: enabled | in-movie | in-preview
-        t.putInt(0).putInt(0)
-        t.putInt(trackId).putInt(0)
-        t.putInt(durMs.toInt) // track duration, movie timescale
-        t.putLong(0L)
-        t.putShort(0).putShort(0) // layer, alternate group
-        t.putShort(volume.toShort).putShort(0)
-        t.put(unityMatrix)
-        t.putInt(w << 16).putInt(h << 16) // 16.16 fixed
-      })
-    def mdhd(ts: Long, dur: Long): Array[Byte] =
-      box("mdhd", bytes(24) { m =>
-        m.putInt(0)
-        m.putInt(0).putInt(0)
-        m.putInt(ts.toInt).putInt(dur.toInt)
-        m.putShort(0x55c4.toShort).putShort(0) // 'und', predefined
-      })
-    def hdlr(kind: String, name: String): Array[Byte] =
-      box("hdlr", bytes(24 + name.length + 1) { h =>
-        h.putInt(0)
-        h.putInt(0) // predefined
-        h.put(kind.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        h.put(new Array[Byte](12))
-        h.put(name.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        h.put(0.toByte)
-      })
-    val dinf = box("dinf", box("dref",
-      bytes(8)(d => d.putInt(0).putInt(1)),
-      bytes(12) { u => u.putInt(12)
-        u.put("url ".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        u.putInt(1) } )) // self-contained flag
     def emptyFull(fourcc: String, extraZeros: Int): Array[Byte] =
       box(fourcc, new Array[Byte](8 + extraZeros))
-    val videoEntry = bytes(86) { e =>
-      e.putInt(86)
-      e.put(vCodec.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      e.put(new Array[Byte](6)).putShort(1) // reserved, dref index
-      e.put(new Array[Byte](16)) // predefined/reserved
-      e.putShort(width.toShort).putShort(height.toShort)
-      e.putInt(0x480000).putInt(0x480000) // 72 dpi
-      e.putInt(0)
-      e.putShort(1) // frame count
-      e.put(new Array[Byte](32)) // compressor name
-      e.putShort(24).putShort(0xffff.toShort) // depth, predefined -1
-    }
+    val emptyTables = Seq(emptyFull("stts", 0), emptyFull("stsc", 0),
+      emptyFull("stsz", 4), emptyFull("stco", 0))
     val audioEntry = bytes(36) { e =>
       e.putInt(36)
-      e.put("mp4a".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      e.put(ascii("mp4a"))
       e.put(new Array[Byte](6)).putShort(1)
       e.putLong(0L) // version/revision/vendor
       e.putShort(ch.toShort).putShort(16) // channels, sample size
       e.putInt(0)
       e.putInt(sr << 16) // 16.16 fixed (truncates for 44100: spec'd)
     }
-    def stbl(entry: Array[Byte]): Array[Byte] =
-      box("stbl",
-        box("stsd", bytes(8)(s => s.putInt(0).putInt(1)), entry),
-        emptyFull("stts", 0), emptyFull("stsc", 0),
-        emptyFull("stsz", 4), emptyFull("stco", 0))
-    val vTrak = box("trak", tkhd(1, 0, width, height),
-      box("mdia", mdhd(90000L, durMs * 90L), hdlr("vide", "VideoHandler"),
-        box("minf", box("vmhd", bytes(12)(v => v.putInt(1))),
-          dinf, stbl(videoEntry))))
-    val aTrak = box("trak", tkhd(2, 0x100, 0, 0),
+    val vTrak = videoTrak(vCodec, width, height, durMs.toInt, 90000L,
+      durMs * 90L, emptyTables: _*)
+    val aTrak = box("trak", tkhd(2, durMs.toInt, 0x100, 0, 0),
       box("mdia", mdhd(sr.toLong, durMs * sr / 1000L),
         hdlr("soun", "SoundHandler"),
         box("minf", box("smhd", new Array[Byte](8)),
-          dinf, stbl(audioEntry))))
-    val moov = box("moov", mvhd, vTrak, aTrak)
+          Dinf, box("stbl", stsd(audioEntry) +: emptyTables: _*))))
+    val moov = box("moov", mvhd(1000, durMs, 3, v1 = id % 6 == 0), vTrak,
+      aTrak)
     val mdatPayload = Array.tabulate[Byte](mdatLen)(j =>
       ((j * 31 + id) % 251).toByte)
     val mdat =
-      if (id % 3 == 0) { // 64-bit largesize form
-        val out = java.nio.ByteBuffer.allocate(16 + mdatLen)
-        out.putInt(1)
-        out.put("mdat".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        out.putLong(16L + mdatLen)
-        out.put(mdatPayload)
-        out.array()
-      } else box("mdat", mdatPayload)
+      if (id % 3 == 0) // 64-bit largesize form
+        bytes(16)(_.putInt(1).put(ascii("mdat")).putLong(16L + mdatLen)) ++
+          mdatPayload
+      else box("mdat", mdatPayload)
     val free = if (id % 2 == 1)
       Some(box("free", new Array[Byte]((id % 16).toInt))) else None
     val uuid = if (id % 5 == 0)
       Some(box("uuid", Array.tabulate[Byte](20)(j => (j + 1).toByte)))
     else None
+    val ft = ftyp(if (id % 2 == 0) "isom" else "mp42")
     val parts =
-      if (id % 4 == 0) Seq(ftyp) ++ free ++ Seq(mdat, moov) ++ uuid
-      else Seq(ftyp) ++ free ++ Seq(moov, mdat) ++ uuid
-    val out = new java.io.ByteArrayOutputStream()
-    parts.foreach(out.write)
-    out.toByteArray
+      if (id % 4 == 0) Seq(ft) ++ free ++ Seq(mdat, moov) ++ uuid
+      else Seq(ft) ++ free ++ Seq(moov, mdat) ++ uuid
+    Array.concat(parts: _*)
   }
 
   /** Sample-table metadata resolved from a real ISO-BMFF stbl — what a
@@ -1016,130 +901,30 @@ object MediaCodec {
     val spc = 4 + (id % 3).toInt
     val nChunks = (n + spc - 1) / spc
     val totalBytes = (0 until n).map(sz).map(_.toLong).sum
-
-    def box(fourcc: String, parts: Array[Byte]*): Array[Byte] = {
-      val len = 8 + parts.map(_.length).sum
-      val out = java.nio.ByteBuffer.allocate(len)
-      out.putInt(len)
-      out.put(fourcc.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      parts.foreach(out.put)
-      out.array()
-    }
-    def bytes(nb: Int)(f: java.nio.ByteBuffer => Unit): Array[Byte] = {
-      val buf = java.nio.ByteBuffer.allocate(nb); f(buf); buf.array()
-    }
-    val ftyp = box("ftyp", bytes(16) { f =>
-      f.put("isom".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      f.putInt(0x200)
-      f.put("isom".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      f.put("mp41".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    })
-    val stts = box("stts", bytes(8 + 16) { s =>
-      s.putInt(0).putInt(2)
-      s.putInt(n1).putInt(d1)
-      s.putInt(n - n1).putInt(d2)
-    })
-    val stss = box("stss", bytes(8 + 4 * nKf) { s =>
-      s.putInt(0).putInt(nKf)
-      var k = 0
-      while (k < nKf) { s.putInt(1 + k * g); k += 1 }
-    })
+    /** A full box body: version/flags 0, then the 32-bit fields. */
+    def table(fourcc: String, fields: Seq[Long]): Array[Byte] =
+      box(fourcc, bytes(4 + 4 * fields.size) { s =>
+        s.putInt(0); fields.foreach(v => s.putInt(v.toInt))
+      })
+    val stts = table("stts", Seq(2L, n1, d1, n - n1, d2))
+    val stss = table("stss", nKf.toLong +: (0 until nKf).map(k => 1L + k * g))
     val tail = n % spc
-    val stscEntries = if (tail == 0) 1 else 2
-    val stsc = box("stsc", bytes(8 + 12 * stscEntries) { s =>
-      s.putInt(0).putInt(stscEntries)
-      s.putInt(1).putInt(spc).putInt(1)
-      if (tail != 0) { s.putInt(nChunks).putInt(tail).putInt(1) }
-    })
+    val stsc = table("stsc",
+      if (tail == 0) Seq(1L, 1L, spc, 1L)
+      else Seq(2L, 1L, spc, 1L, nChunks, tail, 1L))
     val stsz =
-      if (constSize) box("stsz", bytes(12) { s =>
-        s.putInt(0).putInt(sz(0)).putInt(n)
-      })
-      else box("stsz", bytes(12 + 4 * n) { s =>
-        s.putInt(0).putInt(0).putInt(n)
-        var k = 0
-        while (k < n) { s.putInt(sz(k)); k += 1 }
-      })
-    def stco(offsets: Array[Long]): Array[Byte] =
-      box("stco", bytes(8 + 4 * nChunks) { s =>
-        s.putInt(0).putInt(nChunks)
-        offsets.foreach(o => s.putInt(o.toInt))
-      })
-    def moov(chunkOffsets: Array[Long]): Array[Byte] = {
-      val mvhd = box("mvhd", bytes(100) { m =>
-        m.putInt(0)
-        m.putInt(0).putInt(0)
-        m.putInt(90000) // media == movie timescale here
-        m.putInt(durationUnits.toInt)
-        m.putInt(0x10000).putShort(0x100.toShort).putShort(0)
-        m.putLong(0L)
-        m.put(bytes(36) { x =>
-          x.putInt(0x10000).putInt(0).putInt(0)
-          x.putInt(0).putInt(0x10000).putInt(0)
-          x.putInt(0).putInt(0).putInt(0x40000000)
-        })
-        m.put(new Array[Byte](24))
-        m.putInt(2)
-      })
-      val tkhd = box("tkhd", bytes(84) { t =>
-        t.putInt(7)
-        t.putInt(0).putInt(0)
-        t.putInt(1).putInt(0)
-        t.putInt(durationUnits.toInt)
-        t.putLong(0L)
-        t.putShort(0).putShort(0)
-        t.putShort(0).putShort(0)
-        t.put(bytes(36) { x =>
-          x.putInt(0x10000).putInt(0).putInt(0)
-          x.putInt(0).putInt(0x10000).putInt(0)
-          x.putInt(0).putInt(0).putInt(0x40000000)
-        })
-        t.putInt(320 << 16).putInt(240 << 16)
-      })
-      val mdhd = box("mdhd", bytes(24) { m =>
-        m.putInt(0)
-        m.putInt(0).putInt(0)
-        m.putInt(90000).putInt(durationUnits.toInt)
-        m.putShort(0x55c4.toShort).putShort(0)
-      })
-      val hdlr = box("hdlr", bytes(25 + 12) { h =>
-        h.putInt(0); h.putInt(0)
-        h.put("vide".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        h.put(new Array[Byte](12))
-        h.put("VideoHandler".getBytes(
-          java.nio.charset.StandardCharsets.US_ASCII))
-        h.put(0.toByte)
-      })
-      val dinf = box("dinf", box("dref",
-        bytes(8)(d => d.putInt(0).putInt(1)),
-        bytes(12) { u => u.putInt(12)
-          u.put("url ".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-          u.putInt(1) }))
-      val videoEntry = bytes(86) { e =>
-        e.putInt(86)
-        e.put("avc1".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        e.put(new Array[Byte](6)).putShort(1)
-        e.put(new Array[Byte](16))
-        e.putShort(320).putShort(240)
-        e.putInt(0x480000).putInt(0x480000)
-        e.putInt(0)
-        e.putShort(1)
-        e.put(new Array[Byte](32))
-        e.putShort(24).putShort(0xffff.toShort)
-      }
-      val stbl = box("stbl",
-        box("stsd", bytes(8)(s => s.putInt(0).putInt(1)), videoEntry),
-        stts, stsc, stsz, stss, stco(chunkOffsets))
-      box("moov", mvhd,
-        box("trak", tkhd,
-          box("mdia", mdhd, hdlr,
-            box("minf", box("vmhd", bytes(12)(v => v.putInt(1))),
-              dinf, stbl))))
-    }
+      if (constSize) table("stsz", Seq(sz(0), n))
+      else table("stsz", Seq(0L, n) ++ (0 until n).map(sz(_).toLong))
+    def moov(chunkOffsets: Array[Long]): Array[Byte] =
+      box("moov", mvhd(90000, durationUnits, 2), // media == movie timescale
+        videoTrak("avc1", 320, 240, durationUnits.toInt, 90000L,
+          durationUnits, stts, stsc, stsz, stss,
+          table("stco", nChunks.toLong +: chunkOffsets.toSeq)))
     // two-pass: measure moov with placeholder offsets, then stamp the
     // true absolute chunk offsets (table sizes don't change)
+    val ft = ftyp("isom")
     val moovLen = moov(new Array[Long](nChunks)).length
-    val mdatPayloadStart = ftyp.length.toLong + moovLen + 8
+    val mdatPayloadStart = ft.length.toLong + moovLen + 8
     val offsets = new Array[Long](nChunks)
     var acc = 0L
     var k = 0
@@ -1153,14 +938,9 @@ object MediaCodec {
     }
     val mdatPayload = Array.tabulate[Byte](totalBytes.toInt)(j =>
       ((j * 31 + id) % 251).toByte)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(ftyp, 0, ftyp.length)
     val mv = moov(offsets)
     require(mv.length == moovLen, "moov size changed between passes")
-    out.write(mv, 0, mv.length)
-    val mdat = box("mdat", mdatPayload)
-    out.write(mdat, 0, mdat.length)
-    out.toByteArray
+    Array.concat(ft, mv, box("mdat", mdatPayload))
   }
 
   /** Real sample-table walk + resolution (ISO/IEC 14496-12 §8.6–8.7):
@@ -1185,90 +965,53 @@ object MediaCodec {
     var mdatStart = -1L
     var mdatLen = -1L
 
-    def walk(from: Long, to: Long, depth: Int): Boolean = {
-      if (depth > 8) return false
-      var off = from
-      while (off + 8 <= to) {
-        val i = off.toInt
-        val size32 = be32(b, i)
-        val fourcc = tag(b, i + 4)
-        val (boxSize, hdr) =
-          if (size32 == 1L && off + 16 <= to) (be64(b, i + 8), 16)
-          else if (size32 == 0L) (to - off, 8)
-          else (size32, 8)
-        if (boxSize < hdr || off + boxSize > to) return false
-        val body = off + hdr
-        val bodyLen = boxSize - hdr
+    def walk(from: Long, to: Long, depth: Int): Boolean =
+      depth <= 8 && boxWalk(b, from, to) { (fourcc, body, end) =>
         val e = body.toInt
         // entry counts are UNTRUSTED 32-bit fields: bound every
         // count-driven allocation by the bytes the box actually holds,
         // or a ~60-byte crafted payload could demand a multi-GB array
         // (OutOfMemoryError escapes the NonFatal catch and would kill
-        // the task instead of yielding None)
+        // the task instead of yielding None); -1 = does not fit
         def entries(headerBytes: Int, entryBytes: Int): Int = {
           val ne = be32(b, e + 4)
-          if (ne < 0 || headerBytes + entryBytes * ne > bodyLen) -1
-          else ne.toInt
+          if (headerBytes + entryBytes * ne > end - body) -1 else ne.toInt
         }
+        def u32(at: Int): Long = be32(b, e + at)
         fourcc match {
           case "moov" | "trak" | "mdia" | "minf" | "stbl" =>
-            if (!walk(body, off + boxSize, depth + 1)) return false
+            walk(body, end, depth + 1)
           case "stts" =>
             val ne = entries(8, 8)
-            if (ne < 0) return false
-            sttsCounts = new Array[Long](ne)
-            sttsDeltas = new Array[Long](ne)
-            var j = 0
-            while (j < ne) {
-              sttsCounts(j) = be32(b, e + 8 + 8 * j)
-              sttsDeltas(j) = be32(b, e + 12 + 8 * j)
-              j += 1
-            }
+            sttsCounts = Array.tabulate(ne max 0)(j => u32(8 + 8 * j))
+            sttsDeltas = Array.tabulate(ne max 0)(j => u32(12 + 8 * j))
+            ne >= 0
           case "stsz" =>
-            constSize = be32(b, e + 4).toInt
-            val n0 = be32(b, e + 8)
-            if (n0 < 0 || n0 > Int.MaxValue) return false
-            if (constSize == 0 && 12 + 4 * n0 > bodyLen) return false
+            constSize = u32(4).toInt
+            val n0 = u32(8)
             sampleCount = n0.toInt
-            if (constSize == 0) {
-              sizes = new Array[Int](sampleCount)
-              var j = 0
-              while (j < sampleCount) {
-                sizes(j) = be32(b, e + 12 + 4 * j).toInt; j += 1
-              }
-            }
+            val fits = n0 <= Int.MaxValue &&
+              (constSize != 0 || 12 + 4 * n0 <= end - body)
+            if (fits && constSize == 0)
+              sizes = Array.tabulate(sampleCount)(j => u32(12 + 4 * j).toInt)
+            fits
           case "stss" =>
             val ne = entries(8, 4)
-            if (ne < 0) return false
-            syncs = new Array[Int](ne)
-            var j = 0
-            while (j < ne) { syncs(j) = be32(b, e + 8 + 4 * j).toInt
-              j += 1 }
+            syncs = Array.tabulate(ne max 0)(j => u32(8 + 4 * j).toInt)
+            ne >= 0
           case "stsc" =>
             val ne = entries(8, 12)
-            if (ne < 0) return false
-            stscFirst = new Array[Int](ne)
-            stscSpc = new Array[Int](ne)
-            var j = 0
-            while (j < ne) {
-              stscFirst(j) = be32(b, e + 8 + 12 * j).toInt
-              stscSpc(j) = be32(b, e + 12 + 12 * j).toInt
-              j += 1
-            }
+            stscFirst = Array.tabulate(ne max 0)(j => u32(8 + 12 * j).toInt)
+            stscSpc = Array.tabulate(ne max 0)(j => u32(12 + 12 * j).toInt)
+            ne >= 0
           case "stco" =>
             val ne = entries(8, 4)
-            if (ne < 0) return false
-            chunkOffs = new Array[Long](ne)
-            var j = 0
-            while (j < ne) { chunkOffs(j) = be32(b, e + 8 + 4 * j)
-              j += 1 }
-          case "mdat" => mdatStart = body; mdatLen = boxSize - hdr
-          case _ => ()
+            chunkOffs = Array.tabulate(ne max 0)(j => u32(8 + 4 * j))
+            ne >= 0
+          case "mdat" => mdatStart = body; mdatLen = end - body; true
+          case _ => true
         }
-        off += boxSize
       }
-      true
-    }
     if (!walk(0L, b.length.toLong, 0)) return None
     if (sttsCounts == null || sampleCount <= 0 || syncs == null ||
         stscFirst == null || chunkOffs == null || mdatStart < 0)
@@ -1641,25 +1384,10 @@ object MediaCodec {
     * the whole pixel path, and an oracle can recompute every statistic
     * from (w, h, seed) arithmetic alone. */
   def buildBmpPattern(width: Int, height: Int, topDown: Boolean,
-                      seed: Long): Array[Byte] = {
-    val arr = buildBmp(width, height, topDown)
-    val rowSize = ((24 * width + 31) / 32) * 4
-    var y = 0
-    while (y < height) { // y = image row; place into the stored row
-      val stored = if (topDown) y else height - 1 - y
-      val base = 54 + stored * rowSize
-      var x = 0
-      while (x < width) {
-        val p = base + 3 * x
-        arr(p) = ((x + 3L * y + seed) % 251).toByte       // B
-        arr(p + 1) = ((2L * x + y + seed) % 253).toByte   // G
-        arr(p + 2) = ((x + y + 2L * seed) % 255).toByte   // R
-        x += 1
-      }
-      y += 1
-    }
-    arr
-  }
+                      seed: Long): Array[Byte] =
+    encodeBmpRgb(width, height, topDown, (x, y) =>
+      (((x + y + 2L * seed) % 255).toInt, ((2L * x + y + seed) % 253).toInt,
+        ((x + 3L * y + seed) % 251).toInt))
 
   /** 8×8 average-hash of a decoded image — the canonical perceptual
     * near-dup key for image corpora (aHash, the same family as
@@ -2023,25 +1751,11 @@ object MediaCodec {
     * bits only see the gradient), which would collapse the dedup gate
     * to one giant group. */
   def buildBmpTexture(width: Int, height: Int, topDown: Boolean,
-                      seed: Long): Array[Byte] = {
-    val arr = buildBmp(width, height, topDown)
-    val rowSize = ((24 * width + 31) / 32) * 4
-    var y = 0
-    while (y < height) {
-      val stored = if (topDown) y else height - 1 - y
-      val base = 54 + stored * rowSize
-      var x = 0
-      while (x < width) {
-        val p = base + 3 * x
-        arr(p) = ((73L * x + 151L * y + 97L * seed) % 251).toByte   // B
-        arr(p + 1) = ((59L * x + 83L * y + 29L * seed) % 253).toByte // G
-        arr(p + 2) = ((31L * x + 47L * y + 61L * seed) % 255).toByte // R
-        x += 1
-      }
-      y += 1
-    }
-    arr
-  }
+                      seed: Long): Array[Byte] =
+    encodeBmpRgb(width, height, topDown, (x, y) =>
+      (((31L * x + 47L * y + 61L * seed) % 255).toInt,
+        ((59L * x + 83L * y + 29L * seed) % 253).toInt,
+        ((73L * x + 151L * y + 97L * seed) % 251).toInt))
 
   /** [[buildBmpTexture]] at a fixed 24×16 with NEAR-DUP TWINS: classes
     * 30..36 render class s−30's picture with one aHash grid cell
@@ -2052,29 +1766,14 @@ object MediaCodec {
     * exact key. The banded Hamming join has to FIND these pairs;
     * unrelated classes sit ~30 bits apart. */
   def buildBmpTwinTexture(s: Long): Array[Byte] = {
-    val width = 24; val height = 16
     val base = if (s >= 30) s - 30 else s
-    val arr = buildBmp(width, height, topDown = false)
-    val rowSize = ((24 * width + 31) / 32) * 4
-    var y = 0
-    while (y < height) {
-      val stored = height - 1 - y
-      val rowBase = 54 + stored * rowSize
-      var x = 0
-      while (x < width) {
-        val p = rowBase + 3 * x
-        val patched = s >= 30 && x < 3 && y < 2
-        val bb = (73L * x + 151L * y + 97L * base) % 251
-        val gg = (59L * x + 83L * y + 29L * base) % 253
-        val rr = (31L * x + 47L * y + 61L * base) % 255
-        arr(p) = (if (patched) 250L - bb else bb).toByte      // B
-        arr(p + 1) = (if (patched) 252L - gg else gg).toByte  // G
-        arr(p + 2) = (if (patched) 254L - rr else rr).toByte  // R
-        x += 1
-      }
-      y += 1
-    }
-    arr
+    encodeBmpRgb(24, 16, topDown = false, { (x, y) =>
+      val patched = s >= 30 && x < 3 && y < 2
+      val rr = ((31L * x + 47L * y + 61L * base) % 255).toInt
+      val gg = ((59L * x + 83L * y + 29L * base) % 253).toInt
+      val bb = ((73L * x + 151L * y + 97L * base) % 251).toInt
+      if (patched) (254 - rr, 252 - gg, 250 - bb) else (rr, gg, bb)
+    })
   }
 
   /** Windowed loudness profile of a PCM16 clip — the audio-curation
@@ -2082,22 +1781,6 @@ object MediaCodec {
     * All fields are exact integer arithmetic. */
   final case class WavEnergy(id: Long, nWindows: Long, energyTotal: Long,
                              nSilent: Long, peakWindowEnergy: Long)
-
-  /** Offset of the `data` chunk payload, or −1 — the walk
-    * [[decodeWavSamples]] already validated (its nSamples is clamped
-    * to the bytes actually present after this offset). */
-  private def wavDataOffset(b: Array[Byte]): Long = {
-    if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE")
-      return -1L
-    var off = 12L
-    while (off + 8 <= b.length) {
-      val i = off.toInt
-      val sz = le32(b, i + 4)
-      if (tag(b, i) == "data") return off + 8
-      off += 8L + sz + (sz & 1L)
-    }
-    -1L
-  }
 
   /** Decode 16-bit PCM and profile loudness in fixed windows of
     * `window` frames (last window may be partial): per window the sum
@@ -2107,11 +1790,9 @@ object MediaCodec {
   def wavEnergy(id: Long, b: Array[Byte], window: Int = 100,
                 threshold: Int = 64): Option[WavEnergy] = try {
     if (window <= 0) return None // a 0-frame window would never advance
-    val parsed = decodeWavSamples(id, b).getOrElse(return None)
-    val dataOff = wavDataOffset(b)
-    if (dataOff < 0) return None
-    val ch = parsed.channels
-    val frames = parsed.nSamples
+    val h = pcm16(b).getOrElse(return None)
+    val (ch, dataOff) = (h.channels, h.dataOff)
+    val frames = h.dataLen / (2 * ch)
     var nWin = 0L; var totalE = 0L; var nSilent = 0L; var peakE = 0L
     var f = 0L
     while (f < frames) {
@@ -2145,26 +1826,11 @@ object MediaCodec {
     * windows provably exceed it (100 consecutive frames span ≥ 693 of
     * the ±1001 range, so some |sample| ≥ 346). */
   def buildWavEnergyPattern(channels: Int, sampleRate: Int, nSamples: Long,
-                            seed: Long): Array[Byte] = {
-    val arr = buildWav(channels, sampleRate, nSamples, withListChunk = false)
-    val dataOff = 44
-    var f = 0L
-    while (f < nSamples) {
-      val muted = (f / 100 + seed) % 5 == 0
-      var c = 0
-      while (c < channels) {
-        val v =
-          if (muted) ((7 * f + 13 * c + seed) % 97 - 48).toInt
-          else ((7 * f + 13 * c + seed) % 2003 - 1001).toInt
-        val p = (dataOff + f * channels * 2 + 2 * c).toInt
-        arr(p) = (v & 0xff).toByte
-        arr(p + 1) = ((v >> 8) & 0xff).toByte
-        c += 1
-      }
-      f += 1
+                            seed: Long): Array[Byte] =
+    pcmWav(channels, sampleRate, nSamples, withListChunk = false) { (f, c) =>
+      if ((f / 100 + seed) % 5 == 0) ((7 * f + 13 * c + seed) % 97 - 48).toInt
+      else ((7 * f + 13 * c + seed) % 2003 - 1001).toInt
     }
-    arr
-  }
 
   /** Zero-crossing profile of a PCM16 clip — with energy, the classic
     * cheap speech/music/noise discriminator (high ZCR ≈ fricatives/
@@ -2177,11 +1843,9 @@ object MediaCodec {
     * summed over channels. Exact, so the SQL oracle mirrors it with a
     * per-channel LAG. */
   def wavZcr(id: Long, b: Array[Byte]): Option[WavZcr] = try {
-    val parsed = decodeWavSamples(id, b).getOrElse(return None)
-    val dataOff = wavDataOffset(b)
-    if (dataOff < 0) return None
-    val ch = parsed.channels
-    val frames = parsed.nSamples
+    val h = pcm16(b).getOrElse(return None)
+    val (ch, dataOff) = (h.channels, h.dataOff)
+    val frames = h.dataLen / (2 * ch)
     val prev = new Array[Int](ch)
     var crossings = 0L
     var f = 0L
@@ -2205,23 +1869,8 @@ object MediaCodec {
     * Header fixture — no IDAT; [[parsePng]] reads and verifies IHDR. */
   def buildPng(width: Int, height: Int): Array[Byte] = {
     require(width > 0 && height > 0)
-    val b = java.nio.ByteBuffer.allocate(45) // 8 sig + 25 IHDR + 12 IEND
-    b.put(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte))
-    b.putInt(13)
-    val ihdrAt = b.position()
-    b.put("IHDR".getBytes("US-ASCII"))
-    b.putInt(width).putInt(height)
-    b.put(8.toByte).put(2.toByte) // bit depth, truecolor
-      .put(0.toByte).put(0.toByte).put(0.toByte)
-    val crc = new java.util.zip.CRC32()
-    crc.update(b.array(), ihdrAt, 4 + 13)
-    b.putInt(crc.getValue.toInt)
-    b.putInt(0).put("IEND".getBytes("US-ASCII"))
-    val crc2 = new java.util.zip.CRC32()
-    crc2.update("IEND".getBytes("US-ASCII"))
-    b.putInt(crc2.getValue.toInt)
-    b.array()
+    pngChunks(Seq(ihdr(width, height, 2, 0), // truecolor
+      "IEND" -> Array.emptyByteArray))
   }
 
   /** A minimal valid JPEG header skeleton: SOI + JFIF APP0 + SOF0
@@ -2262,22 +1911,10 @@ object MediaCodec {
   def buildWav(channels: Int, sampleRate: Int, nSamples: Long,
                withListChunk: Boolean): Array[Byte] = {
     require(channels > 0 && sampleRate > 0 && nSamples >= 0)
-    val dataLen = (nSamples * channels * 2).toInt
-    val listLen = if (withListChunk) 12 else 0 // "LIST" + size + 4 bytes
-    val total = 44 + listLen + dataLen
-    val b = java.nio.ByteBuffer.allocate(total)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def ascii(s: String): Unit =
-      b.put(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    ascii("RIFF"); b.putInt(total - 8); ascii("WAVE")
-    ascii("fmt "); b.putInt(16)
-    b.putShort(1) // PCM
-      .putShort(channels.toShort).putInt(sampleRate)
-      .putInt(sampleRate * channels * 2) // byte rate
-      .putShort((channels * 2).toShort).putShort(16) // align, bits
-    if (withListChunk) { ascii("LIST"); b.putInt(4); ascii("INFO") }
-    ascii("data"); b.putInt(dataLen)
-    b.array()
+    riff("WAVE", Seq("fmt " -> wavFmt(1, channels, sampleRate, // PCM
+        sampleRate * channels * 2, channels * 2, 16)) ++
+      (if (withListChunk) Seq("LIST" -> ascii("INFO")) else Nil) :+
+      ("data" -> new Array[Byte]((nSamples * channels * 2).toInt)))
   }
 
   /** [[buildWav]] with a deterministic SIGNAL: sample value for frame i,
@@ -2286,14 +1923,22 @@ object MediaCodec {
     * is caught, and every statistic is recomputable from
     * (nSamples, channels, seed) arithmetic alone. */
   def buildWavPattern(channels: Int, sampleRate: Int, nSamples: Long,
-                      withListChunk: Boolean, seed: Long): Array[Byte] = {
+                      withListChunk: Boolean, seed: Long): Array[Byte] =
+    pcmWav(channels, sampleRate, nSamples, withListChunk)((f, c) =>
+      ((7 * f + 13 * c + seed) % 2003 - 1001).toInt)
+
+  /** [[buildWav]] with every little-endian int16 `sample(frame,
+    * channel)` written into the data chunk. */
+  private def pcmWav(channels: Int, sampleRate: Int, nSamples: Long,
+                     withListChunk: Boolean)(
+      sample: (Long, Int) => Int): Array[Byte] = {
     val arr = buildWav(channels, sampleRate, nSamples, withListChunk)
     val dataOff = 44 + (if (withListChunk) 12 else 0)
     var f = 0L
     while (f < nSamples) {
       var c = 0
       while (c < channels) {
-        val v = ((7 * f + 13 * c + seed) % 2003 - 1001).toInt
+        val v = sample(f, c)
         val p = (dataOff + f * channels * 2 + 2 * c).toInt
         arr(p) = (v & 0xff).toByte
         arr(p + 1) = ((v >> 8) & 0xff).toByte
@@ -2328,15 +1973,13 @@ object MediaCodec {
   }
 
   /** Standard luminance Huffman tables (JPEG Annex K.3.3) as
-    * (bits-per-length, symbols). Both sides READ tables from the DHT
+    * (codes per length, symbols). Both sides READ tables from the DHT
     * segment, so any valid table covering the emitted symbols round
     * trips; the standard ones are used for interchange fidelity. */
-  private val stdDcBits =
-    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val stdDcVals = (0 to 11).map(_.toByte).toArray
-  private val stdAcBits =
-    Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d)
-  private val stdAcVals: Array[Byte] = (Array(
+  private val StdDc = (Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
+    (0 to 11).toArray)
+  private val StdAc = (Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d),
+    Array(
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
     0xa1, 0x08, 0x23, 0x42, 0xb1, 0xc1, 0x15, 0x52, 0xd1, 0xf0, 0x24,
@@ -2351,59 +1994,64 @@ object MediaCodec {
     0xb8, 0xb9, 0xba, 0xc2, 0xc3, 0xc4, 0xc5, 0xc6, 0xc7, 0xc8, 0xc9,
     0xca, 0xd2, 0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda, 0xe1,
     0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf1, 0xf2,
-    0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa).map(_.toByte))
+    0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa))
 
-  /** Canonical Huffman codes from a DHT (bits, vals) pair:
-    * (code, length) per symbol, assigned in table order per the spec's
-    * code-generation procedure. */
-  private def canonicalCodes(bits: Array[Int], nSyms: Int)
-      : Array[(Int, Int)] = {
-    val out = new Array[(Int, Int)](nSyms)
-    var code = 0
-    var k = 0
-    var len = 1
-    while (len <= 16) {
-      var i = 0
-      while (i < bits(len - 1)) {
-        out(k) = (code, len); code += 1; k += 1; i += 1
-      }
-      code <<= 1
-      len += 1
-    }
-    out
+  /** The progressive fixtures' AC table: the BASELINE standard AC table
+    * has no EOBn symbols (0x10..0xE0 carry s=0 only in progressive
+    * scans), so the AC band scans ship their own flat 9-bit table
+    * covering (r, s) ∀ r, s∈1..10 + EOB runs + ZRL — 176 symbols,
+    * Kraft 176/512, read back from the DHT like any other table. */
+  private val ProgAc = {
+    val vals = (Seq(0x00, 0xf0) ++ (1 to 14).map(_ << 4) ++
+      (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray
+    (Array.tabulate(16)(l => if (l == 8) vals.length else 0), vals)
   }
 
-  /** MSB-first bit writer with JPEG byte stuffing (FF → FF 00). */
-  private final class JpegBitWriter(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0
-    private var nBits = 0
-    def put(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1 << len) - 1))
-      nBits += len
-      while (nBits >= 8) {
-        val b = (acc >>> (nBits - 8)) & 0xff
-        out.write(b)
-        if (b == 0xff) out.write(0x00)
-        nBits -= 8
-        acc &= (1 << nBits) - 1
-      }
+  /** One DHT table: the shared canonical [[PrefixCode]] over the table's
+    * symbol order (the spec's code-generation procedure, Annex C) and
+    * the symbol values. */
+  private final class JpegHuff(bits: Array[Int], vals: Array[Int]) {
+    private val code = PrefixCode.fromCounts(bits)
+    private val index = Array.fill(256)(-1)
+    vals.indices.foreach(i => index(vals(i)) = i)
+    def decode(r: BitReader): Int = {
+      val i = code.decode(r)
+      if (i < 0) -1 else vals(i)
     }
-    /** Pad the last byte with 1-bits (spec F.1.2.3). */
-    def flush(): Unit =
-      if (nBits > 0) put((1 << (8 - nBits)) - 1, 8 - nBits)
+    def put(w: BitWriter, sym: Int): Unit = code.encode(w, index(sym))
   }
 
-  /** MSB-first bit reader over entropy data with stuffing removal;
-    * hitting a real marker (FF xx, xx ≠ 00) or the end returns −1. */
-  private final class JpegBitReader(b: Array[Byte], start: Int) {
-    private var pos = start
-    private var acc = 0
-    private var nBits = 0
+  /** The JPEG layer over the shared MSB-first writer: an FF byte is
+    * stuffed with 00, and `flush` pads with 1-bits (spec F.1.2.3). */
+  private final class JpegBitWriter(o: java.io.ByteArrayOutputStream)
+      extends BitWriter(msbFirst = true, o) {
+    override protected def emit(byte: Int): Unit = {
+      out.write(byte)
+      if (byte == 0xff) out.write(0x00)
+    }
+    def flush(): Unit = alignToByte(1)
+  }
+
+  /** The JPEG layer over the shared MSB-first reader: a stuffed FF 00
+    * reads as FF, any other marker (FF xx) ends the input (−1). Kept a
+    * subclass so the shared reader never branches on JPEG. */
+  private final class JpegBitReader(b: Array[Byte], start: Int)
+      extends BitReader(b, start, msbFirst = true) {
+    override protected def nextByte(): Int = {
+      if (pos >= b.length) return -1
+      val v = b(pos) & 0xff
+      pos += 1
+      if (v == 0xff) {
+        if (pos >= b.length || (b(pos) & 0xff) != 0x00) return -1
+        pos += 1 // stuffed zero
+      }
+      v
+    }
     /** §F.2.1.3.1 restart sync: discard the current byte's remaining
       * pad bits, skip a stuffed FF 00 pad byte if the 1-bit padding
       * formed one, then consume exactly the expected RSTn marker. */
     def restartSync(expect: Int): Boolean = {
-      acc = 0; nBits = 0
+      alignToByte()
       while (pos + 1 < b.length && (b(pos) & 0xff) == 0xff &&
         (b(pos + 1) & 0xff) == 0x00) pos += 2
       if (pos + 1 >= b.length) return false
@@ -2412,31 +2060,71 @@ object MediaCodec {
       pos += 2
       true
     }
-    def bit(): Int = {
-      if (nBits == 0) {
-        if (pos >= b.length) return -1
-        val v = b(pos) & 0xff
-        pos += 1
-        if (v == 0xff) {
-          if (pos >= b.length || (b(pos) & 0xff) != 0x00) return -1
-          pos += 1 // stuffed zero
-        }
-        acc = v; nBits = 8
-      }
-      nBits -= 1
-      (acc >>> nBits) & 1
+  }
+
+  /** One marker segment: FF, marker, the 16-bit length, the body. */
+  private def segment(out: java.io.ByteArrayOutputStream, marker: Int,
+                      body: Array[Byte]): Unit = {
+    out.write(0xff); out.write(marker)
+    out.write((body.length + 2) >> 8); out.write((body.length + 2) & 0xff)
+    out.write(body, 0, body.length)
+  }
+
+  private def u8s(v: Int*): Array[Byte] = v.map(_.toByte).toArray
+
+  /** The head every encoded fixture JPEG shares: SOI, an all-ones 8-bit
+    * quant table 0 (coefficients stay lossless), the SOFn frame header
+    * (component ids 1..n, `samp` sampling bytes, all on quant table 0),
+    * and DHT DC table 0 (standard) + AC table 0 (`ac`). Returns the DC
+    * and AC tables for the entropy coder. */
+  private def jpegHead(out: java.io.ByteArrayOutputStream, sof: Int,
+                       width: Int, height: Int, samp: Array[Int],
+                       ac: (Array[Int], Array[Int])): (JpegHuff, JpegHuff) = {
+    require(width > 0 && height > 0 && width <= 0xffff && height <= 0xffff)
+    out.write(0xff); out.write(0xd8) // SOI
+    segment(out, 0xdb, 0.toByte +: Array.fill[Byte](64)(1)) // DQT
+    segment(out, sof, u8s(8, height >> 8, height, width >> 8, width,
+      samp.length) ++ samp.indices.flatMap(c => u8s(c + 1, samp(c), 0)))
+    def dht(cls: Int, t: (Array[Int], Array[Int])): JpegHuff = {
+      segment(out, 0xc4, ((cls << 4) +: (t._1 ++ t._2)).map(_.toByte))
+      new JpegHuff(t._1, t._2)
     }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val x = bit()
-        if (x < 0) return -1
-        v = (v << 1) | x
-        i += 1
+    (dht(0, StdDc), dht(1, ac))
+  }
+
+  /** Huffman symbol `sym`, then `v` in `s` magnitude bits (negative
+    * values as v + 2^s − 1, spec F.1.2.1). */
+  private def putSym(w: BitWriter, t: JpegHuff, sym: Int, v: Int,
+                     s: Int): Unit = {
+    t.put(w, sym)
+    if (s > 0) w.write(if (v < 0) v + (1 << s) - 1 else v, s)
+  }
+
+  /** DQT / DHT segment bodies `[from, end)`, several tables each: 8-bit
+    * quant tables into `quant`, Huffman tables into `huff(class·4+id)`.
+    * False on a 16-bit quant table (the decoder seam), an out-of-range
+    * id, or a table running past its segment. */
+  private def jpegTables(b: Array[Byte], marker: Int, from: Int, end: Int,
+                         quant: Array[Array[Int]],
+                         huff: Array[JpegHuff]): Boolean = {
+    var p = from
+    while (p < end) {
+      val hi = u8(b, p) >> 4; val lo = u8(b, p) & 15
+      if (marker == 0xdb) {
+        if (hi != 0 || lo > 3 || p + 65 > end) return false
+        quant(lo) = Array.tabulate(64)(i => u8(b, p + 1 + i))
+        p += 65
+      } else {
+        if (hi > 1 || lo > 3) return false
+        val bits = Array.tabulate(16)(i => u8(b, p + 1 + i))
+        val n = bits.sum
+        if (p + 17 + n > end) return false
+        huff(hi * 4 + lo) =
+          new JpegHuff(bits, Array.tabulate(n)(i => u8(b, p + 17 + i)))
+        p += 17 + n
       }
-      v
     }
+    true
   }
 
   /** EXTEND (spec F.2.2.1): map a magnitude-category bit pattern back
@@ -2505,14 +2193,9 @@ object MediaCodec {
     * the new DC predictor. Shared by the fixture builder and the spec's
     * arbitrary-coefficient round trips (runs, ZRL, EOB all real). */
   private def encodeBlock(w: JpegBitWriter, coef: Array[Int], dcPred: Int,
-                          dcCodes: Array[(Int, Int)],
-                          acCodes: Map[Int, (Int, Int)]): Int = {
-    val dc = coef(0)
-    val diff = dc - dcPred
-    val s = category(diff)
-    val (dcCode, dcLen) = dcCodes(s)
-    w.put(dcCode, dcLen)
-    if (s > 0) w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+                          dc: JpegHuff, ac: JpegHuff): Int = {
+    val diff = coef(0) - dcPred
+    putSym(w, dc, category(diff), diff, category(diff))
     // AC in zigzag order with run-length coding
     var run = 0
     var k = 1
@@ -2520,21 +2203,14 @@ object MediaCodec {
       val v = coef(zigzag(k))
       if (v == 0) run += 1
       else {
-        while (run > 15) { // ZRL
-          val (zc, zl) = acCodes(0xf0)
-          w.put(zc, zl)
-          run -= 16
-        }
-        val sz = category(v)
-        val (c, l) = acCodes((run << 4) | sz)
-        w.put(c, l)
-        w.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
+        while (run > 15) { ac.put(w, 0xf0); run -= 16 } // ZRL
+        putSym(w, ac, (run << 4) | category(v), v, category(v))
         run = 0
       }
       k += 1
     }
-    if (run > 0) { val (ec, el) = acCodes(0x00); w.put(ec, el) } // EOB
-    dc
+    if (run > 0) ac.put(w, 0x00) // EOB
+    coef(0)
   }
 
   /** Real grayscale baseline JPEG ENCODE: DQT (all-ones quant), the
@@ -2570,41 +2246,13 @@ object MediaCodec {
                              restartInterval: Int = 0)
       : Array[Byte] = {
     val nComp = samp.length
-    require(width > 0 && height > 0 && width <= 0xffff && height <= 0xffff)
     val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xff); out.write(marker) }
-    def be(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    m(0xd8) // SOI
-    m(0xdb); be(67); out.write(0x00) // DQT, 8-bit table 0
-    var i = 0
-    while (i < 64) { out.write(1); i += 1 } // quant all ones: lossless coefs
-    m(0xc0); be(8 + 3 * nComp) // SOF0
-    out.write(8); be(height); be(width); out.write(nComp)
-    var c = 0
-    while (c < nComp) { // ids 1..n, declared sampling, all quant table 0
-      out.write(c + 1); out.write(samp(c)); out.write(0)
-      c += 1
-    }
-    def dht(cls: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      m(0xc4); be(2 + 1 + 16 + vals.length); out.write(cls << 4)
-      bits.foreach(out.write); out.write(vals, 0, vals.length)
-    }
-    dht(0, stdDcBits, stdDcVals)
-    dht(1, stdAcBits, stdAcVals)
-    if (restartInterval > 0) { m(0xdd); be(4); be(restartInterval) }
-    m(0xda); be(6 + 2 * nComp) // SOS
-    out.write(nComp)
-    c = 0
-    while (c < nComp) { // every component uses DC 0 / AC 0
-      out.write(c + 1); out.write(0x00)
-      c += 1
-    }
-    out.write(0); out.write(63); out.write(0) // Ss, Se, AhAl
-    val dcC = canonicalCodes(stdDcBits, stdDcVals.length)
-    val acC = canonicalCodes(stdAcBits, stdAcVals.length)
-    val acMap = stdAcVals.zipWithIndex.map { case (sym, ix) =>
-      (sym & 0xff) -> acC(ix)
-    }.toMap
+    val (dcT, acT) = jpegHead(out, 0xc0, width, height, samp, StdAc)
+    if (restartInterval > 0) // DRI
+      segment(out, 0xdd, u8s(restartInterval >> 8, restartInterval))
+    // SOS: every component uses DC 0 / AC 0; Ss, Se, AhAl = 0, 63, 0
+    segment(out, 0xda, u8s((nComp +: (0 until nComp).flatMap(c =>
+      Seq(c + 1, 0x00))) ++ Seq(0, 63, 0): _*))
     val bw = new JpegBitWriter(out)
     val hMax = samp.map(_ >> 4).max
     val vMax = samp.map(_ & 15).max
@@ -2614,13 +2262,12 @@ object MediaCodec {
     var rst = 0
     var bi = 0
     while (bi < mcuW * mcuH) {
-      c = 0
+      var c = 0
       while (c < nComp) { // component-interleaved MCUs, Hc×Vc subs each
         val subs = (samp(c) >> 4) * (samp(c) & 15)
         var sub = 0
         while (sub < subs) {
-          preds(c) =
-            encodeBlock(bw, blocks(bi, c, sub), preds(c), dcC, acMap)
+          preds(c) = encodeBlock(bw, blocks(bi, c, sub), preds(c), dcT, acT)
           sub += 1
         }
         c += 1
@@ -2628,13 +2275,13 @@ object MediaCodec {
       if (restartInterval > 0 && (bi + 1) % restartInterval == 0 &&
         bi + 1 < mcuW * mcuH) {
         bw.flush() // 1-bit padding (stuffed by the writer if it forms FF)
-        m(0xd0 + rst); rst = (rst + 1) % 8
+        out.write(0xff); out.write(0xd0 + rst); rst = (rst + 1) % 8
         java.util.Arrays.fill(preds, 0)
       }
       bi += 1
     }
     bw.flush()
-    m(0xd9) // EOI
+    out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
 
@@ -2786,8 +2433,7 @@ object MediaCodec {
     var w = 0; var h = 0
     var nf = 0
     val quant = new Array[Array[Int]](4)
-    // per (class, id): symbol table as length-indexed canonical decode
-    val huffCodes = new Array[Map[(Int, Int), Int]](8) // (len,code)→sym
+    val huffCodes = new Array[JpegHuff](8) // per (class, id)
     var sosAt = -1
     var restartInterval = 0
     val sofIds = new Array[Int](3) // component ids in SOF order
@@ -2807,29 +2453,9 @@ object MediaCodec {
       if (len < 2 || off + 2 + len > b.length) return None
       val seg = off + 4
       marker match {
-        case 0xdb => // DQT: possibly several tables per segment
-          var p = seg
-          while (p < off + 2 + len) {
-            val pq = u8(b, p) >> 4; val tq = u8(b, p) & 15
-            if (pq != 0 || tq > 3) return None // 16-bit tables: seam
-            if (p + 1 + 64 > off + 2 + len) return None
-            quant(tq) = Array.tabulate(64)(i => u8(b, p + 1 + i))
-            p += 65
-          }
-        case 0xc4 => // DHT: possibly several tables per segment
-          var p = seg
-          while (p < off + 2 + len) {
-            val cls = u8(b, p) >> 4; val tid = u8(b, p) & 15
-            if (cls > 1 || tid > 3) return None
-            val bits = Array.tabulate(16)(i => u8(b, p + 1 + i))
-            val n = bits.sum
-            if (p + 17 + n > off + 2 + len) return None
-            val codes = canonicalCodes(bits, n)
-            huffCodes(cls * 4 + tid) = codes.zipWithIndex.map {
-              case ((code, cl), ix) => (cl, code) -> u8(b, p + 17 + ix)
-            }.toMap
-            p += 17 + n
-          }
+        case 0xdb | 0xc4 => // DQT / DHT: possibly several tables each
+          if (!jpegTables(b, marker, seg, off + 2 + len, quant, huffCodes))
+            return None
         case 0xc0 => // SOF0 baseline
           if (u8(b, seg) != 8) return None
           h = be16(b, seg + 1); w = be16(b, seg + 3)
@@ -2882,21 +2508,6 @@ object MediaCodec {
       val t = huffCodes(acSel(c)); if (t == null) return None else t
     }
     val br = new JpegBitReader(b, sosAt)
-    def huffDecode(t: Map[(Int, Int), Int]): Int = {
-      var code = 0
-      var l = 0
-      while (l < 16) {
-        val x = br.bit()
-        if (x < 0) return -1
-        code = (code << 1) | x
-        l += 1
-        t.get((l, code)) match {
-          case Some(sym) => return sym
-          case None => ()
-        }
-      }
-      -1
-    }
     val hs = Array.tabulate(nf)(c => samp(c) >> 4) // horizontal factors
     val vs = Array.tabulate(nf)(c => samp(c) & 15)
     val hMax = hs.max
@@ -2925,16 +2536,16 @@ object MediaCodec {
             while (sh < hs(c)) {
               java.util.Arrays.fill(coef, 0)
               val qt = qts(c)
-              val s = huffDecode(dcTs(c))
+              val s = dcTs(c).decode(br)
               if (s < 0 || s > 11) return None
-              val dcBits = if (s == 0) 0 else br.bits(s)
+              val dcBits = br.read(s).toInt
               if (dcBits < 0) return None
               preds(c) += extend(dcBits, s)
               coef(0) = preds(c) * qt(0)
               var k = 1
               var eob = false
               while (k < 64 && !eob) {
-                val rs = huffDecode(acTs(c))
+                val rs = acTs(c).decode(br)
                 if (rs < 0) return None
                 val run = rs >> 4
                 val sz = rs & 15
@@ -2943,7 +2554,7 @@ object MediaCodec {
                 else {
                   k += run
                   if (k > 63 || sz == 0) return None
-                  val vb = br.bits(sz)
+                  val vb = br.read(sz).toInt
                   if (vb < 0) return None
                   coef(zigzag(k)) = extend(vb, sz) * qt(k)
                   k += 1
@@ -3002,7 +2613,7 @@ object MediaCodec {
     var off = 2
     var w = 0; var h = 0; var qId = -1
     val quant = new Array[Array[Int]](4)
-    val huffCodes = new Array[Map[(Int, Int), Int]](8)
+    val huffCodes = new Array[JpegHuff](8)
     var coefs: Array[Array[Int]] = null // per-block natural-order coefs
     var bw8 = 0; var bh8 = 0
     var dcPred = 0
@@ -3055,29 +2666,9 @@ object MediaCodec {
       if (len < 2 || off + 2 + len > b.length) return None
       val seg = off + 4
       marker match {
-        case 0xdb =>
-          var p = seg
-          while (p < off + 2 + len) {
-            val pq = u8(b, p) >> 4; val tq = u8(b, p) & 15
-            if (pq != 0 || tq > 3) return None
-            if (p + 1 + 64 > off + 2 + len) return None
-            quant(tq) = Array.tabulate(64)(i => u8(b, p + 1 + i))
-            p += 65
-          }
-        case 0xc4 =>
-          var p = seg
-          while (p < off + 2 + len) {
-            val cls = u8(b, p) >> 4; val tid = u8(b, p) & 15
-            if (cls > 1 || tid > 3) return None
-            val bits = Array.tabulate(16)(i => u8(b, p + 1 + i))
-            val n = bits.sum
-            if (p + 17 + n > off + 2 + len) return None
-            huffCodes(cls * 4 + tid) =
-              canonicalCodes(bits, n).zipWithIndex.map {
-                case ((code, cl), ix) => (cl, code) -> u8(b, p + 17 + ix)
-              }.toMap
-            p += 17 + n
-          }
+        case 0xdb | 0xc4 =>
+          if (!jpegTables(b, marker, seg, off + 2 + len, quant, huffCodes))
+            return None
         case 0xc2 => // SOF2 progressive
           if (u8(b, seg) != 8 || u8(b, seg + 5) != 1) return None // gray only
           if (u8(b, seg + 7) != 0x11) return None
@@ -3098,20 +2689,6 @@ object MediaCodec {
           val ah = u8(b, seg + 5) >> 4; val al = u8(b, seg + 5) & 15
           if (ss > se || se > 63) return None
           val br = new JpegBitReader(b, off + 2 + len)
-          def huffDecode(t: Map[(Int, Int), Int]): Int = {
-            var code = 0; var l = 0
-            while (l < 16) {
-              val x = br.bit()
-              if (x < 0) return -1
-              code = (code << 1) | x
-              l += 1
-              t.get((l, code)) match {
-                case Some(sym) => return sym
-                case None => ()
-              }
-            }
-            -1
-          }
           if (ss == 0 && ah == 0) { // DC first scan (se == 0 per spec)
             if (se != 0) return None
             val dcT = huffCodes(tsel >> 4)
@@ -3119,9 +2696,9 @@ object MediaCodec {
             dcPred = 0
             var bi = 0
             while (bi < coefs.length) {
-              val s = huffDecode(dcT)
+              val s = dcT.decode(br)
               if (s < 0 || s > 11) return None
-              val bits = if (s == 0) 0 else br.bits(s)
+              val bits = if (s == 0) 0 else br.read(s).toInt
               if (bits < 0) return None
               dcPred += extend(bits, s)
               coefs(bi)(0) = dcPred << al
@@ -3134,7 +2711,7 @@ object MediaCodec {
             if (se != 0) return None
             var bi = 0
             while (bi < coefs.length) {
-              val x = br.bit()
+              val x = br.read(1).toInt
               if (x < 0) return None
               if (x == 1) coefs(bi)(0) |= (1 << al)
               bi += 1
@@ -3150,14 +2727,14 @@ object MediaCodec {
                 var k = ss
                 var done = false
                 while (k <= se && !done) {
-                  val rs = huffDecode(acT)
+                  val rs = acT.decode(br)
                   if (rs < 0) return None
                   val r = rs >> 4
                   val s = rs & 15
                   if (s == 0) {
                     if (r == 15) k += 16 // ZRL
                     else { // EOBn: run of 2^r + extra bits, incl. this
-                      val extra = if (r == 0) 0 else br.bits(r)
+                      val extra = if (r == 0) 0 else br.read(r).toInt
                       if (extra < 0) return None
                       eobrun = (1 << r) - 1 + extra
                       done = true
@@ -3165,7 +2742,7 @@ object MediaCodec {
                   } else {
                     k += r
                     if (k > se) return None
-                    val vb = br.bits(s)
+                    val vb = br.read(s).toInt
                     if (vb < 0) return None
                     coefs(bi)(zigzag(k)) = extend(vb, s) << al
                     k += 1
@@ -3188,7 +2765,7 @@ object MediaCodec {
             val m1 = -1 << al
             // read one correction bit for the nonzero coef at zigzag k
             def correct(blk: Array[Int], z: Int): Boolean = {
-              val cb = br.bit()
+              val cb = br.read(1).toInt
               if (cb < 0) return false
               if (cb == 1 && (blk(z) & p1) == 0)
                 blk(z) += (if (blk(z) >= 0) p1 else m1)
@@ -3202,20 +2779,20 @@ object MediaCodec {
               if (eobrun == 0) {
                 var break = false
                 while (k <= se && !break) {
-                  val rs = huffDecode(acT)
+                  val rs = acT.decode(br)
                   if (rs < 0) return None
                   var r = rs >> 4
                   val s = rs & 15
                   var newVal = 0
                   if (s != 0) {
                     if (s != 1) return None // only ±1 new at this bit
-                    val sb = br.bit()
+                    val sb = br.read(1).toInt
                     if (sb < 0) return None
                     newVal = if (sb == 1) p1 else m1
                   } else if (r != 15) { // EOBn: current block included
                     eobrun = 1 << r
                     if (r > 0) {
-                      val extra = br.bits(r)
+                      val extra = br.read(r).toInt
                       if (extra < 0) return None
                       eobrun += extra
                     }
@@ -3274,112 +2851,8 @@ object MediaCodec {
     * with the baseline (r, s) pairs and zero tails folded into EOBRUN
     * runs that span blocks, per the progressive F.2.2 coding model. */
   def buildJpegProgressive(width: Int, height: Int,
-                           blocks: Int => Array[Int]): Array[Byte] = {
-    require(width > 0 && height > 0 && width <= 0xffff && height <= 0xffff)
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xff); out.write(marker) }
-    def be(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    m(0xd8)
-    m(0xdb); be(67); out.write(0x00)
-    var i = 0
-    while (i < 64) { out.write(1); i += 1 }
-    m(0xc2); be(11) // SOF2, 1 component
-    out.write(8); be(height); be(width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    def dht(cls: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      m(0xc4); be(2 + 1 + 16 + vals.length); out.write(cls << 4)
-      bits.foreach(out.write); out.write(vals, 0, vals.length)
-    }
-    // the BASELINE standard AC table has no EOBn symbols (0x10..0xE0
-    // carry s=0 only in progressive scans), so the AC band scan ships
-    // its own flat 9-bit table covering (r, s) ∀ r, s∈1..10 + EOB runs
-    // + ZRL — 176 symbols, Kraft 176/512, read back from the DHT like
-    // any other table
-    val progAcVals: Array[Byte] =
-      (Seq(0x00, 0xf0) ++ (1 to 14).map(_ << 4) ++
-        (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s))
-        .map(_.toByte).toArray
-    val progAcBits = Array(0, 0, 0, 0, 0, 0, 0, 0, progAcVals.length,
-      0, 0, 0, 0, 0, 0, 0)
-    dht(0, stdDcBits, stdDcVals)
-    dht(1, progAcBits, progAcVals)
-    val dcC = canonicalCodes(stdDcBits, stdDcVals.length)
-    val acC = canonicalCodes(progAcBits, progAcVals.length)
-    val acMap = progAcVals.zipWithIndex.map { case (sym, ix) =>
-      (sym & 0xff) -> acC(ix)
-    }.toMap
-    val bw8 = (width + 7) / 8
-    val bh8 = (height + 7) / 8
-    val nB = bw8 * bh8
-    def sos(ss: Int, se: Int): JpegBitWriter = {
-      m(0xda); be(8); out.write(1); out.write(1); out.write(0x00)
-      out.write(ss); out.write(se); out.write(0)
-      new JpegBitWriter(out)
-    }
-    // scan 1: DC
-    var bw = sos(0, 0)
-    var pred = 0
-    var bi = 0
-    while (bi < nB) {
-      val dc = blocks(bi)(0)
-      val diff = dc - pred
-      pred = dc
-      val s = category(diff)
-      val (c0, l0) = dcC(s)
-      bw.put(c0, l0)
-      if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      bi += 1
-    }
-    bw.flush()
-    // scan 2: AC band 1..63 with EOBRUN folding across all-zero tails
-    bw = sos(1, 63)
-    var eobrun = 0
-    def flushEobrun(): Unit = if (eobrun > 0) {
-      var r = 0
-      while ((2 << r) <= eobrun && r < 14) r += 1 // largest 2^r <= run
-      val (c1, l1) = acMap(r << 4)
-      bw.put(c1, l1)
-      if (r > 0) bw.put(eobrun - (1 << r), r)
-      eobrun = 0
-    }
-    bi = 0
-    while (bi < nB) {
-      val coef = blocks(bi)
-      val hasAc = (1 to 63).exists(k => coef(zigzag(k)) != 0)
-      if (!hasAc) {
-        eobrun += 1
-        if (eobrun == 32767) flushEobrun()
-      } else {
-        flushEobrun()
-        var run = 0
-        var k = 1
-        var last = 63
-        while (last >= 1 && coef(zigzag(last)) == 0) last -= 1
-        while (k <= last) {
-          val v = coef(zigzag(k))
-          if (v == 0) run += 1
-          else {
-            while (run > 15) {
-              val (zc, zl) = acMap(0xf0); bw.put(zc, zl); run -= 16
-            }
-            val s = category(v)
-            val (c1, l1) = acMap((run << 4) | s)
-            bw.put(c1, l1)
-            bw.put(if (v < 0) v + (1 << s) - 1 else v, s)
-            run = 0
-          }
-          k += 1
-        }
-        if (last < 63) eobrun += 1 // EOB for this block's zero tail
-        if (eobrun == 32767) flushEobrun()
-      }
-      bi += 1
-    }
-    flushEobrun()
-    bw.flush()
-    m(0xd9)
-    out.toByteArray
-  }
+                           blocks: Int => Array[Int]): Array[Byte] =
+    progressiveScans(width, height, blocks, refine = false)
 
   /** Real SUCCESSIVE-APPROXIMATION progressive ENCODE (grayscale):
     * SOF2 and four scans — DC first pass at Al=1 (diffs of the
@@ -3391,175 +2864,141 @@ object MediaCodec {
     * already-nonzero coefficients buffered behind each emitted
     * symbol, EOB runs carrying their blocks' correction bits. */
   def buildJpegProgressiveRefined(width: Int, height: Int,
-                                  blocks: Int => Array[Int]): Array[Byte] = {
-    require(width > 0 && height > 0 && width <= 0xffff && height <= 0xffff)
+                                  blocks: Int => Array[Int]): Array[Byte] =
+    progressiveScans(width, height, blocks, refine = true)
+
+  /** The two progressive encoders: first-pass DC and AC scans at point
+    * transform Al = 1 when `refine` (else 0), then — when `refine` —
+    * the two Ah=1 → Al=0 refinement scans. */
+  private def progressiveScans(width: Int, height: Int,
+                               blocks: Int => Array[Int],
+                               refine: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xff); out.write(marker) }
-    def be(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    m(0xd8)
-    m(0xdb); be(67); out.write(0x00)
-    var i = 0
-    while (i < 64) { out.write(1); i += 1 }
-    m(0xc2); be(11) // SOF2, 1 component
-    out.write(8); be(height); be(width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    def dht(cls: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      m(0xc4); be(2 + 1 + 16 + vals.length); out.write(cls << 4)
-      bits.foreach(out.write); out.write(vals, 0, vals.length)
+    val (dcT, acT) = jpegHead(out, 0xc2, width, height, Array(0x11), ProgAc)
+    val nB = ((width + 7) / 8) * ((height + 7) / 8)
+    val al = if (refine) 1 else 0
+    var bw: JpegBitWriter = null
+    def scan(ss: Int, se: Int, ah: Int, al: Int)(code: => Unit): Unit = {
+      segment(out, 0xda, u8s(1, 1, 0x00, ss, se, (ah << 4) | al))
+      bw = new JpegBitWriter(out)
+      code
+      bw.flush()
     }
-    // same flat AC table as buildJpegProgressive: EOBn + ZRL + (r, s)
-    val progAcVals: Array[Byte] =
-      (Seq(0x00, 0xf0) ++ (1 to 14).map(_ << 4) ++
-        (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s))
-        .map(_.toByte).toArray
-    val progAcBits = Array(0, 0, 0, 0, 0, 0, 0, 0, progAcVals.length,
-      0, 0, 0, 0, 0, 0, 0)
-    dht(0, stdDcBits, stdDcVals)
-    dht(1, progAcBits, progAcVals)
-    val dcC = canonicalCodes(stdDcBits, stdDcVals.length)
-    val acC = canonicalCodes(progAcBits, progAcVals.length)
-    val acMap = progAcVals.zipWithIndex.map { case (sym, ix) =>
-      (sym & 0xff) -> acC(ix)
-    }.toMap
-    val bw8 = (width + 7) / 8
-    val bh8 = (height + 7) / 8
-    val nB = bw8 * bh8
-    def sos(ss: Int, se: Int, ah: Int, al: Int): JpegBitWriter = {
-      m(0xda); be(8); out.write(1); out.write(1); out.write(0x00)
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
-      new JpegBitWriter(out)
-    }
-    // scan 1: DC first pass, Al = 1 — diffs of (dc >> 1), arithmetic
-    // shift on the two's-complement value like the refinement expects
-    var bw = sos(0, 0, 0, 1)
-    var pred = 0
-    var bi = 0
-    while (bi < nB) {
-      val dc = blocks(bi)(0) >> 1
-      val diff = dc - pred
-      pred = dc
-      val s = category(diff)
-      val (c0, l0) = dcC(s)
-      bw.put(c0, l0)
-      if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      bi += 1
-    }
-    bw.flush()
-    // scan 2: AC band 1..63 first pass, Al = 1 — sign-magnitude point
-    // transform t = sgn(v)·(|v| >> 1); |v| == 1 stays invisible here
-    // and surfaces in the refinement scan as a new coefficient
-    bw = sos(1, 63, 0, 1)
+    // EOBn (G.1.2.2): a run of all-zero band tails codes as the largest
+    // 2^r ≤ run plus r extra bits, then the correction bits its blocks
+    // carry (refinement scans only)
     var eobrun = 0
-    def flushEobrun(extraBits: scala.collection.mutable.ArrayBuffer[Int])
-        : Unit = if (eobrun > 0) {
+    val eobBits = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def flushEobrun(): Unit = if (eobrun > 0) {
       var r = 0
-      while ((2 << r) <= eobrun && r < 14) r += 1
-      val (c1, l1) = acMap(r << 4)
-      bw.put(c1, l1)
-      if (r > 0) bw.put(eobrun - (1 << r), r)
+      while ((2 << r) <= eobrun && r < 14) r += 1 // largest 2^r <= run
+      putSym(bw, acT, r << 4, eobrun - (1 << r), r)
       eobrun = 0
-      if (extraBits != null) {
-        extraBits.foreach(x => bw.put(x, 1))
-        extraBits.clear()
+      eobBits.foreach(x => bw.write(x, 1)); eobBits.clear()
+    }
+    // scan 1: DC first pass — diffs of (dc >> Al), an arithmetic shift
+    // on the two's-complement value like the refinement expects
+    scan(0, 0, 0, al) {
+      var pred = 0
+      var bi = 0
+      while (bi < nB) {
+        val dc = blocks(bi)(0) >> al
+        putSym(bw, dcT, category(dc - pred), dc - pred, category(dc - pred))
+        pred = dc
+        bi += 1
       }
     }
-    bi = 0
-    while (bi < nB) {
-      val coef = blocks(bi)
-      def t(k: Int): Int = {
-        val v = coef(zigzag(k))
-        if (v < 0) -((-v) >> 1) else v >> 1
-      }
-      val hasAc = (1 to 63).exists(k => t(k) != 0)
-      if (!hasAc) {
-        eobrun += 1
-        if (eobrun == 32767) flushEobrun(null)
-      } else {
-        flushEobrun(null)
-        var run = 0
-        var k = 1
+    // scan 2: AC band 1..63 first pass with EOBRUN folding across
+    // all-zero tails; the sign-magnitude point transform
+    // t = sgn(v)·(|v| >> Al) leaves |v| < 2^Al for the refinement scan
+    scan(1, 63, 0, al) {
+      var bi = 0
+      while (bi < nB) {
+        val coef = blocks(bi)
+        def t(k: Int): Int = {
+          val v = coef(zigzag(k))
+          if (v < 0) -((-v) >> al) else v >> al
+        }
         var last = 63
         while (last >= 1 && t(last) == 0) last -= 1
-        while (k <= last) {
-          val v = t(k)
-          if (v == 0) run += 1
-          else {
-            while (run > 15) {
-              val (zc, zl) = acMap(0xf0); bw.put(zc, zl); run -= 16
-            }
-            val s = category(v)
-            val (c1, l1) = acMap((run << 4) | s)
-            bw.put(c1, l1)
-            bw.put(if (v < 0) v + (1 << s) - 1 else v, s)
-            run = 0
-          }
-          k += 1
-        }
-        if (last < 63) eobrun += 1
-        if (eobrun == 32767) flushEobrun(null)
-      }
-      bi += 1
-    }
-    flushEobrun(null)
-    bw.flush()
-    // scan 3: DC refinement, Ah=1 Al=0 — one raw bit per block (the
-    // two's-complement LSB; the decoder ORs it back in)
-    bw = sos(0, 0, 1, 0)
-    bi = 0
-    while (bi < nB) {
-      bw.put(blocks(bi)(0) & 1, 1)
-      bi += 1
-    }
-    bw.flush()
-    // scan 4: AC refinement, Ah=1 Al=0 (T.81 G.1.2.3): walk the band
-    // per block; |v| > 1 coefficients buffer their LSB as a correction
-    // bit behind the next emitted symbol, |v| == 1 coefficients emit
-    // (zero-history run, 1) + sign, trailing zero/correction-only
-    // tails fold into an EOB run that carries its blocks' bits
-    bw = sos(1, 63, 1, 0)
-    eobrun = 0
-    val beBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-    bi = 0
-    while (bi < nB) {
-      val coef = blocks(bi)
-      var last = 63 // last |v| != 0 position: ZRLs beyond it fold to EOB
-      while (last >= 1 && coef(zigzag(last)) == 0) last -= 1
-      var r = 0
-      val brBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var k = 1
-      while (k <= 63) {
-        val v = coef(zigzag(k))
-        val a = math.abs(v)
-        if (a == 0) r += 1
+        if (last == 0) eobrun += 1
         else {
-          while (r > 15 && k <= last) {
-            flushEobrun(beBits)
-            val (zc, zl) = acMap(0xf0); bw.put(zc, zl)
-            r -= 16
-            brBits.foreach(x => bw.put(x, 1)); brBits.clear()
+          flushEobrun()
+          var run = 0
+          var k = 1
+          while (k <= last) {
+            val v = t(k)
+            if (v == 0) run += 1
+            else {
+              while (run > 15) { acT.put(bw, 0xf0); run -= 16 }
+              putSym(bw, acT, (run << 4) | category(v), v, category(v))
+              run = 0
+            }
+            k += 1
           }
-          if (a > 1) brBits += (a & 1) // history-nonzero: correction bit
-          else { // newly visible ±1
-            flushEobrun(beBits)
-            val (c1, l1) = acMap((r << 4) | 1)
-            bw.put(c1, l1)
-            bw.put(if (v < 0) 0 else 1, 1) // sign bit
-            brBits.foreach(x => bw.put(x, 1)); brBits.clear()
-            r = 0
-          }
+          if (last < 63) eobrun += 1 // EOB for this block's zero tail
         }
-        k += 1
+        if (eobrun == 32767) flushEobrun()
+        bi += 1
       }
-      if (r > 0 || brBits.nonEmpty) {
-        eobrun += 1
-        beBits ++= brBits
-        if (eobrun == 32767 || beBits.length > 900) flushEobrun(beBits)
-      }
-      bi += 1
+      flushEobrun()
     }
-    flushEobrun(beBits)
-    bw.flush()
-    m(0xd9)
+    if (refine) {
+      // scan 3: DC refinement — one raw bit per block (the
+      // two's-complement LSB; the decoder ORs it back in)
+      scan(0, 0, 1, 0) {
+        var bi = 0
+        while (bi < nB) { bw.write(blocks(bi)(0) & 1, 1); bi += 1 }
+      }
+      // scan 4: AC refinement (T.81 G.1.2.3): walk the band per block;
+      // |v| > 1 coefficients buffer their LSB as a correction bit
+      // behind the next emitted symbol, |v| == 1 coefficients emit
+      // (zero-history run, 1) + sign, trailing zero/correction-only
+      // tails fold into an EOB run that carries its blocks' bits
+      scan(1, 63, 1, 0) {
+        var bi = 0
+        while (bi < nB) {
+          val coef = blocks(bi)
+          var last = 63 // last |v| != 0 position: ZRLs beyond it fold to EOB
+          while (last >= 1 && coef(zigzag(last)) == 0) last -= 1
+          var r = 0
+          val brBits = scala.collection.mutable.ArrayBuffer.empty[Int]
+          def emit(sym: Int): Unit = {
+            flushEobrun()
+            acT.put(bw, sym)
+          }
+          var k = 1
+          while (k <= 63) {
+            val v = coef(zigzag(k))
+            val a = math.abs(v)
+            if (a == 0) r += 1
+            else {
+              while (r > 15 && k <= last) {
+                emit(0xf0)
+                r -= 16
+                brBits.foreach(x => bw.write(x, 1)); brBits.clear()
+              }
+              if (a > 1) brBits += (a & 1) // history-nonzero: correction
+              else { // newly visible ±1
+                emit((r << 4) | 1)
+                bw.write(if (v < 0) 0 else 1, 1) // sign bit
+                brBits.foreach(x => bw.write(x, 1)); brBits.clear()
+                r = 0
+              }
+            }
+            k += 1
+          }
+          if (r > 0 || brBits.nonEmpty) {
+            eobrun += 1
+            eobBits ++= brBits
+            if (eobrun == 32767 || eobBits.length > 900) flushEobrun()
+          }
+          bi += 1
+        }
+        flushEobrun()
+      }
+    }
+    out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
 
@@ -3630,152 +3069,88 @@ object MediaCodec {
                              meanR: Double, meanG: Double, meanB: Double,
                              topRowMean: Double)
 
-  /** LSB-first bit reader over the concatenated GIF data sub-blocks. */
-  private final class BitReader(bytes: Array[Byte]) {
-    private var pos = 0
-    private var bit = 0
-    def read(width: Int): Int = {
-      var v = 0
-      var got = 0
-      while (got < width) {
-        if (pos >= bytes.length) return -1
-        val avail = 8 - bit
-        val take = math.min(avail, width - got)
-        v |= (((bytes(pos) & 0xff) >> bit) & ((1 << take) - 1)) << got
-        got += take
-        bit += take
-        if (bit == 8) { bit = 0; pos += 1 }
-      }
-      v
-    }
+  /** GIF's LZW: LSB-first codes on GIF's width schedule (the shared
+    * [[Lzw]] without early change). */
+  private def gifLzw(minCodeSize: Int): Lzw =
+    Lzw(minCodeSize, msbFirst = false, earlyChange = false)
+
+  /** Bytes of the color table a packed flags byte announces: 2^(n+1)
+    * RGB triples when its top bit is set, else none. */
+  private def colorTableLen(packed: Int): Int =
+    if ((packed & 0x80) != 0) 3 << ((packed & 7) + 1) else 0
+
+  /** Offset just past the data sub-blocks at `from` (their 0 terminator
+    * consumed), or −1 when they run past the end. */
+  private def skipSubBlocks(b: Array[Byte], from: Int): Int = {
+    var off = from
+    while (off < b.length && b(off) != 0) off += 1 + (b(off) & 0xff)
+    if (off < b.length) off + 1 else -1
   }
 
-  /** GIF LZW decompress (spec appendix F): variable code width 9→12
-    * growing as codes are assigned, Clear resets the table, KwKwK
-    * (code == next unassigned entry) expands prev+prev[0], anything
-    * structurally invalid returns null. The width schedule mirrors the
-    * canonical pairing: the decoder widens after a read when
-    * `firstFree + reads` exceeds the current width's capacity — the
-    * exact moment the encoder widened after the matching emit. */
-  private def lzwDecode(data: Array[Byte], minCodeSize: Int,
-                        nPixels: Int): Array[Byte] = {
-    if (minCodeSize < 2 || minCodeSize > 11) return null
-    val clear = 1 << minCodeSize
-    val eoi = clear + 1
-    val firstFree = clear + 2
-    val out = new Array[Byte](nPixels)
-    var outN = 0
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val firstB = new Array[Byte](4096)
-    val br = new BitReader(data)
-    var width = minCodeSize + 1
-    var reads = 0 // post-clear reads, drives the width schedule
-    var nextEntry = firstFree
-    var prev = -1
-    val stack = new Array[Byte](4097)
-    while (outN < nPixels) {
-      val c = br.read(width)
-      if (c < 0) return null
-      reads += 1
-      if (c == clear) {
-        width = minCodeSize + 1; reads = 0; nextEntry = firstFree
-        prev = -1
-      } else if (c == eoi) {
-        return if (outN == nPixels) out else null
-      } else {
-        var sp = 0
-        if (prev < 0) {
-          if (c >= clear) return null // first code must be a literal
-          out(outN) = c.toByte; outN += 1
-          prev = c
-        } else {
-          var code = c
-          if (c == nextEntry) { // KwKwK
-            stack(sp) = if (prev < clear) prev.toByte else firstB(prev)
-            sp += 1
-            code = prev
-          } else if (c > nextEntry) return null
-          while (code >= firstFree) {
-            stack(sp) = suffix(code); sp += 1
-            code = prefix(code)
-          }
-          if (code >= clear) return null
-          stack(sp) = code.toByte; sp += 1
-          val fb = code.toByte // first byte of the expansion
-          if (outN + sp > nPixels) return null
-          while (sp > 0) { sp -= 1; out(outN) = stack(sp); outN += 1 }
-          if (nextEntry < 4096) {
-            prefix(nextEntry) = prev
-            suffix(nextEntry) = fb
-            firstB(nextEntry) = if (prev < clear) prev.toByte
-              else firstB(prev)
-            nextEntry += 1
-          }
-          prev = c
-        }
-        if (firstFree + reads > (1 << width) && width < 12) width += 1
-      }
+  /** One image's data at `from` — LZW minimum code size, then data
+    * sub-blocks — decoded to `nPixels` color indices. Returns (indices,
+    * offset past the terminator); indices are null when the data is
+    * malformed. */
+  private def gifImage(b: Array[Byte], from: Int,
+                       nPixels: Int): (Array[Byte], Int) = {
+    if (from >= b.length) return (null, -1)
+    val minCodeSize = b(from) & 0xff
+    val z = new java.io.ByteArrayOutputStream()
+    var off = from + 1
+    while (off < b.length && b(off) != 0) {
+      val n = b(off) & 0xff
+      if (off + 1 + n > b.length) return (null, -1)
+      z.write(b, off + 1, n)
+      off += 1 + n
     }
-    // all pixels produced; the stream should close with EOI but a
-    // missing one is tolerated (common in the wild)
-    out
+    if (off >= b.length || minCodeSize < 2 || minCodeSize > 11)
+      return (null, -1)
+    val data = z.toByteArray
+    (gifLzw(minCodeSize).decode(data, 0, data.length, nPixels), off + 1)
   }
 
-  /** GIF LZW compress — the forward half of the canonical pairing:
-    * codes emitted at the current width, width bumped AFTER an emit
-    * when the next code to assign has reached the width's capacity,
-    * a Clear emitted (and the table reset) when the table fills. */
-  private def lzwEncode(data: Array[Byte], minCodeSize: Int)
-      : Array[Byte] = {
-    val clear = 1 << minCodeSize
-    val eoi = clear + 1
-    val firstFree = clear + 2
-    val out = new java.io.ByteArrayOutputStream()
-    var cur = 0; var curBits = 0
-    var width = minCodeSize + 1
-    var nextCode = firstFree
-    def emit(code: Int): Unit = {
-      cur |= code << curBits
-      curBits += width
-      while (curBits >= 8) {
-        out.write(cur & 0xff); cur >>>= 8; curBits -= 8
-      }
-      if (nextCode >= (1 << width) && width < 12) width += 1
-    }
-    val dict = new java.util.HashMap[Integer, Integer](8192)
-    emit(clear)
-    var prev = data(0) & 0xff
-    var i = 1
-    while (i < data.length) {
-      val k = data(i) & 0xff
-      val key = Integer.valueOf((prev << 8) | k)
-      val hit = dict.get(key)
-      if (hit != null) prev = hit.intValue()
-      else {
-        emit(prev)
-        if (nextCode < 4095) {
-          dict.put(key, Integer.valueOf(nextCode)); nextCode += 1
-        } else { // table full: clear and start over
-          emit(clear)
-          dict.clear(); nextCode = firstFree; width = minCodeSize + 1
-        }
-        prev = k
-      }
+  private def putLe16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
+    out.write(v & 0xff); out.write((v >> 8) & 0xff)
+  }
+
+  /** The fixture encoders' GIF89a head: logical screen and a 256-entry
+    * global color table (8-bit resolution), entry i → (i, 2i mod 255,
+    * 3i mod 253). */
+  private def gifHead(out: java.io.ByteArrayOutputStream, width: Int,
+                      height: Int): Unit = {
+    out.write(ascii("GIF89a"))
+    putLe16(out, width); putLe16(out, height)
+    out.write(0xf7) // global table, 8-bit resolution, 256 entries
+    out.write(0); out.write(0) // bg, aspect
+    var i = 0
+    while (i < 256) {
+      out.write(i); out.write((2 * i) % 255); out.write((3 * i) % 253)
       i += 1
     }
-    emit(prev)
-    emit(eoi)
-    if (curBits > 0) out.write(cur & 0xff)
-    out.toByteArray
+  }
+
+  /** Image data: `idx` LZW-compressed at minimum code size 8 into
+    * ≤255-byte sub-blocks, then the block terminator. */
+  private def gifData(out: java.io.ByteArrayOutputStream,
+                      idx: Array[Byte]): Unit = {
+    out.write(8)
+    val z = gifLzw(8).encode(idx)
+    var pos = 0
+    while (pos < z.length) {
+      val n = math.min(255, z.length - pos)
+      out.write(n)
+      out.write(z, pos, n)
+      pos += n
+    }
+    out.write(0)
   }
 
   /** Full pixel decode of a GIF89a/87a first frame — the fourth real
     * codec (pure JVM): logical screen descriptor, the global color
     * table READ FROM THE BYTES (never assumed), extension blocks
     * skipped by their sub-block structure, then the image descriptor's
-    * LZW stream decompressed with the real variable-width algorithm
-    * above and mapped through the palette. Local color tables override
+    * LZW stream decompressed with the shared variable-width [[Lzw]]
+    * and mapped through the palette. Local color tables override
     * the global one per the spec. Interlaced frames and anything
     * structurally invalid return None — data, not task failures. */
   def decodeGifPixels(id: Long, b: Array[Byte]): Option[GifPixels] =
@@ -3809,54 +3184,30 @@ object MediaCodec {
     val sig = new String(b, 0, 6, java.nio.charset.StandardCharsets.US_ASCII)
     if (sig != "GIF87a" && sig != "GIF89a") return None
     val sw = le16(b, 6); val sh = le16(b, 8)
-    val packed = b(10) & 0xff
     var off = 13
-    var palette: Array[Byte] = null
-    if ((packed & 0x80) != 0) {
-      val n = 1 << ((packed & 7) + 1)
-      if (off + 3 * n > b.length) return None
-      palette = java.util.Arrays.copyOfRange(b, off, off + 3 * n)
-      off += 3 * n
-    }
+    val gn = colorTableLen(b(10) & 0xff)
+    if (off + gn > b.length) return None
+    var palette =
+      if (gn > 0) java.util.Arrays.copyOfRange(b, off, off + gn) else null
+    off += gn
     // block walk: skip extensions, find the first image descriptor
     while (off < b.length && (b(off) & 0xff) == 0x21) { // extension
-      off += 2 // introducer + label
-      var blk = if (off < b.length) b(off) & 0xff else -1
-      while (blk > 0) {
-        off += 1 + blk
-        blk = if (off < b.length) b(off) & 0xff else -1
-      }
-      if (blk < 0) return None
-      off += 1 // the 0 terminator
+      off = skipSubBlocks(b, off + 2) // past introducer + label
+      if (off < 0) return None
     }
     if (off >= b.length || (b(off) & 0xff) != 0x2c) return None
     if (off + 10 > b.length) return None
     val w = le16(b, off + 5); val h = le16(b, off + 7)
     val ipacked = b(off + 9) & 0xff
     val interlaced = (ipacked & 0x40) != 0
-    if ((ipacked & 0x80) != 0) { // local color table overrides
-      val n = 1 << ((ipacked & 7) + 1)
-      if (off + 10 + 3 * n > b.length) return None
-      palette = java.util.Arrays.copyOfRange(b, off + 10, off + 10 + 3 * n)
-      off += 3 * n
-    }
-    if (palette == null || w <= 0 || h <= 0 || w > sw || h > sh) return None
     off += 10
-    if (off >= b.length) return None
-    val minCodeSize = b(off) & 0xff
-    off += 1
-    // concatenate the data sub-blocks
-    val z = new java.io.ByteArrayOutputStream()
-    var blk = if (off < b.length) b(off) & 0xff else -1
-    while (blk > 0) {
-      if (off + 1 + blk > b.length) return None
-      z.write(b, off + 1, blk)
-      off += 1 + blk
-      blk = if (off < b.length) b(off) & 0xff else -1
-    }
-    if (blk < 0) return None
+    val ln = colorTableLen(ipacked) // a local color table overrides
+    if (off + ln > b.length) return None
+    if (ln > 0) palette = java.util.Arrays.copyOfRange(b, off, off + ln)
+    off += ln
+    if (palette == null || w <= 0 || h <= 0 || w > sw || h > sh) return None
     val nPixels = w * h
-    val raw = lzwDecode(z.toByteArray, minCodeSize, nPixels)
+    val raw = gifImage(b, off, nPixels)._1
     if (raw == null) return None
     // GIF 4-pass interlace (spec appendix E): stored row order is
     // rows 0,8,16…, then 4,12…, then 2,6,10…, then 1,3,5… — remap
@@ -3884,28 +3235,19 @@ object MediaCodec {
     * index (x + 7y + seed) mod 256, a Graphic Control Extension before
     * the image descriptor when `withExtension` (the block naive parsers
     * trip on), and the index stream compressed with the real
-    * variable-width LZW above, packaged into ≤255-byte sub-blocks. */
+    * variable-width [[Lzw]], packaged into ≤255-byte sub-blocks. */
   def buildGifPattern(width: Int, height: Int, seed: Long,
                       withExtension: Boolean,
                       interlaced: Boolean = false): Array[Byte] = {
     require(width > 0 && height > 0 && width <= 0xffff && height <= 0xffff)
     val out = new java.io.ByteArrayOutputStream()
-    def le(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    le(width); le(height)
-    out.write(0xf7) // global table, 8-bit resolution, 256 entries
-    out.write(0); out.write(0) // bg, aspect
-    var i = 0
-    while (i < 256) {
-      out.write(i); out.write((2 * i) % 255); out.write((3 * i) % 253)
-      i += 1
-    }
+    gifHead(out, width, height)
     if (withExtension) { // GCE: introducer, label, size-4 block, term
       out.write(0x21); out.write(0xf9); out.write(4)
-      out.write(0); le(0); out.write(0); out.write(0)
+      out.write(0); putLe16(out, 0); out.write(0); out.write(0)
     }
     out.write(0x2c) // image descriptor
-    le(0); le(0); le(width); le(height)
+    Seq(0, 0, width, height).foreach(putLe16(out, _))
     out.write(if (interlaced) 0x40 else 0) // no local table
     val idx = new Array[Byte](width * height)
     // row storage order: image order, or the 4-pass interlace schedule
@@ -3922,16 +3264,7 @@ object MediaCodec {
       }
       out0 += 1
     }
-    out.write(8) // LZW min code size
-    val z = lzwEncode(idx, 8)
-    var pos = 0
-    while (pos < z.length) {
-      val n = math.min(255, z.length - pos)
-      out.write(n)
-      out.write(z, pos, n)
-      pos += n
-    }
-    out.write(0) // block terminator
+    gifData(out, idx)
     out.write(0x3b) // trailer
     out.toByteArray
   }
@@ -3982,15 +3315,12 @@ object MediaCodec {
     if (sig != "GIF87a" && sig != "GIF89a") return None
     val sw = le16(b, 6); val sh = le16(b, 8)
     if (sw <= 0 || sh <= 0 || sw.toLong * sh > Int.MaxValue) return None
-    val packed = b(10) & 0xff
     var off = 13
-    var global: Array[Byte] = null
-    if ((packed & 0x80) != 0) {
-      val n = 1 << ((packed & 7) + 1)
-      if (off + 3 * n > b.length) return None
-      global = java.util.Arrays.copyOfRange(b, off, off + 3 * n)
-      off += 3 * n
-    }
+    val gn = colorTableLen(b(10) & 0xff)
+    if (off + gn > b.length) return None
+    val global =
+      if (gn > 0) java.util.Arrays.copyOfRange(b, off, off + gn) else null
+    off += gn
     val canvas = new Array[Int](sw * sh) // gray per pixel, bg = 0
     var cur = 0L
     var nFrames = 0
@@ -4012,13 +3342,8 @@ object MediaCodec {
             if (disposal > 1) return None // restore-bg/prev: behind the seam
             off += 6 // size byte + 4 payload + terminator
           } else {
-            var blk = if (off < b.length) b(off) & 0xff else -1
-            while (blk > 0) {
-              off += 1 + blk
-              blk = if (off < b.length) b(off) & 0xff else -1
-            }
-            if (blk < 0) return None
-            off += 1
+            off = skipSubBlocks(b, off)
+            if (off < 0) return None
           }
         case 0x2c => // image descriptor: one frame
           if (off + 10 > b.length) return None
@@ -4027,30 +3352,17 @@ object MediaCodec {
           val ipacked = b(off + 9) & 0xff
           if ((ipacked & 0x40) != 0) return None // interlaced
           off += 10
-          var palette = global
-          if ((ipacked & 0x80) != 0) {
-            val n = 1 << ((ipacked & 7) + 1)
-            if (off + 3 * n > b.length) return None
-            palette = java.util.Arrays.copyOfRange(b, off, off + 3 * n)
-            off += 3 * n
-          }
+          val ln = colorTableLen(ipacked)
+          if (off + ln > b.length) return None
+          val palette =
+            if (ln > 0) java.util.Arrays.copyOfRange(b, off, off + ln)
+            else global
+          off += ln
           if (palette == null || iw <= 0 || ih <= 0 ||
               left + iw > sw || top + ih > sh) return None
-          if (off >= b.length) return None
-          val minCodeSize = b(off) & 0xff
-          off += 1
-          val z = new java.io.ByteArrayOutputStream()
-          var blk = if (off < b.length) b(off) & 0xff else -1
-          while (blk > 0) {
-            if (off + 1 + blk > b.length) return None
-            z.write(b, off + 1, blk)
-            off += 1 + blk
-            blk = if (off < b.length) b(off) & 0xff else -1
-          }
-          if (blk < 0) return None
-          off += 1
-          val idx = lzwDecode(z.toByteArray, minCodeSize, iw * ih)
+          val (idx, next) = gifImage(b, off, iw * ih)
           if (idx == null) return None
+          off = next
           val nColors = palette.length / 3
           var y = 0
           while (y < ih) {
@@ -4104,54 +3416,27 @@ object MediaCodec {
     require(width >= 8 && height >= 8 && width <= 0xffff &&
       height <= 0xffff && nFrames >= 1)
     val out = new java.io.ByteArrayOutputStream()
-    def le(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    le(width); le(height)
-    out.write(0xf7) // global table, 8-bit resolution, 256 entries
-    out.write(0); out.write(0) // bg, aspect
-    var i = 0
-    while (i < 256) {
-      out.write(i); out.write((2 * i) % 255); out.write((3 * i) % 253)
-      i += 1
-    }
+    gifHead(out, width, height)
     // NETSCAPE2.0 looping extension (loop forever)
     out.write(0x21); out.write(0xff); out.write(11)
-    out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-    out.write(3); out.write(1); le(0); out.write(0)
+    out.write(ascii("NETSCAPE2.0"))
+    out.write(3); out.write(1); putLe16(out, 0); out.write(0)
     val slotsX = width / 8
     val slotsY = height / 8
     var f = 0
     while (f < nFrames) {
       // GCE: do-not-dispose, 4 cs delay, no transparency
       out.write(0x21); out.write(0xf9); out.write(4)
-      out.write(1 << 2); le(4); out.write(0); out.write(0)
+      out.write(1 << 2); putLe16(out, 4); out.write(0); out.write(0)
       val (left, top, iw, ih) =
         if (f == 0) (0, 0, width, height)
         else (8 * ((f - 1) % slotsX),
           8 * (((f - 1) / slotsX) % slotsY), 8, 8)
       out.write(0x2c)
-      le(left); le(top); le(iw); le(ih)
+      Seq(left, top, iw, ih).foreach(putLe16(out, _))
       out.write(0) // no local table, not interlaced
-      val idx = new Array[Byte](iw * ih)
-      var y = 0
-      while (y < ih) {
-        var x = 0
-        while (x < iw) {
-          idx(y * iw + x) = idxFn(f, left + x, top + y).toByte
-          x += 1
-        }
-        y += 1
-      }
-      out.write(8) // LZW min code size
-      val z = lzwEncode(idx, 8)
-      var pos = 0
-      while (pos < z.length) {
-        val n = math.min(255, z.length - pos)
-        out.write(n)
-        out.write(z, pos, n)
-        pos += n
-      }
-      out.write(0) // block terminator
+      gifData(out, Array.tabulate[Byte](iw * ih)(p =>
+        idxFn(f, left + p % iw, top + p / iw).toByte))
       f += 1
     }
     out.write(0x3b) // trailer
@@ -4220,6 +3505,10 @@ object MediaCodec {
   /** Paeth predictor, verbatim from the PNG spec (RFC 2083 §6.6):
     * closest of left/up/up-left to a+b−c, ties break left, up,
     * up-left. */
+  /** The Adam7 passes as (x0, y0, dx, dy), in pass order. */
+  private val Adam7 = Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
+    (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
     val pa = math.abs(p - a); val pb = math.abs(p - b)
@@ -4305,10 +3594,7 @@ object MediaCodec {
     // its own "prior row" (spec: passes defilter independently); an
     // EMPTY pass (zero width or height) contributes no bytes at all.
     // Sequential decode is the one-pass special case of the same walk.
-    val passes: Seq[(Int, Int, Int, Int)] =
-      if (interlace == 0) Seq((0, 0, 1, 1))
-      else Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+    val passes = if (interlace == 0) Seq((0, 0, 1, 1)) else Adam7
     val dims = passes.map { case (x0, y0, dx, dy) =>
       val pw = if (w > x0) (w - x0 + dx - 1) / dx else 0
       val ph = if (h > y0) (h - y0 + dy - 1) / dy else 0
@@ -4319,23 +3605,9 @@ object MediaCodec {
       else ph.toLong * (1L + bpp.toLong * pw)
     }.sum
     if (expected > Int.MaxValue || expected == 0) return None
-    val raw = new Array[Byte](expected.toInt)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        // needsDictionary: a zlib stream with FDICT set makes inflate
-        // return 0 with needsInput() false — loop forever without this
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          return None // short stream / preset-dictionary stream
-        got += n
-      }
-      if (got < raw.length) return None
-    } catch {
-      case _: java.util.zip.DataFormatException => return None
-    } finally inf.end()
+    val z = idat.toByteArray
+    val raw = inflateExactly(z, 0, z.length, expected.toInt)
+    if (raw == null) return None // short / preset-dictionary / corrupt
     // defilter each pass, scatter into the full recon image
     val img = new Array[Byte](bpp * w * h)
     var rawOff = 0
@@ -4420,6 +3692,78 @@ object MediaCodec {
         ((2L * x + y + seed) % 253).toInt,
         ((x + 3L * y + seed) % 251).toInt), splitIdat)
 
+  private val PngSig = u8s(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
+
+  private def ihdr(width: Int, height: Int, colorType: Int,
+                   interlace: Int): (String, Array[Byte]) =
+    "IHDR" -> bytes(13)(_.putInt(width).putInt(height)
+      .put(8.toByte).put(colorType.toByte) // bit depth 8
+      .put(0.toByte).put(0.toByte).put(interlace.toByte)) // deflate, filter 0
+
+  /** The PNG signature, then each chunk: length, type, data, CRC-32 of
+    * type + data. */
+  private def pngChunks(chunks: Seq[(String, Array[Byte])]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(PngSig)
+    chunks.foreach { case (typ, data) =>
+      val crc = new java.util.zip.CRC32()
+      crc.update(ascii(typ))
+      crc.update(data)
+      out.write(bytes(8)(_.putInt(data.length).put(ascii(typ))))
+      out.write(data)
+      out.write(bytes(4)(_.putInt(crc.getValue.toInt)))
+    }
+    out.toByteArray
+  }
+
+  /** The PNG writer every encoder shares: IHDR, any `extra` chunks
+    * (PLTE), the deflated `filtered` scanlines as one IDAT — cut in
+    * two when `splitIdat` — and IEND. */
+  private def pngFile(width: Int, height: Int, colorType: Int,
+                      interlace: Int, extra: Seq[(String, Array[Byte])],
+                      filtered: Array[Byte],
+                      splitIdat: Boolean): Array[Byte] = {
+    val z = deflate(filtered)
+    val idat =
+      if (splitIdat && z.length >= 2) Seq(z.take(z.length / 2),
+        z.drop(z.length / 2))
+      else Seq(z)
+    pngChunks(Seq(ihdr(width, height, colorType, interlace)) ++ extra ++
+      idat.map("IDAT" -> _) :+ ("IEND" -> Array.emptyByteArray))
+  }
+
+  /** Forward-filter the `rows` scanlines of `img` (`rowBytes` each, the
+    * filter's left neighbor `bpp` bytes back) into `out`, row y with
+    * filter type `ft(y)` — the inverse of the decoder's defilter. */
+  private def pngFilter(img: Array[Byte], rows: Int, rowBytes: Int, bpp: Int,
+                        out: java.io.ByteArrayOutputStream)(
+      ft: Int => Int): Unit = {
+    var y = 0
+    while (y < rows) {
+      val ro = y * rowBytes
+      val po = ro - rowBytes
+      val t = ft(y)
+      out.write(t)
+      var i = 0
+      while (i < rowBytes) {
+        val x = img(ro + i) & 0xff
+        val a = if (i >= bpp) img(ro + i - bpp) & 0xff else 0
+        val up = if (y > 0) img(po + i) & 0xff else 0
+        val ul = if (y > 0 && i >= bpp) img(po + i - bpp) & 0xff else 0
+        val v = t match {
+          case 0 => x
+          case 1 => x - a
+          case 2 => x - up
+          case 3 => x - (a + up) / 2
+          case _ => x - paeth(a, up, ul)
+        }
+        out.write(v & 0xff)
+        i += 1
+      }
+      y += 1
+    }
+  }
+
   /** Real PNG encode of an arbitrary RGB pixel function — the format
     * half of [[buildPngPattern]] factored out so fixtures can encode
     * the SAME picture as a PNG and as a BMP (the cross-format
@@ -4429,84 +3773,17 @@ object MediaCodec {
                    rgb: (Int, Int) => (Int, Int, Int),
                    splitIdat: Boolean): Array[Byte] = {
     require(width > 0 && height > 0)
-    val stride = 3 * width
-    // raw image (recon bytes) in scanline order
-    val img = new Array[Byte](height * stride)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) {
-        val p = y * stride + 3 * x
-        val (r, g, bl) = rgb(x, y)
-        img(p) = r.toByte
-        img(p + 1) = g.toByte
-        img(p + 2) = bl.toByte
-        x += 1
-      }
-      y += 1
+    val img = new Array[Byte](height * 3 * width) // scanline order
+    var p = 0
+    while (p < width * height) {
+      val (r, g, bl) = rgb(p % width, p / width)
+      img(3 * p) = r.toByte; img(3 * p + 1) = g.toByte
+      img(3 * p + 2) = bl.toByte
+      p += 1
     }
-    // forward-filter each scanline with type (y mod 5)
-    val filt = new Array[Byte](height * (1 + stride))
-    y = 0
-    while (y < height) {
-      val ro = y * stride
-      val po = ro - stride
-      val fo = y * (1 + stride)
-      val ft = y % 5
-      filt(fo) = ft.toByte
-      var i = 0
-      while (i < stride) {
-        val x = img(ro + i) & 0xff
-        val a = if (i >= 3) img(ro + i - 3) & 0xff else 0
-        val up = if (y > 0) img(po + i) & 0xff else 0
-        val ul = if (y > 0 && i >= 3) img(po + i - 3) & 0xff else 0
-        val out = ft match {
-          case 0 => x
-          case 1 => x - a
-          case 2 => x - up
-          case 3 => x - (a + up) / 2
-          case _ => x - paeth(a, up, ul)
-        }
-        filt(fo + 1 + i) = (out & 0xff).toByte
-        i += 1
-      }
-      y += 1
-    }
-    val deflater = new java.util.zip.Deflater()
-    val zs = new java.io.ByteArrayOutputStream()
-    try {
-      deflater.setInput(filt)
-      deflater.finish()
-      val buf = new Array[Byte](8192)
-      while (!deflater.finished()) zs.write(buf, 0, deflater.deflate(buf))
-    } finally deflater.end()
-    val z = zs.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    def chunk(typ: String, data: Array[Byte], from: Int, len: Int): Unit = {
-      val hdr = java.nio.ByteBuffer.allocate(8)
-      hdr.putInt(len).put(typ.getBytes("US-ASCII"))
-      out.write(hdr.array())
-      out.write(data, from, len)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes("US-ASCII"))
-      crc.update(data, from, len)
-      out.write(java.nio.ByteBuffer.allocate(4)
-        .putInt(crc.getValue.toInt).array())
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte))
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-    ihdr.putInt(width).putInt(height)
-      .put(8.toByte).put(2.toByte) // bit depth, truecolor
-      .put(0.toByte).put(0.toByte).put(0.toByte)
-    chunk("IHDR", ihdr.array(), 0, 13)
-    if (splitIdat && z.length >= 2) {
-      val cut = z.length / 2
-      chunk("IDAT", z, 0, cut)
-      chunk("IDAT", z, cut, z.length - cut)
-    } else chunk("IDAT", z, 0, z.length)
-    chunk("IEND", Array.emptyByteArray, 0, 0)
-    out.toByteArray
+    val filt = new java.io.ByteArrayOutputStream()
+    pngFilter(img, height, 3 * width, 3, filt)(_ % 5)
+    pngFile(width, height, 2, 0, Nil, filt.toByteArray, splitIdat)
   }
 
   /** Real encode of an ADAM7-INTERLACED truecolor PNG: the seven
@@ -4519,82 +3796,25 @@ object MediaCodec {
                         rgb: (Int, Int) => (Int, Int, Int),
                         splitIdat: Boolean): Array[Byte] = {
     require(width > 0 && height > 0)
-    val passes = Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-      (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
     val filt = new java.io.ByteArrayOutputStream()
     var rowCounter = 0
-    passes.foreach { case (x0, y0, dx, dy) =>
+    Adam7.foreach { case (x0, y0, dx, dy) =>
       val pw = if (width > x0) (width - x0 + dx - 1) / dx else 0
       val ph = if (height > y0) (height - y0 + dy - 1) / dy else 0
       if (pw > 0 && ph > 0) {
-        val rowBytes = 3 * pw
-        val sub = new Array[Byte](ph * rowBytes)
-        (0 until ph).foreach { j =>
-          (0 until pw).foreach { i =>
-            val (r, g, bl) = rgb(x0 + i * dx, y0 + j * dy)
-            val p = j * rowBytes + 3 * i
-            sub(p) = r.toByte; sub(p + 1) = g.toByte
-            sub(p + 2) = bl.toByte
-          }
+        val sub = new Array[Byte](ph * 3 * pw)
+        var p = 0
+        while (p < pw * ph) {
+          val (r, g, bl) = rgb(x0 + (p % pw) * dx, y0 + (p / pw) * dy)
+          sub(3 * p) = r.toByte; sub(3 * p + 1) = g.toByte
+          sub(3 * p + 2) = bl.toByte
+          p += 1
         }
-        (0 until ph).foreach { y =>
-          val ro = y * rowBytes; val po = ro - rowBytes
-          val ft = rowCounter % 5; rowCounter += 1
-          filt.write(ft)
-          var i = 0
-          while (i < rowBytes) {
-            val x = sub(ro + i) & 0xff
-            val a = if (i >= 3) sub(ro + i - 3) & 0xff else 0
-            val up = if (y > 0) sub(po + i) & 0xff else 0
-            val ul = if (y > 0 && i >= 3) sub(po + i - 3) & 0xff else 0
-            val v = ft match {
-              case 0 => x
-              case 1 => x - a
-              case 2 => x - up
-              case 3 => x - (a + up) / 2
-              case _ => x - paeth(a, up, ul)
-            }
-            filt.write(v & 0xff)
-            i += 1
-          }
-        }
+        pngFilter(sub, ph, 3 * pw, 3, filt)(y => (rowCounter + y) % 5)
+        rowCounter += ph
       }
     }
-    val deflater = new java.util.zip.Deflater()
-    val zs = new java.io.ByteArrayOutputStream()
-    try {
-      deflater.setInput(filt.toByteArray)
-      deflater.finish()
-      val buf = new Array[Byte](8192)
-      while (!deflater.finished()) zs.write(buf, 0, deflater.deflate(buf))
-    } finally deflater.end()
-    val z = zs.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    def chunk(typ: String, data: Array[Byte], from: Int, len: Int): Unit = {
-      val hdr = java.nio.ByteBuffer.allocate(8)
-      hdr.putInt(len).put(typ.getBytes("US-ASCII"))
-      out.write(hdr.array())
-      out.write(data, from, len)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes("US-ASCII"))
-      crc.update(data, from, len)
-      out.write(java.nio.ByteBuffer.allocate(4)
-        .putInt(crc.getValue.toInt).array())
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte))
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-    ihdr.putInt(width).putInt(height)
-      .put(8.toByte).put(2.toByte) // bit depth, truecolor
-      .put(0.toByte).put(0.toByte).put(1.toByte) // Adam7
-    chunk("IHDR", ihdr.array(), 0, 13)
-    if (splitIdat && z.length >= 2) {
-      val cut = z.length / 2
-      chunk("IDAT", z, 0, cut)
-      chunk("IDAT", z, cut, z.length - cut)
-    } else chunk("IDAT", z, 0, z.length)
-    chunk("IEND", Array.emptyByteArray, 0, 0)
-    out.toByteArray
+    pngFile(width, height, 2, 1, Nil, filt.toByteArray, splitIdat)
   }
 
   /** Deterministic Adam7 fixture: r = (2x+5y+s) mod 255,
@@ -4619,87 +3839,17 @@ object MediaCodec {
                              splitIdat: Boolean,
                              colors: Int = 256): Array[Byte] = {
     require(width > 0 && height > 0 && colors >= 1 && colors <= 256)
-    val img = new Array[Byte](height * width)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) {
-        img(y * width + x) = ((x + 7L * y + seed) % colors).toByte
-        x += 1
-      }
-      y += 1
+    val img = Array.tabulate[Byte](height * width)(p =>
+      ((p % width + 7L * (p / width) + seed) % colors).toByte)
+    val filt = new java.io.ByteArrayOutputStream()
+    pngFilter(img, height, width, 1, filt)(_ % 5)
+    val plte = Array.tabulate[Byte](3 * colors) { j =>
+      val i = j / 3
+      (j % 3 match { case 0 => i; case 1 => (2 * i) % 255
+        case _ => (3 * i) % 253 }).toByte
     }
-    // forward-filter with bpp = 1
-    val filt = new Array[Byte](height * (1 + width))
-    y = 0
-    while (y < height) {
-      val ro = y * width
-      val po = ro - width
-      val fo = y * (1 + width)
-      val ft = y % 5
-      filt(fo) = ft.toByte
-      var i = 0
-      while (i < width) {
-        val x = img(ro + i) & 0xff
-        val a = if (i >= 1) img(ro + i - 1) & 0xff else 0
-        val up = if (y > 0) img(po + i) & 0xff else 0
-        val ul = if (y > 0 && i >= 1) img(po + i - 1) & 0xff else 0
-        val out = ft match {
-          case 0 => x
-          case 1 => x - a
-          case 2 => x - up
-          case 3 => x - (a + up) / 2
-          case _ => x - paeth(a, up, ul)
-        }
-        filt(fo + 1 + i) = (out & 0xff).toByte
-        i += 1
-      }
-      y += 1
-    }
-    val deflater = new java.util.zip.Deflater()
-    val zs = new java.io.ByteArrayOutputStream()
-    try {
-      deflater.setInput(filt)
-      deflater.finish()
-      val buf = new Array[Byte](8192)
-      while (!deflater.finished()) zs.write(buf, 0, deflater.deflate(buf))
-    } finally deflater.end()
-    val z = zs.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    def chunk(typ: String, data: Array[Byte], from: Int, len: Int): Unit = {
-      val hdr = java.nio.ByteBuffer.allocate(8)
-      hdr.putInt(len).put(typ.getBytes("US-ASCII"))
-      out.write(hdr.array())
-      out.write(data, from, len)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes("US-ASCII"))
-      crc.update(data, from, len)
-      out.write(java.nio.ByteBuffer.allocate(4)
-        .putInt(crc.getValue.toInt).array())
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte))
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-    ihdr.putInt(width).putInt(height)
-      .put(8.toByte).put(3.toByte) // bit depth, palette
-      .put(0.toByte).put(0.toByte).put(0.toByte)
-    chunk("IHDR", ihdr.array(), 0, 13)
-    val plte = new Array[Byte](3 * colors)
-    var i = 0
-    while (i < colors) {
-      plte(3 * i) = i.toByte
-      plte(3 * i + 1) = ((2 * i) % 255).toByte
-      plte(3 * i + 2) = ((3 * i) % 253).toByte
-      i += 1
-    }
-    chunk("PLTE", plte, 0, plte.length)
-    if (splitIdat && z.length >= 2) {
-      val cut = z.length / 2
-      chunk("IDAT", z, 0, cut)
-      chunk("IDAT", z, cut, z.length - cut)
-    } else chunk("IDAT", z, 0, z.length)
-    chunk("IEND", Array.emptyByteArray, 0, 0)
-    out.toByteArray
+    pngFile(width, height, 3, 0, Seq("PLTE" -> plte), filt.toByteArray,
+      splitIdat)
   }
 
   // ------------------------------------------------------------------
@@ -4713,69 +3863,6 @@ object MediaCodec {
   // Only LPC subframes (encoder-chosen float coefficients) stay out —
   // the fixture never emits them and the decoder rejects them.
   // ------------------------------------------------------------------
-
-  /** MSB-first bit writer (FLAC bit order — the GIF reader above is
-    * LSB-first and unusable here). */
-  private[operators] final class FlacBitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def write(v: Long, width: Int): Unit = {
-      var i = width - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1L).toInt
-        nBits += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    def writeUnary(q: Int): Unit = { // q zeros then a one
-      var i = 0
-      while (i < q) { write(0, 1); i += 1 }
-      write(1, 1)
-    }
-    def alignToByte(): Unit = if (nBits > 0) write(0, 8 - nBits)
-    def toBytes: Array[Byte] = { alignToByte(); out.toByteArray }
-  }
-
-  /** MSB-first bit reader; returns -1 past the end (callers treat any
-    * negative as structural corruption). */
-  private[operators] final class FlacBitReader(b: Array[Byte], start: Int) {
-    private var pos = start
-    private var bit = 0
-    def bytePos: Int = pos
-    def aligned: Boolean = bit == 0
-    def read(width: Int): Long = {
-      var v = 0L
-      var got = 0
-      while (got < width) {
-        if (pos >= b.length) return -1L
-        val avail = 8 - bit
-        val take = math.min(avail, width - got)
-        val bits = ((b(pos) & 0xff) >> (avail - take)) & ((1 << take) - 1)
-        v = (v << take) | bits
-        got += take
-        bit += take
-        if (bit == 8) { bit = 0; pos += 1 }
-      }
-      v
-    }
-    def readUnary(): Int = {
-      var q = 0
-      while (true) {
-        val x = read(1)
-        if (x < 0) return -1
-        if (x == 1) return q
-        q += 1
-        if (q > (1 << 20)) return -1 // corrupt stream guard
-      }
-      -1
-    }
-    def alignToByte(): Boolean = {
-      if (bit != 0) { if (read(8 - bit) < 0) return false }
-      true
-    }
-  }
 
   /** CRC-8, poly x^8+x^2+x+1 (0x07), init 0, MSB-first — the FLAC
     * frame-header checksum. */
@@ -4831,7 +3918,7 @@ object MediaCodec {
                                 channels: Int, sampleRate: Int,
                                 totalSamples: Long): Unit = {
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
-    val si = new FlacBitWriter
+    val si = new BitWriter(msbFirst = true)
     si.write(FlacBlockSize, 16); si.write(FlacBlockSize, 16)
     si.write(0, 24); si.write(0, 24) // min/max frame size unknown
     si.write(sampleRate, 20)
@@ -4852,8 +3939,8 @@ object MediaCodec {
     * byte-align + whole-frame CRC-16. */
   private def flacFrame(out: java.io.ByteArrayOutputStream, srCode: Int,
                         chAssignCode: Int, frameNo: Int)
-                       (body: FlacBitWriter => Unit): Unit = {
-    val w = new FlacBitWriter
+                       (body: BitWriter => Unit): Unit = {
+    val w = new BitWriter(msbFirst = true)
     w.write(0x3ffe, 14) // sync
     w.write(0, 1) // reserved
     w.write(0, 1) // fixed-blocksize stream
@@ -4864,7 +3951,7 @@ object MediaCodec {
     w.write(0, 1) // reserved
     w.write(frameNo, 8) // single-byte UTF-8 frame number
     val headBytes = w.toBytes // header is byte-aligned here
-    val fw = new FlacBitWriter
+    val fw = new BitWriter(msbFirst = true)
     headBytes.foreach(b => fw.write(b & 0xffL, 8))
     fw.write(flacCrc8(headBytes, 0, headBytes.length), 8)
     body(fw)
@@ -4872,6 +3959,38 @@ object MediaCodec {
     out.write(frameBytes, 0, frameBytes.length)
     val c16 = flacCrc16(frameBytes, 0, frameBytes.length)
     out.write((c16 >> 8) & 0xff); out.write(c16 & 0xff)
+  }
+
+  /** The fixtures' stream rate by id mod 3 and its frame-header table
+    * code: 44.1 kHz (9), 22.05 kHz (6), 8 kHz (4). */
+  private def flacRate(id: Long): (Int, Int) = (id % 3) match {
+    case 0 => (44100, 9); case 1 => (22050, 6); case _ => (8000, 4)
+  }
+
+  /** The fixtures' partitioned-rice residuals for samples `order` until
+    * the block end: partition order i mod 2, rice k = 2 + (id + i + p)
+    * mod 3 per partition (so unary quotients actually occur), residual
+    * j = (id + 3i + 5c + j) mod 15 − 7, zigzag-coded — a zero-mean
+    * pattern over each 15-step cycle. */
+  private def writeFixtureResiduals(fw: BitWriter, id: Long, i: Int, c: Int,
+                                    order: Int): Unit = {
+    val po = i % 2
+    fw.write(0, 2) // rice method, 4-bit params
+    fw.write(po, 4)
+    val partLen = FlacBlockSize >> po
+    var j = order // residual index = sample index
+    for (p <- 0 until 1 << po) {
+      val riceK = 2 + ((id + i + p) % 3).toInt
+      fw.write(riceK, 4)
+      val end = (p + 1) * partLen
+      while (j < end) {
+        val e = ((id + i * 3 + c * 5 + j) % 15 - 7).toInt
+        val u = if (e >= 0) e << 1 else (-e << 1) - 1 // zigzag
+        fw.writeUnary(u >>> riceK)
+        fw.write(u & ((1 << riceK) - 1), riceK)
+        j += 1
+      }
+    }
   }
 
   /** A deterministic FLAC stream from (id, nChars): 2–7 frames of 256
@@ -4888,19 +4007,13 @@ object MediaCodec {
   def buildFlacPattern(id: Long, nChars: Long): Array[Byte] = {
     val nFrames = 2 + (nChars % 6).toInt
     val channels = 1 + (id % 2).toInt
-    val sampleRate = (id % 3) match {
-      case 0 => 44100; case 1 => 22050; case _ => 8000
-    }
+    val (sampleRate, rateCode) = flacRate(id)
     val out = new java.io.ByteArrayOutputStream()
     flacStreamPrelude(out, channels, sampleRate,
       nFrames.toLong * FlacBlockSize)
     var i = 0
     while (i < nFrames) {
-      val srCode =
-        if (id % 4 == 0) 0 // "from STREAMINFO"
-        else sampleRate match {
-          case 44100 => 9; case 22050 => 6; case _ => 4
-        }
+      val srCode = if (id % 4 == 0) 0 else rateCode // 0: "from STREAMINFO"
       flacFrame(out, srCode, channels - 1, i) { fw =>
         var c = 0
         while (c < channels) {
@@ -4923,27 +4036,7 @@ object MediaCodec {
               fw.write(0x08 | 1, 6); fw.write(0, 1)
               val s0 = ((id * 13 + i * 7 + c * 3) % 801 - 400).toInt
               fw.write(s0.toLong & 0xffff, 16) // warmup
-              val po = i % 2 // partition order 0 or 1
-              fw.write(0, 2) // rice method, 4-bit params
-              fw.write(po, 4)
-              val nParts = 1 << po
-              val partLen = FlacBlockSize >> po
-              var p = 0
-              var j = 1 // residual index = sample index (order 1)
-              while (p < nParts) {
-                val riceK = 2 + ((id + i + p) % 3).toInt
-                fw.write(riceK, 4)
-                val nRes = if (p == 0) partLen - 1 else partLen
-                var r = 0
-                while (r < nRes) {
-                  val e = ((id + i * 3 + c * 5 + j) % 15 - 7).toInt
-                  val u = if (e >= 0) e << 1 else (-e << 1) - 1 // zigzag
-                  fw.writeUnary(u >>> riceK)
-                  fw.write(u & ((1 << riceK) - 1), riceK)
-                  r += 1; j += 1
-                }
-                p += 1
-              }
+              writeFixtureResiduals(fw, id, i, c, order = 1)
           }
           c += 1
         }
@@ -4973,19 +4066,13 @@ object MediaCodec {
   def buildFlacLpcPattern(id: Long, nChars: Long): Array[Byte] = {
     val nFrames = 2 + (nChars % 6).toInt
     val channels = 1 + (id % 2).toInt
-    val sampleRate = (id % 3) match {
-      case 0 => 44100; case 1 => 22050; case _ => 8000
-    }
+    val (sampleRate, rateCode) = flacRate(id)
     val out = new java.io.ByteArrayOutputStream()
     flacStreamPrelude(out, channels, sampleRate,
       nFrames.toLong * FlacBlockSize)
     var i = 0
     while (i < nFrames) {
-      val srCode =
-        if (id % 4 == 0) 0
-        else sampleRate match {
-          case 44100 => 9; case 22050 => 6; case _ => 4
-        }
+      val srCode = if (id % 4 == 0) 0 else rateCode
       flacFrame(out, srCode, channels - 1, i) { fw =>
         var c = 0
         while (c < channels) {
@@ -5010,27 +4097,7 @@ object MediaCodec {
             fw.write(order, 5) // shift: 1 for order-1, 2 for order-2
             var q = 0
             while (q < order) { fw.write(1, precision); q += 1 } // coefs all 1
-            val po = i % 2
-            fw.write(0, 2) // rice method, 4-bit params
-            fw.write(po, 4)
-            val nParts = 1 << po
-            val partLen = FlacBlockSize >> po
-            var p = 0
-            var j = order // residual index = sample index
-            while (p < nParts) {
-              val riceK = 2 + ((id + i + p) % 3).toInt
-              fw.write(riceK, 4)
-              val nRes = if (p == 0) partLen - order else partLen
-              var r = 0
-              while (r < nRes) {
-                val e = ((id + i * 3 + c * 5 + j) % 15 - 7).toInt
-                val u = if (e >= 0) e << 1 else (-e << 1) - 1
-                fw.writeUnary(u >>> riceK)
-                fw.write(u & ((1 << riceK) - 1), riceK)
-                r += 1; j += 1
-              }
-              p += 1
-            }
+            writeFixtureResiduals(fw, id, i, c, order)
           }
           c += 1
         }
@@ -5054,9 +4121,7 @@ object MediaCodec {
     * parity bit diverges the hash. */
   def buildFlacStereoPattern(id: Long, nChars: Long): Array[Byte] = {
     val nFrames = 2 + (nChars % 6).toInt
-    val sampleRate = (id % 3) match {
-      case 0 => 44100; case 1 => 22050; case _ => 8000
-    }
+    val (sampleRate, rateCode) = flacRate(id)
     val totalSamples = nFrames.toLong * FlacBlockSize
     def left(i: Int, j: Int): Int =
       ((id * 3 + i * 5 + j * 7) % 1201 - 600).toInt
@@ -5073,10 +4138,7 @@ object MediaCodec {
         case 2 => 9  // right-side
         case _ => 10 // mid-side
       }
-      val srCode = sampleRate match {
-        case 44100 => 9; case 22050 => 6; case _ => 4
-      }
-      flacFrame(out, srCode, chAssign, i) { fw =>
+      flacFrame(out, rateCode, chAssign, i) { fw =>
         // channel payloads per mode; side = L−R rides bps+1 = 17 bits
         def verbatim(width: Int, v: Int => Int): Unit = {
           fw.write(0, 1); fw.write(1, 6); fw.write(0, 1)
@@ -5114,19 +4176,14 @@ object MediaCodec {
     * arithmetic times the per-frame power of two. */
   def buildFlacWastedPattern(id: Long, nChars: Long): Array[Byte] = {
     val nFrames = 2 + (nChars % 6).toInt
-    val sampleRate = (id % 3) match {
-      case 0 => 44100; case 1 => 22050; case _ => 8000
-    }
+    val (sampleRate, rateCode) = flacRate(id)
     val out = new java.io.ByteArrayOutputStream()
     flacStreamPrelude(out, 1, sampleRate, nFrames.toLong * FlacBlockSize)
     var i = 0
     while (i < nFrames) {
       val wasted = 1 + ((id + i) % 3).toInt // 1..3
       val cw = 16 - wasted // coded width
-      val srCode = sampleRate match {
-        case 44100 => 9; case 22050 => 6; case _ => 4
-      }
-      flacFrame(out, srCode, 0, i) { fw =>
+      flacFrame(out, rateCode, 0, i) { fw =>
         fw.write(0, 1) // subframe reserved bit
         if ((id + i) % 2 == 0) fw.write(0, 6) // CONSTANT
         else fw.write(1, 6) // VERBATIM
@@ -5152,7 +4209,7 @@ object MediaCodec {
   /** UTF-8-style coded frame/sample number (the FLAC header field —
     * same prefix grammar as UTF-8 but allowed up to 7 bytes). Returns
     * -1 on malformed coding. */
-  private[operators] def readFlacUtf8(r: FlacBitReader): Long = {
+  private[operators] def readFlacUtf8(r: BitReader): Long = {
     val b0 = r.read(8)
     if (b0 < 0) return -1
     if ((b0 & 0x80) == 0) return b0
@@ -5176,7 +4233,7 @@ object MediaCodec {
     * `res(order until blockSize)` in sample order. 4-bit params only —
     * the 5-bit method and the k=15 escape are rejected, the fixtures
     * never emit them. Returns false on any structural violation. */
-  private def readRiceResiduals(r: FlacBitReader, blockSize: Int,
+  private def readRiceResiduals(r: BitReader, blockSize: Int,
                                 order: Int, res: Array[Int]): Boolean = {
     if (r.read(2) != 0) return false
     val po = r.read(4).toInt
@@ -5212,7 +4269,7 @@ object MediaCodec {
     * Wasted bits (RFC 9639 §9.2.2: flag bit, then count−1 unary)
     * narrow the coded width; decoded samples shift back left. Returns
     * false on any structural violation. */
-  private def decodeSubframe(r: FlacBitReader, blockSize: Int, wIn: Int,
+  private def decodeSubframe(r: BitReader, blockSize: Int, wIn: Int,
                              out: Array[Int]): Boolean = {
     if (r.read(1) != 0) return false
     val sfType = r.read(6).toInt
@@ -5233,7 +4290,7 @@ object MediaCodec {
     true
   }
 
-  private def decodeSubframeBody(r: FlacBitReader, blockSize: Int,
+  private def decodeSubframeBody(r: BitReader, blockSize: Int,
                                  w: Int, sfType: Int,
                                  out: Array[Int]): Boolean = {
     def sext(v: Long): Int = ((v << (64 - w)) >> (64 - w)).toInt
@@ -5328,7 +4385,7 @@ object MediaCodec {
       if (pos + 4 + len > b.length) return None
       if (btype == 0) {
         if (len != 34) return None
-        val r = new FlacBitReader(b, pos + 4)
+        val r = new BitReader(b, pos + 4, msbFirst = true)
         r.read(16); r.read(16); r.read(24); r.read(24)
         sRate = r.read(20).toInt
         channels = r.read(3).toInt + 1
@@ -5345,7 +4402,7 @@ object MediaCodec {
     var first = 0; var haveFirst = false
     while (pos < b.length) {
       val frameStart = pos
-      val r = new FlacBitReader(b, pos)
+      val r = new BitReader(b, pos, msbFirst = true)
       if (r.read(14) != 0x3ffe) return None
       if (r.read(1) != 0) return None
       r.read(1) // blocking strategy (fixed/variable both walk the same)
@@ -5439,7 +4496,7 @@ object MediaCodec {
         while (j < blockSize) { record(chBufs(c)(j)); j += 1 }
         c += 1
       }
-      if (!r.alignToByte()) return None
+      r.alignToByte()
       val frameEnd = r.bytePos
       val c16raw = r.read(16)
       if (c16raw < 0) return None // truncated before the frame CRC
@@ -5591,12 +4648,12 @@ object MediaCodec {
       if (n == 0 || !sawEos) None else Some(pages.result())
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Reassemble the first `n` packets from page-local lacing tables
-    * (a header packet spanning pages is outside this profile → None;
-    * RFC 3533 marks continuation with flag 0x01, which the builders
-    * never emit). */
-  private def firstOggPackets(b: Array[Byte], pages: Vector[OggPageRef],
-                              n: Int): Option[Seq[Array[Byte]]] = {
+  /** Reassemble the first `n` packets (all by default; fewer when the
+    * stream has fewer) from page-local lacing tables. A packet spanning
+    * pages is outside this profile → None (RFC 3533 marks continuation
+    * with flag 0x01, which the builders never emit). */
+  private def oggPackets(b: Array[Byte], pages: Vector[OggPageRef],
+                         n: Int = Int.MaxValue): Option[Seq[Array[Byte]]] = {
     val packets = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     var pi = 0
     while (pi < pages.size && packets.size < n) {
@@ -5618,20 +4675,21 @@ object MediaCodec {
       if (open && packets.size < n) return None // spans pages
       pi += 1
     }
-    if (packets.size < n) None else Some(packets.toSeq)
+    Some(packets.toSeq)
   }
+
+  /** (packets, payload bytes) over the page walk: lacing values < 255
+    * end a packet. */
+  private def oggCounts(pages: Vector[OggPageRef]): (Int, Long) =
+    (pages.map(_.lacing.count(_ < 255)).sum,
+      pages.map(_.payloadLen.toLong).sum)
 
   /** Real Ogg page walk reduced to container stats (RFC 3533; the
     * shared [[walkOggPages]] grammar). Anything malformed yields
     * None. */
   def parseOggMeta(id: Long, b: Array[Byte]): Option[OggMeta] =
     walkOggPages(b).map { pages =>
-      var nPackets = 0
-      var payload = 0L
-      pages.foreach { pg =>
-        pg.lacing.foreach(l => if (l < 255) nPackets += 1)
-        payload += pg.payloadLen
-      }
+      val (nPackets, payload) = oggCounts(pages)
       OggMeta(id, pages.head.serial, pages.size, nPackets, payload,
         pages.last.granule)
     }
@@ -5762,14 +4820,9 @@ object MediaCodec {
     try {
       val pages = walkOggPages(b).getOrElse(return None)
       // the ID header must be whole on the BOS page
-      val h = firstOggPackets(b, pages.take(1), 1)
-        .getOrElse(return None).head
-      var nPackets = 0
-      var payload = 0L
-      pages.foreach { pg =>
-        pg.lacing.foreach(l => if (l < 255) nPackets += 1)
-        payload += pg.payloadLen
-      }
+      val h = oggPackets(b, pages.take(1), 1).flatMap(_.headOption)
+        .getOrElse(return None)
+      val (nPackets, payload) = oggCounts(pages)
       val nPages = pages.size
       val isOpus = h.length >= 19 &&
         new String(h, 0, 8, java.nio.charset.StandardCharsets.US_ASCII) ==
@@ -5869,7 +4922,8 @@ object MediaCodec {
     * '=', a count the packet can't hold) → None. */
   def parseOggTags(id: Long, b: Array[Byte]): Option[OggTagsMeta] = try {
     val pages = walkOggPages(b).getOrElse(return None)
-    val pkts = firstOggPackets(b, pages, 2).getOrElse(return None)
+    val pkts = oggPackets(b, pages, 2).filter(_.size == 2)
+      .getOrElse(return None)
     val idh = pkts(0)
     val tags = pkts(1)
     val ascii = java.nio.charset.StandardCharsets.US_ASCII
@@ -5992,26 +5046,11 @@ object MediaCodec {
     // --- JPEG wrapper ---
     val out = new java.io.ByteArrayOutputStream()
     out.write(0xff); out.write(0xd8) // SOI
-    if (id % 3 == 0) { // a JFIF APP0 the walk must skip
-      val app0 = "JFIF".getBytes(
-        java.nio.charset.StandardCharsets.US_ASCII) ++
-        Array[Byte](0, 1, 2, 0, 0, 1, 0, 1, 0, 0)
-      out.write(0xff); out.write(0xe0)
-      out.write(0); out.write(app0.length + 2)
-      out.write(app0, 0, app0.length)
-    }
-    val com = Array.tabulate[Byte]((nChars % 40).toInt)(j =>
-      ((j + id) % 120 + 1).toByte)
-    out.write(0xff); out.write(0xfe) // COM, also skipped
-    out.write(0); out.write(com.length + 2)
-    out.write(com, 0, com.length)
-    val exifHdr = "Exif".getBytes(
-      java.nio.charset.StandardCharsets.US_ASCII) ++ Array[Byte](0, 0)
-    val app1Len = 2 + exifHdr.length + tiff.length
-    out.write(0xff); out.write(0xe1) // APP1
-    out.write((app1Len >> 8) & 0xff); out.write(app1Len & 0xff)
-    out.write(exifHdr, 0, exifHdr.length)
-    out.write(tiff, 0, tiff.length)
+    if (id % 3 == 0) // a JFIF APP0 the walk must skip
+      segment(out, 0xe0, ascii("JFIF") ++ u8s(0, 1, 2, 0, 0, 1, 0, 1, 0, 0))
+    segment(out, 0xfe, Array.tabulate[Byte]((nChars % 40).toInt)(j =>
+      ((j + id) % 120 + 1).toByte)) // COM, also skipped
+    segment(out, 0xe1, ascii("Exif") ++ u8s(0, 0) ++ tiff) // APP1
     out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
@@ -6117,41 +5156,30 @@ object MediaCodec {
   /** Exp-Golomb on the MSB-first bit reader (ITU-T H.264 §9.1):
     * ue(v) = leadingZeroBits zeros, a 1, then leadingZeroBits info
     * bits; codeNum = 2^lz + info − 1. Negative on corruption. */
-  private def readUe(r: FlacBitReader): Long = {
-    var lz = 0
-    while (true) {
-      val b = r.read(1)
-      if (b < 0) return -1L
-      if (b == 1) {
-        if (lz == 0) return 0L
-        if (lz > 31) return -1L
-        val info = r.read(lz)
-        if (info < 0) return -1L
-        return (1L << lz) + info - 1
-      }
-      lz += 1
-      if (lz > 31) return -1L
-    }
-    -1L
+  private def readUe(r: BitReader): Long = {
+    val lz = r.readUnary(limit = 31)
+    if (lz < 0) return -1L
+    val info = r.read(lz)
+    if (info < 0) -1L else (1L << lz) + info - 1
   }
 
   /** se(v) mapping (§9.1.1): codeNum k → (−1)^(k+1)·⌈k/2⌉. Returns
     * Long.MinValue on corruption (0 is a valid se value). */
-  private def readSe(r: FlacBitReader): Long = {
+  private def readSe(r: BitReader): Long = {
     val k = readUe(r)
     if (k < 0) Long.MinValue
     else if (k % 2 == 1) (k + 1) / 2
     else -(k / 2)
   }
 
-  private def writeUe(w: FlacBitWriter, v: Long): Unit = {
+  private def writeUe(w: BitWriter, v: Long): Unit = {
     val k = v + 1
     val bits = 63 - java.lang.Long.numberOfLeadingZeros(k)
     w.write(0L, bits)
     w.write(k, bits + 1)
   }
 
-  private def writeSe(w: FlacBitWriter, v: Long): Unit =
+  private def writeSe(w: BitWriter, v: Long): Unit =
     writeUe(w, if (v > 0) 2 * v - 1 else -2 * v)
 
   /** RBSP → EBSP: insert the 0x03 emulation-prevention byte after any
@@ -6232,7 +5260,7 @@ object MediaCodec {
           if (rbsp.length < 4) return None
           profile = rbsp(0) & 0xff
           level = rbsp(2) & 0xff
-          val r = new FlacBitReader(rbsp, 3)
+          val r = new BitReader(rbsp, 3, msbFirst = true)
           if (readUe(r) < 0) return None // seq_parameter_set_id
           if (Set(100, 110, 122, 244, 44, 83, 86, 118, 128).contains(profile)) {
             val chroma = readUe(r) // chroma_format_idc
@@ -6273,7 +5301,7 @@ object MediaCodec {
           width = (mbW * 16 - 2 * (cl + cr)).toInt
           height = ((2 - frameMbsOnly) * mbH * 16 - cropY * (ct + cb)).toInt
         case 8 => // PPS: walk to the signed QP fields
-          val r = new FlacBitReader(rbsp, 0)
+          val r = new BitReader(rbsp, 0, msbFirst = true)
           if (readUe(r) < 0 || readUe(r) < 0) return None // pps id, sps id
           if (r.read(2) < 0) return None // entropy mode + bottom-field-poc
           if (readUe(r) != 0) return None // num_slice_groups_minus1
@@ -6310,7 +5338,7 @@ object MediaCodec {
     val cr = if (cropping) id % 3 else 0
     val cb = if (cropping) (id / 3) % 2 else 0
     val sps = {
-      val w = new FlacBitWriter
+      val w = new BitWriter(msbFirst = true)
       w.write(profile.toLong, 8)
       w.write(0L, 8) // constraint flags + reserved
       w.write(level.toLong, 8)
@@ -6339,7 +5367,7 @@ object MediaCodec {
       w.toBytes
     }
     val pps = {
-      val w = new FlacBitWriter
+      val w = new BitWriter(msbFirst = true)
       writeUe(w, 0); writeUe(w, 0) // pps id, sps id
       w.write((id % 2), 1) // entropy_coding_mode (CABAC/CAVLC)
       w.write(0L, 1) // bottom_field_pic_order_in_frame_present
@@ -6429,7 +5457,7 @@ object MediaCodec {
         case 7 => // SPS — the same §7.3.2.1 walk as the meta gate
           if (rbsp.length < 4) return None
           val profile = rbsp(0) & 0xff
-          val r = new FlacBitReader(rbsp, 3)
+          val r = new BitReader(rbsp, 3, msbFirst = true)
           if (readUe(r) < 0) return None
           if (Set(100, 110, 122, 244, 44, 83, 86, 118, 128)
               .contains(profile)) {
@@ -6454,7 +5482,7 @@ object MediaCodec {
           if (r.read(1) < 0) return None // direct_8x8
           if (r.read(1) != 0) return None // cropping: out of profile here
         case 8 => // PPS
-          val r = new FlacBitReader(rbsp, 0)
+          val r = new BitReader(rbsp, 0, msbFirst = true)
           if (readUe(r) < 0 || readUe(r) < 0) return None
           if (r.read(1) != 0) return None // CAVLC required for ue mb_type
           if (r.read(1) < 0) return None // bottom-field-poc
@@ -6470,7 +5498,7 @@ object MediaCodec {
           if (deblockPresent < 0 || r.read(2) < 0) return None
         case 5 => // IDR slice
           if (mbW < 0 || picInitQp == Int.MinValue) return None
-          val r = new FlacBitReader(rbsp, 0)
+          val r = new BitReader(rbsp, 0, msbFirst = true)
           if (readUe(r) != 0) return None // first_mb_in_slice
           val sliceType = readUe(r)
           if (sliceType != 2 && sliceType != 7) return None // I slice
@@ -6495,7 +5523,7 @@ object MediaCodec {
           var mb = 0
           while (mb < mbW * mbH) {
             if (readUe(r) != 25) return None // I_PCM only in profile
-            if (!r.alignToByte()) return None
+            r.alignToByte()
             val mx = (mb % mbW) * 16; val my = (mb / mbW) * 16
             var j = 0
             while (j < 256) {
@@ -6540,7 +5568,7 @@ object MediaCodec {
     val mbW = 1 + (nChars % 3).toInt
     val mbH = 1 + ((nChars / 3) % 2).toInt
     val sps = {
-      val w = new FlacBitWriter
+      val w = new BitWriter(msbFirst = true)
       w.write(66L, 8); w.write(0L, 8); w.write(30L, 8)
       writeUe(w, 0) // sps id
       writeUe(w, id % 5) // log2_max_frame_num_minus4
@@ -6556,7 +5584,7 @@ object MediaCodec {
       w.toBytes
     }
     val pps = {
-      val w = new FlacBitWriter
+      val w = new BitWriter(msbFirst = true)
       writeUe(w, 0); writeUe(w, 0)
       w.write(0L, 1) // CAVLC
       w.write(0L, 1)
@@ -6572,7 +5600,7 @@ object MediaCodec {
       w.toBytes
     }
     val slice = {
-      val w = new FlacBitWriter
+      val w = new BitWriter(msbFirst = true)
       writeUe(w, 0) // first_mb_in_slice
       writeUe(w, 7) // slice_type: I (all slices)
       writeUe(w, 0) // pps id
@@ -6705,46 +5733,43 @@ object MediaCodec {
     val riffSize = le32(b, 4)
     if (riffSize + 8 != b.length) return None
     if (tag(b, 8) != "WEBP") return None
-    var pos = 12
     var format: String = null
     var width = -1; var height = -1; var hasAlpha = false
-    while (pos + 8 <= b.length) {
-      val fourcc = tag(b, pos)
-      val size = le32(b, pos + 4).toInt
-      val body = pos + 8
-      if (body + size > b.length) return None
-      fourcc match {
+    val end = riffWalk(b, 12) { (fourcc, body, size) =>
+      body + size <= b.length && (fourcc match {
         case "VP8 " =>
-          if (format == null) {
-            if (size < 10) return None
-            // 3-byte frame tag, then the keyframe start code 9D 01 2A
-            if ((b(body) & 1) != 0) return None // must be a keyframe
-            if ((b(body + 3) & 0xff) != 0x9d ||
-              (b(body + 4) & 0xff) != 0x01 ||
-              (b(body + 5) & 0xff) != 0x2a) return None
-            width = le16(b, body + 6) & 0x3fff
-            height = le16(b, body + 8) & 0x3fff
-            format = "lossy"
-          }
+          // 3-byte frame tag (a keyframe), then the start code 9D 01 2A
+          format != null || (size >= 10 && (b(body) & 1) == 0 &&
+            (b(body + 3) & 0xff) == 0x9d && (b(body + 4) & 0xff) == 0x01 &&
+            (b(body + 5) & 0xff) == 0x2a && {
+              width = le16(b, body + 6) & 0x3fff
+              height = le16(b, body + 8) & 0x3fff
+              format = "lossy"
+              true
+            })
         case "VP8L" =>
-          if (size < 5 || (b(body) & 0xff) != 0x2f) return None
-          val bits = le32(b, body + 1)
-          width = ((bits & 0x3fff) + 1).toInt
-          height = (((bits >> 14) & 0x3fff) + 1).toInt
-          hasAlpha = ((bits >> 28) & 1) == 1
-          format = "lossless"
+          size >= 5 && (b(body) & 0xff) == 0x2f && {
+            val bits = le32(b, body + 1)
+            width = ((bits & 0x3fff) + 1).toInt
+            height = (((bits >> 14) & 0x3fff) + 1).toInt
+            hasAlpha = ((bits >> 28) & 1) == 1
+            format = "lossless"
+            true
+          }
         case "VP8X" =>
-          if (size < 10) return None
-          hasAlpha = (b(body) & 0x10) != 0
-          width = le24(b, body + 4) + 1
-          height = le24(b, body + 7) + 1
-          format = "extended"
-        case "ALPH" => () // alpha payload: entropy-coded, seam
-        case _ => return None
-      }
-      pos = body + size + (size & 1) // RIFF pads odd chunks
+          size >= 10 && {
+            hasAlpha = (b(body) & 0x10) != 0
+            width = le24(b, body + 4) + 1
+            height = le24(b, body + 7) + 1
+            format = "extended"
+            true
+          }
+        case "ALPH" => true // alpha payload: entropy-coded, seam
+        case _ => false
+      })
     }
-    if (pos != b.length || format == null || width <= 0) return None
+    // the chunks (odd ones padded) must tile the RIFF body exactly
+    if (end != b.length || format == null || width <= 0) return None
     Some(WebpMeta(id, format, width, height, riffSize, hasAlpha))
   }
 
@@ -6756,74 +5781,29 @@ object MediaCodec {
   def buildWebpPattern(id: Long): Array[Byte] = {
     val w = 16 + (id % 1000).toInt
     val h = 16 + ((id * 7) % 800).toInt
-    def chunk(fourcc: String, body: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(fourcc.getBytes("US-ASCII"), 0, 4)
-      val n = body.length
-      out.write(n & 0xff); out.write((n >> 8) & 0xff)
-      out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
-      out.write(body, 0, n)
-      if ((n & 1) == 1) out.write(0)
-      out.toByteArray
-    }
-    def vp8Body(wd: Int, ht: Int): Array[Byte] = {
-      val fill = (11 + id % 30).toInt // odd sizes occur
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(0x00); o.write(0x00); o.write(0x00) // frame tag: keyframe
-      o.write(0x9d); o.write(0x01); o.write(0x2a)
-      o.write(wd & 0xff); o.write((wd >> 8) & 0x3f)
-      o.write(ht & 0xff); o.write((ht >> 8) & 0x3f)
-      var j = 0
-      while (j < fill) { o.write(0x20 | ((id + j) % 0x5f).toInt); j += 1 }
-      o.toByteArray
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    val payload: Array[Byte] = (id % 3) match {
-      case 0 => chunk("VP8 ", vp8Body(w, h))
+    def fill(n: Long): Array[Byte] =
+      Array.tabulate[Byte](n.toInt)(j => (0x20 | ((id + j) % 0x5f)).toByte)
+    def vp8Body(wd: Int, ht: Int): Array[Byte] = // keyframe tag, start code
+      u8s(0x00, 0x00, 0x00, 0x9d, 0x01, 0x2a, wd, (wd >> 8) & 0x3f, ht,
+        (ht >> 8) & 0x3f) ++ fill(11 + id % 30) // odd sizes occur
+    val chunks: Seq[(String, Array[Byte])] = (id % 3) match {
+      case 0 => Seq("VP8 " -> vp8Body(w, h))
       case 1 =>
-        val bits = ((w - 1) & 0x3fff).toLong |
-          (((h - 1) & 0x3fff).toLong << 14) |
-          ((id % 2) << 28)
-        val o = new java.io.ByteArrayOutputStream()
-        o.write(0x2f)
-        o.write((bits & 0xff).toInt); o.write(((bits >> 8) & 0xff).toInt)
-        o.write(((bits >> 16) & 0xff).toInt)
-        o.write(((bits >> 24) & 0xff).toInt)
-        val fill = (10 + id % 31).toInt
-        var j = 0
-        while (j < fill) { o.write(0x20 | ((id + j) % 0x5f).toInt); j += 1 }
-        chunk("VP8L", o.toByteArray)
+        val bits = ((w - 1) & 0x3fff) | ((h - 1) & 0x3fff) << 14 |
+          ((id % 2) << 28).toInt
+        Seq("VP8L" -> ((0x2f.toByte +: bytes(4,
+          java.nio.ByteOrder.LITTLE_ENDIAN)(_.putInt(bits))) ++
+          fill(10 + id % 31)))
       case _ =>
         val alpha = id % 2 == 0
-        val x = new java.io.ByteArrayOutputStream()
-        x.write(if (alpha) 0x10 else 0x00)
-        x.write(0); x.write(0); x.write(0) // reserved
         val wm1 = w - 1; val hm1 = h - 1
-        x.write(wm1 & 0xff); x.write((wm1 >> 8) & 0xff)
-        x.write((wm1 >> 16) & 0xff)
-        x.write(hm1 & 0xff); x.write((hm1 >> 8) & 0xff)
-        x.write((hm1 >> 16) & 0xff)
-        val parts = new java.io.ByteArrayOutputStream()
-        val cx = chunk("VP8X", x.toByteArray)
-        parts.write(cx, 0, cx.length)
-        if (alpha) {
-          val a = chunk("ALPH",
-            Array.tabulate[Byte]((5 + id % 10).toInt)(j =>
-              (0x20 | ((id + j) % 0x5f)).toByte))
-          parts.write(a, 0, a.length)
-        }
-        // embedded frame carries DIFFERENT dims than the canvas
-        val cv = chunk("VP8 ", vp8Body(w / 2 + 1, h / 2 + 1))
-        parts.write(cv, 0, cv.length)
-        parts.toByteArray
+        Seq("VP8X" -> u8s(if (alpha) 0x10 else 0x00, 0, 0, 0, // reserved
+          wm1, wm1 >> 8, wm1 >> 16, hm1, hm1 >> 8, hm1 >> 16)) ++
+          (if (alpha) Seq("ALPH" -> fill(5 + id % 10)) else Nil) :+
+          // embedded frame carries DIFFERENT dims than the canvas
+          ("VP8 " -> vp8Body(w / 2 + 1, h / 2 + 1))
     }
-    val riffSize = 4 + payload.length
-    out.write("RIFF".getBytes("US-ASCII"), 0, 4)
-    out.write(riffSize & 0xff); out.write((riffSize >> 8) & 0xff)
-    out.write((riffSize >> 16) & 0xff); out.write((riffSize >> 24) & 0xff)
-    out.write("WEBP".getBytes("US-ASCII"), 0, 4)
-    out.write(payload, 0, payload.length)
-    out.toByteArray
+    riff("WEBP", chunks)
   }
 
   // ------------------------------------------- VP8L lossless pixels
@@ -6972,89 +5952,30 @@ object MediaCodec {
       }
     }
 
-    /** LSB-first bit reader over a VP8L stream. */
-    final class BitReader(b: Array[Byte], start: Int) {
-      private var bit: Long = start.toLong * 8
-      private val end: Long = b.length.toLong * 8
-      def read(n: Int): Int = {
-        var v = 0; var i = 0
-        while (i < n) {
-          val bp = bit + i
-          if (bp >= end) throw new IllegalArgumentException("VP8L overrun")
-          v |= ((b((bp >> 3).toInt) >>> (bp & 7).toInt) & 1) << i
-          i += 1
-        }
-        bit += n; v
-      }
+    /** A VP8L read: LSB-first; running out of input is corruption
+      * (IllegalArgumentException, which [[decodeVp8l]] maps to None). */
+    def bits(br: BitReader, n: Int): Int = {
+      val v = br.read(n)
+      if (v < 0) throw new IllegalArgumentException("VP8L overrun")
+      v.toInt
     }
 
-    /** LSB-first bit writer; prefix-code bits go MSB-of-code-first. */
-    final class BitWriter {
-      private val out = new java.io.ByteArrayOutputStream()
-      private var acc = 0L; private var nbits = 0
-      def write(v: Long, n: Int): Unit = {
-        acc |= (v & ((1L << n) - 1)) << nbits; nbits += n
-        while (nbits >= 8) {
-          out.write((acc & 0xff).toInt); acc >>>= 8; nbits -= 8
-        }
+    /** One symbol; a one-symbol code reads no bits (spec: simple codes
+      * may carry one symbol). */
+    def readSym(p: PrefixCode, br: BitReader): Int =
+      if (p.single >= 0) p.single
+      else {
+        val s = p.decode(br)
+        if (s < 0) throw new IllegalArgumentException("bad prefix code word")
+        s
       }
-      def writeCode(code: Int, len: Int): Unit = {
-        var i = len - 1
-        while (i >= 0) { write((code >>> i) & 1L, 1); i -= 1 }
-      }
-      def result(): Array[Byte] = {
-        if (nbits > 0) { out.write((acc & 0xff).toInt); acc = 0; nbits = 0 }
-        out.toByteArray
-      }
-    }
 
-    /** Canonical prefix code from code lengths (DEFLATE-style
-      * assignment: codes increase in (length, symbol) order); decoding
-      * descends bit-by-bit from the code's MSB. Kraft completeness is
-      * enforced — except the degenerate single-symbol tree, which
-      * consumes zero bits per read (spec: simple codes may carry one
-      * symbol). */
-    final class Prefix(lengths: Array[Int]) {
-      private val maxLen = lengths.max
-      val singleSymbol: Int = {
-        val nz = lengths.indices.filter(lengths(_) > 0)
-        if (nz.size == 1) nz.head else -1
-      }
-      private val table = new scala.collection.mutable.LongMap[Int]()
-      val codes = new Array[Int](lengths.length) // encoder view
-      if (singleSymbol < 0) {
-        if (maxLen <= 0)
-          throw new IllegalArgumentException("empty prefix code")
-        var kraft = 0L // in units of 2^-maxLen
-        var code = 0
-        var len = 1
-        while (len <= maxLen) {
-          code <<= 1
-          var s = 0
-          while (s < lengths.length) {
-            if (lengths(s) == len) {
-              table.update((len.toLong << 32) | code.toLong, s)
-              codes(s) = code
-              kraft += 1L << (maxLen - len)
-              code += 1
-            }
-            s += 1
-          }
-          len += 1
-        }
-        if (kraft != (1L << maxLen))
-          throw new IllegalArgumentException("prefix code not complete")
-      }
-      def read(br: BitReader): Int = {
-        if (singleSymbol >= 0) return singleSymbol
-        var code = 0; var len = 0
-        while (len < maxLen) {
-          code = (code << 1) | br.read(1); len += 1
-          val hit = table.get((len.toLong << 32) | code.toLong)
-          if (hit.isDefined) return hit.get
-        }
-        throw new IllegalArgumentException("bad prefix code word")
-      }
+    /** A tree the spec admits: Kraft-complete, or a single symbol. */
+    def tree(lengths: Array[Int]): PrefixCode = {
+      val p = new PrefixCode(lengths)
+      if (p.single < 0 && !p.complete)
+        throw new IllegalArgumentException("prefix code not complete")
+      p
     }
 
     /** Encoder side: a 1-symbol simple tree (8-bit symbol form). */
@@ -7076,7 +5997,7 @@ object MediaCodec {
       clLens(16) = 1
       if (used.size == 1) clLens(used.head) = 1
       else { clLens(used(0)) = 2; clLens(used(1)) = 2 }
-      val clTree = new Prefix(clLens)
+      val clTree = new PrefixCode(clLens)
       val maxPos = CodeLengthOrder.indices
         .filter(i => clLens(CodeLengthOrder(i)) > 0).max
       val total = math.max(4, maxPos + 1)
@@ -7118,47 +6039,47 @@ object MediaCodec {
 
     /** Read one tree: the simple form or the code-length-coded form
       * (spec §"Decoding of Meta Prefix Codes"). */
-    def readTree(br: BitReader, alphabetSize: Int): Prefix = {
+    def readTree(br: BitReader, alphabetSize: Int): PrefixCode = {
       val lengths = new Array[Int](alphabetSize)
-      if (br.read(1) == 1) { // simple
-        val numSymbols = br.read(1) + 1
-        val first8 = br.read(1) == 1
-        val s0 = if (first8) br.read(8) else br.read(1)
+      if (bits(br, 1) == 1) { // simple
+        val numSymbols = bits(br, 1) + 1
+        val first8 = bits(br, 1) == 1
+        val s0 = if (first8) bits(br, 8) else bits(br, 1)
         if (s0 >= alphabetSize)
           throw new IllegalArgumentException("simple symbol out of range")
         if (numSymbols == 1) lengths(s0) = 1
         else {
-          val s1 = br.read(8)
+          val s1 = bits(br, 8)
           if (s1 >= alphabetSize || s1 == s0)
             throw new IllegalArgumentException("bad simple pair")
           lengths(s0) = 1; lengths(s1) = 1
         }
       } else {
         val clLens = new Array[Int](19)
-        val numCl = 4 + br.read(4)
+        val numCl = 4 + bits(br, 4)
         var i = 0
         while (i < numCl) {
-          clLens(CodeLengthOrder(i)) = br.read(3); i += 1
+          clLens(CodeLengthOrder(i)) = bits(br, 3); i += 1
         }
-        val clCode = new Prefix(clLens)
+        val clCode = tree(clLens)
         var maxSymbol =
-          if (br.read(1) == 1) { // use_max_symbol
-            val nbits = 2 + 2 * br.read(3)
-            2 + br.read(nbits)
+          if (bits(br, 1) == 1) { // use_max_symbol
+            val nbits = 2 + 2 * bits(br, 3)
+            2 + bits(br, nbits)
           } else alphabetSize
         var sym = 0
         var prev = 8 // spec: initial previous code length
         while (sym < alphabetSize && maxSymbol > 0) {
           maxSymbol -= 1
-          val s = clCode.read(br)
+          val s = readSym(clCode, br)
           if (s < 16) {
             lengths(sym) = s; sym += 1
             if (s != 0) prev = s
           } else {
             val (repeat, value) = s match {
-              case 16 => (3 + br.read(2), prev)
-              case 17 => (3 + br.read(3), 0)
-              case _ => (11 + br.read(7), 0)
+              case 16 => (3 + bits(br, 2), prev)
+              case 17 => (3 + bits(br, 3), 0)
+              case _ => (11 + bits(br, 7), 0)
             }
             if (sym + repeat > alphabetSize)
               throw new IllegalArgumentException("length repeat overrun")
@@ -7167,7 +6088,7 @@ object MediaCodec {
           }
         }
       }
-      new Prefix(lengths)
+      tree(lengths)
     }
   }
 
@@ -7179,18 +6100,18 @@ object MediaCodec {
     * transform sub-images (predictor modes, cross-color elements, the
     * color-indexing palette). Throws IllegalArgumentException on
     * corruption; returns null on an out-of-profile construct. */
-  private def decodeVp8lImage(br: Vp8l.BitReader, w: Int, h: Int,
+  private def decodeVp8lImage(br: BitReader, w: Int, h: Int,
                               level0: Boolean): Array[Int] = {
     import Vp8l.{readTree, prefixOffset, prefixExtraBits, cacheHash,
-      DistanceMap}
-    val cacheBits = if (br.read(1) == 1) br.read(4) else 0
+      DistanceMap, bits, readSym}
+    val cacheBits = if (bits(br, 1) == 1) bits(br, 4) else 0
     if (cacheBits > 11) return null
     // meta-prefix: a sub-image whose (red<<8|green) picks the tree
     // group for each `metaBits`-sized block of the main image
     var metaBits = 0; var metaTw = 0
     var metaIdx: Array[Int] = null
-    if (level0 && br.read(1) == 1) {
-      metaBits = br.read(3) + 2
+    if (level0 && bits(br, 1) == 1) {
+      metaBits = bits(br, 3) + 2
       metaTw = (w + (1 << metaBits) - 1) >> metaBits
       val mh = (h + (1 << metaBits) - 1) >> metaBits
       val sub = decodeVp8lImage(br, metaTw, mh, level0 = false)
@@ -7221,18 +6142,18 @@ object MediaCodec {
           ((pos / w) >> metaBits) * metaTw + ((pos % w) >> metaBits)))
       val green = g.green; val red = g.red; val blue = g.blue
       val alpha = g.alpha; val dist = g.dist
-      val s = green.read(br)
+      val s = readSym(green, br)
       if (s < 256) {
-        val r = red.read(br); val bl = blue.read(br)
-        val a = alpha.read(br)
+        val r = readSym(red, br); val bl = readSym(blue, br)
+        val a = readSym(alpha, br)
         val argb = (a << 24) | (r << 16) | (s << 8) | bl
         px(pos) = argb; insert(argb); pos += 1
       } else if (s < 280) {
         val lc = s - 256
         // prefix value = offset (already includes the +1) + extra bits
-        val length = prefixOffset(lc) + br.read(prefixExtraBits(lc))
-        val ds = dist.read(br)
-        val distCode = prefixOffset(ds) + br.read(prefixExtraBits(ds))
+        val length = prefixOffset(lc) + bits(br, prefixExtraBits(lc))
+        val ds = readSym(dist, br)
+        val distCode = prefixOffset(ds) + bits(br, prefixExtraBits(ds))
         val d0 =
           if (distCode > 120) distCode - 120
           else {
@@ -7270,11 +6191,11 @@ object MediaCodec {
     try {
       import Vp8l._
       if (b.length < 5 || (b(0) & 0xff) != 0x2f) return None
-      val br = new Vp8l.BitReader(b, 1)
-      val w = br.read(14) + 1
-      val h = br.read(14) + 1
-      br.read(1) // alpha hint
-      if (br.read(3) != 0) return None // version must be 0
+      val br = new BitReader(b, 1, msbFirst = false)
+      val w = bits(br, 14) + 1
+      val h = bits(br, 14) + 1
+      bits(br, 1) // alpha hint
+      if (bits(br, 3) != 0) return None // version must be 0
       // transforms, in read order; inverses apply in REVERSE read order
       sealed trait T
       case object SubGreen extends T
@@ -7288,17 +6209,17 @@ object MediaCodec {
       var imgW = w // color-indexing bundles pixels: the coded width shrinks
       var reading = true
       while (reading) {
-        if (br.read(1) == 0) reading = false
-        else br.read(2) match {
+        if (bits(br, 1) == 0) reading = false
+        else bits(br, 2) match {
           case 0 => // predictor: block-size bits + a mode sub-image
-            val sizeBits = br.read(3) + 2
+            val sizeBits = bits(br, 3) + 2
             val tw = (imgW + (1 << sizeBits) - 1) >> sizeBits
             val th = (h + (1 << sizeBits) - 1) >> sizeBits
             val sub = decodeVp8lImage(br, tw, th, level0 = false)
             if (sub == null) return None
             transforms += Pred(sizeBits, tw, sub.map(p => (p >>> 8) & 0xff))
           case 1 => // cross-color: block-size bits + element sub-image
-            val sizeBits = br.read(3) + 2
+            val sizeBits = bits(br, 3) + 2
             val tw = (imgW + (1 << sizeBits) - 1) >> sizeBits
             val th = (h + (1 << sizeBits) - 1) >> sizeBits
             val sub = decodeVp8lImage(br, tw, th, level0 = false)
@@ -7306,7 +6227,7 @@ object MediaCodec {
             transforms += Cross(sizeBits, tw, sub)
           case 2 => transforms += SubGreen
           case 3 => // color indexing: delta-coded palette row
-            val nColors = br.read(8) + 1
+            val nColors = bits(br, 8) + 1
             val stored = decodeVp8lImage(br, nColors, 1, level0 = false)
             if (stored == null) return None
             val pal = new Array[Int](nColors)
@@ -7399,15 +6320,12 @@ object MediaCodec {
   def parseWebplPixels(id: Long, b: Array[Byte]): Option[WebplPixels] = {
     val meta = parseWebpMeta(id, b).getOrElse(return None)
     if (meta.format != "lossless") return None
-    // locate the VP8L chunk body
-    var pos = 12
+    // the VP8L chunk body (parseWebpMeta verified every chunk's bounds)
     var body: Array[Byte] = null
-    while (body == null && pos + 8 <= b.length) {
-      val fourcc = tag(b, pos)
-      val size = le32(b, pos + 4).toInt
+    riffWalk(b, 12) { (fourcc, at, size) =>
       if (fourcc == "VP8L")
-        body = java.util.Arrays.copyOfRange(b, pos + 8, pos + 8 + size)
-      pos += 8 + size + (size & 1)
+        body = java.util.Arrays.copyOfRange(b, at, at + size.toInt)
+      body == null
     }
     if (body == null) return None
     val (w, h, px) = decodeVp8l(body).getOrElse(return None)
@@ -7450,9 +6368,9 @@ object MediaCodec {
     }
     val greenLens = splitLens(256 + 24 + (1 << cacheBits), 8)
     val byteLens = Array.fill(256)(8)
-    val greenTree = new Prefix(greenLens)
-    val byteTree = new Prefix(byteLens)
-    val bw = new BitWriter
+    val greenTree = new PrefixCode(greenLens)
+    val byteTree = new PrefixCode(byteLens)
+    val bw = new BitWriter(msbFirst = false)
     bw.write((w - 1).toLong, 14); bw.write((h - 1).toLong, 14)
     bw.write(0, 1); bw.write(0, 3) // no alpha hint, version 0
     bw.write(1, 1); bw.write(2, 2) // transform: subtract-green
@@ -7499,41 +6417,12 @@ object MediaCodec {
         ((w - 7) until w).foreach(x => emitPixel(argbAt(x, y)))
       }
     }
-    val stream = bw.result()
-    // RIFF container
-    val chunkLen = 1 + stream.length
-    val riffSize = 4 + 8 + chunkLen + (chunkLen & 1)
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    out.write("RIFF".getBytes("US-ASCII"), 0, 4); u32(riffSize.toLong)
-    out.write("WEBP".getBytes("US-ASCII"), 0, 4)
-    out.write("VP8L".getBytes("US-ASCII"), 0, 4); u32(chunkLen.toLong)
-    out.write(0x2f)
-    out.write(stream, 0, stream.length)
-    if ((chunkLen & 1) == 1) out.write(0)
-    out.toByteArray
+    webplContainer(bw.toBytes)
   }
 
   /** Wrap a raw VP8L entropy stream into RIFF/WEBP/VP8L framing. */
-  private def webplContainer(stream: Array[Byte]): Array[Byte] = {
-    val chunkLen = 1 + stream.length
-    val riffSize = 4 + 8 + chunkLen + (chunkLen & 1)
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    out.write("RIFF".getBytes("US-ASCII"), 0, 4); u32(riffSize.toLong)
-    out.write("WEBP".getBytes("US-ASCII"), 0, 4)
-    out.write("VP8L".getBytes("US-ASCII"), 0, 4); u32(chunkLen.toLong)
-    out.write(0x2f)
-    out.write(stream, 0, stream.length)
-    if ((chunkLen & 1) == 1) out.write(0)
-    out.toByteArray
-  }
+  private def webplContainer(stream: Array[Byte]): Array[Byte] =
+    riff("WEBP", Seq("VP8L" -> (0x2f.toByte +: stream)))
 
   /** One literal-coded entropy image: green channel from `greens`
     * through a code-length-coded tree over `alphabet` symbols; red /
@@ -7541,14 +6430,14 @@ object MediaCodec {
     * either a 1-symbol simple tree (when constant) or the 256×8
     * table. Writes trees + pixels ONLY — the cache bit (and, for the
     * main image, the meta-prefix bit) belongs to the caller. */
-  private def writeLiteralImage(bw: Vp8l.BitWriter, greens: Array[Int],
+  private def writeLiteralImage(bw: BitWriter, greens: Array[Int],
       alphabet: Int, red: Int => Int, blue: Int => Int,
       alpha: Int => Int, constRba: Option[(Int, Int, Int)]): Unit = {
     import Vp8l._
     val greenLens = splitLens(alphabet, 8)
-    val greenTree = new Prefix(greenLens)
+    val greenTree = new PrefixCode(greenLens)
     val byteLens = Array.fill(256)(8)
-    val byteTree = new Prefix(byteLens)
+    val byteTree = new PrefixCode(byteLens)
     writeLens(bw, greenLens)
     constRba match {
       case Some((r, b, a)) =>
@@ -7589,7 +6478,7 @@ object MediaCodec {
     val wb = if (k <= 2) 3 else if (k <= 4) 2 else 1 // k ≤ 16 always
     val bitsPp = 8 >> wb
     val subW = (w + (1 << wb) - 1) >> wb
-    val bw = new BitWriter
+    val bw = new BitWriter(msbFirst = false)
     bw.write((w - 1).toLong, 14); bw.write((h - 1).toLong, 14)
     bw.write(0, 1); bw.write(0, 3)
     bw.write(1, 1); bw.write(3, 2)        // transform: color indexing
@@ -7612,18 +6501,18 @@ object MediaCodec {
     bw.write(0, 1) // main image: no cache
     bw.write(0, 1) // no meta-prefix image
     writeLiteralImage0(bw, packed, 280)
-    webplContainer(bw.result())
+    webplContainer(bw.toBytes)
   }
 
   /** Literal image with constant r=0, b=0, a=255 channels — the packed
     * index / predictor-mode sub-image shape (only green carries data).
     * NOTE: writes trees + pixels only (cache/meta bits are the
     * caller's, since sub-images have no meta bit). */
-  private def writeLiteralImage0(bw: Vp8l.BitWriter, greens: Array[Int],
+  private def writeLiteralImage0(bw: BitWriter, greens: Array[Int],
                                  alphabet: Int): Unit = {
     import Vp8l._
     val greenLens = splitLens(alphabet, 8)
-    val greenTree = new Prefix(greenLens)
+    val greenTree = new PrefixCode(greenLens)
     writeLens(bw, greenLens)
     writeSimple1(bw, 0); writeSimple1(bw, 0) // red, blue
     writeSimple1(bw, 255)                    // alpha
@@ -7661,7 +6550,7 @@ object MediaCodec {
           modes((y >> sizeBits) * tw + (x >> sizeBits)))
       subPixels(truth(i), pred)
     }
-    val bw = new BitWriter
+    val bw = new BitWriter(msbFirst = false)
     bw.write((w - 1).toLong, 14); bw.write((h - 1).toLong, 14)
     bw.write(0, 1); bw.write(0, 3)
     bw.write(1, 1); bw.write(0, 2)          // transform: predictor
@@ -7674,7 +6563,7 @@ object MediaCodec {
     writeLiteralImage(bw, residuals.map(p => (p >>> 8) & 0xff), 280,
       i => (residuals(i) >>> 16) & 0xff, i => residuals(i) & 0xff,
       i => (residuals(i) >>> 24) & 0xff, constRba = None)
-    webplContainer(bw.result())
+    webplContainer(bw.toBytes)
   }
 
   /** Deterministic VP8L CROSS-COLOR fixture: the truth pattern
@@ -7715,7 +6604,7 @@ object MediaCodec {
         ctDelta(r2b(bi), r)) & 0xff
       (p & 0xff00ff00) | (nr << 16) | nb
     }
-    val bw = new BitWriter
+    val bw = new BitWriter(msbFirst = false)
     bw.write((w - 1).toLong, 14); bw.write((h - 1).toLong, 14)
     bw.write(0, 1); bw.write(0, 3)
     bw.write(1, 1); bw.write(1, 2)          // transform: cross-color
@@ -7732,7 +6621,7 @@ object MediaCodec {
     writeLiteralImage(bw, residuals.map(p => (p >>> 8) & 0xff), 280,
       i => (residuals(i) >>> 16) & 0xff, i => residuals(i) & 0xff,
       i => 0xff, constRba = None)
-    webplContainer(bw.result())
+    webplContainer(bw.toBytes)
   }
 
   /** Deterministic VP8L META-PREFIX fixture: 2 + id mod 3 five-tree
@@ -7757,10 +6646,10 @@ object MediaCodec {
     // rotated — different canonical codes per group
     val greenLens = Array.tabulate(numGroups)(g =>
       Array.tabulate(280)(sym => base((sym + 37 * g) % 280)))
-    val greenTrees = greenLens.map(new Prefix(_))
+    val greenTrees = greenLens.map(new PrefixCode(_))
     val byteLens = Array.fill(256)(8)
-    val byteTree = new Prefix(byteLens)
-    val bw = new BitWriter
+    val byteTree = new PrefixCode(byteLens)
+    val bw = new BitWriter(msbFirst = false)
     bw.write((w - 1).toLong, 14); bw.write((h - 1).toLong, 14)
     bw.write(0, 1); bw.write(0, 3)
     bw.write(0, 1) // no transforms
@@ -7785,7 +6674,7 @@ object MediaCodec {
       bw.writeCode(byteTree.codes((7 * ci) % 251), 8)
       bw.writeCode(byteTree.codes((5 * ci) % 241), 8)
     }
-    webplContainer(bw.result())
+    webplContainer(bw.toBytes)
   }
 
   // --------------------------------------------------- Matroska/EBML
@@ -7824,26 +6713,17 @@ object MediaCodec {
   def parseMkvMeta(id: Long, b: Array[Byte]): Option[MkvMeta] = {
     var pos = 0
     def readId(): Long = {
-      if (pos >= b.length) return -1
-      val first = b(pos) & 0xff
-      val width = Integer.numberOfLeadingZeros(first) - 24 + 1
-      if (width < 1 || width > 4 || pos + width > b.length) return -1
-      val v = beUint(b, pos, pos + width)
+      val (v, width) = Ebml.vint(b, pos, keepMarker = true)
+      if (width == 0 || width > 4) return -1
       pos += width
       v
     }
     def readSize(): Long = {
-      if (pos >= b.length) return -1
-      val first = b(pos) & 0xff
-      val width = Integer.numberOfLeadingZeros(first) - 24 + 1
-      if (width < 1 || width > 8 || pos + width > b.length) return -1
-      var v = (first & (0xff >>> width)).toLong
-      var i = 1
-      while (i < width) { v = (v << 8) | (b(pos + i) & 0xffL); i += 1 }
+      val (v, width) = Ebml.vint(b, pos, keepMarker = false)
+      if (width == 0) return -1
       pos += width
       // all-ones payload = "unknown size": not valid in this profile
-      if (v == (1L << (7 * width)) - 1) return -1
-      v
+      if (v == (1L << (7 * width)) - 1) -1 else v
     }
     def floatAt(from: Int, until: Int): Double = (until - from) match {
       case 4 => java.lang.Float.intBitsToFloat(beUint(b, from, until).toInt)
@@ -7949,35 +6829,7 @@ object MediaCodec {
     * element offsets vary with every field — a vint-width bug shifts
     * everything after it. */
   def buildMkvPattern(id: Long, nChars: Long): Array[Byte] = {
-    def vintSize(v: Long): Array[Byte] = {
-      var width = 1
-      while (width <= 8 && v >= (1L << (7 * width)) - 1) width += 1
-      Array.tabulate[Byte](width) { i =>
-        val shifted = v >>> (8 * (width - 1 - i))
-        val byte = if (i == 0) (0x100 >>> width) | shifted else shifted
-        (byte & 0xff).toByte
-      }
-    }
-    def idBytes(eid: Long): Array[Byte] = {
-      val width = if (eid <= 0xffL) 1 else if (eid <= 0xffffL) 2
-        else if (eid <= 0xffffffL) 3 else 4
-      Array.tabulate[Byte](width)(i =>
-        ((eid >>> (8 * (width - 1 - i))) & 0xff).toByte)
-    }
-    def el(eid: Long, body: Array[Byte]): Array[Byte] =
-      idBytes(eid) ++ vintSize(body.length.toLong) ++ body
-    def uintBody(v: Long): Array[Byte] = {
-      var width = 1
-      while (width < 8 && (v >>> (8 * width)) != 0) width += 1
-      Array.tabulate[Byte](width)(i =>
-        ((v >>> (8 * (width - 1 - i))) & 0xff).toByte)
-    }
-    def floatBody(d: Double): Array[Byte] = {
-      val bits = java.lang.Double.doubleToLongBits(d)
-      Array.tabulate[Byte](8)(i => ((bits >>> (8 * (7 - i))) & 0xff).toByte)
-    }
-    def strBody(s: String): Array[Byte] = s.getBytes("US-ASCII")
-
+    import Ebml.{el, uint, float}
     val docType = if (id % 2 == 0) "webm" else "matroska"
     val durationMs = (1000 + id % 9000).toDouble
     val vCodec = (id % 3) match {
@@ -7989,29 +6841,29 @@ object MediaCodec {
     val nBlocks = (3 + nChars % 5).toInt
 
     val ebml = el(Mkv.EBML,
-      el(0x4286L, uintBody(1)) ++ el(0x42F7L, uintBody(1)) ++
-        el(0x42F2L, uintBody(4)) ++ el(0x42F3L, uintBody(8)) ++
-        el(Mkv.DocType, strBody(docType)) ++
-        el(0x4287L, uintBody(4)) ++ el(0x4285L, uintBody(2)))
+      el(0x4286L, uint(1)) ++ el(0x42F7L, uint(1)) ++
+        el(0x42F2L, uint(4)) ++ el(0x42F3L, uint(8)) ++
+        el(Mkv.DocType, ascii(docType)) ++
+        el(0x4287L, uint(4)) ++ el(0x4285L, uint(2)))
     val info = el(Mkv.Info,
-      el(Mkv.TimestampScale, uintBody(1000000L)) ++
-        el(Mkv.Duration, floatBody(durationMs)) ++
-        el(Mkv.MuxingApp, strBody("graft")) ++
-        el(Mkv.WritingApp, strBody("graft")))
+      el(Mkv.TimestampScale, uint(1000000L)) ++
+        el(Mkv.Duration, float(durationMs)) ++
+        el(Mkv.MuxingApp, ascii("graft")) ++
+        el(Mkv.WritingApp, ascii("graft")))
     val videoTrack = el(Mkv.TrackEntry,
-      el(Mkv.TrackNumber, uintBody(1)) ++
-        el(Mkv.TrackUID, uintBody(id + 1)) ++
-        el(Mkv.TrackType, uintBody(1)) ++
-        el(Mkv.CodecID, strBody(vCodec)) ++
-        el(Mkv.Video, el(Mkv.PixelWidth, uintBody(w.toLong)) ++
-          el(Mkv.PixelHeight, uintBody(h.toLong))))
+      el(Mkv.TrackNumber, uint(1)) ++
+        el(Mkv.TrackUID, uint(id + 1)) ++
+        el(Mkv.TrackType, uint(1)) ++
+        el(Mkv.CodecID, ascii(vCodec)) ++
+        el(Mkv.Video, el(Mkv.PixelWidth, uint(w.toLong)) ++
+          el(Mkv.PixelHeight, uint(h.toLong))))
     val audioTrack = el(Mkv.TrackEntry,
-      el(Mkv.TrackNumber, uintBody(2)) ++
-        el(Mkv.TrackUID, uintBody(id + 2)) ++
-        el(Mkv.TrackType, uintBody(2)) ++
-        el(Mkv.CodecID, strBody(aCodec)) ++
-        el(Mkv.Audio, el(Mkv.SamplingFrequency, floatBody(rate)) ++
-          el(Mkv.Channels, uintBody(1 + id % 2))))
+      el(Mkv.TrackNumber, uint(2)) ++
+        el(Mkv.TrackUID, uint(id + 2)) ++
+        el(Mkv.TrackType, uint(2)) ++
+        el(Mkv.CodecID, ascii(aCodec)) ++
+        el(Mkv.Audio, el(Mkv.SamplingFrequency, float(rate)) ++
+          el(Mkv.Channels, uint(1 + id % 2))))
     val tracks = el(Mkv.Tracks, videoTrack ++ audioTrack)
     val blocks = (0 until nBlocks).flatMap { k =>
       val payloadLen = (20 + (id + 13L * k) % 100).toInt
@@ -8027,7 +6879,7 @@ object MediaCodec {
       el(Mkv.SimpleBlock, body.toByteArray)
     }.toArray
     val cluster = el(Mkv.Cluster,
-      el(Mkv.Timestamp, uintBody(0)) ++ blocks)
+      el(Mkv.Timestamp, uint(0)) ++ blocks)
     val segment = el(Mkv.Segment, info ++ tracks ++ cluster)
     ebml ++ segment
   }
@@ -8129,42 +6981,13 @@ object MediaCodec {
     }
   }
 
-  /** Reassemble EVERY packet of a single-serial stream from the
-    * validated page walk (page-spanning packets are outside the
-    * builders' profile → None). */
-  private def allOggPackets(b: Array[Byte], pages: Vector[OggPageRef])
-      : Option[Seq[Array[Byte]]] = {
-    val packets = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-    var pi = 0
-    while (pi < pages.size) {
-      val pg = pages(pi)
-      var off = pg.payloadOff
-      var len = 0
-      var open = false
-      var k = 0
-      while (k < pg.lacing.length) {
-        len += pg.lacing(k)
-        open = pg.lacing(k) == 255
-        if (!open) {
-          packets += java.util.Arrays.copyOfRange(b, off, off + len)
-          off += len
-          len = 0
-        }
-        k += 1
-      }
-      if (open) return None
-      pi += 1
-    }
-    Some(packets.toSeq)
-  }
-
   /** Ogg walk → OpusHead/OpusTags headers verified → every audio
     * packet's TOC parsed — total frames, exact duration in µs (2.5 ms
     * CELT frames make ms lossy), stereo-flag count, padding data
     * bytes, frame byte totals. */
   def parseOpusToc(id: Long, b: Array[Byte]): Option[OpusTocMeta] = {
     val pages = walkOggPages(b).getOrElse(return None)
-    val packets = allOggPackets(b, pages).getOrElse(return None)
+    val packets = oggPackets(b, pages).getOrElse(return None)
     if (packets.size < 3) return None
     val ascii = java.nio.charset.StandardCharsets.US_ASCII
     if (packets(0).length < 8 ||
@@ -8434,117 +7257,13 @@ object MediaCodec {
       height: Int, nStrips: Int, sumPix: Long, peak: Int, firstPix: Int)
 
   /** TIFF 6.0 strip codecs (public spec, §9 PackBits + §13 LZW).
-    * TIFF LZW is the MSB-first variant with the EARLY-CHANGE rule:
-    * the encoder widens the code size after the add that makes the
-    * next free entry 511/1023/2047, the decoder — whose table lags
-    * the encoder's by exactly one add — after 510/1022/2046; the
-    * encoder emits ClearCode when the table reaches 4094 so entry
-    * 4095 is never allocated. Matched encoder (fixture) + decoder
-    * (engine) pairs; the decoder is defensive against corrupt input
-    * (returns null, the caller maps it to a skipped payload). */
+    * TIFF LZW is the shared [[Lzw]], MSB-first with early change: the
+    * encoder emits ClearCode before the table would take entry 4094,
+    * so 4095 is never allocated. Matched encoder (fixture) + decoder
+    * (engine) pairs; the decoders are defensive against corrupt input
+    * (they return null, the caller maps it to a skipped payload). */
   private[operators] object TiffCodec {
-    def lzwDecode(b: Array[Byte], off: Int, len: Int,
-                  expect: Int): Array[Byte] = {
-      val out = new Array[Byte](expect)
-      var outPos = 0
-      var bitPos = 0L
-      val endBit = len.toLong * 8
-      var width = 9
-      val prefix = new Array[Int](4096)
-      val suffix = new Array[Byte](4096)
-      val strLen = new Array[Int](4096)
-      var next = 258
-      var prev = -1
-      def read(): Int = {
-        if (bitPos + width > endBit) return -1
-        var v = 0; var i = 0
-        while (i < width) {
-          val p = off + (bitPos >> 3).toInt
-          v = (v << 1) | ((b(p) >> (7 - (bitPos & 7).toInt)) & 1)
-          bitPos += 1; i += 1
-        }
-        v
-      }
-      def lenOf(c: Int): Int = if (c < 256) 1 else strLen(c)
-      def firstByte(c0: Int): Byte = {
-        var c = c0; while (c >= 256) c = prefix(c); c.toByte
-      }
-      def emit(code: Int): Boolean = {
-        val l = lenOf(code)
-        if (outPos + l > expect) return false
-        var i = outPos + l - 1; var c = code
-        while (c >= 256) { out(i) = suffix(c); i -= 1; c = prefix(c) }
-        out(i) = c.toByte
-        outPos += l
-        true
-      }
-      while (true) {
-        val code = read()
-        if (code < 0) return null
-        if (code == 256) { next = 258; width = 9; prev = -1 }
-        else if (code == 257) return if (outPos == expect) out else null
-        else if (prev < 0) {
-          if (code >= 256) return null
-          if (!emit(code)) return null
-          prev = code
-        } else {
-          if (code < next && code != 256 && code != 257) {
-            if (!emit(code)) return null
-            if (next < 4096) {
-              prefix(next) = prev; suffix(next) = firstByte(code)
-              strLen(next) = lenOf(prev) + 1; next += 1
-            }
-          } else if (code == next && next < 4096) { // KwKwK
-            prefix(next) = prev; suffix(next) = firstByte(prev)
-            strLen(next) = lenOf(prev) + 1; next += 1
-            if (!emit(code)) return null
-          } else return null
-          prev = code
-          if (next == 510 || next == 1022 || next == 2046) width += 1
-        }
-      }
-      null
-    }
-
-    def lzwEncode(data: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      var acc = 0L; var nbits = 0
-      var width = 9
-      def put(code: Int): Unit = {
-        acc = (acc << width) | code.toLong; nbits += width
-        while (nbits >= 8) {
-          out.write(((acc >> (nbits - 8)) & 0xff).toInt); nbits -= 8
-        }
-      }
-      val table = new java.util.HashMap[Integer, Integer]()
-      var next = 258
-      put(256) // initial Clear per spec
-      var prev = -1
-      var i = 0
-      while (i < data.length) {
-        val c = data(i) & 0xff
-        if (prev < 0) prev = c
-        else {
-          val key = Integer.valueOf((prev << 8) | c)
-          val hit = table.get(key)
-          if (hit != null) prev = hit.intValue()
-          else {
-            put(prev)
-            table.put(key, Integer.valueOf(next)); next += 1
-            if (next == 511 || next == 1023 || next == 2047) width += 1
-            else if (next == 4094) {
-              put(256); table.clear(); next = 258; width = 9
-            }
-            prev = c
-          }
-        }
-        i += 1
-      }
-      if (prev >= 0) put(prev)
-      put(257) // EOI
-      if (nbits > 0) out.write(((acc << (8 - nbits)) & 0xff).toInt)
-      out.toByteArray
-    }
+    val lzw: Lzw = Lzw(8, msbFirst = true, earlyChange = true)
 
     def packBitsDecode(b: Array[Byte], off: Int, len: Int,
                        expect: Int): Array[Byte] = {
@@ -8691,32 +7410,13 @@ object MediaCodec {
           if (counts(s) != expected) return None
           java.util.Arrays.copyOfRange(b, off, off + expected)
         case 5 =>
-          val d = TiffCodec.lzwDecode(b, off, counts(s).toInt, expected)
-          if (d == null) return None
-          d
+          TiffCodec.lzw.decode(b, off, off + counts(s).toInt, expected)
         case 8 | 32946 => // Adobe deflate / legacy deflate: zlib strips
-          val out = new Array[Byte](expected)
-          val inf = new java.util.zip.Inflater()
-          try {
-            inf.setInput(b, off, counts(s).toInt)
-            var got = 0
-            while (got < expected && !inf.finished()) {
-              val n = inf.inflate(out, got, expected - got)
-              if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-                return None
-              got += n
-            }
-            if (got < expected) return None
-          } catch {
-            case _: java.util.zip.DataFormatException => return None
-          } finally inf.end()
-          out
+          inflateExactly(b, off, counts(s).toInt, expected)
         case _ => // 32773 PackBits
-          val d = TiffCodec.packBitsDecode(b, off, counts(s).toInt,
-            expected)
-          if (d == null) return None
-          d
+          TiffCodec.packBitsDecode(b, off, counts(s).toInt, expected)
       }
+      if (raw == null) return None
       // Predictor 2 (horizontal differencing): each row is stored as
       // deltas; the first column is absolute
       if (predictor == 2) {
@@ -8747,15 +7447,14 @@ object MediaCodec {
       offsets.size, sum, peak, first))
   }
 
-  /** Deterministic baseline-gray TIFF: byte order rotates II/MM, strip
-    * geometry from RowsPerStrip 1-4 (multi-strip offset/count arrays in
-    * the data area), pixel(x,y) = (id + 3x + 7y) mod 251. */
-  def buildTiffPattern(id: Long): Array[Byte] = {
-    val little = id % 2 == 0
-    val w = 8 + (id % 40).toInt
-    val h = 6 + (id % 30).toInt
-    val rps = 1 + (id % 4).toInt
-    val nStrips = (h + rps - 1) / rps
+  /** A one-IFD 8-bit grayscale TIFF in either byte order: the header,
+    * the IFD (9 entries, a 10th for Predictor 2), the StripOffsets and
+    * StripByteCounts arrays in the data area — written even for one
+    * strip, whose entries then hold the value inline, so offsets stay
+    * layout-stable — then the strips. */
+  private def tiffFile(little: Boolean, w: Int, h: Int, rps: Int,
+                       compression: Int, predictor: Int,
+                       strips: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def w16(v: Int): Unit =
       if (little) { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
@@ -8765,49 +7464,54 @@ object MediaCodec {
         out.write(((v >>> (8 * i)) & 0xff).toInt))
       else (3 to 0 by -1).foreach(i =>
         out.write(((v >>> (8 * i)) & 0xff).toInt))
-    out.write(if (little) 'I' else 'M'); out.write(if (little) 'I' else 'M')
-    w16(42)
-    w32(8) // IFD right after the header
-    val nEntries = 9
-    // layout: IFD at 8, entries 12B each + count(2) + next(4); then the
-    // offsets/counts arrays (LONG), then pixel strips
-    val ifdEnd = 8 + 2 + 12 * nEntries + 4
-    val offArrayAt = ifdEnd
-    val cntArrayAt = offArrayAt + 4 * nStrips
-    val pixAt = cntArrayAt + 4 * nStrips
-    val stripOffsets = (0 until nStrips).map { s =>
-      pixAt.toLong + (0 until s).map(t =>
-        math.min(rps, h - t * rps).toLong * w).sum
-    }
-    w16(nEntries)
     def entry(tag: Int, tpe: Int, count: Long, value: Long): Unit = {
       w16(tag); w16(tpe); w32(count)
       if (tpe == 3) { w16(value.toInt); w16(0) } else w32(value)
     }
+    val nStrips = strips.size
+    val nEntries = if (predictor == 2) 10 else 9
+    // layout: IFD at 8, entries 12B each + count(2) + next(4); then the
+    // offsets/counts arrays (LONG), then pixel strips
+    val offArrayAt = 8 + 2 + 12 * nEntries + 4
+    val cntArrayAt = offArrayAt + 4 * nStrips
+    val stripOffsets = strips.indices.map { s =>
+      cntArrayAt + 4L * nStrips + strips.take(s).map(_.length.toLong).sum
+    }
+    out.write(if (little) 'I' else 'M'); out.write(if (little) 'I' else 'M')
+    w16(42)
+    w32(8) // IFD right after the header
+    w16(nEntries)
     entry(256, 4, 1, w.toLong)  // ImageWidth
     entry(257, 4, 1, h.toLong)  // ImageLength
     entry(258, 3, 1, 8)         // BitsPerSample
-    entry(259, 3, 1, 1)         // Compression: none
+    entry(259, 3, 1, compression.toLong)
     entry(262, 3, 1, 1)         // Photometric: BlackIsZero
     entry(273, 4, nStrips.toLong, // StripOffsets
       if (nStrips == 1) stripOffsets.head else offArrayAt.toLong)
     entry(277, 3, 1, 1)         // SamplesPerPixel
     entry(278, 4, 1, rps.toLong) // RowsPerStrip
     entry(279, 4, nStrips.toLong, // StripByteCounts
-      if (nStrips == 1) math.min(rps, h).toLong * w else cntArrayAt.toLong)
+      if (nStrips == 1) strips.head.length.toLong else cntArrayAt.toLong)
+    if (predictor == 2) entry(317, 3, 1, 2)
     w32(0) // next IFD
-    // data-area arrays are written even when nStrips == 1 (harmless
-    // dead bytes) so the strip offsets above stay layout-stable
     stripOffsets.foreach(w32)
-    (0 until nStrips).foreach { s =>
-      w32(math.min(rps, h - s * rps).toLong * w)
-    }
-    (0 until h).foreach { y =>
-      (0 until w).foreach { x =>
-        out.write(((id + 3 * x + 7 * y) % 251).toInt)
-      }
-    }
+    strips.foreach(s => w32(s.length.toLong))
+    strips.foreach(s => out.write(s, 0, s.length))
     out.toByteArray
+  }
+
+  /** Deterministic baseline-gray TIFF: byte order rotates II/MM, strip
+    * geometry from RowsPerStrip 1-4 (multi-strip offset/count arrays in
+    * the data area), pixel(x,y) = (id + 3x + 7y) mod 251. */
+  def buildTiffPattern(id: Long): Array[Byte] = {
+    val w = 8 + (id % 40).toInt
+    val h = 6 + (id % 30).toInt
+    val rps = 1 + (id % 4).toInt
+    val strips = (0 until (h + rps - 1) / rps).map { s =>
+      Array.tabulate[Byte](math.min(rps, h - s * rps) * w)(i =>
+        ((id + 3 * (i % w) + 7 * (s * rps + i / w)) % 251).toByte)
+    }
+    tiffFile(id % 2 == 0, w, h, rps, 1, 1, strips) // Compression: none
   }
 
   /** Deterministic COMPRESSED grayscale TIFF rotating the THREE wild
@@ -8819,7 +7523,6 @@ object MediaCodec {
     * order rotate like the baseline fixture, StripByteCounts carry
     * the VARIABLE compressed sizes. */
   def buildTiffCompressedPattern(id: Long): Array[Byte] = {
-    val little = id % 2 == 0
     val compression = (id % 3) match {
       case 0 => 5; case 1 => 32773; case _ => 8
     }
@@ -8851,61 +7554,12 @@ object MediaCodec {
         }
       }
       compression match {
-        case 5 => TiffCodec.lzwEncode(raw)
+        case 5 => TiffCodec.lzw.encode(raw)
         case 32773 => TiffCodec.packBitsEncode(raw, w)
-        case _ =>
-          val d = new java.util.zip.Deflater()
-          val zs = new java.io.ByteArrayOutputStream()
-          try {
-            d.setInput(raw); d.finish()
-            val buf = new Array[Byte](4096)
-            while (!d.finished()) zs.write(buf, 0, d.deflate(buf))
-          } finally d.end()
-          zs.toByteArray
+        case _ => deflate(raw)
       }
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit =
-      if (little) { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      else { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    def w32(v: Long): Unit =
-      if (little) (0 until 4).foreach(i =>
-        out.write(((v >>> (8 * i)) & 0xff).toInt))
-      else (3 to 0 by -1).foreach(i =>
-        out.write(((v >>> (8 * i)) & 0xff).toInt))
-    out.write(if (little) 'I' else 'M'); out.write(if (little) 'I' else 'M')
-    w16(42)
-    w32(8)
-    val nEntries = if (predictor == 2) 10 else 9
-    val ifdEnd = 8 + 2 + 12 * nEntries + 4
-    val offArrayAt = ifdEnd
-    val cntArrayAt = offArrayAt + 4 * nStrips
-    val pixAt = cntArrayAt + 4 * nStrips
-    val stripOffsets = strips.indices.map { s =>
-      pixAt.toLong + strips.take(s).map(_.length.toLong).sum
-    }
-    w16(nEntries)
-    def entry(tag: Int, tpe: Int, count: Long, value: Long): Unit = {
-      w16(tag); w16(tpe); w32(count)
-      if (tpe == 3) { w16(value.toInt); w16(0) } else w32(value)
-    }
-    entry(256, 4, 1, w.toLong)
-    entry(257, 4, 1, h.toLong)
-    entry(258, 3, 1, 8)
-    entry(259, 3, 1, compression.toLong)
-    entry(262, 3, 1, 1)
-    entry(273, 4, nStrips.toLong,
-      if (nStrips == 1) stripOffsets.head else offArrayAt.toLong)
-    entry(277, 3, 1, 1)
-    entry(278, 4, 1, rps.toLong)
-    entry(279, 4, nStrips.toLong,
-      if (nStrips == 1) strips.head.length.toLong else cntArrayAt.toLong)
-    if (predictor == 2) entry(317, 3, 1, 2)
-    w32(0)
-    stripOffsets.foreach(w32)
-    strips.foreach(s => w32(s.length.toLong))
-    strips.foreach(s => out.write(s, 0, s.length))
-    out.toByteArray
+    tiffFile(id % 2 == 0, w, h, rps, compression, predictor, strips)
   }
 
 }

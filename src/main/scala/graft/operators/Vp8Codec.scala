@@ -679,22 +679,8 @@ object Vp8Codec {
 
   /** Wrap a raw VP8 frame in RIFF/WEBP/'VP8 ' framing — the layout of
     * virtually every lossy WebP on the web. */
-  def buildWebpLossy(id: Long, nChars: Long): Array[Byte] = {
-    val frame = buildVp8Frame(2 * id + 1, nChars + 5)
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    val riffSize = 4 + 8 + frame.length + (frame.length & 1)
-    out.write("RIFF".getBytes("US-ASCII"), 0, 4); u32(riffSize.toLong)
-    out.write("WEBP".getBytes("US-ASCII"), 0, 4)
-    out.write("VP8 ".getBytes("US-ASCII"), 0, 4); u32(frame.length.toLong)
-    out.write(frame, 0, frame.length)
-    if ((frame.length & 1) == 1) out.write(0)
-    out.toByteArray
-  }
+  def buildWebpLossy(id: Long, nChars: Long): Array[Byte] =
+    riff("WEBP", Seq("VP8 " -> buildVp8Frame(2 * id + 1, nChars + 5)))
 
   /** RIFF walk to the 'VP8 ' chunk (sizes verified), then
     * [[decodeFrame]]. The frame's own dims must agree with nothing
@@ -703,16 +689,14 @@ object Vp8Codec {
     if (b.length < 20) return None
     if (tag(b, 0) != "RIFF" || tag(b, 8) != "WEBP") return None
     if (le32(b, 4) != b.length - 8) return None
-    var pos = 12
-    while (pos + 8 <= b.length) {
-      val t = tag(b, pos); val len = le32(b, pos + 4)
-      if (len > Int.MaxValue - 8 || pos + 8 + len > b.length) return None
-      if (t == "VP8 ")
-        return parseVp8Pixels(id,
-          java.util.Arrays.copyOfRange(b, pos + 8, pos + 8 + len.toInt))
-      pos += 8 + len.toInt + (len.toInt & 1)
+    var frame: Array[Byte] = null
+    riffWalk(b, 12) { (t, body, size) =>
+      val fits = body + size <= b.length
+      if (fits && t == "VP8 ")
+        frame = java.util.Arrays.copyOfRange(b, body, body + size.toInt)
+      fits && frame == null
     }
-    None
+    if (frame == null) None else parseVp8Pixels(id, frame)
   }
 
   // --------------------------------------------------- WebM container
@@ -726,44 +710,21 @@ object Vp8Codec {
     * actual video). Element sizes are minimal-width vints via the
     * same arithmetic the Matroska metadata fixture uses. */
   def buildWebmVideo(id: Long, nChars: Long): Array[Byte] = {
-    def vintSize(v: Long): Array[Byte] = {
-      var width = 1
-      while (width <= 8 && v >= (1L << (7 * width)) - 1) width += 1
-      Array.tabulate[Byte](width) { i =>
-        val shifted = v >>> (8 * (width - 1 - i))
-        val byte = if (i == 0) (0x100 >>> width) | shifted else shifted
-        (byte & 0xff).toByte
-      }
-    }
-    def idBytes(eid: Long): Array[Byte] = {
-      val width = if (eid <= 0xffL) 1 else if (eid <= 0xffffL) 2
-        else if (eid <= 0xffffffL) 3 else 4
-      Array.tabulate[Byte](width)(i =>
-        ((eid >>> (8 * (width - 1 - i))) & 0xff).toByte)
-    }
-    def el(eid: Long, body: Array[Byte]): Array[Byte] =
-      idBytes(eid) ++ vintSize(body.length.toLong) ++ body
-    def uintBody(v: Long): Array[Byte] = {
-      var width = 1
-      while (width < 8 && (v >>> (8 * width)) != 0) width += 1
-      Array.tabulate[Byte](width)(i =>
-        ((v >>> (8 * (width - 1 - i))) & 0xff).toByte)
-    }
-    def strBody(s: String): Array[Byte] = s.getBytes("US-ASCII")
+    import Ebml.{el, uint}
     val nFrames = (3 + nChars % 5).toInt
     val mbW = 1 + (nChars % 3).toInt; val mbH = 1 + ((nChars / 3) % 3).toInt
     val ebml = el(0x1A45DFA3L,
-      el(0x4286L, uintBody(1)) ++ el(0x42F7L, uintBody(1)) ++
-        el(0x42F2L, uintBody(4)) ++ el(0x42F3L, uintBody(8)) ++
-        el(0x4282L, strBody("webm")) ++
-        el(0x4287L, uintBody(4)) ++ el(0x4285L, uintBody(2)))
+      el(0x4286L, uint(1)) ++ el(0x42F7L, uint(1)) ++
+        el(0x42F2L, uint(4)) ++ el(0x42F3L, uint(8)) ++
+        el(0x4282L, ascii("webm")) ++
+        el(0x4287L, uint(4)) ++ el(0x4285L, uint(2)))
     val info = el(0x1549A966L,
-      el(0x2AD7B1L, uintBody(1000000L)))
+      el(0x2AD7B1L, uint(1000000L)))
     val track = el(0x1654AE6BL, el(0xAEL,
-      el(0xD7L, uintBody(1)) ++ el(0x73C5L, uintBody(id + 1)) ++
-        el(0x83L, uintBody(1)) ++ el(0x86L, strBody("V_VP8")) ++
-        el(0xE0L, el(0xB0L, uintBody(16L * mbW)) ++
-          el(0xBAL, uintBody(16L * mbH)))))
+      el(0xD7L, uint(1)) ++ el(0x73C5L, uint(id + 1)) ++
+        el(0x83L, uint(1)) ++ el(0x86L, ascii("V_VP8")) ++
+        el(0xE0L, el(0xB0L, uint(16L * mbW)) ++
+          el(0xBAL, uint(16L * mbH)))))
     val blocks = (0 until nFrames).flatMap { k =>
       val frame = buildVp8Frame(id + 31 * k, nChars)
       val body = new java.io.ByteArrayOutputStream()
@@ -774,7 +735,7 @@ object Vp8Codec {
       body.write(frame, 0, frame.length)
       el(0xA3L, body.toByteArray)
     }.toArray
-    val cluster = el(0x1F43B675L, el(0xE7L, uintBody(0)) ++ blocks)
+    val cluster = el(0x1F43B675L, el(0xE7L, uint(0)) ++ blocks)
     ebml ++ el(0x18538067L, info ++ track ++ cluster)
   }
 
@@ -783,19 +744,6 @@ object Vp8Codec {
     * across frames. Any EBML, block-header, or frame violation →
     * None. */
   def parseWebmFrames(id: Long, b: Array[Byte]): Option[WebmFrames] = {
-    def vint(p: Int, keepMarker: Boolean): (Long, Int) = {
-      if (p >= b.length) return (-1L, 0)
-      val first = b(p) & 0xff
-      if (first == 0) return (-1L, 0)
-      var width = 1
-      while ((first & (0x100 >>> width)) == 0) width += 1
-      if (p + width > b.length) return (-1L, 0)
-      var v = if (keepMarker) first.toLong
-        else (first & ((0x100 >>> width) - 1)).toLong
-      var i = 1
-      while (i < width) { v = (v << 8) | (b(p + i) & 0xffL); i += 1 }
-      (v, width)
-    }
     // locate the V_VP8 track number, then collect SimpleBlocks
     var vp8Track = -1L
     var blocks = List.empty[Array[Byte]]
@@ -804,9 +752,9 @@ object Vp8Codec {
       var p = from
       var curTrackNum = -1L; var curType = -1L; var curCodec = ""
       while (p < to) {
-        val (eid, iw) = vint(p, keepMarker = true)
+        val (eid, iw) = Ebml.vint(b, p, keepMarker = true)
         if (iw == 0) return false
-        val (sz, sw) = vint(p + iw, keepMarker = false)
+        val (sz, sw) = Ebml.vint(b, p + iw, keepMarker = false)
         if (sw == 0) return false
         val bodyAt = p + iw + sw
         if (sz < 0 || bodyAt + sz > to) return false
@@ -825,7 +773,7 @@ object Vp8Codec {
           case 0x86L if inTrackEntry =>
             curCodec = new String(b, bodyAt, sz.toInt, "US-ASCII")
           case 0xA3L if inCluster => // SimpleBlock
-            val (tn, tw) = vint(bodyAt, keepMarker = false)
+            val (tn, tw) = Ebml.vint(b, bodyAt, keepMarker = false)
             if (tw == 0 || bodyAt + tw + 3 > end) return false
             if (tn == vp8Track)
               blocks ::= java.util.Arrays.copyOfRange(

@@ -31,13 +31,6 @@ object EventSpool {
     StructField("query", StringType),
     StructField("row", StringType)))
 
-  /** Spool encodings: JSON lines (debuggable, the test fixture format)
-    * or parquet (columnar + compressed — the reference's binary spool
-    * rotated at 100k records is ~4× smaller than JSON; at scale the
-    * spool's write+read IO is a first-order replication cost). */
-  val FormatJson = "json"
-  val FormatParquet = "parquet"
-
   /** @param cleanSource spool retention (binlog_replicator.py:288-298
     *                     deletes fully-consumed files after
     *                     `binlog_retention_period`): `"delete"` removes a
@@ -46,7 +39,6 @@ object EventSpool {
     *                     everything (tests / replay-from-zero). */
   def readStream(spark: SparkSession, spoolDir: String,
                  cleanSource: Option[String] = None,
-                 format: String = FormatJson,
                  sourceArchiveDir: Option[String] = None): DataFrame = {
     require(!cleanSource.contains("archive") || sourceArchiveDir.nonEmpty,
       "cleanSource=archive requires sourceArchiveDir (Spark's " +
@@ -55,54 +47,15 @@ object EventSpool {
       .option("maxFilesPerTrigger", "16")
     cleanSource.foreach(r.option("cleanSource", _))
     sourceArchiveDir.foreach(r.option("sourceArchiveDir", _))
-    format match {
-      case FormatJson => r.json(spoolDir)
-      case FormatParquet => r.parquet(spoolDir)
-      case other =>
-        throw new IllegalArgumentException(s"unknown spool format '$other'")
-    }
+    r.json(spoolDir)
   }
 
-  def readBatch(spark: SparkSession, spoolDir: String,
-                format: String = FormatJson): DataFrame = format match {
-    case FormatJson => spark.read.schema(schema).json(spoolDir)
-    case FormatParquet => spark.read.schema(schema).parquet(spoolDir)
-    case other =>
-      throw new IllegalArgumentException(s"unknown spool format '$other'")
-  }
-
-  /** Append one parquet spool file atomically: write to a staging dir,
-    * move the single part file into place (the file source must never
-    * see a partial file — same contract as [[writeFile]]).
-    *
-    * Staging lives INSIDE the spool directory (dot-prefixed, so the file
-    * source's hidden-path filter never lists it) and everything goes
-    * through the Hadoop FileSystem API: the rename is same-filesystem by
-    * construction and the writer works on any Hadoop FS the readers do —
-    * staging in `java.nio` system temp threw
-    * AtomicMoveNotSupportedException whenever /tmp and the spool were on
-    * different filesystems, and silently restricted the parquet spool
-    * writer to local paths. */
-  def writeParquetFile(events: DataFrame, spoolDir: String,
-                       fileName: String): Unit = {
-    val spool = new org.apache.hadoop.fs.Path(spoolDir)
-    val fs = spool.getFileSystem(
-      events.sparkSession.sparkContext.hadoopConfiguration)
-    fs.mkdirs(spool)
-    val staging = new org.apache.hadoop.fs.Path(spool, s".staging-$fileName")
-    events.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val part = fs.listStatus(staging).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no part file written"))
-    val dest = new org.apache.hadoop.fs.Path(spool, fileName)
-    if (!fs.rename(part, dest))
-      throw new java.io.IOException(s"cannot publish spool file $dest")
-    fs.delete(staging, true)
-  }
+  def readBatch(spark: SparkSession, spoolDir: String): DataFrame =
+    spark.read.schema(schema).json(spoolDir)
 
   // -------------------------------------------- rotation & retention
 
-  private val SpoolFileRe = """^(\d+)\.(?:json|parquet)$""".r
+  private val SpoolFileRe = """^(\d+)\.json$""".r
 
   /** Next rotation index: max existing spool file number + 1 (reference
     * `get_next_file_name`, binlog_replicator.py:276-286). Hadoop FS API
@@ -158,7 +111,7 @@ object EventSpool {
     * disable the sweep entirely.
     *
     * Hadoop FS API, not java.io — the spool may live on HDFS/S3 (the
-    * read and parquet-write paths already support that); a java.io
+    * read path already supports that); a java.io
     * listing there returns nothing and would silently disable
     * retention while the spool grows without bound. */
   def sweepRetention(spoolDir: String, retentionSeconds: Int,

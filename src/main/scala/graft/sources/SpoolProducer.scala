@@ -44,15 +44,6 @@ final class SpoolProducer(
 
   import org.apache.hadoop.fs.Path
 
-  // this producer renders JSON lines; pointing it at a spool the
-  // pipeline reads as parquet would corrupt the stream at the reader.
-  // A parquet-spool producer goes through EventSpool.writeParquetFile
-  // (it needs a SparkSession; this class deliberately does not).
-  require(config.spoolFormat == EventSpool.FormatJson,
-    s"SpoolProducer writes the json spool format; config says " +
-      s"'${config.spoolFormat}' — use EventSpool.writeParquetFile for " +
-      "parquet spools")
-
   private val stateFile = new Path(spoolDir, "_producer_state.json")
   private val stateTmp = new Path(spoolDir, "._producer_state.json.tmp")
   private val fs = stateFile.getFileSystem(hadoopConf)

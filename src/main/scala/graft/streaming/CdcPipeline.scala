@@ -101,9 +101,9 @@ final class CdcPipeline(
   def attachSpoolSweeper(f: () => Unit): Unit = spoolSweeper = Some(f)
 
   def start(spoolDir: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second"),
-            spoolFormat: String = EventSpool.FormatJson): StreamingQuery =
-    EventSpool.readStream(spark, spoolDir, format = spoolFormat).writeStream
+            trigger: Trigger = Trigger.ProcessingTime("1 second"))
+      : StreamingQuery =
+    EventSpool.readStream(spark, spoolDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

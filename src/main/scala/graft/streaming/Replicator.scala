@@ -116,8 +116,7 @@ object Replicator {
         }
       }
     }
-    (pipeline, pipeline.start(spoolDir, checkpointDir, trigger,
-      spoolFormat = config.spoolFormat))
+    (pipeline, pipeline.start(spoolDir, checkpointDir, trigger))
   }
 
   /** `post_initial_replication_commands` (db_replicator_initial.py:

@@ -111,17 +111,6 @@ class ConfigSpec extends AnyFunSuite {
     assert(GraftConfig.fromYaml(
       "binlog_replicator:\n  binlog_retention_period: 0\n", Map.empty)
       .spoolRetentionPeriod === 0)
-    // spool format (graft extension): json default, parquet opt-in,
-    // anything else rejected at load
-    assert(GraftConfig.fromYaml("databases: d\n", Map.empty)
-      .spoolFormat === "json")
-    assert(GraftConfig.fromYaml(
-      "binlog_replicator:\n  format: parquet\n", Map.empty)
-      .spoolFormat === "parquet")
-    intercept[IllegalArgumentException] {
-      GraftConfig.fromYaml(
-        "binlog_replicator:\n  format: avro\n", Map.empty)
-    }
   }
 
   test("version_initial_value parses and offsets the stamp base") {
@@ -215,7 +204,6 @@ class ConfigSpec extends AnyFunSuite {
       "clickhouse.erase_batch_size",
       "binlog_replicator.data_dir", "binlog_replicator.records_per_file",
       "binlog_replicator.binlog_retention_period")
-    val graftExtensions = Set("binlog_replicator.format")
 
     // parsed ∪ ignored = exactly the reference surface, no overlap,
     // every ignore carrying a non-empty reason
@@ -226,7 +214,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(GraftConfig.parsedSubKeys.intersect(
       GraftConfig.ignoredSubKeys.keySet).isEmpty)
     assert(GraftConfig.parsedSubKeys ++ GraftConfig.ignoredSubKeys.keySet ===
-      referenceSub ++ graftExtensions)
+      referenceSub)
     assert(GraftConfig.ignoredKeys.values.forall(_.nonEmpty))
     assert(GraftConfig.ignoredSubKeys.values.forall(_.nonEmpty))
     // the ClickHouse cluster key in particular: consciously ignored with
@@ -277,8 +265,12 @@ class ConfigSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("Unsupported config options"))
     assert(e.getMessage.contains("dtabases"))
-    intercept[IllegalArgumentException] {
-      GraftConfig.fromYaml("binlog_replicator: {data_dirr: x}\n", Map.empty)
+    for (typo <- Seq("data_dirr: x", "format: json")) { // no spool format key
+      val e2 = intercept[IllegalArgumentException] {
+        GraftConfig.fromYaml(s"binlog_replicator: {$typo}\n", Map.empty)
+      }
+      assert(e2.getMessage.contains("Unsupported config options"))
+      assert(e2.getMessage.contains(typo.takeWhile(_ != ':')))
     }
   }
 

@@ -172,8 +172,7 @@ class BitstreamWalkSpec extends AnyFunSuite {
     * 1-symbol red/blue/alpha/distance trees, no transform, no cache. */
   private def tinyVp8l(w: Int, h: Int, distSym: Int,
                        emits: Seq[Boolean]): Array[Byte] = {
-    import MediaCodec.Vp8l._
-    val bw = new BitWriter
+    val bw = new BitWriter(msbFirst = false)
     bw.write((w - 1).toLong, 14); bw.write((h - 1).toLong, 14)
     bw.write(0, 1); bw.write(0, 3)
     bw.write(0, 1) // no transforms
@@ -204,7 +203,7 @@ class BitstreamWalkSpec extends AnyFunSuite {
       if (isCopy) bw.writeCode(1, 1) // length code 0 -> length 1, dist 0 bits
       else bw.writeCode(0, 1)        // literal green=100 (r/b/a zero bits)
     }
-    val s = bw.result()
+    val s = bw.toBytes
     Array(0x2f.toByte) ++ s
   }
 
@@ -568,7 +567,6 @@ class BitstreamWalkSpec extends AnyFunSuite {
 
   test("tiff lzw: deep-table round-trip crosses every early-change " +
     "width and the 4094-entry Clear") {
-    import MediaCodec.TiffCodec._
     // LCG bytes: low compressibility -> the phrase table fills fast;
     // 60k bytes force 9->10->11->12-bit switches AND the table-full
     // ClearCode reset, none of which small fixture strips reach
@@ -577,17 +575,40 @@ class BitstreamWalkSpec extends AnyFunSuite {
       s = s * 6364136223846793005L + 1442695040888963407L
       ((s >>> 33) & 0xff).toByte
     }
-    val enc = lzwEncode(data)
-    val dec = lzwDecode(enc, 0, enc.length, data.length)
-    assert(dec != null && java.util.Arrays.equals(dec, data))
     // and a highly repetitive buffer (KwKwK-heavy, long phrases)
     val rep = Array.tabulate(20000)(i => ((i / 7) % 5).toByte)
-    val enc2 = lzwEncode(rep)
-    assert(enc2.length < rep.length / 3) // it actually compresses
-    val dec2 = lzwDecode(enc2, 0, enc2.length, rep.length)
-    assert(dec2 != null && java.util.Arrays.equals(dec2, rep))
-    // truncation rejects
-    assert(lzwDecode(enc, 0, enc.length / 2, data.length) == null)
+    def roundTrips(lzw: Lzw, in: Array[Byte]): Boolean = {
+      val enc = lzw.encode(in)
+      val dec = lzw.decode(enc, 0, enc.length, in.length)
+      dec != null && java.util.Arrays.equals(dec, in)
+    }
+    // the shared coder in both conventions: TIFF's MSB-first early
+    // change, and GIF's LSB-first schedule
+    val gif = Lzw(8, msbFirst = false, earlyChange = false)
+    for (lzw <- Seq(MediaCodec.TiffCodec.lzw, gif)) {
+      assert(roundTrips(lzw, data), lzw)
+      assert(roundTrips(lzw, rep), lzw)
+      assert(lzw.encode(rep).length < rep.length / 3) // it compresses
+      // truncation rejects
+      val enc = lzw.encode(data)
+      assert(lzw.decode(enc, 0, enc.length / 2, data.length) == null, lzw)
+      // tiny inputs: no phrase codes at all, one literal
+      assert(roundTrips(lzw, Array.emptyByteArray), lzw)
+      assert(roundTrips(lzw, Array[Byte](7)), lzw)
+      // every length up to past the 11->12-bit switch, so the last code
+      // lands on each width switch: an encoder that skips the switch
+      // after its last code writes an EOI its decoder misreads
+      val rnd = new scala.util.Random(3)
+      val bad = (1 to 2100).filterNot(n => roundTrips(lzw,
+        Array.fill[Byte](n)(rnd.nextInt(256).toByte)))
+      assert(bad.isEmpty, s"$lzw fails at lengths ${bad.take(5)}")
+    }
+    // GIF's smaller minimum code sizes, on data of that alphabet
+    for (min <- 2 to 7) {
+      val small = data.map(b => (b & ((1 << min) - 1)).toByte)
+      assert(roundTrips(Lzw(min, msbFirst = false, earlyChange = false),
+        small), s"min code size $min")
+    }
   }
 
   test("tiff packbits: -128 noop, 128-byte packets, boundary runs") {

@@ -93,10 +93,53 @@ class MediaCodecSpec extends SparkSpec {
       b.put(Array.fill[Byte](8)(0))
       b.array()
     }
-    for (sz <- Seq(0xFFFFFFF8L, 0x80000000L, 0x7FFFFFFFL, 0xFFFFFFFFL))
+    val sizes = Seq(0xFFFFFFF8L, 0x80000000L, 0x7FFFFFFFL, 0xFFFFFFFFL)
+    for (sz <- sizes)
       assert(parseWav(hostile(sz)).isEmpty, f"size 0x$sz%x")
     // and through decode(): a datum, not an exception
     assert(!decode(1L, hostile(0xFFFFFFF8L)).valid)
+
+    // Every other RIFF and ISO-BMFF walk: each parse runs on a daemon
+    // thread joined with a 5 s limit — a stalled walk never checks for
+    // interrupts, so failAfter could not stop it.
+    def promptlyNone(what: String)(parse: => Option[Any]): Unit = {
+      val result = new java.util.concurrent.atomic.AtomicReference[Any]()
+      val t = new Thread(() => result.set(parse))
+      t.setDaemon(true)
+      t.start()
+      t.join(5000)
+      assert(!t.isAlive, s"$what still running after 5 s")
+      assert(result.get == None, s"$what parsed a hostile payload")
+    }
+    // RIFF <16> WEBP ALPH <size> 00000000: 24 bytes, the RIFF size exact
+    def webp(size: Long): Array[Byte] =
+      java.nio.ByteBuffer.allocate(24).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .put("RIFF".getBytes("US-ASCII")).putInt(16)
+        .put("WEBP".getBytes("US-ASCII"))
+        .put("ALPH".getBytes("US-ASCII")).putInt(size.toInt).array()
+    // a 16-byte ftyp box, then `moov` with the hostile size — as its
+    // 32-bit size field, or as a 64-bit largesize after size field 1
+    def mp4(size: Long, large: Boolean): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(40)
+      b.putInt(16).put("ftypisom".getBytes("US-ASCII")).putInt(0x200)
+      if (large) b.putInt(1).put("moov".getBytes("US-ASCII"))
+        .putLong(size | 0xFFFFFFFF00000000L)
+      else b.putInt(size.toInt).put("moov".getBytes("US-ASCII"))
+      b.array()
+    }
+    for (sz <- sizes) {
+      val tag = f"size 0x$sz%x"
+      promptlyNone(s"parseWebpMeta, $tag")(parseWebpMeta(1L, webp(sz)))
+      promptlyNone(s"parseWebplPixels, $tag")(parseWebplPixels(1L, webp(sz)))
+      promptlyNone(s"parseWebpLossy, $tag")(
+        Vp8Codec.parseWebpLossy(1L, webp(sz)))
+      for (large <- Seq(false, true)) {
+        promptlyNone(s"parseMp4Meta, $tag, largesize $large")(
+          parseMp4Meta(1L, mp4(sz, large)))
+        promptlyNone(s"parseMp4Samples, $tag, largesize $large")(
+          parseMp4Samples(1L, mp4(sz, large)))
+      }
+    }
   }
 
   test("corrupt payloads are invalid data, not failures") {
@@ -1470,7 +1513,7 @@ class MediaCodecSpec extends SparkSpec {
   test("flac: UTF-8-style frame numbers across widths") {
     def roundTrip(bytes: Int*): Long = {
       val arr = bytes.map(_.toByte).toArray
-      MediaCodec.readFlacUtf8(new MediaCodec.FlacBitReader(arr, 0))
+      MediaCodec.readFlacUtf8(new BitReader(arr, 0, msbFirst = true))
     }
     assert(roundTrip(0x44) === 0x44L)
     assert(roundTrip(0xc4, 0xac) === 300L) // 2-byte
@@ -1486,19 +1529,19 @@ class MediaCodecSpec extends SparkSpec {
     // generator never emits)
     val out = new java.io.ByteArrayOutputStream()
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
-    val si = new MediaCodec.FlacBitWriter
+    val si = new BitWriter(msbFirst = true)
     si.write(256, 16); si.write(256, 16); si.write(0, 24); si.write(0, 24)
     si.write(8000, 20); si.write(0, 3); si.write(15, 5); si.write(256, 36)
     (0 until 16).foreach(_ => si.write(0, 8))
     val siB = si.toBytes
     out.write(0x80); out.write(0); out.write(0); out.write(siB.length)
     out.write(siB, 0, siB.length)
-    val w = new MediaCodec.FlacBitWriter
+    val w = new BitWriter(msbFirst = true)
     w.write(0x3ffe, 14); w.write(0, 1); w.write(0, 1)
     w.write(8, 4); w.write(4, 4); w.write(0, 4); w.write(4, 3); w.write(0, 1)
     w.write(0, 8) // frame 0
     val head = w.toBytes
-    val fw = new MediaCodec.FlacBitWriter
+    val fw = new BitWriter(msbFirst = true)
     head.foreach(b => fw.write(b & 0xffL, 8))
     fw.write(MediaCodec.flacCrc8(head, 0, head.length), 8)
     fw.write(0, 1); fw.write(0x08 | 2, 6); fw.write(0, 1) // FIXED order 2
@@ -1525,19 +1568,19 @@ class MediaCodecSpec extends SparkSpec {
     val order = coefs.length
     val out = new java.io.ByteArrayOutputStream()
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
-    val si = new MediaCodec.FlacBitWriter
+    val si = new BitWriter(msbFirst = true)
     si.write(256, 16); si.write(256, 16); si.write(0, 24); si.write(0, 24)
     si.write(8000, 20); si.write(0, 3); si.write(15, 5); si.write(256, 36)
     (0 until 16).foreach(_ => si.write(0, 8))
     val siB = si.toBytes
     out.write(0x80); out.write(0); out.write(0); out.write(siB.length)
     out.write(siB, 0, siB.length)
-    val w = new MediaCodec.FlacBitWriter
+    val w = new BitWriter(msbFirst = true)
     w.write(0x3ffe, 14); w.write(0, 1); w.write(0, 1)
     w.write(8, 4); w.write(4, 4); w.write(0, 4); w.write(4, 3); w.write(0, 1)
     w.write(0, 8) // frame 0
     val head = w.toBytes
-    val fw = new MediaCodec.FlacBitWriter
+    val fw = new BitWriter(msbFirst = true)
     head.foreach(b => fw.write(b & 0xffL, 8))
     fw.write(MediaCodec.flacCrc8(head, 0, head.length), 8)
     fw.write(0, 1); fw.write(0x20 | (order - 1), 6); fw.write(0, 1)
@@ -1702,19 +1745,19 @@ class MediaCodecSpec extends SparkSpec {
     // at 14 bits and shift every sample left by 2 at the end
     val out = new java.io.ByteArrayOutputStream()
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
-    val si = new MediaCodec.FlacBitWriter
+    val si = new BitWriter(msbFirst = true)
     si.write(256, 16); si.write(256, 16); si.write(0, 24); si.write(0, 24)
     si.write(8000, 20); si.write(0, 3); si.write(15, 5); si.write(256, 36)
     (0 until 16).foreach(_ => si.write(0, 8))
     val siB = si.toBytes
     out.write(0x80); out.write(0); out.write(0); out.write(siB.length)
     out.write(siB, 0, siB.length)
-    val w = new MediaCodec.FlacBitWriter
+    val w = new BitWriter(msbFirst = true)
     w.write(0x3ffe, 14); w.write(0, 1); w.write(0, 1)
     w.write(8, 4); w.write(4, 4); w.write(0, 4); w.write(4, 3); w.write(0, 1)
     w.write(0, 8)
     val head = w.toBytes
-    val fw = new MediaCodec.FlacBitWriter
+    val fw = new BitWriter(msbFirst = true)
     head.foreach(b => fw.write(b & 0xffL, 8))
     fw.write(MediaCodec.flacCrc8(head, 0, head.length), 8)
     fw.write(0, 1); fw.write(0x20, 6) // LPC order 1
@@ -1751,19 +1794,19 @@ class MediaCodecSpec extends SparkSpec {
     // 16-bit CONSTANT subframe must reject, not decode a 0-bit sample
     val out = new java.io.ByteArrayOutputStream()
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
-    val si = new MediaCodec.FlacBitWriter
+    val si = new BitWriter(msbFirst = true)
     si.write(256, 16); si.write(256, 16); si.write(0, 24); si.write(0, 24)
     si.write(8000, 20); si.write(0, 3); si.write(15, 5); si.write(256, 36)
     (0 until 16).foreach(_ => si.write(0, 8))
     val siB = si.toBytes
     out.write(0x80); out.write(0); out.write(0); out.write(siB.length)
     out.write(siB, 0, siB.length)
-    val w = new MediaCodec.FlacBitWriter
+    val w = new BitWriter(msbFirst = true)
     w.write(0x3ffe, 14); w.write(0, 1); w.write(0, 1)
     w.write(8, 4); w.write(4, 4); w.write(0, 4); w.write(4, 3); w.write(0, 1)
     w.write(0, 8)
     val head = w.toBytes
-    val fw = new MediaCodec.FlacBitWriter
+    val fw = new BitWriter(msbFirst = true)
     head.foreach(b => fw.write(b & 0xffL, 8))
     fw.write(MediaCodec.flacCrc8(head, 0, head.length), 8)
     fw.write(0, 1); fw.write(0, 6) // CONSTANT

@@ -202,14 +202,6 @@ class SpoolProducerSpec extends SparkSpec {
     assert(new SpoolProducer(spool, cfg).sourcePos === Some("pos-b"))
   }
 
-  test("producer: refuses a parquet-format spool (it writes json lines)") {
-    val spool = tmpDir("producer-parquet")
-    val e = intercept[IllegalArgumentException] {
-      new SpoolProducer(spool, config(spool, "  format: parquet\n"))
-    }
-    assert(e.getMessage.contains("parquet"))
-  }
-
   test("producer: state recovers from the tmp file after a mid-save crash") {
     val spool = tmpDir("producer-crash")
     val cfg = config(spool)

@@ -634,26 +634,6 @@ class CdcPipelineSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getString(1))).toSeq === Seq((1, "ann")))
   }
 
-  test("parquet spool format replicates identically to JSON") {
-    import spark.implicits._
-    val (pipeline, _) = mkPipeline()
-    val spool = tmpDir("graft-spool-pq")
-    val events = Seq(
-      (1L, "d", "users", OpAdd, null.asInstanceOf[String], row(1, "ann", 30)),
-      (2L, "d", "users", OpAdd, null.asInstanceOf[String], row(1, "ann2", 31)),
-      (3L, "d", "users", OpAdd, null.asInstanceOf[String], row(2, "bob", 40)),
-      (4L, "d", "users", OpRemove, null.asInstanceOf[String], """{"id":"2"}"""))
-      .toDF("seq", "db", "table", "op", "query", "row")
-    EventSpool.writeParquetFile(events, spool, "000001.parquet")
-    val q = pipeline.start(spool, tmpDir("graft-ckpt-pq"),
-      Trigger.ProcessingTime("50 milliseconds"),
-      spoolFormat = EventSpool.FormatParquet)
-    try q.processAllAvailable() finally q.stop()
-    assert(pipeline.table("users").read.collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet ===
-      Set((1, "ann2", 31L)))
-  }
-
   test("PK-less scratch CREATE does not kill the stream (parse guard)") {
     val (pipeline, _) = mkPipeline()
     val spool = tmpDir("graft-spool-nopk")

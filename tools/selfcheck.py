@@ -6,7 +6,8 @@ Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir>
 Loads each <name>.parquet produced by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the same fixture tables,
 and compares: row count, column names, and a hash of the values with
-columns sorted by name and rows sorted canonically.
+columns sorted by name and rows sorted canonically. An oracle with no
+output directory is a failure: its query threw in graft.Verify.
 """
 import sys, json, glob, os
 import duckdb
@@ -77,6 +78,11 @@ def main():
             n_fail += 1
         else:
             print(f"PASS {name} ({len(g)} rows)"); n_pass += 1
+    # an oracle without output: its query failed to run (graft.Verify
+    # deletes each selected query's old output before running it)
+    for name in sorted(set(oracles) - set(names)):
+        print(f"FAIL {name}: no output (the query failed to run)")
+        n_fail += 1
     print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
