@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, all designed as
@@ -81,98 +80,103 @@ object Dedup {
     mh.select(col(idCol).as("id"), posexplode(bandKeys).as(Seq("band", "bk")))
   }
 
-  /** MinHash-LSH candidate pairs: `b` bands of `r` rows; a pair is a
-    * candidate if any band key matches. Returns (id_a, id_b) with a < b,
-    * distinct.
+  /** MinHash-LSH candidate pairs over a [[bandTable]] (`b` bands of `r`
+    * rows): a pair is a candidate if any band key matches. Returns
+    * (id_a, id_b) with a < b, once per band the pair matches in:
+    * [[verifyOverlap]] folds the repeats in the per-doc grouping it needs
+    * anyway, so a `distinct` here would only add an exchange.
     *
     * The `b` band keys are packed into ONE array and exploded, so there
     * is a single self-join on (band, key) — one shuffle pair — instead
     * of `b` separate joins each re-reading (and re-aggregating) the
-    * minhash input. A pair matching in several bands still emits once.
+    * minhash input. Both sides of the self-join are the same band
+    * relation exchanged on (band, bk), so Spark computes that exchange
+    * once and reads it twice (exchange reuse); the shuffled-hash hint
+    * keeps the join on that one stage, where AQE would otherwise
+    * broadcast one side of it (a second job, and a build side that could
+    * differ between runs). Callers pass a checkpointed [[bandTable]] and
+    * release it once [[verifyOverlap]] returns (its first action is the
+    * last reader): over a cached input (a persisted shingle table) the
+    * adaptive planner wraps each cache read in a stage of its own whose
+    * id enters the plan's canonical form, so without the checkpoint leaf
+    * the exchanges would not match and each side would recompute the
+    * minhash aggregate.
     * Within a band bucket of m docs the C(m,2) pair fan-out is inherent
     * to LSH output; the join distributes it across tasks, so one hot
     * bucket (a giant dup cluster) cannot pin a single executor. */
-  def lshCandidates(mh: DataFrame, idCol: String, b: Int, r: Int): DataFrame = {
-    // persist: (id, band, key) is the smallest representation of the
-    // corpus (b rows/doc, no text) and both self-join sides read it —
-    // without it each side re-runs the whole shingle→minhash aggregation
-    val banded = bandTable(mh, idCol, b, r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private def lshCandidates(banded: DataFrame): DataFrame =
     banded.select(col("id").as("id_a"), col("band"), col("bk"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bk")),
-        Seq("band", "bk"))
+      .join(banded.select(col("id").as("id_b"), col("band"), col("bk"))
+        .hint("shuffle_hash"), Seq("band", "bk"))
       .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+      .select("id_a", "id_b")
 
   /** Exact shingle overlap (inter, na, nb) of candidate pairs over a
-    * [[shingleTable]].
+    * [[shingleTable]]. `candidates` may repeat a pair.
     *
-    * Intermediates are persisted and left registered with the session's
-    * cache manager: the caller owns their lifecycle (the query memo,
-    * `graft.queries.memoCkpt`, uncaches what its build registered once
-    * the result is checkpointed). */
+    * Two actions, each stage run once. The first checkpoints one row per
+    * candidate-touched doc — only those docs need their arrays, which
+    * keeps the broadcast proportional to the candidate set, not the
+    * corpus: its sorted shingle array (rebuilt from the exploded table
+    * by one shuffle on id instead of re-running the shingle expression;
+    * sorted so the per-pair intersection is a merge walk, not a hash
+    * set) and the set of partners it pairs with as `id_a` (the set folds
+    * repeated pairs). The second explodes the partners and probes the
+    * same checkpoint on `id_b`, so the `id_a` array rides in its row and
+    * the array relation is broadcast once.
+    *
+    * Broadcast the array side, stream the pairs: any shuffle plan here
+    * moves one ~KB shingle array per candidate pair (the dominant cost —
+    * measured 5× the intersect work). Catalyst's stats get this exactly
+    * backwards (it broadcasts the "small" pair set and streams the docs
+    * through one file split), so the choice is explicit — with a size
+    * guard: on a duplicate-saturated corpus the touched set approaches
+    * the corpus and the forced broadcast would OOM, so past 64 MB fall
+    * back to a shuffled hash join (slower, never fatal). The guard is a
+    * BYTE estimate, not a row count (100k touched docs each carrying
+    * multi-KB arrays would blow the broadcast memory a row bound was
+    * meant to protect): Σ (length + 24) over the touched docs' shingles,
+    * observed while the first action writes the checkpoint, so it costs
+    * no job of its own.
+    *
+    * `|A∪B| = |A|+|B|−|A∩B|` (both arrays are distinct): one merge-walk
+    * intersect per pair.
+    *
+    * The checkpoint stays until the caller releases it
+    * (`graft.queries.memoCkpt` releases every checkpoint its build
+    * reads once its own checkpoint holds the rows). */
   private def verifyOverlap(sh: DataFrame,
-                            candidates0: DataFrame): DataFrame = {
-    // persisted: consumed by the touched-doc semi-join below AND as the
-    // streamed join side — without it the whole candidate-generation
-    // subtree (the expensive groupBy-shingle pass) runs twice
-    val candidates = candidates0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // only docs that appear in a candidate pair need their arrays — the
-    // semi-join keeps the broadcast proportional to the candidate set,
-    // not the corpus. Persisted: the size-guard count below materializes
-    // it once and the semi-join reuses the cache.
-    val touched = candidates.select(col("id_a").as("id"))
-      .union(candidates.select(col("id_b").as("id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // rebuild per-doc shingle arrays from the shared exploded table (one
-    // cheap shuffle on id) instead of re-running the shingle expression;
-    // sorted so the per-pair intersection is a merge walk, not a hash
-    // set. Persisted because BOTH broadcast builds below consume it, and
-    // broadcast jobs launch before the main stages populate any cache —
-    // without this each build re-runs the whole upstream pipeline.
-    val withSh = sh.join(touched, Seq("id"), "left_semi")
-      .groupBy("id")
-      .agg(array_sort(collect_list(col("s"))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = withSh.select(col("id").as("id_a"), col("sh").as("sh_a"),
-      size(col("sh")).as("na"))
-    val bb = withSh.select(col("id").as("id_b"), col("sh").as("sh_b"),
-      size(col("sh")).as("nb"))
-    val inter = call_function("graft_sorted_intersect_count",
-      col("sh_a"), col("sh_b"))
-    // Broadcast the per-doc array side, stream the pairs: any shuffle
-    // plan here moves one ~KB shingle array per candidate pair (the
-    // dominant cost — measured 5× the intersect work), while the array
-    // relation is one row per candidate-touched doc (the semi-join
-    // above) and usually broadcasts. Catalyst's stats get this exactly
-    // backwards (it broadcasts the "small" pair set and streams the docs
-    // through one file split), so the choice is explicit — with a size
-    // guard: on a duplicate-saturated corpus the touched set approaches
-    // the corpus and the forced broadcast would OOM, so past the bound
-    // fall back to shuffled hash joins (slower, never fatal).
-    // `|A∪B| = |A|+|B|−|A∩B|` (both arrays are distinct): one merge-walk
-    // intersect per pair.
-    // The guard is a BYTE estimate, not a row count: 100k touched docs
-    // each carrying multi-KB shingle arrays would blow the driver /
-    // executor broadcast memory that a row bound was meant to protect.
-    // Estimated over the exploded rows (cached `sh` semi-joined to the
-    // touched set) with all-codegen length/sum — one cheap job whose
-    // side effect is materializing the `touched` cache the plans below
-    // reuse.
-    val estBytes = sh.join(touched, Seq("id"), "left_semi")
-      .agg(coalesce(sum(length(col("s")).cast("long") + 24L), lit(0L)))
-      .head.getLong(0)
-    // 64 MB per SIDE: the plan broadcasts the relation twice (a and bb),
-    // so the effective budget is ~2× the bound
-    val broadcastable = estBytes <= (64L << 20)
-    val (aSide, bSide) =
-      if (broadcastable) (broadcast(a), broadcast(bb))
-      else (a.hint("shuffle_hash"), bb.hint("shuffle_hash"))
-    candidates.join(aSide, "id_a")
-      .join(bSide, "id_b")
-      .select(col("id_a"), col("id_b"), inter.as("inter"),
+                            candidates: DataFrame): DataFrame = {
+    val noPartner = lit(null).cast(candidates.schema("id_b").dataType)
+    // each pair row becomes (id_a, id_b) and (id_b, null), so the
+    // candidate plan is read once and every touched doc gets a row
+    val partners = candidates
+      .select(inline(array(
+        struct(col("id_a").as("id"), col("id_b").as("partner")),
+        struct(col("id_b").as("id"), noPartner.as("partner")))))
+      .groupBy("id").agg(collect_set(col("partner")).as("partners"))
+    val arrays = sh.groupBy("id").agg(
+      array_sort(collect_list(col("s"))).as("sh"),
+      sum(length(col("s")).cast("long") + 24L).as("bytes"))
+    val bytes = new org.apache.spark.sql.Observation()
+    // both sides arrive hash-partitioned on id; the hint keeps the join
+    // on those two exchanges instead of broadcasting one of them
+    val (touched, _) = Checkpoint(arrays
+      .join(partners.hint("shuffle_hash"), "id")
+      .observe(bytes, coalesce(sum(col("bytes")), lit(0L)).as("bytes"))
+      .select(col("id"), col("sh"), size(col("sh")).as("n"),
+        col("partners")))
+    val broadcastable =
+      bytes.get("bytes").asInstanceOf[Long] <= (64L << 20)
+    val bSide = touched.select(col("id").as("id_b"), col("sh").as("sh_b"),
+      col("n").as("nb"))
+    touched.select(col("id").as("id_a"), col("sh").as("sh_a"),
+        col("n").as("na"), explode(col("partners")).as("id_b"))
+      .join(if (broadcastable) broadcast(bSide)
+        else bSide.hint("shuffle_hash"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        call_function("graft_sorted_intersect_count",
+          col("sh_a"), col("sh_b")).as("inter"),
         col("na"), col("nb"))
   }
 
@@ -183,16 +187,21 @@ object Dedup {
         round(col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
 
+  private def minhashOf(sh: DataFrame, k: Int): DataFrame =
+    sh.select(col("id") +: digestCols(k): _*)
+      .groupBy("id").agg(minhashAggs(k).head, minhashAggs(k).tail: _*)
+
   /** Full MinHash-LSH near-dup pipeline over a [[shingleTable]]:
     * candidates → verified pairs ≥ `threshold`. Minhashing and
-    * verification both fold over `sh`, so the caller persists it. */
+    * verification both fold over `sh`, so the caller persists it; the
+    * result reads [[verifyOverlap]]'s checkpoint. */
   def minhashNearDups(sh: DataFrame, k: Int, b: Int, r: Int,
                       threshold: Double): DataFrame = {
-    val mh = sh.select(col("id") +: digestCols(k): _*)
-      .groupBy("id").agg(minhashAggs(k).head, minhashAggs(k).tail: _*)
-    val cand = lshCandidates(mh, "id", b, r)
-    verifyJaccard(sh, cand)
+    val (banded, bandRdd) =
+      Checkpoint(bandTable(minhashOf(sh, k), "id", b, r))
+    try verifyJaccard(sh, lshCandidates(banded))
       .filter(col("jaccard") >= threshold)
+    finally Checkpoint.release(bandRdd)
   }
 
   /** Incremental near-dup detection — the production INGEST path: a new
@@ -206,9 +215,9 @@ object Dedup {
     * (b fixed-width rows per doc — in production a persisted table
     * bucketed by (band, bk), an ingest-time artifact like the ANN
     * codebooks) and its per-doc shingle arrays surface only for docs a
-    * candidate pair touches (the verify stage's semi-join). The BATCH
-    * side — minhashed fresh — broadcasts into the index probe, so the
-    * index is scanned in place: no corpus shuffle, no self-join. The
+    * candidate pair touches (the verify stage's per-doc grouping). The
+    * BATCH side — minhashed fresh — broadcasts into the index probe, so
+    * the index is scanned in place: no corpus shuffle, no self-join. The
     * within-batch pairs reuse the batch-sized self-join.
     *
     * Both sides are [[shingleTable]]s (plain per-doc filters of one
@@ -226,28 +235,22 @@ object Dedup {
     // would hold both generations under one id and every pair touching
     // it would verify against a doubled array (jaccard biased low —
     // dups silently missed); the band-level self-pair is dropped below.
-    val shEx = shEx0
-      .join(batchIds, Seq("id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def mhOf(sh: DataFrame) = sh.select(col("id") +: digestCols(k): _*)
-      .groupBy("id").agg(minhashAggs(k).head, minhashAggs(k).tail: _*)
-    val probe = bandTable(mhOf(shNew), "id", b, r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cross = bandTable(mhOf(shEx), "id", b, r)
+    // not persisted: both consumers of `shEx` (the corpus minhash and the
+    // verification's arrays) run in the verification's first action
+    val shEx = shEx0.join(batchIds, Seq("id"), "left_anti")
+    val (probe, probeRdd) =
+      Checkpoint(bandTable(minhashOf(shNew, k), "id", b, r))
+    val cross = bandTable(minhashOf(shEx, k), "id", b, r)
       .join(broadcast(probe.select(col("id").as("id_new"),
         col("band"), col("bk"))), Seq("band", "bk"))
       .filter(col("id") =!= col("id_new"))
       .select(least(col("id"), col("id_new")).as("id_a"),
         greatest(col("id"), col("id_new")).as("id_b"))
-    val within = probe.select(col("id").as("id_a"), col("band"), col("bk"))
-      .join(probe.select(col("id").as("id_b"), col("band"), col("bk")),
-        Seq("band", "bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // ONE distinct over the union — per-side distincts would add two
-    // extra exchanges only for this one to re-deduplicate the same rows
-    verifyJaccard(shEx.union(shNew), cross.union(within).distinct())
+    // no distinct: verifyOverlap folds pairs found on both sides or in
+    // several bands
+    try verifyJaccard(shEx.union(shNew), cross.union(lshCandidates(probe)))
       .filter(col("jaccard") >= threshold)
+    finally Checkpoint.release(probeRdd)
   }
 
   /** Content novelty between two dumps of a corpus — the rate an
@@ -321,10 +324,8 @@ object Dedup {
     // Checkpointing truncates lineage so round N's plan is O(1) deep.
     // localCheckpoint blocks live on executors and die with them — when
     // the session has a reliable checkpoint dir configured
-    // (sc.setCheckpointDir), the loop transparently switches to
+    // (sc.setCheckpointDir), [[Checkpoint]] transparently switches to
     // fault-tolerant reliable checkpoints for cluster runs.
-    val sc = pairs.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
     // The re-wrap after the eager checkpoint strips the ORIGIN-PLAN
     // STATISTICS the checkpoint propagates into its LogicalRDD
     // (SPARK-39748): each round's plan references the previous round's
@@ -340,9 +341,8 @@ object Dedup {
     // also returns that RDD and each checkpoint is released as soon as
     // nothing downstream reads it.
     def ckpt(df: DataFrame) = {
-      val cp = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-      (cp.sparkSession.createDataFrame(cp.rdd, cp.schema),
-        cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
+      val (cp, rdd) = Checkpoint(df)
+      (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), rdd)
     }
     // materialize the pair-generation subtree ONCE: `edges` references
     // `pairs` twice (both orientations), and each round's join would

@@ -178,50 +178,55 @@ object TextQueries {
                                 dir: String, k: Int)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = graft.operators.Partitioning.spread(
-      t(s, dir, "documents").select(col("doc_id"), col("text")))
+    val docs = t(s, dir, "documents")
     val tk = TextAnalysis.tokens(col("text"))
     val bigrams = zip_with(
       slice(tk, lit(1), size(tk) - 1), slice(tk, lit(2), size(tk) - 1),
       (a, b) => concat_ws(" ", a, b))
-    // tf feeds three consumers (postings, df, query terms) — persist
-    // or the tokenize+aggregate subtree runs three times. (A cross-query
-    // memo of this cache was tried in the r13 optimization round and
-    // REVERTED: AQE coalesces the aggregate to one partition, so the
-    // memoized cache serializes every downstream join of all three
-    // consumer queries — recomputing the spread 32-way plan is faster.)
-    val tf = docs.select(col("doc_id"), explode(bigrams).as("term"))
-      .groupBy("doc_id", "term")
+    // The postings move ONCE, hash-partitioned on term: tf (doc, term),
+    // df (a count window over the same term partitions) and the probe
+    // all run in the one stage behind that exchange, so nothing is
+    // persisted and no per-term relation is re-shuffled or broadcast.
+    // Each posting carries its doc's length, so dl needs no join of its
+    // own. (A cross-query memo of the postings was tried in the r13
+    // optimization round and REVERTED: AQE coalesces the aggregate to
+    // one partition, so the memoized cache serializes every downstream
+    // join of all three consumer queries.)
+    val postings = graft.operators.Partitioning.spread(
+        docs.select(col("doc_id"), col("text")))
+      .select(col("doc_id"),
+        greatest(size(tk) - 1, lit(0)).cast("double").as("dl"),
+        explode(bigrams).as("term"))
+      .repartition(col("term"))
+      .groupBy("term", "doc_id", "dl")
       .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dl = docs.select(col("doc_id"),
-      greatest(size(tk) - 1, lit(0)).cast("double").as("dl"))
+      .withColumn("df",
+        count(lit(1)).over(Window.partitionBy("term")).cast("double"))
+    // the probe: each query doc's distinct terms (= its keys in tf),
+    // |Q|-bounded and broadcast into the postings stage
+    val qterms = docs.filter(col("doc_id") % 101 === 0)
+      .select(col("doc_id").as("query_id"),
+        explode(array_distinct(bigrams)).as("term"))
     val stats = docs.agg(
       count(lit(1)).cast("double").as("n"),
       sum(greatest(size(tk) - 1, lit(0))).cast("double").as("sdl"))
-    val qterms = tf.filter(col("doc_id") % 101 === 0)
-      .select(col("doc_id").as("query_id"), col("term"))
-    // only the QUERY terms' document frequencies travel: df over the
-    // full vocabulary is corpus-sized at 100 TB, df of the probe
-    // terms is |Q|-bounded and broadcastable
-    val dfq = tf.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("df"))
-      .join(broadcast(qterms.select("term").distinct()), Seq("term"))
     val idf = log(lit(1.0) +
       (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val wTerm = idf * (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) *
         (lit(0.25) + lit(0.75) * col("dl") / (col("sdl") / col("n"))))
-    val terms = tf.join(broadcast(qterms), Seq("term"))
+    val terms = postings.join(broadcast(qterms), Seq("term"))
       .filter(col("query_id") =!= col("doc_id"))
-      .join(broadcast(dfq), Seq("term"))
-      .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("doc_id").as("neighbor_id"),
         round(wTerm, 6).cast("decimal(18,6)").as("w"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("bm25").desc, col("neighbor_id"))
-    terms.groupBy("query_id", "neighbor_id")
+    // one exchange on query_id serves both the per-pair sum and the rank
+    // window (a pair's terms sit in different term partitions, so a
+    // map-side partial sum would save little)
+    terms.repartition(col("query_id"))
+      .groupBy("query_id", "neighbor_id")
       .agg(round(sum(col("w")), 6).cast("double").as("bm25"))
       .withColumn("rnk", row_number().over(w).cast("int"))
       .filter(col("rnk") <= k)
@@ -940,10 +945,12 @@ object TextQueries {
     // long one, which symmetric Jaccard structurally misses. Same
     // capped-candidate machinery as d_ngram_jaccard, survivor bound
     // rewritten for containment, shared merge-walk verification.
+    // memoCkpt owns what the verification materializes
     "d_containment" -> { (s, dir) =>
-      Dedup.containmentPairs(sharedShingleTable(s, dir),
-        sharedPairStats(s, dir), threshold = 0.8)
-        .orderBy("id_a", "id_b")
+      memoCkpt(s, s"contain:$dir:n3df20t08") {
+        Dedup.containmentPairs(sharedShingleTable(s, dir),
+          sharedPairStats(s, dir), threshold = 0.8)
+      }.orderBy("id_a", "id_b")
     },
 
     // Dump-to-dump diff: old = every doc except id%10==3, new = every
@@ -1011,15 +1018,17 @@ object TextQueries {
     // pairs: incremental maintenance must equal recomputation.
     "d_incremental_neardup" -> { (s, dir) =>
       // shingling is per-doc, so both sides are plain filters of the
-      // family's shared cached shingle table — no re-shingling
-      val sh = sharedShingleTable(s, dir)
-      Dedup.incrementalNearDups(
-        sh.filter(col("id") % 10 =!= 0),
-        sh.filter(col("id") % 10 === 0),
-        t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id").as("id")),
-        k = 6, b = 3, r = 2, threshold = 0.5)
-        .orderBy("id_a", "id_b")
+      // family's shared cached shingle table — no re-shingling; memoCkpt
+      // owns what the verification materializes
+      memoCkpt(s, s"incneardup:$dir:n3k6b3r2t05") {
+        val sh = sharedShingleTable(s, dir)
+        Dedup.incrementalNearDups(
+          sh.filter(col("id") % 10 =!= 0),
+          sh.filter(col("id") % 10 === 0),
+          t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+            .select(col("doc_id").as("id")),
+          k = 6, b = 3, r = 2, threshold = 0.5)
+      }.orderBy("id_a", "id_b")
     },
 
     // Benchmark decontamination: training docs sharing any word-4-gram

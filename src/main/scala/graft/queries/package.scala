@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableS
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import scala.jdk.CollectionConverters._
+
 package object queries {
 
   type QueryFn = (SparkSession, String) => DataFrame
@@ -102,10 +104,13 @@ package object queries {
   private final case class Pinned(df: DataFrame,
                                   rdd: org.apache.spark.rdd.RDD[_])
 
-  /** Memoize a deterministic relation with a TRUNCATED plan: eager
-    * `localCheckpoint` materializes the rows once (internal-row blocks,
-    * MEMORY_AND_DISK — persist-equivalent storage) and hands consumers
-    * a single LogicalRDD leaf instead of the builder's full pipeline.
+  /** Memoize a deterministic relation with a TRUNCATED plan: an eager
+    * [[graft.operators.Checkpoint]] materializes the rows once and hands
+    * consumers a single LogicalRDD leaf instead of the builder's full
+    * pipeline. With a checkpoint dir set (`sc.setCheckpointDir`) the rows
+    * go to files there and a consumer survives lost executor blocks;
+    * without one they are `localCheckpoint` blocks (internal rows,
+    * MEMORY_AND_DISK — persist-equivalent storage).
     * For the dedup memos the un-truncated plans nested every upstream
     * cache into 9–18k-line trees, and EVERY action stringifies its plan
     * for the SQL-listener event while AQE walks it per stage — measured
@@ -118,25 +123,33 @@ package object queries {
     * Keyed by the session's applicationId as well as `key`: the
     * checkpoint, unlike a pure model fit, is bound to the SparkContext
     * that built it. The memo owns the entry's whole lifecycle: once the
-    * checkpoint holds the rows, the Dataset caches the build itself
-    * registered (the InMemoryRelations its plan reads that were not
-    * cached before it began) are uncached, blocking; nested memo
-    * checkpoints are separate entries and stay. [[clearFitMemo]]
-    * unpersists the checkpoint. */
+    * checkpoint holds the rows, what the build itself materialized and
+    * its plan reads is freed, blocking — the Dataset caches it
+    * registered (InMemoryRelations not cached before it began) and the
+    * checkpoints it took (an operator's intermediate, such as the
+    * per-doc shingle arrays of `Dedup.verifyOverlap`); nested memo
+    * entries stay. [[clearFitMemo]] frees the entry's checkpoint. */
   private[queries] def memoCkpt(s: SparkSession, key: String)(
       build: => DataFrame): DataFrame =
     memoFit(s"${s.sparkContext.applicationId}:$key") {
-      // SparkPlan ids are allocated in creation order, and a cache's
-      // physical plan is created when it is registered
+      // SparkPlan and RDD ids are allocated in creation order, and a
+      // cache's physical plan is created when it is registered
       val before = s.range(0).queryExecution.sparkPlan.id
+      val firstRdd = s.sparkContext.emptyRDD[Unit].id
       val built = build
-      val cp = built.localCheckpoint(true)
+      val (cp, rdd) = graft.operators.Checkpoint(built)
       cachesRead(built.queryExecution.executedPlan)
         .filter(_.cacheBuilder.cachedPlan.id > before)
         .foreach(r => s.sharedState.cacheManager.uncacheQuery(
           s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           r.cacheBuilder.logicalPlan, cascade = false, blocking = true))
-      Pinned(cp, cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
+      val pinned = fitMemo.values.asScala.collect {
+        case p: Pinned => p.rdd.id }.toSet
+      built.queryExecution.analyzed
+        .collectWithSubqueries { case l: LogicalRDD => l.rdd }
+        .filter(r => r.id > firstRdd && !pinned(r.id))
+        .foreach(graft.operators.Checkpoint.release)
+      Pinned(cp, rdd)
     }.df
 
   /** Every cached relation `p` reads, directly or through another cache. */
@@ -148,16 +161,17 @@ package object queries {
   }
 
   private def release(v: AnyRef): Unit = v match {
-    case p: Pinned => p.rdd.unpersist(blocking = true); ()
+    case p: Pinned => graft.operators.Checkpoint.release(p.rdd)
     case _ => ()
   }
 
-  /** Drop every memoized fit and unpersist the checkpoint of every
-    * memoized relation. The bench harness calls this between query
-    * families so one family's cached models/relations can't skew another
-    * family's timings (and so back-to-back bench runs start from the
-    * same cold state); correctness is unaffected — every fit is a
-    * deterministic pure function, so a re-fit reproduces the same model. */
+  /** Drop every memoized fit and free the checkpoint (blocks, and files
+    * if reliable) of every memoized relation. The bench harness calls
+    * this between query families so one family's cached models/relations
+    * can't skew another family's timings (and so back-to-back bench runs
+    * start from the same cold state); correctness is unaffected — every
+    * fit is a deterministic pure function, so a re-fit reproduces the
+    * same model. */
   def clearFitMemo(): Unit =
     fitMemo.keySet.forEach(k => release(fitMemo.remove(k)))
 

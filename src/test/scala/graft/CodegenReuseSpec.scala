@@ -57,10 +57,8 @@ class CodegenReuseSpec extends SparkSpec {
 
   test("a second analyst session compiles nothing and returns the same rows") {
     val dir = "/root/testdata/sf0.001"
-    // d_minhash_lsh is left out: AQE sometimes picks the other build side
-    // of its band self-join (1 of 8 repeated sessions), which is a
-    // different plan and compiles 2 classes
-    val names = Seq("q1_pricing_summary", "d_ngram_jaccard", "t_bm25_topk")
+    val names = Seq("q1_pricing_summary", "d_minhash_lsh", "d_ngram_jaccard",
+      "t_bm25_topk")
     def session(): Map[String, Seq[Row]] = {
       clearFitMemo()
       names.map(n => n -> SparkEntry.queries(n)(spark, dir).collect().toSeq)

@@ -41,6 +41,39 @@ class PlanAuditSpec extends SparkSpec {
     flatten(df.queryExecution.executedPlan)
   }
 
+  /** Every node of every plan that ran while `f` ran — an operator whose
+    * build runs actions of its own (a checkpoint, say) executes plans
+    * that its returned frame no longer shows. The listener bus is
+    * asynchronous but in order: once a marker query run after `f` has
+    * been seen, so has every plan of `f`. */
+  private def executedNodes(f: => Any): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = { seen.add(qe); () }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      val marker = spark.range(1).toDF()
+      marker.collect()
+      var tries = 100
+      while (!seen.contains(marker.queryExecution) && tries > 0) {
+        Thread.sleep(100); tries -= 1
+      }
+      assert(seen.contains(marker.queryExecution),
+        "the listener bus did not deliver the marker query")
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
+        .flatMap(qe => flatten(qe.executedPlan))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** The documents' 3-gram shingle table, persisted the way the dedup
     * operators' callers hold it; the test releases it. */
   private def shingles(): DataFrame =
@@ -95,10 +128,13 @@ class PlanAuditSpec extends SparkSpec {
   test("dedup candidate aggregation keeps its df cap in-plan") {
     // operator-level: the gated d_ngram_jaccard reads a memoized,
     // plan-truncated relation (r14), so the pipeline shape is audited
-    // on the operator the memo builder runs
+    // on the operator the memo builder runs, in every plan it executes
+    // (the verification checkpoints the candidate side in an action of
+    // its own)
     val sh = shingles()
-    val ns = try nodes(graft.operators.Dedup.ngramJaccardPairs(sh,
-      graft.operators.Dedup.pairStats(sh, maxDf = 20), threshold = 0.5))
+    val ns = try executedNodes(graft.operators.Dedup.ngramJaccardPairs(sh,
+      graft.operators.Dedup.pairStats(sh, maxDf = 20), threshold = 0.5)
+      .collect())
     finally sh.unpersist()
     // a regression to plain collect_set + post-filter would reintroduce
     // the unbounded hot-shingle aggregation buffer
@@ -268,21 +304,10 @@ class PlanAuditSpec extends SparkSpec {
   test("publishStagedLoad: the delta lift's baseline floor reaches the scan") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    // capture the lift's EXECUTED plan via a listener: the lift runs
-    // inside publishStagedLoad (a write, not a returned frame), and the
+    // capture the lift's EXECUTED plan: the lift runs inside
+    // publishStagedLoad (a write, not a returned frame), and the
     // promise is that `_version > baseline` prunes pre-load files via
     // parquet row-group stats — the same contract readAsOf pins
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = {
-        plans.add(qe.executedPlan); ()
-      }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
     val t = graft.operators.GraftTable(spark, tmpDir("plan-staged"),
       Seq("id"), StructType(Seq(StructField("id", LongType),
         StructField("v", StringType))))
@@ -290,24 +315,13 @@ class PlanAuditSpec extends SparkSpec {
     val staging = t.beginStagedLoad()
     t.appendStaged(Seq((1L, "snap")).toDF("id", "v"), 10, staging)
     t.append(Seq((2L, "live")).toDF("id", "v"), 15) // the delta to lift
-    spark.listenerManager.register(listener)
-    try {
-      t.publishStagedLoad(staging)
-      // listener bus is async — poll for the lift plan
-      def liftScan(): Option[FileSourceScanExec] = {
-        import scala.jdk.CollectionConverters._
-        plans.asScala.toSeq.flatMap(flatten(_)).collectFirst {
-          case s: FileSourceScanExec
-            if s.metadata.get("PushedFilters")
-              .exists(_.contains("GreaterThan(_version")) => s
-        }
-      }
-      var tries = 20
-      while (liftScan().isEmpty && tries > 0) { Thread.sleep(300); tries -= 1 }
-      assert(liftScan().nonEmpty,
-        "no executed plan pushed GreaterThan(_version,...) to a parquet " +
-          "scan — the staged-load delta lift lost its row-group pruning")
-    } finally spark.listenerManager.unregister(listener)
+    val ns = executedNodes(t.publishStagedLoad(staging))
+    assert(ns.exists {
+      case s: FileSourceScanExec => s.metadata.get("PushedFilters")
+        .exists(_.contains("GreaterThan(_version"))
+      case _ => false
+    }, "no executed plan pushed GreaterThan(_version,...) to a parquet " +
+      "scan — the staged-load delta lift lost its row-group pruning")
   }
 
   test("stratified/cluster quotas: stage-1 windows partition on the salt") {
@@ -367,16 +381,16 @@ class PlanAuditSpec extends SparkSpec {
 
   test("minhash: ONE banded self-join, band relation cached and read twice") {
     // Operator-level, deterministic COLD build: the gated d_minhash_lsh
-    // reads a memoized plan-truncated relation (r14), and even before
-    // that, pinning through the warm memo surfaced 3 structurally-
-    // identical clones of the one band join along different cache paths
-    // (the r13 driver failure). The builder pipeline — what the memo
-    // executes once per session — is audited directly.
+    // reads a memoized plan-truncated relation (r14), so the builder
+    // pipeline — what the memo executes once per session — is audited
+    // directly. The band join runs inside the verification's first
+    // action (the per-doc array checkpoint), so every plan the build
+    // executes is captured, not just the returned frame's.
     graft.queries.clearFitMemo()
     spark.sharedState.cacheManager.clearCache()
     val sh = shingles()
-    val ns = try nodes(graft.operators.Dedup.minhashNearDups(sh,
-      k = 6, b = 3, r = 2, threshold = 0.5))
+    val ns = try executedNodes(graft.operators.Dedup.minhashNearDups(sh,
+      k = 6, b = 3, r = 2, threshold = 0.5).collect())
     finally sh.unpersist()
     // the b band keys are packed into one array and exploded — b separate
     // joins would re-read (and re-aggregate) the minhash input b times
@@ -387,28 +401,29 @@ class PlanAuditSpec extends SparkSpec {
         Some(j.leftKeys.map(_.toString))
       case _ => None
     }
-    // dedup by NODE IDENTITY: the shared-pairs cache (r13) nests the
-    // join under an InMemoryRelation whose adaptive plan surfaces the
-    // same join node along several flatten paths; b SEPARATE joins (the
-    // regression this pins) would be distinct nodes with distinct keys
+    // dedup by NODE IDENTITY: the same join node can surface along
+    // several flatten paths; b SEPARATE joins (the regression this pins)
+    // would be distinct nodes with distinct keys
     val bandJoins = ns.filter(p => keysOf(p).exists(ks =>
         ks.exists(_.startsWith("band#")) && ks.exists(_.startsWith("bk#"))))
-      .map(System.identityHashCode).distinct
+      .groupBy(System.identityHashCode).values.map(_.head).toSeq
     assert(bandJoins.size === 1,
       s"expected ONE (band, key) self-join, got ${bandJoins.size}")
-    // both self-join sides must read the SAME cached (id, band, bk)
-    // relation — a refactor that un-persists it silently runs the whole
-    // shingle→minhash aggregation twice
-    val bandScans = ns.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-        if m.relation.cachedPlan.output.map(_.name).toSet ==
-          Set("id", "band", "bk") => m
+    // both self-join sides must read the SAME computed (id, band, bk)
+    // relation — held once as one shuffle stage that the other side
+    // reuses (it used to be a cache read twice); a refactor that splits
+    // them silently runs the whole shingle→minhash aggregation twice
+    def shuffleOf(p: SparkPlan): Option[Int] = p match {
+      case q: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec =>
+        Some(q.shuffle.shuffleId)
+      case other if other.children.size == 1 => shuffleOf(other.children.head)
+      case _ => None
     }
-    assert(bandScans.size >= 2,
-      s"banded relation not read from cache twice (${bandScans.size} scans)")
-    assert(bandScans.map(m =>
-      System.identityHashCode(m.relation.cachedPlan)).distinct.size === 1,
-      "self-join sides read different caches, not one shared banded cache")
+    val sides = bandJoins.head.children.map(shuffleOf)
+    assert(sides.forall(_.nonEmpty),
+      s"a self-join side is not a shuffle stage: ${bandJoins.head}")
+    assert(sides.distinct.size === 1,
+      "self-join sides read different shuffles, not one shared band relation")
   }
 
   test("lsh multi-probe: explode rides the probe side; corpus bucketed once") {
@@ -690,15 +705,35 @@ class PlanAuditSpec extends SparkSpec {
     val ns = nodes(graft.queries.TextQueries.bm25Ranked(spark, dir, k = 20))
     assert(!ns.exists(_.nodeName.contains("CartesianProduct")),
       "bm25 degraded to a cartesian")
-    // the one-row stats crossJoin is the ONLY nested-loop-shaped join;
-    // qterms and df probes must stay broadcast hash joins on the term
+    // the one-row stats crossJoin is the ONLY nested-loop-shaped join
     val bnlj =
       ns.count(_.nodeName.contains("BroadcastNestedLoopJoin"))
     assert(bnlj <= 1, s"$bnlj nested-loop joins (scalar stats allows 1)")
-    assert(ns.count { case _: BroadcastHashJoinExec => true
-      case _ => false } >= 2,
+    // the query-term probe into the postings is a broadcast hash join on
+    // the term; df no longer needs a probe of its own (it is a count
+    // window over the postings' term partitions), so no other join on
+    // the term may appear — a shuffled one would re-move the postings
+    val termJoins = ns.collect {
+      case j: org.apache.spark.sql.execution.joins.HashJoin
+        if j.leftKeys.exists(_.toString.startsWith("term#")) => j
+      case j: SortMergeJoinExec
+        if j.leftKeys.exists(_.toString.startsWith("term#")) => j
+    }
+    assert(termJoins.nonEmpty && termJoins.forall(
+      _.isInstanceOf[BroadcastHashJoinExec]),
       "term probes are not broadcast hash joins: " +
         ns.map(_.nodeName).distinct.mkString(","))
+    // the postings cross ONE exchange, hash-partitioned on the term
+    val termExchanges = ns.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+        if (e.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.references.exists(_.name == "term")
+          case _ => false
+        }) => e
+    }
+    assert(termExchanges.map(System.identityHashCode).distinct.size === 1,
+      s"postings shuffled ${termExchanges.size} times on the term")
   }
 
   test("cms/bloom: sketch relations broadcast into the probe side") {
@@ -751,7 +786,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("incremental dedup: the batch broadcasts into the index probe") {
-    val ns = nodes(SparkEntry.queries("d_incremental_neardup")(spark, dir))
+    // the gated query reads a memo: audit every plan its cold build runs
+    graft.queries.clearFitMemo()
+    val ns = executedNodes(
+      SparkEntry.queries("d_incremental_neardup")(spark, dir).collect())
     // the standing index must be probed in place — a sort-merge join on
     // the band key would shuffle the whole index per ingest batch
     assert(!ns.exists(_.isInstanceOf[SortMergeJoinExec]),

@@ -35,7 +35,7 @@ class MemoLifecycleSpec extends SparkSpec {
 
   test("clearFitMemo releases every cache and checkpoint a session pinned") {
     val names = Seq("d_minhash_lsh", "d_dup_clusters", "t_bm25_topk",
-      "t_hybrid_rrf")
+      "t_hybrid_rrf", "d_containment", "d_incremental_neardup")
     val before = baseline()
     val sessions = (1 to 2).map { _ =>
       val rows = names.map(n => n -> run(n)).toMap
@@ -46,6 +46,37 @@ class MemoLifecycleSpec extends SparkSpec {
     }
     names.foreach(n => assert(sessions(1)(n) === sessions(0)(n),
       s"$n differs between sessions"))
+  }
+
+  test("under a checkpoint dir a memo survives the loss of its blocks") {
+    val before = baseline()
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty, "test expects no prior ckpt dir")
+    val ckptDir = new java.io.File(tmpDir("graft-memo-ckpt"))
+    sc.setCheckpointDir(ckptDir.getPath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles).toSeq.flatten.flatMap(c =>
+        if (c.isDirectory) files(c) else Seq(c))
+    try {
+      val cold = run("d_minhash_lsh")
+      val df = SparkEntry.queries("d_minhash_lsh")(spark, dir)
+      // the memo's checkpoint, the one leaf the consumer reads: losing
+      // its blocks (an executor gone) must not lose its rows
+      val leaves = df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }
+      assert(leaves.nonEmpty, "the consumer does not read a checkpoint")
+      leaves.foreach(org.apache.spark.GraftTestAccess.removeRddBlocks(sc, _))
+      assert(df.collect().toSeq === cold)
+      assert(files(ckptDir).nonEmpty, "no reliable checkpoint files written")
+      clearFitMemo()
+      assert(files(ckptDir).isEmpty,
+        s"clearFitMemo left checkpoint files: ${files(ckptDir).take(3)}")
+      assert(pinnedSince(before) === ((Set.empty[Int], false)))
+    } finally {
+      sc.setCheckpointDir(null)
+      assert(sc.getCheckpointDir.isEmpty)
+    }
   }
 
   test("a memo built inside another memo's build stays readable") {
