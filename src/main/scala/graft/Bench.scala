@@ -68,8 +68,9 @@ import org.apache.spark.sql.SparkSession
   *  - `events_per_sec` — realtime CDC through the full durable
   *    `CdcPipeline.processBatch` path (from `cdc_e2e_replicate`);
   *  - `bulk_rows_per_sec` — initial replication through
-  *    `Snapshot.runSharded` (shard predicates → conversion → versioned
-  *    bucketed parquet) over the sf lineitem fixture; published from a
+  *    `Snapshot.runFrame` (the replicator's path for a frame without
+  *    shard readers: one pass → conversion → versioned bucketed parquet,
+  *    shard markers after it) over the sf lineitem fixture; published from a
   *    FRESH forked JVM running [[graft.tools.PhaseProbe]] (the
   *    in-sequence sample carries a ±2× session-weather band and is
   *    recorded as `inseq_*` inside `bulk` instead);
@@ -134,7 +135,6 @@ object Bench {
     val wh = java.nio.file.Files.createTempDirectory("graft-bulk").toString
     val marks = java.nio.file.Files.createTempDirectory("graft-bulk-mk")
       .toString
-    val pks = Seq("l_orderkey", "l_linenumber")
     // cleanup in finally: a failed run must not leak a half-written
     // warehouse into the (tmpfs-backed) scratch dir for the later runs
     def rm(p: java.io.File): Unit = {
@@ -142,10 +142,8 @@ object Bench {
     }
     try {
       val t0 = System.nanoTime()
-      val t = Snapshot.runSharded(spark, registry("lineitem"), s"$wh/lineitem",
-        marks, shards,
-        k => if (shards == 1) src
-             else src.filter(Snapshot.shardPredicate(pks, shards, k)))
+      val t = Snapshot.runFrame(spark, registry("lineitem"), s"$wh/lineitem",
+        marks, shards, src)
       val sec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val finalRows = t.read.count() // FinalView dedup-on-read, not raw parquet

@@ -116,7 +116,7 @@ object Main {
       if (config.httpHost.nonEmpty)
         try Some(new MonitorServer(monitor, config.httpHost, config.httpPort,
           restart = Some(() => restartHook()),
-          gauges = gauges(registry, pipeline)))
+          gauges = gauges(spark, registry, pipeline)))
         catch { case e: Throwable =>
           query.stop()
           spark.streams.removeListener(monitor)
@@ -127,7 +127,7 @@ object Main {
   }
 
   /** The extra `/metrics` gauges of a running deployment. */
-  def gauges(registry: SchemaRegistry,
+  def gauges(spark: SparkSession, registry: SchemaRegistry,
              pipeline: CdcPipeline): () => Map[String, Long] = () => Map(
     // stuck-snapshot gauge: staged loads reserved but never published —
     // nonzero after the resume window means an operator must resume or
@@ -138,7 +138,13 @@ object Main {
     // flat while a running replicator reuses its generated code, rising
     // on every micro-batch when something inlines a per-batch value
     "codegen_compiles_total" ->
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    // memo residency: the RDDs this session keeps materialized (memo
+    // entries, checkpoints, caches) and the bytes their blocks hold in
+    // memory and on disk; both should fall back after clearFitMemo
+    "memo_rdds" -> spark.sparkContext.getPersistentRDDs.size.toLong,
+    "memo_bytes" -> spark.sparkContext.getRDDStorageInfo
+      .map(r => r.memSize + r.diskSize).sum)
 
   def main(args: Array[String]): Unit = {
     require(args.length == 4,

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -22,8 +23,22 @@ object Tables {
     */
   val tiny: Set[String] = Set("region", "nation")
 
+  /** Parquet schemas Spark inferred, by (path, length, modification
+    * time): inferring reads a footer in a one-task Spark job on every
+    * call, and an analyst session loads the same fixtures again and
+    * again. A rewritten file changes its key and is inferred afresh. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val schema = schemas.computeIfAbsent(
+      (st.getPath.toString, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(path).schema)
+    val df = spark.read.schema(schema).parquet(path)
     // events.ts arrives either as µs timestamp parquet (read as
     // TIMESTAMP_NTZ — the current fixture generation) or as ns-precision
     // parquet read as a long (spark.sql.legacy.parquet.nanosAsLong=true —

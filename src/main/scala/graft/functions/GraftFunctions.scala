@@ -104,6 +104,10 @@ object GraftFunctions {
             s"graft_stamp: value must be an integer, got $other")
         }
       }),
+    one("graft_layout_salt",
+      "the versioned store's writer-task salt of a key within its " +
+        "_bucket: pmod(hash(key), 4)",
+      classOf[LayoutSalt])(LayoutSalt(_)),
     variadic("graft_pq_codes",
       "PQ code array: per-subspace argmin over a literal codebook " +
         "(vec, cents, norms, m, dsub, ksub)",

@@ -337,9 +337,10 @@ object Dedup {
     // checkpoint (this wedged the r7 bench on s_knn_components).
     // createDataFrame over the materialized rows is a plain source
     // relation with default stats — O(1) planning per round forever.
-    // A checkpoint pins its blocks until its RDD is unpersisted, so ckpt
-    // also returns that RDD and each checkpoint is released as soon as
-    // nothing downstream reads it.
+    // A checkpoint pins its blocks (and, when reliable, its files) until
+    // it is released, so ckpt also returns its RDD and each checkpoint is
+    // released (Checkpoint.release) as soon as nothing downstream reads
+    // it; only the returned labels' checkpoint outlives the call.
     def ckpt(df: DataFrame) = {
       val (cp, rdd) = Checkpoint(df)
       (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), rdd)
@@ -363,7 +364,7 @@ object Dedup {
     }
     if (nEdges <= driverFallbackEdges && integralIds)
       return try driverComponents(base) // collects base
-        finally baseRdd.unpersist(blocking = true)
+        finally Checkpoint.release(baseRdd)
     val edges = base.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(base.select(col("id_b").as("src"), col("id_a").as("dst")))
     var (labels, labelsRdd) = ckpt(edges.select(col("src").as("id"))
@@ -399,12 +400,12 @@ object Dedup {
         case null => 0L
         case n: java.lang.Number => n.longValue()
       }
-      labelsRdd.unpersist(blocking = true) // superseded by `updated`
+      Checkpoint.release(labelsRdd) // superseded by `updated`
       labels = updated.select(col("id"), col("comp"))
       labelsRdd = updatedRdd
       round += 1
     }
-    baseRdd.unpersist(blocking = true)
+    Checkpoint.release(baseRdd)
     labels
   }
 

@@ -28,7 +28,8 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   * role of the background merge / periodic OPTIMIZE
   * (db_optimizer.py:57-113). Each of those decisions is stated once:
   * `collapse` (FINAL), `logOf` (the per-generation log reader),
-  * `writeStamped` (the bucket layout).
+  * `writeStamped` (the bucket layout) and `writeCollapsed` (a collapse
+  * written in that layout).
   *
   * == Layout ==
   * {{{
@@ -76,6 +77,11 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   *    partitioning a downstream PK join reuses; a point lookup on a
   *    bucketed table collapses its one bucket directory in place, with
   *    no shuffle (see `lookup`);
+  *  - a write that collapses first — the CDC flush ([[writeLatest]],
+  *    last write wins by seq) and `compact()` (by `(_version,
+  *    _deleted)`) — collapses on the layout exchange itself, with the
+  *    map-side partial below it ([[writeCollapsed]]): one shuffle of at
+  *    most one row per key per input partition, then the write;
   *  - `compact()` bounds read amplification and collapses generations,
   *    exactly like OPTIMIZE FINAL merging parts.
   */
@@ -382,36 +388,80 @@ final class GraftTable(
 
   private def currentGen: Int = gens.last.n
 
-  /** The one bucket layout, for live batches, the staged-publish delta
-    * (heterogeneous `_version`/`_deleted` per row) and the compacted
-    * epoch alike: stamped rows (payload + `_version` + `_deleted`) go to
-    * the current generation of `epoch`, co-located by (bucket, salt) and
-    * pk-sorted when the table is bucketed.
+  /** The one bucket layout, for live batches, snapshot shards, the
+    * staged-publish delta (heterogeneous `_version`/`_deleted` per row)
+    * and compaction alike: stamped rows (payload + `_version` +
+    * `_deleted`) go to the current generation of `epoch`, co-located by
+    * (`_bucket`, salt) and sorted by (`_bucket`, pk) when the table is
+    * bucketed.
     *
     * Without the co-location every write task opens a file per bucket it
-    * sees — tasks × buckets small files per batch (for compaction: the
-    * FINAL aggregate's pk-hash partitioning, so the compacted epoch would
-    * carry more files than the appends it replaced), which the FINAL scan
-    * then pays for file-by-file. The salt keeps a hot bucket from
-    * collapsing into one writer task; files per write ≈ buckets × salt,
-    * independent of input parallelism. The shuffle moves already-
-    * collapsed rows once — bounded by |keys|, not |events|.
-    * sortWithinPartitions(pk): parquet row-group min/max stats on the PK
-    * become tight disjoint ranges instead of whole-bucket spans, so a
-    * point lookup's pushed pk predicate skips row groups INSIDE the
-    * bucket file too — a per-partition sort, no extra shuffle. */
+    * sees — tasks × buckets small files per batch — which the FINAL scan
+    * then pays for file by file. The salt ([[graft.functions.LayoutSalt]])
+    * keeps a hot bucket from collapsing into one writer task; files per
+    * write ≈ buckets × salt, independent of input parallelism. The sort
+    * puts the partition column first, which is the order the parquet
+    * writer needs anyway, so it is the only sort: parquet row-group
+    * min/max stats on the PK become tight ranges and a point lookup's
+    * pushed pk predicate skips row groups INSIDE the bucket file too.
+    * Rows that need a collapse first go through [[writeCollapsed]]. */
   private def writeStamped(stamped: DataFrame, epoch: Int,
-                           mode: SaveMode = SaveMode.Append): Unit = {
-    val w = bucketKey match {
+                           mode: SaveMode = SaveMode.Append): Unit =
+    bucketKey match {
       case Some(k) =>
-        stamped.withColumn("_bucket", bucketExpr(col(k.name)))
-          .repartition(col("_bucket"), pmod(hash(col(k.name)), lit(4)))
-          .sortWithinPartitions(col(k.name))
-          .write.partitionBy("_bucket")
-      case None => stamped.write
+        writeLayout(stamped.withColumn("_bucket", bucketExpr(col(k.name)))
+          .repartition(col("_bucket"), layoutSalt(col(k.name)))
+          .sortWithinPartitions(col("_bucket"), col(k.name)), epoch, mode)
+      case None => writeLayout(stamped, epoch, mode)
     }
+
+  private def writeLayout(rows: DataFrame, epoch: Int, mode: SaveMode): Unit = {
+    val w =
+      if (bucketKey.isDefined) rows.write.partitionBy("_bucket") else rows.write
     w.mode(mode).parquet(genDataPath(epoch, currentGen))
   }
+
+  private def layoutSalt(key: Column): Column =
+    call_function("graft_layout_salt", key)
+
+  /** Reserved name of the salt column between the layout exchange and
+    * the collapse; it is never written. */
+  private val SaltCol = "__graft_layout_salt"
+
+  /** Collapse `events` to their latest row per key by `order`, pass the
+    * winners through `finish`, and write them in the bucket layout, on
+    * ONE exchange for a bucketed table: `events` are repartitioned on
+    * (`_bucket`, salt) and collapsed per (`_bucket`, key, salt) behind
+    * that same exchange — the layout columns are functions of the key,
+    * so the grouping is the key's — and the planner strategy
+    * [[graft.functions.LayoutCollapse]] plans the map-side partial
+    * collapse below it, so the exchange ships at most one row per key
+    * per input partition, however hot a key is. The final collapse
+    * leaves each partition sorted by (`_bucket`, key), the writer's
+    * order, so no further sort runs (for a flush the key is the wire
+    * value; compaction re-sorts by the stored key).
+    *
+    * `typedKey` states the stored key over the key column of `events`
+    * (the flush collapses wire values and converts the winners): the
+    * bucket of a key is that of its stored value. `finish` must keep
+    * `_bucket`. Non-bucketed tables collapse on the key and write with
+    * no layout exchange. */
+  private def writeCollapsed(events: DataFrame, order: Column,
+                             typedKey: Column => Column,
+                             finish: DataFrame => DataFrame, epoch: Int,
+                             mode: SaveMode): Unit =
+    bucketKey match {
+      case Some(k) =>
+        val key = typedKey(col(k.name))
+        val laid = events.withColumn("_bucket", bucketExpr(key))
+          .withColumn(SaltCol, layoutSalt(key))
+          .repartition(col("_bucket"), col(SaltCol))
+        writeLayout(finish(FinalView.latestByKey(laid,
+          Seq("_bucket", k.name, SaltCol), order).drop(SaltCol)), epoch, mode)
+      case None =>
+        writeLayout(finish(FinalView.latestByKey(events, keys, order)),
+          epoch, mode)
+    }
 
   /** Write one collapsed batch at `version` in one bucketed parquet
     * write. Each row of `rows` carries a boolean `_deleted`: false for a
@@ -435,6 +485,23 @@ final class GraftTable(
       writeStamped(stampedChanges(rows, version), currentEpoch)
     }
 
+  /** The CDC flush: collapse a segment's `events` to the last one per
+    * key by `order` (last write wins), convert the winners with
+    * `convert`, and write them at `version` — [[writeChanges]] of the
+    * collapse, on one exchange (see [[writeCollapsed]]). Each event
+    * carries `_deleted` (its op is a delete); `typedKey` states the
+    * stored key over the event's key column, and `convert` must keep the
+    * columns it does not convert. Same epoch-lock contract as
+    * [[writeChanges]]. */
+  def writeLatest(events: DataFrame, order: Column, version: Long,
+                  typedKey: Column => Column,
+                  convert: DataFrame => DataFrame): Unit =
+    epochLock.synchronized {
+      writeCollapsed(events, order, typedKey,
+        rows => stampedChanges(convert(rows), version), currentEpoch,
+        SaveMode.Append)
+    }
+
   /** Upsert a batch of row images at `version`. */
   def append(df: DataFrame, version: Long): Unit =
     writeChanges(df.withColumn("_deleted", lit(false)), version)
@@ -447,6 +514,7 @@ final class GraftTable(
   // `_version` goes through graft_stamp (functions/Stamp), not
   // lit(version): every micro-batch stamps a new version, and an inlined
   // literal would make each one compile its write stage again
+  // (`_bucket`, when the collapse computed it, rides along)
   private def stampedChanges(rows: DataFrame, version: Long): DataFrame = {
     val present = rows.columns.toSet
     val tombstone = col("_deleted")
@@ -457,7 +525,7 @@ final class GraftTable(
         else when(!tombstone, col(c.name))
       v.cast(c.dataType).as(c.name)
     } ++ Seq(call_function("graft_stamp", lit(version)).as("_version"),
-      tombstone): _*)
+      tombstone) ++ rows.columns.filter(_ == "_bucket").map(col): _*)
   }
 
   private def metaFields: Seq[StructField] = Seq(
@@ -524,16 +592,16 @@ final class GraftTable(
 
   /** FINAL semantics, stated once: per key the row with the greatest
     * (`_version`, `_deleted`) wins, so a tombstone beats an image stamped
-    * at its own version. `SELECT … FINAL` (`isFinal`, what the reference
-    * returns, db_replicator.py:202-211) then drops keys whose winner is a
-    * tombstone and returns the payload; compaction takes the winners
-    * with their meta columns and applies its own tombstone rule. */
-  private def collapse(log: DataFrame, isFinal: Boolean = true): DataFrame = {
-    val order = struct(col("_version"), col("_deleted"))
-    if (!isFinal) FinalView.latestByKey(log, keys, order)
-    else FinalView.finalView(log, keys, order, isDelete = col("_deleted"))
+    * at its own version. `SELECT … FINAL` (what the reference returns,
+    * db_replicator.py:202-211) then drops keys whose winner is a
+    * tombstone and returns the payload; compaction collapses by the same
+    * order, keeps the winners' meta columns and applies its own tombstone
+    * rule. */
+  private def collapse(log: DataFrame): DataFrame =
+    FinalView.finalView(log, keys, finalOrder, isDelete = col("_deleted"))
       .select(payloadSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+
+  private def finalOrder: Column = struct(col("_version"), col("_deleted"))
 
   /** FINAL view: latest version per key, tombstones dropped. */
   def read: DataFrame = collapse(log)
@@ -660,7 +728,6 @@ final class GraftTable(
     if (!exists) return
     val e = currentEpoch
     val cur = currentGen
-    val keep0 = collapse(log, isFinal = false)
     // Tombstones normally die here (applied, then dropped). But with a
     // staged load pending, publish will lift post-baseline rows —
     // tombstones included — into the staging epoch: dropping one now
@@ -669,8 +736,8 @@ final class GraftTable(
     // began is the only thing that removes it). Keep exactly those.
     val keep = stagingMeta() match {
       case Some((_, b)) if b != Long.MaxValue =>
-        keep0.filter(!col("_deleted") || col("_version") > b)
-      case _ => keep0.filter(!col("_deleted"))
+        !col("_deleted") || col("_version") > b
+      case _ => !col("_deleted")
     }
     // past any crashed attempt's leftovers, so SaveMode.Overwrite below
     // can only ever clobber a partial epoch, never a published one.
@@ -680,7 +747,10 @@ final class GraftTable(
     // old data AS the staging epoch, and the load's shards would then
     // append into a live epoch — a permanently corrupted table.
     val target = (listEpochs() ++ pendingStagedLoad() :+ e).max + 1
-    writeStamped(keep, target, SaveMode.Overwrite)
+    // the FINAL winners keep their own `_version`: one collapse, one
+    // layout exchange, one write
+    writeCollapsed(log, finalOrder, identity, _.filter(keep), target,
+      SaveMode.Overwrite)
     writeEpochPtr(target)
     // previous epoch survives one cycle for in-flight readers; anything
     // older — including partial epochs from crashed attempts — goes now.

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ddl.TableSchema
+import graft.ddl.{FieldSchema, TableSchema}
 import graft.functions.Wkb
 import graft.types.MySqlType
 import graft.types.MySqlType._
@@ -130,20 +130,30 @@ object RecordConversion {
               keep: Seq[String] = Nil): DataFrame = {
     val wireTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
     val cols = schema.fields.map { f =>
-      val target = MySqlType.toSpark(f.tpe)
-      val base: Column = wireTypes.get(f.name) match {
-        case None => lit(null).cast(target)
-        case Some(wt) =>
-          convertColumn(col(f.name), wt, f.tpe, f.nullable, mysqlTimezone,
-            schema.charset)
-      }
-      val withDefault =
-        if (f.nullable) base
-        else coalesce(base, defaultLiteral(f.tpe).cast(target))
-      withDefault.cast(target).as(f.name,
-        MySqlType.metadata(f.tpe, f.sourceType))
+      field(wireTypes.get(f.name).map(col(f.name) -> _), f, schema,
+        mysqlTimezone).as(f.name, MySqlType.metadata(f.tpe, f.sourceType))
     }
     df.select(cols ++ keep.map(col): _*)
+  }
+
+  /** The stored value of field `name` of `schema` from the wire column
+    * `c` of type `wire`: the column [[convert]] writes for it, without
+    * its metadata. */
+  def convertField(c: Column, wire: DataType, schema: TableSchema,
+                   name: String, mysqlTimezone: String = "UTC"): Column =
+    field(Some(c -> wire), schema.fields.find(_.name == name).get, schema,
+      mysqlTimezone)
+
+  private def field(wire: Option[(Column, DataType)], f: FieldSchema,
+                    schema: TableSchema, tz: String): Column = {
+    val target = MySqlType.toSpark(f.tpe)
+    val base = wire.fold(lit(null).cast(target)) { case (c, wt) =>
+      convertColumn(c, wt, f.tpe, f.nullable, tz, schema.charset)
+    }
+    val withDefault =
+      if (f.nullable) base
+      else coalesce(base, defaultLiteral(f.tpe).cast(target))
+    withDefault.cast(target)
   }
 
   /** X3 — charset decode: text bytes off the wire decode with the

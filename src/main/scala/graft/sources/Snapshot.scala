@@ -30,8 +30,12 @@ object Snapshot {
     * Also usable as a literal SQL string for JDBC `predicates`. */
   def shardPredicate(pkCols: Seq[String], totalWorkers: Int,
                      workerId: Int): Column =
+    shardOf(pkCols, totalWorkers) === lit(workerId)
+
+  /** The shard a row belongs to, of `totalWorkers`. */
+  private def shardOf(pkCols: Seq[String], totalWorkers: Int): Column =
     pmod(crc32(concat_ws("|", pkCols.map(c => coalesce(col(c).cast("string"),
-      lit(""))): _*)), lit(totalWorkers)) === lit(workerId)
+      lit(""))): _*)), lit(totalWorkers))
 
   def shardPredicateSql(pkCols: Seq[String], totalWorkers: Int,
                         workerId: Int): String = {
@@ -101,18 +105,19 @@ object Snapshot {
       shardSubPredicates(pkCols, shards, k, subParts), props)
   }
 
-  /** Shard-resumable, atomically-published snapshot: the table is
-    * written as `shards` sequential per-shard append jobs into an
-    * UNPUBLISHED staging epoch ([[GraftTable.beginStagedLoad]]), each
-    * committing a durable completion marker — a driver restart
-    * mid-snapshot redoes only the shards without markers, the
-    * reference's `(table, max_primary_key)` resume granularity
-    * (db_replicator_initial.py:183-192) re-expressed as deterministic
-    * shard predicates. When the LAST shard completes, one epoch-pointer
-    * swap publishes the whole table — the reference stages initial
-    * replication in a temp database and atomically renames it into
-    * place (db_replicator_initial.py:149-162) for the same reason: a
-    * reader during the load sees empty-or-complete, never partial.
+  /** Shard-resumable, atomically-published snapshot through per-shard
+    * readers: each missing shard is read by `shardSource` and written
+    * as its own append job into an UNPUBLISHED staging epoch
+    * ([[GraftTable.beginStagedLoad]]), each committing a durable
+    * completion marker — a driver restart mid-snapshot redoes only the
+    * shards without markers, the reference's `(table, max_primary_key)`
+    * resume granularity (db_replicator_initial.py:183-192) re-expressed
+    * as deterministic shard predicates. When the LAST shard completes,
+    * one epoch-pointer swap publishes the whole table — the reference
+    * stages initial replication in a temp database and atomically
+    * renames it into place (db_replicator_initial.py:149-162) for the
+    * same reason: a reader during the load sees empty-or-complete, never
+    * partial.
     *
     * Exactly-once storage per shard: a failed shard job commits no files
     * (parquet's job-commit protocol), so the re-run appends its rows
@@ -127,7 +132,49 @@ object Snapshot {
                  markerDir: String, shards: Int,
                  shardSource: Int => DataFrame,
                  config: GraftConfig = GraftConfig(),
-                 version: Long = 0L): GraftTable = {
+                 version: Long = 0L): GraftTable =
+    staged(spark, schema, tableDir, markerDir, shards, config, version) {
+      (missing, append, mark) =>
+        missing.foreach { k =>
+          // NOT spread (r13 optimization round, measured): repartitioning
+          // the single-split local shard source to parallelize the
+          // parquet encode costs more in shuffle + small-file overhead
+          // than the parallel write saves (bulkLoad 2.85 -> 3.5 s at
+          // sf0.1); real-scale shard sources are multi-split already
+          append(shardSource(k))
+          mark(k)
+        }
+    }
+
+  /** The same shard-resumable, atomically-published snapshot of a frame
+    * that has no per-shard reader: ONE append job writes every shard
+    * whose marker is missing — the frame is scanned once, the
+    * reference's single sharded initial scan
+    * (db_replicator_initial.py:386-448) — and their markers are written
+    * after it commits. A fresh load applies no shard filter at all; a
+    * resume filters the frame to the missing shards. The marker contract
+    * is [[runSharded]]'s: a crash before the markers redoes the missing
+    * shards together (the FINAL view collapses a re-appended one), and
+    * the caller's marker dir encodes the shard count. */
+  def runFrame(spark: SparkSession, schema: TableSchema, tableDir: String,
+               markerDir: String, shards: Int, frame: DataFrame,
+               config: GraftConfig = GraftConfig(),
+               version: Long = 0L): GraftTable =
+    staged(spark, schema, tableDir, markerDir, shards, config, version) {
+      (missing, append, mark) =>
+        append(if (missing.size == shards) frame
+          else frame.filter(shardOf(schema.primaryKeys, shards)
+            .isin(missing: _*)))
+        missing.foreach(mark)
+    }
+
+  /** The staged load both snapshot forms share: `load` gets the shards
+    * without a marker, an append into the staging epoch and a marker
+    * writer, and must mark each shard once its rows have committed. */
+  private def staged(spark: SparkSession, schema: TableSchema,
+                     tableDir: String, markerDir: String, shards: Int,
+                     config: GraftConfig, version: Long)(
+      load: (Seq[Int], DataFrame => Unit, Int => Unit) => Unit): GraftTable = {
     // registry-id handle: the snapshot writes the SAME generation ids
     // the realtime pipeline reads by (GraftTable.fromSchema doc) — on a
     // re-load of an evolved schema, positional ids would strand every
@@ -136,23 +183,16 @@ object Snapshot {
     val dir = new org.apache.hadoop.fs.Path(markerDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    val missing = (0 until shards).filterNot(k =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$markerDir/shard-$k")))
+    def marker(k: Int) = new org.apache.hadoop.fs.Path(s"$markerDir/shard-$k")
+    val missing = (0 until shards).filterNot(k => fs.exists(marker(k)))
     if (missing.nonEmpty) {
       // resumes the SAME staging epoch after a crash (meta/staging):
       // completed shards' files must stay where their markers claim
       val staging = target.beginStagedLoad()
-      missing.foreach { k =>
-        // NOT spread (r13 optimization round, measured): repartitioning
-        // the single-split local shard source to parallelize the
-        // parquet encode costs more in shuffle + small-file overhead
-        // than the parallel write saves (bulkLoad 2.85 -> 3.5 s at
-        // sf0.1); real-scale shard sources are multi-split already
-        target.appendStaged(RecordConversion.convert(shardSource(k), schema,
-          config.mysqlTimezone), version, staging)
-        fs.create(new org.apache.hadoop.fs.Path(s"$markerDir/shard-$k"),
-          true).close()
-      }
+      load(missing,
+        df => target.appendStaged(RecordConversion.convert(df, schema,
+          config.mysqlTimezone), version, staging),
+        k => fs.create(marker(k), true).close())
       target.publishStagedLoad(staging)
     } else
       // every marker present but the load unpublished: the process died

@@ -3,11 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.GraftConfig
 import graft.ddl.{DdlOp, DdlParser, SchemaRegistry}
-import graft.operators.{FinalView, GraftTable, RecordConversion}
+import graft.operators.{GraftTable, RecordConversion}
 import graft.sources.EventSpool
 
 
@@ -364,12 +364,11 @@ final class CdcPipeline(
     val target = table(db, tbl)
     // wire schema: every field as string; RecordConversion casts/decodes.
     val wire = StructType(schema.fields.map(f =>
-      org.apache.spark.sql.types.StructField(f.name,
-        org.apache.spark.sql.types.StringType)))
+      org.apache.spark.sql.types.StructField(f.name, StringType)))
 
     // A1: LWW per PK across the whole segment (insert-then-delete of the
     // same key must resolve to the *last* op, db_replicator_realtime.py:123-177):
-    // parse first, then collapse on the typed PKs.
+    // parse first, then collapse on the PKs' wire values.
     // Metadata columns carry reserved names: a payload column named
     // `seq` or `op` is legal MySQL and would otherwise make every
     // downstream reference AMBIGUOUS; and fields are pulled out of the
@@ -382,17 +381,24 @@ final class CdcPipeline(
         from_json(col("row"), wire).as("r"))
       .select(Seq(col(mseq), col(mop)) ++
         schema.fields.map(f => col("r")(f.name).as(f.name)): _*)
-    // One collapse and one bucketed write for the whole segment: a key
-    // whose last op is a REMOVE becomes a tombstone row (payload stored
-    // NULL), every other key a row image. One frame, not a union of
-    // images and key-only tombstones: the optimizer prunes the tombstone
-    // branch's aggregate to the key, so the two branches' exchanges
-    // differ and the collapse would run twice.
-    val collapsed = FinalView.latestByKey(parsed, schema.primaryKeys,
-      struct(col(mseq)))
-      .withColumn("_deleted", col(mop) === EventSpool.OpRemove)
-    target.writeChanges(RecordConversion.convert(collapsed, schema,
-      config.mysqlTimezone, keep = Seq("_deleted")), version)
+    // One collapse and one bucketed write for the whole segment, on one
+    // exchange (GraftTable.writeLatest): a key whose last op is a REMOVE
+    // becomes a tombstone row (payload stored NULL), every other key a
+    // row image. One frame, not a union of images and key-only
+    // tombstones: the optimizer prunes the tombstone branch's aggregate
+    // to the key, so the two branches' exchanges differ and the collapse
+    // would run twice. The collapse runs on the wire values and only its
+    // winners are converted; the layout bucket comes from the converted
+    // key (the unsigned fixup changes it).
+    target.writeLatest(
+      parsed.withColumn("_deleted", col(mop) === EventSpool.OpRemove)
+        .drop(mop),
+      struct(col(mseq)), version,
+      typedKey = k => RecordConversion.convertField(k, StringType, schema,
+        schema.primaryKeys.head, config.mysqlTimezone),
+      convert = rows => RecordConversion.convert(rows, schema,
+        config.mysqlTimezone,
+        keep = rows.columns.toSeq.diff(schema.fields.map(_.name))))
   }
 
   /** Parse one session-admitted DDL statement; unparseable → Ignored,

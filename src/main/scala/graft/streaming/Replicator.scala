@@ -24,12 +24,13 @@ object Replicator {
     * @param shardSources  optional per-table shard readers (shard index →
     *                      DataFrame, e.g. [[Snapshot.jdbcShard]]): each
     *                      resume shard becomes its own server-side
-    *                      predicated read, so the wire moves every row
-    *                      exactly once across the snapshot. Tables
-    *                      without an entry fall back to filtering the
-    *                      `snapshots` frame per shard — fine for file
-    *                      fixtures (the scan re-splits), wasteful for
-    *                      JDBC at scale.
+    *                      predicated read and its own write job, so the
+    *                      wire moves every row exactly once across the
+    *                      snapshot. A table without an entry writes its
+    *                      `snapshots` frame in ONE job over the shards
+    *                      whose markers are missing
+    *                      ([[Snapshot.runFrame]]): one scan of the frame,
+    *                      unfiltered on a fresh load.
     */
   def start(spark: SparkSession, config: GraftConfig,
             registry: SchemaRegistry, warehouseDir: String,
@@ -58,7 +59,6 @@ object Replicator {
         if (config.tableMatches(tbl) && registry.contains(tbl) &&
             !fs.exists(marker)) {
           val shards = math.max(1, config.initialReplicationThreads)
-          val pks = registry(tbl).primaryKeys
           // the marker dir ENCODES the shard count: a crashed 8-way
           // snapshot restarted with 4 threads must not skip "shard-0/1"
           // of the new split (different residue sets — rows would be
@@ -66,9 +66,6 @@ object Replicator {
           // the redone shards collapse in the FINAL view
           val shardsDir =
             s"$warehouseDir/_state/initial_done/$db.$tbl.shards-$shards"
-          val source: Int => DataFrame = shardSources.getOrElse(tbl,
-            k => if (shards == 1) df
-                 else df.filter(Snapshot.shardPredicate(pks, shards, k)))
           // +1: the config contract (Config.scala version_initial_value)
           // and the reference (clickhouse_api.py get_last_used_version →
           // increment-then-stamp) both promise stamps STRICTLY above the
@@ -76,9 +73,14 @@ object Replicator {
           // with a pre-existing version-N row instead of winning the
           // FINAL dedup. Realtime batches stamp at ≥ initial + 2^20
           // (CdcPipeline.version), comfortably above.
-          Snapshot.runSharded(spark, registry(tbl),
-            pipeline.tablePath(db, tbl), shardsDir, shards, source, config,
-            version = config.versionInitialValue + 1)
+          val version = config.versionInitialValue + 1
+          val path = pipeline.tablePath(db, tbl)
+          shardSources.get(tbl) match {
+            case Some(source) => Snapshot.runSharded(spark, registry(tbl),
+              path, shardsDir, shards, source, config, version)
+            case None => Snapshot.runFrame(spark, registry(tbl), path,
+              shardsDir, shards, df, config, version)
+          }
           Option(marker.getParent).foreach(fs.mkdirs)
           fs.create(marker, true).close()
           fs.delete(new org.apache.hadoop.fs.Path(shardsDir), true)

@@ -51,7 +51,7 @@ object BulkProbe {
       (0 until 4).foreach(k =>
         noop(RecordConversion.convert(shard(k), schema, "UTC")))
     }
-    time("full bulkLoad (runSharded + FINAL read)") {
+    time("full bulkLoad (runFrame + FINAL read)") {
       graft.Bench.bulkLoad(spark, sfDir, shards = 4)
       ()
     }

@@ -46,7 +46,11 @@ class PlanAuditSpec extends SparkSpec {
     * that its returned frame no longer shows. The listener bus is
     * asynchronous but in order: once a marker query run after `f` has
     * been seen, so has every plan of `f`. */
-  private def executedNodes(f: => Any): Seq[SparkPlan] = {
+  private def executedNodes(f: => Any): Seq[SparkPlan] =
+    executedPlans(f).flatten
+
+  /** [[executedNodes]], one node list per plan that ran. */
+  private def executedPlans(f: => Any): Seq[Seq[SparkPlan]] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -70,7 +74,7 @@ class PlanAuditSpec extends SparkSpec {
         "the listener bus did not deliver the marker query")
       import scala.jdk.CollectionConverters._
       seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
-        .flatMap(qe => flatten(qe.executedPlan))
+        .map(qe => flatten(qe.executedPlan))
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -322,6 +326,54 @@ class PlanAuditSpec extends SparkSpec {
       case _ => false
     }, "no executed plan pushed GreaterThan(_version,...) to a parquet " +
       "scan — the staged-load delta lift lost its row-group pruning")
+  }
+
+  test("CDC flush and compact: one layout exchange, the partial collapse below it") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.sources.EventSpool
+    // every write plan: exactly one shuffle, and every partial aggregate
+    // (the map-side collapse) sits below it, so the exchange ships
+    // partial rows and the layout needs no second exchange
+    def assertOneExchange(what: String, plans: Seq[Seq[SparkPlan]]): Unit = {
+      val writes = plans.filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+      assert(writes.nonEmpty, s"$what: no write ran")
+      writes.foreach { ns =>
+        val exchanges = ns.collect { case e: ShuffleExchangeExec => e }.distinct
+        assert(exchanges.size === 1,
+          s"$what: ${exchanges.size} exchanges in\n${ns.head.treeString}")
+        def partials(p: Seq[SparkPlan]) = p.count {
+          case a: BaseAggregateExec =>
+            a.aggregateExpressions.exists(_.mode == Partial)
+          case _ => false
+        }
+        val below = partials(flatten(exchanges.head))
+        assert(below === 1 && partials(ns) === 1,
+          s"$what: partial collapse not (only) below the exchange in\n" +
+            ns.head.treeString)
+      }
+    }
+    val registry = new graft.ddl.SchemaRegistry
+    registry.applySql(
+      "CREATE TABLE users (id int NOT NULL, name varchar(50), PRIMARY KEY(id))")
+    val pipeline = new graft.streaming.CdcPipeline(spark, GraftConfig(),
+      registry, tmpDir("plan-flush-wh"))
+    val spool = tmpDir("plan-flush-spool")
+    EventSpool.writeFile(spool, "000001.json", (1 to 40).map { i =>
+      EventSpool.eventJson(i, "d", "users", EventSpool.OpAdd,
+        row = Some(s"""{"id":"${i % 5}","name":"n$i"}"""))
+    })
+    assertOneExchange("flush", executedPlans(
+      pipeline.processBatch(EventSpool.readBatch(spark, spool), 0)))
+    val t = pipeline.table("users")
+    assert(t.read.count() === 5)
+    assertOneExchange("compact", executedPlans(t.compact()))
+    assert(t.read.collect().map(r => (r.getInt(0), r.getString(1))).toSet
+      === (36 to 40).map(i => (i % 5, s"n$i")).toSet)
+    val (_, compactJobs) = jobsOf(t.compact())
+    assert(compactJobs <= 2, s"compact ran $compactJobs jobs")
   }
 
   test("stratified/cluster quotas: stage-1 windows partition on the salt") {

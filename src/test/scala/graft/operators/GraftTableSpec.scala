@@ -213,4 +213,27 @@ class GraftTableSpec extends SparkSpec {
     t.append(Seq((2L, "b")).toDF("id", "v"), version = 2)
     assertSame(t.read, Seq((2L, "b")))
   }
+
+  test("a hot-key flush ships one row per key per map partition") {
+    // 200 k events over 100 keys in 8 input partitions: the collapse
+    // runs on the layout exchange with its partial below it, so the
+    // exchange carries at most keys × map partitions rows — not one
+    // per event, and no second exchange adds the collapsed keys again
+    val keys = 100
+    val parts = 8
+    val n = 200000L
+    val t = mkTable()
+    val events = spark.range(0, n, 1, parts).select(
+      (col("id") % keys).as("id"), col("id").as("seq"),
+      col("id").cast("string").as("v"), (col("id") % 7 === 0).as("_deleted"))
+    val (_, jobs, records) = workOf(
+      t.writeLatest(events, struct(col("seq")), 5L, identity, identity))
+    assert(records <= keys * parts, s"$records shuffle records")
+    assert(jobs <= 2, s"$jobs jobs")
+    // each key's last event wins; a last delete leaves no row
+    val want = (0 until keys).map(k => n - keys + k)
+      .filter(_ % 7 != 0).map(i => (i % keys, i.toString))
+    assertSame(t.read, want)
+    assert(t.log.count() === keys.toLong)
+  }
 }

@@ -104,25 +104,39 @@ class TrainingDataOpsSpec extends SparkSpec {
     // with sc.setCheckpointDir set, the loop switches from
     // localCheckpoint (executor-block-resident, lost on executor
     // failure) to reliable checkpoints in the configured dir — the
-    // fault-tolerant cluster mode. Same semantics, files on disk.
+    // fault-tolerant cluster mode. Same semantics, files on disk, and
+    // every checkpoint but the returned relation's is deleted.
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "test expects no prior ckpt dir")
     val dir = tmpDir("graft-ckpt")
     sc.setCheckpointDir(dir)
     try {
+      // one `rdd-N` directory per reliable checkpoint still on disk
+      def checkpoints(f: java.io.File): Seq[String] =
+        Option(f.listFiles).toSeq.flatten.flatMap { c =>
+          if (c.getName.startsWith("rdd-")) Seq(c.getPath)
+          else if (c.isDirectory) checkpoints(c)
+          else Nil
+        }
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
         .toDF("id_a", "id_b")
+      val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L)
+      // the distributed loop (no driver fallback): its edge checkpoint
+      // and every superseded round are freed; the labels' own remains
+      val labels = Dedup.componentLabels(pairs, driverFallbackEdges = 0)
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        === expected)
+      val left = checkpoints(new java.io.File(dir))
+      assert(left.size === 1,
+        s"expected only the returned relation's checkpoint, found $left")
+      // the driver path checkpoints the edges, collects them, frees them
       val got = Dedup.dupClusters(pairs).collect()
         .map(r => (r.getAs[Long]("canonical_id"),
           r.getAs[Long]("n_members"), r.getAs[String]("members"))).toSet
       assert(got === Set((1L, 4L, "1,2,3,4"), (10L, 2L, "10,11")))
-      // reliable checkpoints actually landed in the dir
-      def count(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles).map(_.map(count).sum)
-          .getOrElse(0)
-        else 1
-      assert(count(new java.io.File(dir)) > 0,
-        "no reliable checkpoint files written")
+      assert(checkpoints(new java.io.File(dir)) === left,
+        "the driver path left checkpoint files")
     } finally {
       sc.setCheckpointDir(null)
       assert(sc.getCheckpointDir.isEmpty)

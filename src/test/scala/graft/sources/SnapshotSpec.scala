@@ -71,6 +71,50 @@ class SnapshotSpec extends SparkSpec {
       === (1 to 120).map(i => (i.toLong, s"v$i")).toSet)
   }
 
+  test("a frame without a shard reader snapshots in one pass") {
+    // Replicator.start's fallback: no per-shard reader, so ONE job
+    // writes every missing shard (the exchange's map stage and the
+    // write) — not one filtered re-scan of the frame per shard
+    val rows = (1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val schema = graft.ddl.DdlParser.parse(
+      "CREATE TABLE s (id bigint NOT NULL, v varchar(20), PRIMARY KEY(id))")
+      .asInstanceOf[graft.ddl.DdlOp.CreateTable].schema
+    val markers = tmpDir("graft-snap-fr-mk")
+    val (t, jobs) = jobsOf(Snapshot.runFrame(spark, schema,
+      tmpDir("graft-snap-fr"), markers, 4, rows))
+    assert(jobs <= 2, s"$jobs jobs for a 4-shard frame snapshot")
+    assert(new java.io.File(markers).list().toSet
+      .filter(_.startsWith("shard-")) === (0 until 4).map(k => s"shard-$k").toSet)
+    assert(t.log.count() === 200)
+    assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      === (1 to 200).map(i => (i.toLong, s"v$i")).toSet)
+  }
+
+  test("a frame resume writes only the rows of the unmarked shards") {
+    val rows = (1 to 120).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val schema = graft.ddl.DdlParser.parse(
+      "CREATE TABLE s (id bigint NOT NULL, v varchar(20), PRIMARY KEY(id))")
+      .asInstanceOf[graft.ddl.DdlOp.CreateTable].schema
+    val dir = tmpDir("graft-snap-frr")
+    val markers = tmpDir("graft-snap-frr-mk")
+    // the crash state: shards 0 and 1 staged and marked, 2 and 3 not
+    val t0 = graft.operators.GraftTable.fromSchema(spark, dir, schema)
+    val staging = t0.beginStagedLoad()
+    def shards(ks: Int*) =
+      rows.filter(ks.map(Snapshot.shardPredicate(Seq("id"), 4, _)).reduce(_ || _))
+    t0.appendStaged(shards(0, 1), 0L, staging)
+    Seq(0, 1).foreach(k => new java.io.File(markers, s"shard-$k").createNewFile())
+    val marked = shards(0, 1).count()
+    assert(marked > 0 && marked < 120)
+    val t = Snapshot.runFrame(spark, schema, dir, markers, 4, rows)
+    // exactly one image per source row: shards 0 and 1 were not rewritten
+    assert(t.log.count() === 120)
+    assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      === (1 to 120).map(i => (i.toLong, s"v$i")).toSet)
+    assert(new java.io.File(markers).list().toSet
+      .filter(_.startsWith("shard-")) === (0 until 4).map(k => s"shard-$k").toSet)
+  }
+
   test("string PKs with quotes/pipes/unicode shard and resume cleanly") {
     // The reference's keyset pagination quotes string PKs into SQL
     // literals (mysql_api.py:117-136, db_replicator_initial.py:210-218)

@@ -118,6 +118,30 @@ class CdcPipelineSpec extends SparkSpec {
     assert(got.toSeq === Seq((1, "ann", None), (2, "bob", Some("b@x.io"))))
   }
 
+  test("a two-table batch split at one DDL runs at most 7 Spark jobs") {
+    // the DDL collect, the segment manifest (its map stage and collect)
+    // and, per flushed (segment, table), one collapse on the layout
+    // exchange and the write: 1 + 2 + 2 × 2
+    val (pipeline, _) = mkPipeline()
+    val spool = tmpDir("graft-spool-jobs")
+    writeFile(spool, "000001.json", Seq(
+      eventJson(1, "d", "users", OpAdd, row = Some(row(1, "ann", 30))),
+      eventJson(2, "d", "users", OpAdd, row = Some(row(2, "bob", 40))),
+      eventJson(3, "d", "users", OpRemove, row = Some("""{"id":"2"}""")),
+      eventJson(4, "d", "orders", OpQuery, query = Some(
+        "CREATE TABLE orders (id bigint NOT NULL, total int, PRIMARY KEY(id))")),
+      eventJson(5, "d", "orders", OpAdd, row = Some("""{"id":"7","total":"3"}""")),
+      eventJson(6, "d", "orders", OpAdd, row = Some("""{"id":"7","total":"4"}"""))))
+    val (_, jobs) = jobsOf(
+      pipeline.processBatch(EventSpool.readBatch(spark, spool), 0))
+    assert(jobs <= 7, s"$jobs jobs")
+    assert(pipeline.table("users").read.collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet ===
+      Set((1, "ann", 30L)))
+    assert(pipeline.table("orders").read.collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet === Set((7L, 4)))
+  }
+
   test("LWW within a batch: later seq wins, insert-then-delete vanishes") {
     val (pipeline, _) = mkPipeline()
     val spool = tmpDir("graft-spool3")
@@ -770,7 +794,7 @@ class CdcPipelineSpec extends SparkSpec {
   test("/metrics serves Main's gauges, codegen_compiles_total among them") {
     val (pipeline, registry) = mkPipeline()
     val server = new MonitorServer(new LagMonitor, "127.0.0.1", 0,
-      gauges = graft.Main.gauges(registry, pipeline))
+      gauges = graft.Main.gauges(spark, registry, pipeline))
     def compiles = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     try {
@@ -784,6 +808,19 @@ class CdcPipelineSpec extends SparkSpec {
       val served = """"codegen_compiles_total":(\d+)""".r
         .findFirstMatchIn(body).map(_.group(1).toLong)
       assert(served.exists(n => n >= before && n <= compiles), body)
+      // memo residency, from the session's persisted RDDs: one held
+      // RDD is at least one entry with bytes behind it
+      val held = spark.sparkContext.parallelize(1 to 1000, 2).persist()
+      try {
+        held.count()
+        val again = new String(java.net.URI
+          .create(s"http://127.0.0.1:${server.port}/metrics").toURL
+          .openConnection().getInputStream.readAllBytes(), "UTF-8")
+        def gauge(name: String) = s""""$name":(\\d+)""".r
+          .findFirstMatchIn(again).map(_.group(1).toLong)
+        assert(gauge("memo_rdds").exists(_ >= 1), again)
+        assert(gauge("memo_bytes").exists(_ > 0), again)
+      } finally held.unpersist(blocking = true)
     } finally server.stop()
   }
 
