@@ -6,15 +6,18 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `Builder.withExtensions`) registering the engine's custom Catalyst
   * expressions — the WKB geometry decoders (X6), the vector and text
   * kernels, `graft_stamp`, `graft_layout_salt` — the physical rule
-  * [[graft.functions.StampPushedKeys]], which keeps a point lookup's key
-  * out of generated code, and the planner strategy
+  * [[graft.functions.StampPushedKeys]], which keeps a pushed integral
+  * key out of generated code, and two planner strategies:
   * [[graft.functions.LayoutCollapse]], which runs a bucketed write's
-  * collapse on its one layout exchange.
+  * collapse on its one layout exchange, and
+  * [[graft.functions.PointLookupStrategy]], which reads a bucketed point
+  * lookup on the driver.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.GraftFunctions.register(ext)
     ext.injectQueryPostPlannerStrategyRule(_ => graft.functions.StampPushedKeys)
     ext.injectPlannerStrategy(_ => graft.functions.LayoutCollapse)
+    ext.injectPlannerStrategy(_ => graft.functions.PointLookupStrategy)
   }
 }

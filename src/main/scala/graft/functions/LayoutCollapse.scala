@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, RepartitionByExpression}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.aggregate.{AggUtils, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** The salt of the versioned store's file layout: which of
@@ -66,7 +66,7 @@ object LayoutCollapse extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case agg @ Aggregate(_, _, shuffle @ RepartitionByExpression(
-        Seq(b: Attribute, s: Attribute), Project(list, input), None, _), _)
+        Seq(b: Attribute, s: Attribute), Project(list, input), _, _), _)
         if list.exists {
           case a @ Alias(_: LayoutSalt, _) => a.exprId == s.exprId
           case _ => false
@@ -74,9 +74,13 @@ object LayoutCollapse extends SparkStrategy {
       (agg match {
         case PhysicalAggregation(group, aggs, result, _)
             if aggs.forall(a => !a.isDistinct && a.filter.isEmpty) =>
+          // the origin Spark gives a repartition: adaptive execution
+          // coalesces a repartition by columns, not one to a fixed count
+          val origin =
+            if (shuffle.optNumPartitions.isDefined) REPARTITION_BY_NUM
+            else REPARTITION_BY_COL
           val exchange = ShuffleExchangeExec(shuffle.partitioning,
-            planLater(shuffle.child), REPARTITION_BY_COL,
-            shuffle.optAdvisoryPartitionSize)
+            planLater(shuffle.child), origin, shuffle.optAdvisoryPartitionSize)
           AggUtils.planAggregateWithoutDistinct(group, aggs, result, exchange)
             .headOption.flatMap(collapse(_, b, s, list, input))
         case _ => None

@@ -10,12 +10,15 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * page pruning need one — but the `FilterExec` right above the scan,
   * which re-checks it row by row, reads the value through a [[Stamp]].
   *
-  * That residual filter is the only place a point lookup's key reaches
-  * generated code, so without this every distinct key compiled its scan
-  * stage again. With it, `GraftTable.lookup` over any key of the same
-  * table reuses one compiled class. Only integral literals are rewritten:
-  * the types a bucketed table's key can have. Other equalities (a string
-  * key, a date) keep their inlined literal and their plan unchanged.
+  * That residual filter is the only place such a key reaches generated
+  * code, so without this every distinct key compiled its scan stage
+  * again. It serves the lookups that keep the parallel plan
+  * (`GraftTable.lookup` on a table with a generation written before its
+  * PK became integral, or a value that names several keys) and user
+  * predicates on a FINAL read; a bucketed lookup is read on the driver
+  * and compiles nothing. Only integral literals are rewritten: the types
+  * a bucketed table's key can have. Other equalities (a string key, a
+  * date) keep their inlined literal and their plan unchanged.
   *
   * Injected after planning (`injectQueryPostPlannerStrategyRule`), where
   * the filter still sits directly on the scan: the rule runs on every

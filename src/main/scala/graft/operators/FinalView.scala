@@ -55,5 +55,9 @@ object FinalView {
     */
   def finalView(log: DataFrame, keys: Seq[String], version: Column,
                 isDelete: Column): DataFrame =
-    latestByKey(log, keys, version).filter(!coalesce(isDelete, lit(false)))
+    latestByKey(log, keys, version).filter(live(isDelete))
+
+  /** Whether a latest row survives FINAL: it is not a tombstone, and a
+    * NULL `isDelete` counts as live (see [[finalView]]). */
+  def live(isDelete: Column): Column = !coalesce(isDelete, lit(false))
 }

@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Cast, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,9 +30,10 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   * an image stamped at its own version), with `compact()` playing the
   * role of the background merge / periodic OPTIMIZE
   * (db_optimizer.py:57-113). Each of those decisions is stated once:
-  * `collapse` (FINAL), `logOf` (the per-generation log reader),
-  * `writeStamped` (the bucket layout) and `writeCollapsed` (a collapse
-  * written in that layout).
+  * `collapse` (FINAL, which the point read binds as `finalRule`),
+  * `asCurrent` (a generation in the current schema, for the log reader
+  * `logOf` and the point read alike), `writeStamped` (the bucket layout)
+  * and `writeCollapsed` (a collapse written in that layout).
   *
   * == Layout ==
   * {{{
@@ -63,8 +67,8 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   * partitioned by `_bucket = floor(pk / 4294967)` — the reference's
   * `PARTITION BY intDiv(id, 4294967)` (clickhouse_api.py:249-251) — and
   * sorted by the pk inside each file. `lookup()` reads only its key's
-  * `_bucket=` directory, and parquet min/max stats on the pk skip row
-  * groups inside it.
+  * `_bucket=` directory, on the driver, and parquet min/max stats and
+  * column-index pages on the pk skip row groups and pages inside it.
   *
   * Scale design:
   *  - writes are blind appends — no read-modify-write, so ingest
@@ -75,8 +79,9 @@ final case class GraftColumn(id: Int, name: String, dataType: DataType,
   *    deferred merges under the hood);
   *  - the FINAL aggregate of a scan shuffles on the PK — the same
   *    partitioning a downstream PK join reuses; a point lookup on a
-  *    bucketed table collapses its one bucket directory in place, with
-  *    no shuffle (see `lookup`);
+  *    bucketed table runs no Spark job: the driver reads the key's one
+  *    bucket directory with the key pushed into parquet and applies the
+  *    same FINAL rule to the key's rows (see `lookup`);
   *  - a write that collapses first — the CDC flush ([[writeLatest]],
   *    last write wins by seq) and `compact()` (by `(_version,
   *    _deleted)`) — collapses on the layout exchange itself, with the
@@ -444,18 +449,24 @@ final class GraftTable(
     * `typedKey` states the stored key over the key column of `events`
     * (the flush collapses wire values and converts the winners): the
     * bucket of a key is that of its stored value. `finish` must keep
-    * `_bucket`. Non-bucketed tables collapse on the key and write with
-    * no layout exchange. */
+    * `_bucket`. `partitions`, when given, fixes the exchange's partition
+    * count, which adaptive execution then leaves as it is; otherwise
+    * adaptive execution coalesces the exchange by the bytes it ships.
+    * Non-bucketed tables collapse on the key and write with no layout
+    * exchange. */
   private def writeCollapsed(events: DataFrame, order: Column,
                              typedKey: Column => Column,
                              finish: DataFrame => DataFrame, epoch: Int,
-                             mode: SaveMode): Unit =
+                             mode: SaveMode,
+                             partitions: Option[Int] = None): Unit =
     bucketKey match {
       case Some(k) =>
         val key = typedKey(col(k.name))
-        val laid = events.withColumn("_bucket", bucketExpr(key))
+        val layout = Seq(col("_bucket"), col(SaltCol))
+        val withLayout = events.withColumn("_bucket", bucketExpr(key))
           .withColumn(SaltCol, layoutSalt(key))
-          .repartition(col("_bucket"), col(SaltCol))
+        val laid = partitions.fold(withLayout.repartition(layout: _*))(
+          withLayout.repartition(_, layout: _*))
         writeLayout(finish(FinalView.latestByKey(laid,
           Seq("_bucket", k.name, SaltCol), order).drop(SaltCol)), epoch, mode)
       case None =>
@@ -540,37 +551,52 @@ final class GraftTable(
 
   /** The raw versioned log (all appends + tombstones), every generation
     * re-aliased to the current column names/types via the stable ids. */
-  def log: DataFrame = logOf(None)._1
+  def log: DataFrame = logOf(genDirs(None))
 
-  /** The current epoch's log, generation by generation. With a `bucket`,
-    * a bucketed generation contributes only that `_bucket=` directory —
-    * provably the only one holding the key, so a missing one is skipped.
-    * A generation written before the PK became integral (e.g. MODIFY
-    * varchar → int) has no `_bucket=` dirs at all and is read whole (the
-    * caller's key predicate still applies). The flag says whether every
-    * generation read was narrowed to the one bucket directory. */
-  private def logOf(bucket: Option[Int]): (DataFrame, Boolean) = {
+  private def genSchema(g: Gen): StructType =
+    StructType((g.cols.map(_.toStructField) ++ metaFields).toIndexedSeq)
+
+  /** A generation's rows in the current schema, stated once for the
+    * DataFrame reads and the point read: each current column is read by
+    * its stable id under the generation's name and cast to its current
+    * type, NULL where the generation lacks it; the meta columns pass. */
+  private def asCurrent(g: Gen): Seq[Column] = {
+    val byId = g.cols.map(c => c.id -> c).toMap
+    columns.map { c =>
+      byId.get(c.id) match {
+        case Some(o) => col(o.name).cast(c.dataType).as(c.name)
+        case None => lit(null).cast(c.dataType).as(c.name)
+      }
+    } ++ metaFields.map(f => col(f.name))
+  }
+
+  /** A generation's data directory in the current epoch: its `_bucket=`
+    * directory when `narrowed`, else the whole generation. */
+  private case class GenDir(gen: Gen, path: String, narrowed: Boolean)
+
+  /** The current epoch's data directories, generation by generation. With
+    * a `bucket`, a bucketed generation contributes only that `_bucket=`
+    * directory — provably the only one holding the key. A generation
+    * written before the PK became integral (e.g. MODIFY varchar → int)
+    * has no `_bucket=` dirs at all and contributes its whole directory.
+    * Missing directories are skipped. */
+  private def genDirs(bucket: Option[Int]): Seq[GenDir] = {
     val e = currentEpoch
-    val parts = gens.flatMap { g =>
+    gens.flatMap { g =>
       val dir = genDataPath(e, g.n)
       val narrowed = bucket.filter(_ => isBucketed(e, g.n))
       val p = narrowed.fold(dir)(b => s"$dir/_bucket=$b")
-      if (!fs.exists(new Path(p))) None
-      else {
-        val genStruct = StructType((g.cols.map(_.toStructField) ++ metaFields).toIndexedSeq)
-        val raw = spark.read.schema(genStruct).parquet(p)
-        val byId = g.cols.map(c => c.id -> c).toMap
-        val sel = columns.map { c =>
-          byId.get(c.id) match {
-            case Some(o) => col(o.name).cast(c.dataType).as(c.name)
-            case None => lit(null).cast(c.dataType).as(c.name)
-          }
-        } ++ metaFields.map(f => col(f.name))
-        Some((raw.select(sel.toIndexedSeq: _*), narrowed.isDefined))
-      }
+      if (fs.exists(new Path(p))) Some(GenDir(g, p, narrowed.isDefined)) else None
     }
-    (if (parts.isEmpty) emptyLog else parts.map(_._1).reduce(_ unionByName _),
-      bucket.isDefined && parts.forall(_._2))
+  }
+
+  /** The log of `dirs`, each generation in the current schema. */
+  private def logOf(dirs: Seq[GenDir]): DataFrame = {
+    val parts = dirs.map { case GenDir(g, p, _) =>
+      spark.read.schema(genSchema(g)).parquet(p)
+        .select(asCurrent(g).toIndexedSeq: _*)
+    }
+    if (parts.isEmpty) emptyLog else parts.reduce(_ unionByName _)
   }
 
   /** Whether a generation's data dir has `_bucket=` subdirs, memoized:
@@ -596,12 +622,14 @@ final class GraftTable(
     * db_replicator.py:202-211) then drops keys whose winner is a
     * tombstone and returns the payload; compaction collapses by the same
     * order, keeps the winners' meta columns and applies its own tombstone
-    * rule. */
+    * rule. The point read binds the same two columns
+    * ([[finalRule]]). */
   private def collapse(log: DataFrame): DataFrame =
-    FinalView.finalView(log, keys, finalOrder, isDelete = col("_deleted"))
+    FinalView.finalView(log, keys, finalOrder, isDelete = tombstone)
       .select(payloadSchema.fieldNames.map(col).toIndexedSeq: _*)
 
   private def finalOrder: Column = struct(col("_version"), col("_deleted"))
+  private def tombstone: Column = col("_deleted")
 
   /** FINAL view: latest version per key, tombstones dropped. */
   def read: DataFrame = collapse(log)
@@ -616,27 +644,144 @@ final class GraftTable(
   def readAsOf(maxVersion: Long): DataFrame =
     collapse(log.filter(col("_version") <= maxVersion))
 
-  /** Point lookup through the FINAL view with partition pruning: only
-    * the key's `_bucket=` directory is scanned, under the dedup aggregate
-    * (at 100 TB: one partition, not the table), and the key is pushed to
-    * parquet row-group stats inside it.
+  /** Point lookup through the FINAL view: `read.filter(pk === keyValue)`,
+    * answered from the key's one `_bucket=` directory.
     *
-    * When every generation read is narrowed to that one directory, all
-    * of the key's rows sit in it, so the collapse runs key-locally: a
-    * narrow `coalesce(1)` gives the aggregate a single partition, which
-    * satisfies its clustering on the PK without an Exchange, and the
-    * lookup is one Spark job. A string or composite PK, or a generation
-    * written before the PK became integral (read whole), keeps the
-    * parallel plan: there `coalesce(1)` would put a table scan in one
-    * task. The key reaches generated code as a reference, not inlined
-    * (functions/StampPushedKeys), so a new key compiles nothing. */
+    * On a bucketed table whose every generation has `_bucket=` dirs, the
+    * lookup is a driver-local point read with no Spark job
+    * ([[graft.functions.PointLookup]]): it lists the key's bucket files
+    * when called — a plan made before a compaction swap reads its grace
+    * epoch — reads them with Spark's parquet reader with the key pushed,
+    * so row-group stats and column-index pages prune inside the bucket,
+    * and collapses the key's rows by this table's FINAL rule. The key is
+    * the one stored key `keyValue` names as the FINAL view's filter
+    * compares them ([[pointKey]]): 5, 5L, 5.0 and "5" all find key 5,
+    * 5.5 finds none.
+    *
+    * A string or composite PK, a generation written before the PK became
+    * integral (read whole), or a value that names several integral keys
+    * keeps the parallel plan: the filter under the FINAL aggregate, the
+    * bucketed generations narrowed to the key's directory, and the key
+    * kept out of generated code (functions/StampPushedKeys). */
   def lookup(keyValue: Any): DataFrame = {
-    // recompute the file-side bucket from the literal
-    val bucket = bucketKey.map(_ =>
-      math.floorDiv(keyValue.toString.toLong, BucketWidth).toInt)
-    val (bucketLog, keyLocal) = logOf(bucket)
-    val rows = bucketLog.filter(col(keys.head) === lit(keyValue))
-    collapse(if (keyLocal) rows.coalesce(1) else rows)
+    def parallel(dirs: Seq[GenDir]) =
+      collapse(logOf(dirs).filter(col(keys.head) === lit(keyValue)))
+    bucketKey.flatMap(k => pointKey(k, keyValue)) match {
+      case Some(None) => pointRead(None, Nil)
+      case Some(Some(x)) =>
+        val dirs = genDirs(Some(math.floorDiv(x, BucketWidth).toInt))
+        if (dirs.forall(_.narrowed)) pointRead(Some(x), dirs) else parallel(dirs)
+      case None => parallel(genDirs(None))
+    }
+  }
+
+  /** The one stored key a lookup value names, as `read.filter(pk === v)`
+    * compares them: Spark's own coercion of `pk = v`, solved for the key
+    * (a value of the key's own type needs none). Some(None) when no key
+    * can equal it (5.5, a value past the key type's range); None when it
+    * is not a single integral key (a double at or above 2^53 equals
+    * several longs), which the parallel plan answers. */
+  private def pointKey(k: GraftColumn, v: Any): Option[Option[Long]] = {
+    def inRange(x: Long) = Some(Some(x).filter(fitsIn(_, k.dataType)))
+    if (Literal(v).dataType == k.dataType)
+      return Some(Some(v.asInstanceOf[Number].longValue))
+    val probe = org.apache.spark.sql.GraftDatasets.ofRows(spark,
+      LocalRelation(StructType(Seq(k.toStructField)))).filter(col(k.name) === lit(v))
+    probe.queryExecution.analyzed match {
+      case Filter(EqualTo(_: Attribute, e), _) if e.foldable =>
+        Some(Option(e.eval()).map(_.asInstanceOf[Number].longValue))
+      case Filter(EqualTo(Cast(_: Attribute, to, _, _), e), _) if e.foldable =>
+        (to, e.eval()) match {
+          case (_, null) => Some(None)
+          case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
+            inRange(n.longValue)
+          case (DoubleType | FloatType, n: Number) =>
+            val d = n.doubleValue
+            if (math.abs(d) >= (if (to == FloatType) 1L << 24 else 1L << 53)) None
+            else if (d != math.rint(d)) Some(None)
+            else inRange(d.toLong)
+          case (_: DecimalType, d: Decimal) =>
+            val b = d.toJavaBigDecimal
+            if (b.signum != 0 && b.stripTrailingZeros.scale > 0) Some(None)
+            else scala.util.Try(b.longValueExact).toOption
+              .fold(Some(None): Option[Option[Long]])(inRange)
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  private def fitsIn(x: Long, t: DataType): Boolean = t match {
+    case ByteType => x.isValidByte
+    case ShortType => x.isValidShort
+    case IntegerType => x.isValidInt
+    case _ => true
+  }
+
+  /** `x` as a value of integral type `t` (which it fits). */
+  private def integral(x: Long, t: DataType): Any = t match {
+    case ByteType => x.toByte
+    case ShortType => x.toShort
+    case IntegerType => x.toInt
+    case _ => x
+  }
+
+  /** The FINAL rule as the point read evaluates it: [[finalOrder]] and
+    * the liveness of [[tombstone]], bound to a row of the current schema
+    * (payload, then the meta columns). */
+  private lazy val finalRule: (Expression, Expression) =
+    bound(StructType((payloadSchema.fields ++ metaFields).toIndexedSeq),
+      _.select(finalOrder, FinalView.live(tombstone))) match {
+      case Seq(order, live) => (order, live)
+    }
+
+  /** `f`'s projection of a row of `schema`, analyzed as a DataFrame read
+    * analyzes it (ANSI casts included) and bound to the row's ordinals. */
+  private def bound(schema: StructType,
+                    f: DataFrame => DataFrame): Seq[Expression] = {
+    val rel = LocalRelation(schema)
+    f(org.apache.spark.sql.GraftDatasets.ofRows(spark, rel))
+      .queryExecution.analyzed match {
+      case Project(list, _) =>
+        list.map(e => BindReferences.bindReference(e: Expression, rel.output))
+    }
+  }
+
+  /** [[asCurrent]] as the point read evaluates it, per generation: bound
+    * to a stored row of [[genSchema]]. The key does not enter it, so it is
+    * bound once per generation and handle. */
+  private val currentOf =
+    new java.util.concurrent.ConcurrentHashMap[Gen, Seq[Expression]]()
+
+  /** The driver-local point read of stored key `key` from `dirs` (see
+    * [[lookup]]); no key reads nothing. A generation stores the key under
+    * its own name and type: the key is pushed as that, and a generation
+    * whose key type cannot hold it holds no row of it. */
+  private def pointRead(key: Option[Long], dirs: Seq[GenDir]): DataFrame = {
+    val k = bucketKey.get
+    val keyAt = columns.indexWhere(_.id == k.id)
+    val parts = for {
+      x <- key.toSeq
+      GenDir(g, dir, _) <- dirs
+      stored <- g.cols.find(_.id == k.id).toSeq
+      if fitsIn(x, stored.dataType)
+      files = fs.listStatus(new Path(dir)).toSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(s => (s.getPath.toString, s.getLen))
+      if files.nonEmpty
+    } yield {
+      val current = currentOf.computeIfAbsent(g,
+        g => bound(genSchema(g), _.select(asCurrent(g).toIndexedSeq: _*)))
+      val storedKey = current(keyAt) match { case a: Alias => a.child; case e => e }
+      graft.functions.PointRead.Part(files, genSchema(g),
+        org.apache.spark.sql.sources.EqualTo(stored.name, integral(x, stored.dataType)),
+        EqualTo(storedKey, Literal(integral(x, k.dataType), k.dataType)), current)
+    }
+    val (order, live) = finalRule
+    org.apache.spark.sql.GraftDatasets.ofRows(spark, graft.functions.PointLookup(
+      DataTypeUtils.toAttributes(payloadSchema),
+      graft.functions.PointRead(parts, order, live, columns.size)))
   }
 
   /** One metadata-only recursive walk over the current epoch's parquet
@@ -748,9 +893,21 @@ final class GraftTable(
     // append into a live epoch — a permanently corrupted table.
     val target = (listEpochs() ++ pendingStagedLoad() :+ e).max + 1
     // the FINAL winners keep their own `_version`: one collapse, one
-    // layout exchange, one write
+    // layout exchange, one write. The exchange gets one partition per
+    // advisory partition size of the epoch's stored bytes, at most the
+    // shuffle partitions: a small table compacts to one file per bucket.
+    // Coalescing by the bytes it ships instead would split a small
+    // bucket once the partial-collapse rows outgrow the minimum
+    // coalesced partition size.
+    val conf = spark.sessionState.conf
+    var stored = 0L
+    foreachDataFile(s => stored += s.getLen)
+    val advisory =
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val partitions = math.min(conf.numShufflePartitions.toLong,
+      math.max(1L, (stored + advisory - 1) / advisory)).toInt
     writeCollapsed(log, finalOrder, identity, _.filter(keep), target,
-      SaveMode.Overwrite)
+      SaveMode.Overwrite, Some(partitions))
     writeEpochPtr(target)
     // previous epoch survives one cycle for in-flight readers; anything
     // older — including partial epochs from crashed attempts — goes now.

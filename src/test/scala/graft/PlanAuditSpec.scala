@@ -723,31 +723,38 @@ class PlanAuditSpec extends SparkSpec {
         ns.map(_.nodeName).distinct.mkString(","))
   }
 
-  test("point lookup: one bucket dir, filter pushed below the dedup agg") {
+  test("point lookup: one bucket dir, the key pushed into parquet, no job") {
     import org.apache.spark.sql.types._
     import spark.implicits._
     val t = graft.operators.GraftTable(spark, tmpDir("plan-lookup"),
       Seq("id"), StructType(Seq(StructField("id", LongType),
         StructField("v", StringType))))
-    t.append(Seq((1L, "a"), (9000000L, "far")).toDF("id", "v"), 1)
+    // bucket 2 starts at 2 × 4294967; small row groups give its files
+    // several each, so the pushed key has row groups to skip
+    val base = 2 * 4294967L
+    val bucketRows = 20000L
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.setInt("parquet.block.size", 16384)
+    try t.append((base until base + bucketRows).map(k => (k, s"v$k")).toDF("id", "v"), 1)
+    finally hadoop.unset("parquet.block.size")
+    t.append(Seq((1L, "a")).toDF("id", "v"), 2)
+    val key = base + 12345
     val (df, jobs) = jobsOf {
-      val df = t.lookup(9000000L)
-      assert(df.collect().map(_.getString(1)).toSeq === Seq("far"))
+      val df = t.lookup(key)
+      assert(df.collect().map(_.getString(1)).toSeq === Seq(s"v$key"))
       df
     }
-    val ns = flatten(df.queryExecution.executedPlan)
-    val scan = ns.collect { case s: FileSourceScanExec => s }.head
-    assert(scan.relation.location.rootPaths.forall(
-      _.toString.contains("_bucket=2")),
-      "lookup scan lists more than the key's bucket")
-    assert(scan.metadata("PushedFilters").contains("EqualTo(id"),
-      "pk predicate not pushed below the FINAL aggregate")
-    // every row of the key is in the one bucket dir: the collapse runs
-    // on one partition, with no shuffle, in one job
-    assert(!ns.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
-      "bucketed lookup plans an exchange: " + ns.map(_.nodeName).mkString(","))
-    assert(jobs === 1, s"bucketed lookup ran $jobs jobs")
+    assert(jobs === 0, s"bucketed lookup ran $jobs jobs")
+    assert(df.inputFiles.nonEmpty && df.inputFiles.forall(_.contains("_bucket=2/")),
+      "lookup reads more than the key's bucket: " + df.inputFiles.mkString(","))
+    val read = df.queryExecution.executedPlan match {
+      case p: graft.functions.PointLookupExec => p
+      case p => fail("bucketed lookup is not a point read:\n" + p.treeString)
+    }
+    def metric(n: String) = read.metrics(n).value
+    assert(metric("rowGroupsSkipped") > 0, "no row group skipped by the pushed key")
+    assert(metric("rowsDecoded") > 0 && metric("rowsDecoded") < bucketRows,
+      s"decoded ${metric("rowsDecoded")} of the bucket's $bucketRows rows")
   }
 
   test("bm25: inverted-index probes are broadcast hash joins") {

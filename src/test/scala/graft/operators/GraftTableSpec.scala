@@ -186,13 +186,118 @@ class GraftTableSpec extends SparkSpec {
     val files = new java.io.File(t.root, "data/gen=0/_bucket=0").list()
       .count(_.endsWith(".parquet"))
     assert(files > 4, s"expected several files in the bucket, got $files")
-    assert(exchanges(t.lookup(6L)).isEmpty, "bucketed lookup plans an exchange")
+    assert(jobsOf(t.lookup(6L).collect())._2 === 0, "bucketed lookup ran a job")
     (0L until 32L).foreach { k =>
       assert(t.lookup(k).collect().toSet ===
         t.read.filter(col("id") === k).collect().toSet, s"lookup($k)")
     }
     assertSame(t.lookup(12L), Seq())
     assertSame(t.lookup(6L), Seq((6L, "c6")))
+  }
+
+  /** `t.lookup(k)` against the FINAL view filtered to `k`, row for row. */
+  private def assertLookup(t: GraftTable, k: Any): Unit =
+    assert(t.lookup(k).collect().toSet ===
+      t.read.filter(col(t.keys.head) === lit(k)).collect().toSet, s"lookup($k)")
+
+  test("lookup over rename, retype and ADD COLUMN generations equals FINAL") {
+    val root = tmpDir("graft-lookup-gens")
+    // gen 0: int PK; then ADD COLUMN w, which updates gen 0 in place
+    val t0 = new GraftTable(spark, root, Seq("id"), Seq(
+      GraftColumn(0, "id", IntegerType), GraftColumn(1, "v", StringType)))
+    t0.append((0 until 20).map(k => (k, s"a$k")).toDF("id", "v"), version = 1)
+    val t1 = new GraftTable(spark, root, Seq("id"), Seq(
+      GraftColumn(0, "id", IntegerType), GraftColumn(1, "v", StringType),
+      GraftColumn(2, "w", IntegerType)))
+    t1.append((0 until 20 by 2).map(k => (k, s"b$k", k * 10)).toDF("id", "v", "w"),
+      version = 2)
+    // gen 1: RENAME v → name, the PK and w retyped int → bigint
+    val t2 = new GraftTable(spark, root, Seq("id"), Seq(
+      GraftColumn(0, "id", LongType), GraftColumn(1, "name", StringType),
+      GraftColumn(2, "w", LongType)))
+    t2.append((0L until 20L by 3).map(k => (k, s"c$k", k * 100)).toDF("id", "name", "w"),
+      version = 3)
+    t2.delete((0L until 20L by 5).map(Tuple1(_)).toDF("id"), version = 4)
+    assert(new java.io.File(root, "data").list().count(_.startsWith("gen=")) === 2)
+    assert(jobsOf(t2.lookup(4L).collect())._2 === 0,
+      "a lookup over bucketed generations ran a job")
+    // live in gen 0 only, updated by ADD COLUMN rows, rewritten in gen 1,
+    // deleted, and absent
+    (0L until 22L).foreach(k => assertLookup(t2, k))
+    assert(t2.lookup(4L).collect().toSeq.map(r => (r.getLong(0), r.getString(1),
+      r.getLong(2))) === Seq((4L, "b4", 40L)))
+  }
+
+  test("lookup reads through parquet-mr's row reader with the vectorized reader off") {
+    val t = mkTable()
+    t.append((0L until 10L).map(k => (k, s"a$k")).toDF("id", "v"), version = 1)
+    t.append((0L until 10L by 2).map(k => (k, s"b$k")).toDF("id", "v"), version = 2)
+    t.delete(Seq(Tuple1(4L)).toDF("id"), version = 3)
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    try (0L until 11L).foreach(k => assertLookup(t, k))
+    finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    assertSame(t.lookup(2L), Seq((2L, "b2")))
+  }
+
+  test("a lookup planned before compact() reads its grace epoch after it") {
+    val t = mkTable()
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), version = 1)
+    t.append(Seq((1L, "a2")).toDF("id", "v"), version = 2)
+    val planned = t.lookup(1L)
+    val files = planned.inputFiles
+    t.compact()
+    assert(planned.inputFiles.toSeq === files.toSeq)
+    assertSame(planned, Seq((1L, "a2")))
+    assert(t.lookup(1L).inputFiles.toSet.intersect(files.toSet).isEmpty,
+      "a lookup planned after compact() still reads the old epoch")
+    assertSame(t.lookup(1L), Seq((1L, "a2")))
+  }
+
+  test("lookup converts the key as the FINAL view's filter does") {
+    val t = mkTable()
+    t.append(Seq((5L, "five"), (7L, "seven")).toDF("id", "v"), version = 1)
+    // 5, 5L, 5.0 and "5" name key 5; 5.5 and values past bigint name none
+    Seq[Any](5, 5L, 5.0, 5.0f, "5", " 5", BigDecimal("5.00"))
+      .foreach { k =>
+        assertSame(t.lookup(k), Seq((5L, "five")))
+        assertLookup(t, k)
+      }
+    Seq[Any](5.5, 1e30, BigDecimal("5.5"), BigDecimal("1e30"), Double.NaN)
+      .foreach { k =>
+        assertSame(t.lookup(k), Seq())
+        assertLookup(t, k)
+      }
+    // an int PK: a long past its range names no key
+    val ti = GraftTable(spark, tmpDir("graft-intpk"), Seq("id"), StructType(Seq(
+      StructField("id", IntegerType), StructField("v", StringType))))
+    ti.append(Seq((5, "five")).toDF("id", "v"), version = 1)
+    Seq[Any](5L, 3000000000L, Long.MaxValue, "5").foreach(k => assertLookup(ti, k))
+    assert(ti.lookup(3000000000L).collect().isEmpty)
+  }
+
+  test("compact writes one file per bucket of a small table") {
+    val t = mkTable()
+    // 30 k keys over two buckets, each written three times with a
+    // payload that compresses poorly: the partial-collapse rows the
+    // layout exchange ships pass the minimum coalesced partition size,
+    // so coalescing by them split each bucket
+    (0 until 3).foreach { i =>
+      t.append(spark.range(0, 30000).select(
+        (col("id") + (col("id") % 2) * 4294967L).as("id"),
+        sha2(concat(lit(s"$i-"), col("id").cast("string")), 512).as("v")),
+        version = i + 1)
+    }
+    val (_, jobs) = jobsOf(t.compact())
+    assert(jobs <= 2, s"compact ran $jobs jobs")
+    val epoch = new java.io.File(t.root).list().filter(_.startsWith("data-e")).max
+    val buckets = new java.io.File(s"${t.root}/$epoch/gen=0").listFiles()
+      .filter(_.getName.startsWith("_bucket="))
+    assert(buckets.length === 2)
+    buckets.foreach { b =>
+      val files = b.list().count(_.endsWith(".parquet"))
+      assert(files === 1, s"${b.getName} holds $files files after compaction")
+    }
+    assert(t.dataFileCount === 2L)
   }
 
   test("string-PK lookup keeps its parallel exchange plan") {

@@ -59,4 +59,69 @@ class SnapshotCrashFuzzSpec extends SparkSpec {
         s"round $round: duplicate shard images in the log")
     }
   }
+
+  test("runFrame: a crash between the append and its markers resumes to the same FINAL") {
+    val rnd = new scala.util.Random(0x2f7a3eL)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashmk.impl", classOf[MarkerCrashFs].getName)
+    (1 to 4).foreach { round =>
+      val n = 50 + rnd.nextInt(150)
+      val shards = 2 + rnd.nextInt(4)
+      // the markers runFrame writes before the simulated crash
+      val marked = rnd.nextInt(shards)
+      val df = (1 to n).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      val schema = graft.ddl.DdlParser.parse(
+        "CREATE TABLE s (id bigint NOT NULL, v varchar(20), PRIMARY KEY(id))")
+        .asInstanceOf[graft.ddl.DdlOp.CreateTable].schema
+      val clean = Snapshot.runFrame(spark, schema, tmpDir(s"graft-frame-clean-$round"),
+        tmpDir(s"graft-frame-clean-mk-$round"), shards, df)
+      val dir = tmpDir(s"graft-frame-crash-$round")
+      val markers = "crashmk://" + tmpDir(s"graft-frame-crash-mk-$round")
+      val reader = graft.operators.GraftTable(spark, dir, schema.primaryKeys,
+        schema.toStructType)
+      MarkerCrashFs.failAfter(marked)
+      val crash = try intercept[java.io.IOException](
+        Snapshot.runFrame(spark, schema, dir, markers, shards, df))
+      finally MarkerCrashFs.failAfter(-1)
+      assert(crash.getMessage === "simulated crash")
+      assert(reader.read.isEmpty, s"round $round: the crashed load was published")
+      Snapshot.runFrame(spark, schema, dir, markers, shards, df)
+      def image(t: graft.operators.GraftTable) =
+        t.log.select("id", "v", "_version", "_deleted").distinct().collect().toSet
+      assert(reader.read.collect().toSet === clean.read.collect().toSet,
+        s"round $round: resumed FINAL != an uninterrupted run")
+      assert(image(reader) === image(clean), s"round $round: stamps differ")
+      // the resume re-appends every shard whose marker was not written;
+      // the FINAL view collapses those rows and compaction drops them
+      val unmarked = (marked until shards).map(k =>
+        df.filter(Snapshot.shardPredicate(Seq("id"), shards, k)).count()).sum
+      val duplicates = reader.log.count() - n
+      info(s"round $round: $shards shards, crash after $marked markers: " +
+        s"$duplicates duplicate staged rows of $n")
+      assert(duplicates === unmarked)
+    }
+  }
+}
+
+/** Local files under the `crashmk` scheme, whose file creation fails once
+  * [[MarkerCrashFs.failAfter]] files have been created: a driver that dies
+  * between a snapshot's append and its shard markers. */
+class MarkerCrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashmk:///")
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    MarkerCrashFs.created()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object MarkerCrashFs {
+  private val left = new java.util.concurrent.atomic.AtomicInteger(-1)
+  /** Fail the creation after the next `n`; a negative `n` never fails. */
+  def failAfter(n: Int): Unit = left.set(n)
+  private def created(): Unit =
+    if (left.get == 0) throw new java.io.IOException("simulated crash")
+    else if (left.get > 0) left.decrementAndGet()
 }
